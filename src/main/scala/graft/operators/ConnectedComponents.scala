@@ -38,6 +38,38 @@ object ConnectedComponents {
     }
   }
 
+  /** The in-memory union-find both [[localContract]] (per partition) and
+    * [[runScoped]] (per scope group) run: union every pair, then label
+    * each node with the MINIMUM member of its set under `ordering` (the
+    * [[run]] convention, so the labeling depends only on membership).
+    * Consumes `pairs` fully before returning; the result yields each
+    * distinct node once, as (node, component min). */
+  private def unionFindMin(pairs: Iterator[(Any, Any)],
+                           ordering: Ordering[Any]): Iterator[(Any, Any)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var cur = x // path halving
+      while (parent(cur) != root) { val nxt = parent(cur); parent(cur) = root; cur = nxt }
+      root
+    }
+    pairs.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(ra) = rb
+    }
+    val minOf = scala.collection.mutable.HashMap.empty[Any, Any]
+    parent.keysIterator.foreach { n =>
+      val r = find(n)
+      minOf.get(r) match {
+        case Some(m) => if (ordering.lt(n, m)) minOf(r) = n
+        case None => minOf(r) = n
+      }
+    }
+    parent.keysIterator.map(n => (n, minOf(find(n))))
+  }
+
   /** Per-partition union-find contraction: replaces each partition's edge
     * set with the star forest (node → local component min) of the SAME
     * connectivity. One narrow pass, no shuffle; emits exactly one row per
@@ -66,29 +98,8 @@ object ConnectedComponents {
     val enc = Encoders.row(StructType(Seq(
       StructField(srcCol, idType), StructField(dstCol, idType))))
     sel.mapPartitions { rows =>
-      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-      def find(x: Any): Any = {
-        var root = x
-        while (parent(root) != root) root = parent(root)
-        var cur = x // path halving
-        while (parent(cur) != root) { val nxt = parent(cur); parent(cur) = root; cur = nxt }
-        root
-      }
-      rows.foreach { r =>
-        val a = r.get(0); val b = r.get(1)
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent(ra) = rb
-      }
-      val minOf = scala.collection.mutable.HashMap.empty[Any, Any]
-      parent.keysIterator.foreach { n =>
-        val r = find(n)
-        minOf.get(r) match {
-          case Some(m) => if (ordering.lt(n, m)) minOf(r) = n
-          case None => minOf(r) = n
-        }
-      }
-      parent.keysIterator.map(n => Row(n, minOf(find(n))))
+      unionFindMin(rows.map(r => (r.get(0), r.get(1))), ordering)
+        .map { case (n, m) => Row(n, m) }
     }(enc)
   }
 
@@ -399,8 +410,9 @@ object ConnectedComponents {
     * batch's node set BROADCAST against base — a probe of the standing
     * table, bucket-pruned point lookups at rest, never a shuffle of
     * it), the batch edges project onto a LABEL graph bounded by the
-    * batch size, [[run]] solves that tiny graph, and the resulting
-    * merges (a) extend the alias map and (b) remap existing alias
+    * batch size, one union-find task solves that tiny graph (an
+    * oversized batch falls back to the distributed [[run]]), and the
+    * resulting merges (a) extend the alias map and (b) remap existing alias
     * targets that just got absorbed — so the alias stays flat (one hop
     * resolves) by induction: merge-map keys are live labels, which are
     * never already alias keys, and merge-map targets are the new roots.
@@ -439,59 +451,109 @@ object ConnectedComponents {
     * of a broadcast anti against the batch-bounded probe result. Both
     * shapes are plan-gated in PlanSpec like the dd_incremental standing
     * index. The probe result materializes eagerly (batch-bounded rows)
-    * so its three consumers don't each re-probe base. */
+    * so its three consumers don't each re-probe base.
+    *
+    * On the point path (≤ [[MaxPointLookupNodes]] endpoints, so at most
+    * that many label nodes) ONE union-find task solves the merge graph:
+    * [[localContract]] over the graph coalesced to a single partition,
+    * exact because no edge can cross partitions. The merge map collects
+    * once and re-enters as a local relation, as does the node set, and
+    * the other cap-bounded frames broadcast into their joins, so neither
+    * returned frame shuffles (PlanSpec-gated). The returned frames read
+    * two batch-bounded snapshots that stay pinned until GC; callers that
+    * can release them use [[mergeParts]]. */
   def incrementalMergeParts(base: DataFrame, alias: DataFrame,
                             batch: DataFrame, srcCol: String = "src",
                             dstCol: String = "dst",
                             maxPointLookup: Int = MaxPointLookupNodes)
       : (DataFrame, DataFrame) = {
+    val p = mergeParts(base, alias, batch, srcCol, dstCol, maxPointLookup)
+    (p.inserts, p.newAlias)
+  }
+
+  /** One batch's [[incrementalMergeParts]] with its handles: `solved` is
+    * the solved merge graph (node, component) — on the point path the
+    * frame whose non-identity rows were collected, exposed for the
+    * PlanSpec gate — and `pinned` the batch-bounded snapshots `inserts`
+    * and `newAlias` read, which [[release]] unpersists once the caller
+    * has materialized both. */
+  private[graft] final case class MergeParts(inserts: DataFrame,
+      newAlias: DataFrame, solved: DataFrame, pinned: Seq[RDD]) {
+    def release(): Unit = pinned.foreach(_.unpersist(false))
+  }
+
+  /** See [[incrementalMergeParts]]. */
+  private[graft] def mergeParts(base: DataFrame, alias: DataFrame,
+      batch: DataFrame, srcCol: String = "src", dstCol: String = "dst",
+      maxPointLookup: Int = MaxPointLookupNodes): MergeParts = {
     val spark = base.sparkSession
     import spark.implicits._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    def local(rows: Seq[Row], schema: StructType): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, schema)
+    }
     // materialize the batch edge set ONCE (batch-bounded rows): its
     // lazy plan is consumed by the node collect, the label-edge joins,
-    // and the merge fixpoint — a batch DERIVED from a corpus-sized
+    // and the merge solve — a batch DERIVED from a corpus-sized
     // source (the registry rows slice a spatial self-join) would
     // otherwise re-execute that derivation per consumer
-    val e = batch.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint(true)
-    val nodes = e.select($"a".as("node")).union(e.select($"b".as("node")))
-      .distinct()
-    val nodeVals = nodes.limit(maxPointLookup + 1).collect()
+    val (e, eRdd) = CheckpointOps.checkpointTruncated(
+      batch.select(col(srcCol).as("a"), col(dstCol).as("b")))
+    val distinctNodes = e.select($"a".as("node"))
+      .union(e.select($"b".as("node"))).distinct()
+    val nodeVals = distinctNodes.limit(maxPointLookup + 1).collect()
       .map(_.get(0)).toSeq
     val pointPath = nodeVals.nonEmpty && nodeVals.length <= maxPointLookup
+    // on the point path the node set is already collected
+    val nodes =
+      if (pointPath) local(nodeVals.map(Row(_)),
+        StructType(Seq(StructField("node", e.schema(0).dataType))))
+      else distinctNodes
     val seen0 =
       if (nodeVals.isEmpty) base.where(lit(false))
       else if (pointPath) probeBaseLabelsPoint(base, nodeVals)
       else probeBaseLabels(base, nodes)
-    val seen = seen0.localCheckpoint(true)
+    val (seen, seenRdd) = CheckpointOps.checkpointTruncated(seen0)
     // the broadcast hint is only sound on the point path (≤ the lookup
     // cap by construction); an oversized batch's frames stay unhinted —
     // Spark broadcasts them when they fit the threshold and falls back
     // to a batch-sized shuffle when they don't
-    val seenNodes =
-      if (pointPath) broadcast(seen.select($"node"))
-      else seen.select($"node")
-    val inserts = nodes.join(seenNodes, Seq("node"), "left_anti")
+    def capped(df: DataFrame): DataFrame =
+      if (pointPath) broadcast(df) else df
+    val inserts = nodes.join(capped(seen.select($"node")), Seq("node"),
+        "left_anti")
       .select($"node", $"node".as("component"))
-    val eff = seen
+    val eff = capped(seen
       .join(alias.select($"c".as("component"), $"canon"),
         Seq("component"), "left")
       .select($"node", coalesce($"canon", $"component").as("lbl"))
-      .unionByName(inserts.select($"node", $"node".as("lbl")))
+      .unionByName(inserts.select($"node", $"node".as("lbl"))))
     val lblEdges = e
       .join(eff.select($"node".as("a"), $"lbl".as("la")), "a")
       .join(eff.select($"node".as("b"), $"lbl".as("lb")), "b")
       .select($"la".as("src"), $"lb".as("dst"))
     // the merge graph is batch-bounded: one label node per distinct
-    // effective label among the batch's endpoints
-    val merged = run(lblEdges)
-    val mergeMap = merged.where($"node" =!= $"component")
+    // effective label among the batch's endpoints — on the point path
+    // few enough for one task, which is exact over a single partition
+    val solved =
+      if (pointPath)
+        localContract(lblEdges.coalesce(1)).toDF("node", "component")
+      else run(lblEdges)
+    val merges = solved.where($"node" =!= $"component")
       .select($"node".as("c"), $"component".as("canon"))
+    // collected once (≤ the cap) so both consumers below read rows, not
+    // the solve's lineage
+    val mergeMap =
+      if (pointPath) local(merges.collect().toSeq, merges.schema)
+      else merges
     val remapped = alias
-      .join(mergeMap.select($"c".as("canon"), $"canon".as("canon2")),
+      .join(capped(mergeMap.select($"c".as("canon"), $"canon".as("canon2"))),
         Seq("canon"), "left")
       .select($"c", coalesce($"canon2", $"canon").as("canon"))
-    (inserts, remapped.unionByName(mergeMap))
+    MergeParts(inserts, remapped.unionByName(mergeMap), solved,
+      Seq(eRdd, seenRdd))
   }
 
   /** Batch node sets up to this size probe the base as a pushed-down
@@ -549,8 +611,9 @@ object ConnectedComponents {
     * batch writes O(batches · corpus)). This is the in-memory mirror of
     * what [[graft.streaming.CcStream]]'s at-rest form gets for free by
     * appending to the base table. Frames checkpoint lineage-truncating
-    * (batch count is unbounded); only the superseded alias unpersists —
-    * every base frame stays live state until the resolve. */
+    * (batch count is unbounded); only the superseded alias and each
+    * batch's merge snapshots unpersist — every base frame stays live
+    * state until the resolve. */
   def incrementalFold(initialEdges: DataFrame, batches: Seq[DataFrame],
                       srcCol: String = "src", dstCol: String = "dst")
       : DataFrame = {
@@ -564,9 +627,10 @@ object ConnectedComponents {
         .where(lit(false)))
     batches.foreach { b =>
       val base = frames.reduce(_ unionByName _)
-      val (ins, na) = incrementalMergeParts(base, alias, b, srcCol, dstCol)
-      val (insFlat, _) = CheckpointOps.checkpointTruncated(ins)
-      val (naFlat, naRdd) = CheckpointOps.checkpointTruncated(na)
+      val p = mergeParts(base, alias, b, srcCol, dstCol)
+      val (insFlat, _) = CheckpointOps.checkpointTruncated(p.inserts)
+      val (naFlat, naRdd) = CheckpointOps.checkpointTruncated(p.newAlias)
+      p.release()
       aliasRdd.unpersist(false)
       frames :+= insFlat
       alias = naFlat
@@ -728,31 +792,11 @@ object ConnectedComponents {
     val enc = Encoders.row(outSchema)
     sel.groupByKey(r => String.valueOf(r.get(0)))(Encoders.STRING)
       .flatMapGroups { (_, rows) =>
-        val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-        def find(x: Any): Any = {
-          var root = x
-          while (parent(root) != root) root = parent(root)
-          var cur = x // path halving
-          while (parent(cur) != root) { val nxt = parent(cur); parent(cur) = root; cur = nxt }
-          root
-        }
         var scopeVal: Any = null
-        rows.foreach { r =>
-          scopeVal = r.get(0)
-          val a = r.get(1); val b = r.get(2)
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(ra) = rb
-        }
-        val minOf = scala.collection.mutable.HashMap.empty[Any, Any]
-        parent.keysIterator.foreach { n =>
-          val r = find(n)
-          minOf.get(r) match {
-            case Some(m) => if (ordering.lt(n, m)) minOf(r) = n
-            case None => minOf(r) = n
-          }
-        }
-        parent.keysIterator.map(n => Row(scopeVal, n, minOf(find(n))))
+        unionFindMin(rows.map { r =>
+            scopeVal = r.get(0); (r.get(1), r.get(2))
+          }, ordering)
+          .map { case (n, m) => Row(scopeVal, n, m) }
       }(enc)
   }
 }

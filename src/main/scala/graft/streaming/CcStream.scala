@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.ConnectedComponents
@@ -20,8 +21,10 @@ import graft.operators.ConnectedComponents
   *
   * Each micro-batch: endpoints probe the standing labels (broadcast
   * batch-node set — bucket-pruned point lookups at rest), a BATCH-sized
-  * label graph solves the merges, the new nodes append, the alias
-  * rewrites. Readers resolve `coalesce(alias[base[v]], base[v])` — one
+  * label graph solves the merges in one union-find task (the
+  * distributed fixpoint only for a batch past the point-lookup cap), the
+  * new nodes append, the alias rewrites, and the batch's snapshots are
+  * released. Readers resolve `coalesce(alias[base[v]], base[v])` — one
   * broadcast join ([[ConnectedComponents.resolveLabels]]).
   *
   * The deterministic batch-sequenced equivalent is
@@ -61,9 +64,12 @@ object CcStream {
     * contract is directly spec-able: replaying a batch is a NO-OP by
     * construction — its endpoints already share components, so the
     * merge graph has no non-identity rows (alias unchanged) and the
-    * base append anti-joins nodes already present. */
+    * base append anti-joins nodes already present. Returns the row
+    * count of the alias it wrote (counted by the materialization the
+    * write reads, so the auto-compaction check costs no job). Every
+    * frame the batch pins is released once both writes land. */
   private[graft] def ingestBatch(batch: DataFrame, srcCol: String,
-      dstCol: String, baseTable: String, aliasTable: String): Unit = {
+      dstCol: String, baseTable: String, aliasTable: String): Long = {
     val spark = batch.sparkSession
     // a compact() that died between its DROP and RENAME leaves the base
     // missing and the completed `_compacting` table waiting — without
@@ -81,22 +87,30 @@ object CcStream {
     val b = batch.persist(org.apache.spark.storage.StorageLevel
       .MEMORY_AND_DISK)
     try {
-      val (inserts, newAlias) = ConnectedComponents.incrementalMergeParts(
+      val parts = ConnectedComponents.mergeParts(
         spark.table(baseTable), spark.table(aliasTable), b,
         srcCol, dstCol)
-      // materialize BOTH writes' contents from ONE consistent snapshot
-      // of the standing tables before EITHER write lands (localCheckpoint
-      // is eager, and the overwrite target is also a source, so it needs
-      // the lineage truncation anyway — the KnnGraphStream precedent):
-      // executing newAlias after the base append would derive the alias
-      // from a base the merge never saw, an invariant otherwise held
-      // only by coalesce ordering
-      val insertsSnap = inserts.localCheckpoint(true)
-      val newAliasSnap = newAlias.localCheckpoint(true)
-      // base append (replay-safe: only previously-unseen nodes insert)
-      insertsSnap.write.mode("append").insertInto(baseTable)
-      // alias rewrite: model-small
-      newAliasSnap.write.mode("overwrite").insertInto(aliasTable)
+      var pinned = parts.pinned
+      try {
+        // materialize BOTH writes' contents from ONE consistent snapshot
+        // of the standing tables before EITHER write lands (eager, and
+        // the overwrite target is also a source, so it needs the
+        // lineage truncation anyway — the KnnGraphStream precedent):
+        // executing newAlias after the base append would derive the
+        // alias from a base the merge never saw, an invariant otherwise
+        // held only by coalesce ordering
+        val (insertsSnap, insertsRdd) =
+          CheckpointOps.checkpointTruncated(parts.inserts)
+        pinned :+= insertsRdd
+        val (aliasSnap, aliasRdd, aliasRows) =
+          CheckpointOps.checkpointCountTruncated(parts.newAlias)
+        pinned :+= aliasRdd
+        // base append (replay-safe: only previously-unseen nodes insert)
+        insertsSnap.write.mode("append").insertInto(baseTable)
+        // alias rewrite: model-small
+        aliasSnap.write.mode("overwrite").insertInto(aliasTable)
+        aliasRows
+      } finally pinned.foreach(_.unpersist(false))
     } finally b.unpersist(false)
   }
 
@@ -162,10 +176,11 @@ object CcStream {
     truncateAlias(spark, aliasTable)
   }
 
+  /** Overwrite the alias with no rows — built from its schema alone, so
+    * the write reads nothing from the table it replaces. */
   private def truncateAlias(spark: SparkSession, aliasTable: String): Unit =
-    spark.table(aliasTable)
-      .where(org.apache.spark.sql.functions.lit(false))
-      .localCheckpoint(true)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        spark.table(aliasTable).schema)
       .write.mode("overwrite").insertInto(aliasTable)
 
   /** True when a previous [[compact]] died in its only dangerous
@@ -182,9 +197,9 @@ object CcStream {
     * leaves the alias at or above `compactAliasThreshold` rows, the
     * base compacts into a fresh path from `compactPathFor` (called
     * with a strictly-growing generation number — return a path that
-    * embeds it) and the alias truncates. The alias is model-small and
-    * rewritten whole per batch anyway, so counting it per batch is a
-    * metadata-scale read; the threshold bounds BOTH the per-batch
+    * embeds it) and the alias truncates. The alias size is the row count
+    * [[ingestBatch]] already took while materializing the rewrite, so
+    * the check adds no job; the threshold bounds BOTH the per-batch
     * alias rewrite and the broadcast the resolution join ships, which
     * is what actually degrades on a merge-heavy corpus (SCALE.md r17
     * records the growth curve behind the default). Compaction runs
@@ -199,10 +214,9 @@ object CcStream {
     var generation = 0L
     stream.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        ingestBatch(batch.toDF(), srcCol, dstCol, baseTable, aliasTable)
-        if (compactAliasThreshold > 0L &&
-            batch.sparkSession.table(aliasTable).count()
-              >= compactAliasThreshold) {
+        val aliasRows =
+          ingestBatch(batch.toDF(), srcCol, dstCol, baseTable, aliasTable)
+        if (compactAliasThreshold > 0L && aliasRows >= compactAliasThreshold) {
           val s = batch.sparkSession
           // the counter is in-memory and resets when the query
           // restarts — skip any generation whose path is where a

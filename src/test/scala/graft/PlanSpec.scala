@@ -675,6 +675,29 @@ class PlanSpec extends SparkTestBase {
       }.nonEmpty,
         s"base side must be a bucketed scan:\n${smj.left.toString.take(3000)}")
     }
+    withSQLConf("spark.sql.adaptive.enabled" -> "false") {
+      // leg C — the point path's merge: the solved merge graph (the frame
+      // whose non-identity rows collect) and the alias snapshot carry no
+      // shuffle — every cap-bounded side enters its join as a broadcast
+      // and the merge graph is solved in ONE union-find task
+      import spark.implicits._
+      val batch = Seq((1L, 2L), (2L, 3L), (5L, 1000001L),
+        (1000002L, 1000003L)).toDF("src", "dst")
+      val alias = Seq((3L, 2L)).toDF("c", "canon")
+      val parts = ConnectedComponents.mergeParts(spark.table(tbl), alias,
+        batch)
+      try {
+        for ((what, df) <- Seq("merge map" -> parts.solved,
+            "alias snapshot" -> parts.newAlias)) {
+          df.collect()
+          val p = df.queryExecution.executedPlan
+          assert(p.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+            s"$what must not shuffle:\n${p.toString.take(3000)}")
+        }
+        assert(parts.newAlias.as[(Long, Long)].collect().toSet ==
+          Set(3L -> 1L, 2L -> 1L, 1000001L -> 5L, 1000003L -> 1000002L))
+      } finally parts.release()
+    }
     // an assertion failure must not leave the catalog entry behind for
     // later suites sharing the session/metastore
     } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")

@@ -126,21 +126,83 @@ class SccSpec extends SparkTestBase {
     assert(f4 == Map(3L -> 3L, 4L -> 3L))
   }
 
+  private def mergeParts(base: Set[(Long, Long)], alias: Set[(Long, Long)],
+      batch: Seq[(Long, Long)], maxPoint: Int)
+      : (Set[(Long, Long)], Set[(Long, Long)]) = {
+    val (ins, na) = ConnectedComponents.incrementalMergeParts(
+      base.toSeq.toDF("node", "component"), alias.toSeq.toDF("c", "canon"),
+      batch.toDF("src", "dst"), maxPointLookup = maxPoint)
+    (ins.as[(Long, Long)].collect().toSet,
+      na.as[(Long, Long)].collect().toSet)
+  }
+
   test("the point-lookup and broadcast-semi base probes produce " +
     "identical merge parts (the oversized-batch fallback is exact)") {
-    val base = ConnectedComponents.run(
-      Seq((5L, 6L), (9L, 10L)).toDF("src", "dst")).localCheckpoint(true)
-    val alias = base
-      .select($"component".as("c"), $"component".as("canon"))
-      .where(lit(false))
-    val batch = Seq((5L, 9L), (1L, 2L)).toDF("src", "dst")
-    def parts(maxPoint: Int): (Set[(Long, Long)], Set[(Long, Long)]) = {
-      val (ins, na) = ConnectedComponents.incrementalMergeParts(
-        base, alias, batch, maxPointLookup = maxPoint)
-      (ins.as[(Long, Long)].collect().toSet,
-        na.as[(Long, Long)].collect().toSet)
+    // the point path also solves the merge graph in one union-find task,
+    // the fallback with the distributed fixpoint; both must agree
+    val b0 = ConnectedComponents.run(
+      Seq((5L, 6L), (9L, 10L)).toDF("src", "dst")).as[(Long, Long)]
+      .collect().toSet
+    val batch0 = Seq((5L, 9L), (1L, 2L))
+    assert(mergeParts(b0, Set.empty, batch0, 0) == mergeParts(b0,
+      Set.empty, batch0, ConnectedComponents.MaxPointLookupNodes))
+    // a multi-hop merge graph that also remaps an existing alias entry:
+    // standing state: {10,11,20,21} already merged (alias 20 → 10),
+    // {30,31}, {40,41}
+    val base = Set(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L,
+      30L -> 30L, 31L -> 30L, 40L -> 40L, 41L -> 40L)
+    val alias = Set(20L -> 10L)
+    // label graph: the chain 40 — 30 — 10 — 5 (21 resolves through the
+    // alias to 10; 5 is new and smaller than every standing label) plus
+    // the fresh pair 60 — 61
+    val batch = Seq((41L, 30L), (31L, 21L), (11L, 5L), (60L, 61L))
+    val point = mergeParts(base, alias, batch,
+      ConnectedComponents.MaxPointLookupNodes)
+    assert(point == mergeParts(base, alias, batch, 0))
+    assert(point._1 == Set(5L -> 5L, 60L -> 60L, 61L -> 61L))
+    // the existing entry 20 → 10 follows 10 into the new root 5
+    assert(point._2 == Set(20L -> 5L, 10L -> 5L, 30L -> 5L, 40L -> 5L,
+      61L -> 60L))
+    // replay against the state the batch produced: nothing inserts and
+    // the alias is rewritten unchanged, on both paths
+    for (maxPoint <- Seq(0, ConnectedComponents.MaxPointLookupNodes))
+      assert(mergeParts(base ++ point._1, point._2, batch, maxPoint) ==
+        ((Set.empty[(Long, Long)], point._2)))
+  }
+
+  test("merge parts agree across both solvers and the fold equals a " +
+    "from-scratch run on random graphs (property)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.rng.Seed
+    val edge = for (a <- Gen.choose(0L, 24L); b <- Gen.choose(0L, 24L))
+      yield (a, b)
+    val batchGen = Gen.choose(1, 6).flatMap(Gen.listOfN(_, edge))
+    val caseGen = for {
+      init <- Gen.choose(0, 12).flatMap(Gen.listOfN(_, edge))
+      batches <- Gen.listOfN(3, batchGen)
+    } yield (init, batches)
+    val prop = Prop.forAllNoShrink(caseGen) { case (init, batches) =>
+      var base = ConnectedComponents.run(init.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toSet
+      var alias = Set.empty[(Long, Long)]
+      val agree = batches.forall { b =>
+        val point = mergeParts(base, alias, b,
+          ConnectedComponents.MaxPointLookupNodes)
+        val same = point == mergeParts(base, alias, b, 0)
+        base ++= point._1
+        alias = point._2
+        same
+      }
+      val canon = alias.toMap
+      val folded = base.map { case (n, c) => n -> canon.getOrElse(c, c) }
+        .toMap
+      val rebuilt = ConnectedComponents.run((init ++ batches.flatten)
+        .toDF("src", "dst")).as[(Long, Long)].collect().toMap
+      agree && folded == rebuilt
     }
-    assert(parts(0) == parts(ConnectedComponents.MaxPointLookupNodes))
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(4).withInitialSeed(Seed(20261017L)), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("sccTopoLevels peels the condensation into longest-path levels") {

@@ -298,4 +298,30 @@ class CcStreamSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $bTbl")
     spark.sql(s"DROP TABLE IF EXISTS $aTbl")
   }
+
+  test("a CC batch releases every frame it pins and returns the size of " +
+    "the alias it wrote") {
+    val dir = java.nio.file.Files.createTempDirectory("cc_release").toString
+    val (bTbl, aTbl) = ("cc_release_spec_base", "cc_release_spec_alias")
+    spark.sql(s"DROP TABLE IF EXISTS $bTbl")
+    spark.sql(s"DROP TABLE IF EXISTS $aTbl")
+    val base0 = ConnectedComponents.run(initial.toDF())
+    CcStream.writeCcBase(base0, bTbl, s"$dir/base")
+    base0.select($"component".as("c"), $"component".as("canon"))
+      .where(lit(false))
+      .write.option("path", s"$dir/alias").saveAsTable(aTbl)
+    for (b <- Seq(batch1, batch2)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val aliasRows =
+        CcStream.ingestBatch(b.toDF(), "src", "dst", bTbl, aTbl)
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(pinned.isEmpty, s"batch left RDDs pinned: $pinned")
+      assert(aliasRows == spark.table(aTbl).count())
+    }
+    assert(labelsOf(bTbl, aTbl) ==
+      ConnectedComponents.run((initial ++ batch1 ++ batch2).toDF())
+        .as[(Long, Long)].collect().toMap)
+    spark.sql(s"DROP TABLE IF EXISTS $bTbl")
+    spark.sql(s"DROP TABLE IF EXISTS $aTbl")
+  }
 }
