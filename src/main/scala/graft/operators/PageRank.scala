@@ -20,10 +20,13 @@ import org.apache.spark.storage.StorageLevel
   * A FIXED iteration count keeps the result deterministic and
   * oracle-reproducible — no convergence epsilon on floating point.
   *
-  * Each round is contribution-scatter + sum: one shuffle on dst (partial
-  * aggregation map-side) + one join back to the node set. Rank state is
-  * (node, rank) — tiny relative to edges — and edges with per-node
-  * out-degree are computed once and reused every round.
+  * The input is read once: its `(src, dst)` projection is checkpointed,
+  * and one aggregate over it yields every node with its out-degree
+  * `deg` (0 = dangling). Rank state is (node, rank, deg) — tiny relative
+  * to edges, and it broadcasts into each round's edge join because
+  * checkpoints carry measured stats. Each round is contribution-scatter
+  * + sum: one shuffle on dst (partial aggregation map-side) + one join
+  * back onto the rank state.
   */
 /** Named fail-fast for the EXACT pair-state centrality legs: their state
   * is Σ|B_h(v)| pair rows — quadratic in the worst case — and on a graph
@@ -103,81 +106,130 @@ object PageRank {
     }
   }
 
+  /** A PageRank input read once: the edge checkpoint and the node
+    * checkpoint with its row count (see [[graph]]). */
+  private[graft] final case class Graph(
+      edges: DataFrame, edgesRdd: RDD[InternalRow],
+      nodes: DataFrame, nodesRdd: RDD[InternalRow], n: Long)
+
+  /** The input read [[run]], [[weighted]] and [[personalized]] share:
+    * the `(src, dst[, w])` projection checkpointed once, and ONE
+    * aggregate over `src → 1 ∪ dst → 0` (checkpointed with its count)
+    * giving every node its out-degree `deg` — 0 means dangling — plus
+    * the weighted out-degree `wdeg` when a weight column is given and
+    * the 0/1 seed flag `s` when seeds are. Both read the edge
+    * checkpoint, so the caller's (typically lazy, join-built) input is
+    * evaluated exactly once. */
+  private[graft] def graph(input: DataFrame, srcCol: String, dstCol: String,
+                           weightCol: Option[String] = None,
+                           seeds: Option[DataFrame] = None): Graph = {
+    val w = weightCol.map(c => col(c).cast("double").as("w")).toSeq
+    val (e, eRdd) = CheckpointOps.checkpoint(
+      input.select(Seq(col(srcCol).as("src"), col(dstCol).as("dst")) ++ w: _*))
+    val wOut = weightCol.map(_ => col("w").as("wd")).toSeq
+    val wIn = weightCol.map(_ => lit(0.0).as("wd")).toSeq
+    val wdeg = weightCol.map(_ => sum(col("wd")).as("wdeg")).toSeq
+    val agg = e.select(Seq(col("src").as("node"), lit(1L).as("d")) ++ wOut: _*)
+      .union(e.select(Seq(col("dst").as("node"), lit(0L).as("d")) ++ wIn: _*))
+      .groupBy(col("node")).agg(sum(col("d")).as("deg"), wdeg: _*)
+    val withSeeds = seeds.fold(agg) { sd =>
+      agg.join(sd.select(col("node")).distinct()
+          .select(col("node"), lit(1.0).as("s")), Seq("node"), "left")
+        .withColumn("s", coalesce(col("s"), lit(0.0)))
+    }
+    val (nodes, nodesRdd, n) = CheckpointOps.checkpointCount(withSeeds)
+    Graph(e, eRdd, nodes, nodesRdd, n)
+  }
+
+  /** `iterations` rounds of `round` from `start` (a projection of the
+    * [[Graph]] node checkpoint `startRdd`), each round materialized
+    * before the previous one's blocks are freed. */
+  private def iterate(start: DataFrame, startRdd: RDD[InternalRow],
+                      iterations: Int)(round: DataFrame => DataFrame)
+      : DataFrame = {
+    var (ranks, ranksRdd) = (start, startRdd)
+    for (_ <- 1 to iterations) {
+      val (next, nextRdd) = CheckpointOps.checkpoint(round(ranks))
+      ranksRdd.unpersist(false)
+      ranks = next
+      ranksRdd = nextRdd
+    }
+    ranks
+  }
+
   /** @param redistributeDangling when true, each round adds the total
-    *        rank mass sitting on dangling nodes (no out-edges) back
+    *        rank mass sitting on dangling nodes (`deg = 0`) back
     *        uniformly — the standard formulation where ranks sum to 1.
     *        The redistribution term is ONE extra aggregate per round
-    *        (a 1-row broadcast, state stays (node, rank)); false keeps
+    *        over the rank state itself (a 1-row broadcast); false keeps
     *        the simplified teleport-only dangling handling.
-    * @return DataFrame(node, rank) for every node appearing as src or dst. */
+    * @return DataFrame(node, rank) for every node appearing as src or dst.
+    *
+    * The input is evaluated once (see [[graph]]). A round joins the
+    * edges to the non-dangling rank rows, which broadcast (the rank
+    * state is node-sized and checkpoints carry measured stats), so the
+    * edge side never re-shuffles; what remains per round is the
+    * contribution aggregate's shuffle and the join back onto the state. */
   def run(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
           iterations: Int = 5, damping: Double = 0.85,
           redistributeDangling: Boolean = false): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    val spark = edges.sparkSession
-    import spark.implicits._
-
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
-      e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct())
-    // out-degree rides with each edge so a round is select+shuffle, no join
-    val (outEdges, outEdgesRdd) = CheckpointOps.checkpoint(
-      e.join(e.groupBy($"src").agg(count(lit(1)).as("deg")), Seq("src")))
-    // dangling = appears only as dst; tiny (node) set, computed once
-    val (dangling, danglingRdd) =
-      if (!redistributeDangling) (null: DataFrame, null)
-      else CheckpointOps.checkpoint(
-        nodes.join(e.select($"src".as("node")).distinct(),
-          Seq("node"), "left_anti"))
-
-    val nNodes = nodes.count().toDouble
-    val teleport = (1.0 - damping) / nNodes
-    var (ranks, ranksRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", lit(1.0 / nNodes).as("rank")))
-    var iter = 0
-    while (iter < iterations) {
-      val contribs = outEdges
-        .join(ranks.select($"node".as("src"), $"rank"), "src")
-        .groupBy($"dst".as("node"))
-        .agg(sum($"rank" / $"deg").as("in_mass"))
-      val next = if (!redistributeDangling) {
-        nodes.join(contribs, Seq("node"), "left")
-          .select($"node",
-            (lit(teleport) + lit(damping) * coalesce($"in_mass", lit(0.0)))
-              .as("rank"))
-      } else {
-        // one extra aggregate: the round's dangling mass, broadcast as a
-        // single row so the update stays one distributed expression
-        val dMass = ranks.join(dangling, Seq("node"), "left_semi")
-          .agg(coalesce(sum($"rank"), lit(0.0)).as("d_mass"))
-        nodes.join(contribs, Seq("node"), "left")
-          .crossJoin(broadcast(dMass))
-          .select($"node",
-            (lit(teleport) + lit(damping) *
-              (coalesce($"in_mass", lit(0.0)) + $"d_mass" / lit(nNodes)))
-              .as("rank"))
-      }
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
-      ranksRdd.unpersist(false)
-      ranks = nextFlat
-      ranksRdd = nextRdd
-      iter += 1
-    }
-    nodesRdd.unpersist(false)
-    outEdgesRdd.unpersist(false)
-    if (danglingRdd != null) danglingRdd.unpersist(false)
-    ranks
+    val g = graph(edges, srcCol, dstCol)
+    val ranks = iterate(
+      g.nodes.select(col("node"), lit(1.0 / g.n).as("rank"), col("deg")),
+      g.nodesRdd, iterations)(runRound(g, _, damping, redistributeDangling))
+    g.edgesRdd.unpersist(false)
+    ranks.select("node", "rank")
   }
+
+  /** One [[run]] round over `g` from the (node, rank, deg) state. */
+  private[graft] def runRound(g: Graph, ranks: DataFrame, damping: Double,
+                              redistributeDangling: Boolean): DataFrame = {
+    val nNodes = g.n.toDouble
+    val teleport = (1.0 - damping) / nNodes
+    val withIn = withInMass(g, ranks, col("rank") / col("deg"))
+    if (!redistributeDangling) {
+      withIn.select(col("node"),
+        (lit(teleport) + lit(damping) * coalesce(col("in_mass"), lit(0.0)))
+          .as("rank"), col("deg"))
+    } else {
+      withIn.crossJoin(danglingMass(ranks))
+        .select(col("node"),
+          (lit(teleport) + lit(damping) *
+            (coalesce(col("in_mass"), lit(0.0)) + col("d_mass") / lit(nNodes)))
+            .as("rank"), col("deg"))
+    }
+  }
+
+  /** The rank state with this round's `in_mass` beside it: Σ `term` over
+    * each node's in-edges, `term` reading the source's state columns.
+    * Only non-dangling rows meet the edges; they are node-sized, so they
+    * broadcast and the edge side is never shuffled. */
+  private def withInMass(g: Graph, ranks: DataFrame, term: Column)
+      : DataFrame = {
+    val contribs = g.edges
+      .join(ranks.where(col("deg") > 0).withColumnRenamed("node", "src"),
+        "src")
+      .groupBy(col("dst").as("node"))
+      .agg(sum(term).as("in_mass"))
+    ranks.join(contribs, Seq("node"), "left")
+  }
+
+  /** The round's rank mass on dangling (`deg = 0`) nodes: one row,
+    * broadcast so the update stays one distributed expression. */
+  private def danglingMass(ranks: DataFrame): DataFrame =
+    broadcast(ranks.where(col("deg") === 0)
+      .agg(coalesce(sum(col("rank")), lit(0.0)).as("d_mass")))
 
   /** WEIGHTED PageRank: a node's rank splits over its out-edges in
     * proportion to edge weight (contribution = rank * w / weighted
     * out-degree) instead of uniformly — the standard variant for
     * affinity/traffic graphs. Identical round shape to [[run]]'s
-    * simplified formulation: the weighted degree rides with each edge
-    * (computed once), each round is one partial-agg contribution
-    * shuffle + the node join-back. Rank sums are floating-point
-    * order-dependent; callers round (the oracle rounds to 6, like the
-    * other PageRank rows).
+    * simplified formulation: the weighted degree rides on the rank
+    * state (computed once), each round is one partial-agg contribution
+    * shuffle + the join back onto the state. Rank sums are
+    * floating-point order-dependent; callers round (the oracle rounds to
+    * 6, like the other PageRank rows).
     *
     * @param edges (src, dst, w) with positive weights */
   def weighted(edges: DataFrame, srcCol: String = "src",
@@ -186,35 +238,19 @@ object PageRank {
     require(iterations >= 1, "need at least one iteration")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("double").as("w"))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
-      e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct())
-    val (outEdges, outEdgesRdd) = CheckpointOps.checkpoint(
-      e.join(e.groupBy($"src").agg(sum($"w").as("wdeg")), Seq("src")))
-    val nNodes = nodes.count().toDouble
+    val g = graph(edges, srcCol, dstCol, weightCol = Some(weightCol))
+    val nNodes = g.n.toDouble
     val teleport = (1.0 - damping) / nNodes
-    var (ranks, ranksRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", lit(1.0 / nNodes).as("rank")))
-    var iter = 0
-    while (iter < iterations) {
-      val contribs = outEdges
-        .join(ranks.select($"node".as("src"), $"rank"), "src")
-        .groupBy($"dst".as("node"))
-        .agg(sum($"rank" * $"w" / $"wdeg").as("in_mass"))
-      val next = nodes.join(contribs, Seq("node"), "left")
+    val ranks = iterate(
+      g.nodes.select($"node", lit(1.0 / nNodes).as("rank"), $"deg", $"wdeg"),
+      g.nodesRdd, iterations) { ranks =>
+      withInMass(g, ranks, $"rank" * $"w" / $"wdeg")
         .select($"node",
           (lit(teleport) + lit(damping) * coalesce($"in_mass", lit(0.0)))
-            .as("rank"))
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
-      ranksRdd.unpersist(false)
-      ranks = nextFlat
-      ranksRdd = nextRdd
-      iter += 1
+            .as("rank"), $"deg", $"wdeg")
     }
-    nodesRdd.unpersist(false)
-    outEdgesRdd.unpersist(false)
-    ranks
+    g.edgesRdd.unpersist(false)
+    ranks.select($"node", $"rank")
   }
 
   /** Personalized PageRank: the teleport (and dangling) mass restarts
@@ -222,7 +258,7 @@ object PageRank {
     * nodes, turning rank into proximity-to-seeds (the recommendation /
     * similarity primitive). Same round shape as [[run]]: contribution
     * scatter + partial-agg sum, one 1-row dangling aggregate broadcast
-    * per round; the restart vector rides as a 0/1 flag on the node
+    * per round; the restart vector rides as a 0/1 flag `s` on the rank
     * state so no per-round join against the seed list. Dangling mass
     * returns to the seeds, so total mass stays exactly 1.
     *
@@ -235,54 +271,28 @@ object PageRank {
     require(iterations >= 1, "need at least one iteration")
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
-      e.select($"src".as("node")).union(e.select($"dst".as("node")))
-        .distinct()
-        .join(seeds.select($"node").distinct()
-          .select($"node", lit(1.0).as("s")), Seq("node"), "left")
-        .select($"node", coalesce($"s", lit(0.0)).as("s")))
-    val (outEdges, outEdgesRdd) = CheckpointOps.checkpoint(
-      e.join(e.groupBy($"src").agg(count(lit(1)).as("deg")), Seq("src")))
-    val (dangling, danglingRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node").join(e.select($"src".as("node")).distinct(),
-        Seq("node"), "left_anti"))
-    val nSeedsRow = nodes.agg(sum($"s")).head
-    if (nSeedsRow.isNullAt(0)) {
+    val g = graph(edges, srcCol, dstCol, seeds = Some(seeds))
+    if (g.n == 0) {
       // empty edge set -> no nodes at all: the rank table is empty (the
       // same answer the SQL formulation gives), not an error
-      nodesRdd.unpersist(false)
-      outEdgesRdd.unpersist(false)
-      danglingRdd.unpersist(false)
-      return nodes.select($"node", $"s".as("rank"))
+      g.edgesRdd.unpersist(false)
+      g.nodesRdd.unpersist(false)
+      return g.nodes.select($"node", $"s".as("rank"))
     }
-    val nSeeds = nSeedsRow.getDouble(0)
+    val nSeeds = g.nodes.agg(sum($"s")).head.getDouble(0)
     require(nSeeds > 0, "no seed is present in the graph")
-    var (ranks, ranksRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", ($"s" / nSeeds).as("rank")))
-    var iter = 0
-    while (iter < iterations) {
-      val contribs = outEdges
-        .join(ranks.select($"node".as("src"), $"rank"), "src")
-        .groupBy($"dst".as("node"))
-        .agg(sum($"rank" / $"deg").as("in_mass"))
-      val dMass = ranks.join(dangling, Seq("node"), "left_semi")
-        .agg(coalesce(sum($"rank"), lit(0.0)).as("d_mass"))
-      val next = nodes.join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(dMass))
+    val ranks = iterate(
+      g.nodes.select($"node", ($"s" / nSeeds).as("rank"), $"deg", $"s"),
+      g.nodesRdd, iterations) { ranks =>
+      withInMass(g, ranks, $"rank" / $"deg")
+        .crossJoin(danglingMass(ranks))
         .select($"node",
           (($"s" / nSeeds) * (lit(1.0 - damping) + lit(damping) * $"d_mass")
-            + lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"))
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
-      ranksRdd.unpersist(false)
-      ranks = nextFlat
-      ranksRdd = nextRdd
-      iter += 1
+            + lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"),
+          $"deg", $"s")
     }
-    nodesRdd.unpersist(false)
-    outEdgesRdd.unpersist(false)
-    danglingRdd.unpersist(false)
-    ranks
+    g.edgesRdd.unpersist(false)
+    ranks.select($"node", $"rank")
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 46(5) 1999): mutual

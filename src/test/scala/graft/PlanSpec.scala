@@ -596,6 +596,47 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("pagerank: a round joins the edges to the broadcast rank state — " +
+    "no shuffle exchange on the edge side") {
+    import graft.operators.PageRank
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+      BroadcastHashJoinExec}
+    val edges = spark.range(0, 400)
+      .select((col("id") % 37).as("src"), ((col("id") * 11) % 53).as("dst"))
+    val g = PageRank.graph(edges, "src", "dst")
+    try {
+      withSQLConf("spark.sql.adaptive.enabled" -> "false") {
+        for (redistribute <- Seq(false, true)) {
+          val round = PageRank.runRound(g,
+            g.nodes.select(col("node"), lit(1.0 / g.n).as("rank"), col("deg")),
+            0.85, redistribute)
+          round.collect()
+          val p = round.queryExecution.executedPlan
+          // the subtree between a join and the edge checkpoint's scan
+          def edgeLeg(q: SparkPlan): Boolean = q match {
+            case r: RDDScanExec => r.rdd eq g.edgesRdd
+            case _: BaseJoinExec => false
+            case o => o.children.exists(edgeLeg)
+          }
+          val joins = p.collect {
+            case j: BaseJoinExec if j.children.exists(edgeLeg) => j
+          }
+          assert(joins.size == 1 && joins.head.isInstanceOf[BroadcastHashJoinExec],
+            s"expected one broadcast join over the edges:\n$p")
+          val edgeSide = joins.head.children.filter(edgeLeg)
+          assert(edgeSide.forall(_.collect {
+            case e: ShuffleExchangeExec => e }.isEmpty),
+            s"the edge side must not shuffle:\n$p")
+        }
+      }
+    } finally {
+      g.edgesRdd.unpersist(false)
+      g.nodesRdd.unpersist(false)
+    }
+  }
+
   test("cc_incremental: the standing-base label probe is scan-only — " +
     "no Exchange of the corpus-sized base, hinted or unhinted") {
     import graft.operators.ConnectedComponents

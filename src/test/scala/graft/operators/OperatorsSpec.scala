@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -468,6 +469,71 @@ class OperatorsSpec extends SparkTestBase {
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     val rc = PageRank.run(cyc, iterations = 5).as[(Long, Double)].collect()
     rc.foreach { case (_, r) => assert(math.abs(r - 1.0 / 3) < 1e-12) }
+  }
+
+  test("pageRank evaluates its edge input exactly once") {
+    // every input row passes a non-deterministic tap; a second read of
+    // the lazy input (node set, out-degree, dangling set, each round)
+    // would count the edges again
+    val seen = spark.sparkContext.longAccumulator("pr_input_rows")
+    val tap = udf { (x: Long) => seen.add(1L); x }.asNondeterministic()
+    val nEdges = 200L
+    val edges = spark.range(0, nEdges)
+      .select(tap(col("id") % 17).as("src"), ((col("id") * 7) % 23).as("dst"),
+        (col("id") % 5 + 1).as("w"))
+    for ((fn, name) <- Seq[(DataFrame => DataFrame, String)](
+        (PageRank.run(_, iterations = 3, redistributeDangling = true), "run"),
+        (PageRank.weighted(_, iterations = 3), "weighted"),
+        (PageRank.personalized(_, Seq(1L, 5L).toDF("node"), iterations = 3),
+          "personalized"))) {
+      seen.reset()
+      assert(fn(edges).count() == 23L, name) // dst 0..22 covers src 0..16
+      assert(seen.value == nEdges, s"$name read its input ${
+        seen.value.toDouble / nEdges} times")
+    }
+  }
+
+  test("pageRank equals a local power iteration on random multigraphs " +
+    "with self-loops, dangling mass redistributed or not") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.rng.Seed
+    def local(edges: Seq[(Long, Long)], iters: Int,
+              redistribute: Boolean): Map[Long, Double] = {
+      val d = 0.85
+      val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      val n = nodes.size.toDouble
+      val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size }
+      var rank = nodes.map(_ -> 1.0 / n).toMap
+      for (_ <- 1 to iters) {
+        val in = scala.collection.mutable.Map.empty[Long, Double]
+        for ((a, b) <- edges) in(b) = in.getOrElse(b, 0.0) + rank(a) / deg(a)
+        val dMass =
+          if (redistribute) nodes.filterNot(deg.contains).map(rank).sum
+          else 0.0
+        rank = nodes.map(v =>
+          v -> ((1 - d) / n + d * (in.getOrElse(v, 0.0) + dMass / n))).toMap
+      }
+      rank
+    }
+    val edge = for (a <- Gen.choose(0L, 9L); b <- Gen.choose(0L, 9L))
+      yield (a, b)
+    val caseGen = for {
+      es <- Gen.choose(1, 24).flatMap(Gen.listOfN(_, edge))
+      iters <- Gen.choose(1, 4)
+    } yield (es, iters)
+    val prop = Prop.forAllNoShrink(caseGen) { case (es, iters) =>
+      Seq(false, true).forall { redistribute =>
+        val got = PageRank.run(es.toDF("src", "dst"), iterations = iters,
+            redistributeDangling = redistribute)
+          .as[(Long, Double)].collect().toMap
+        val want = local(es, iters, redistribute)
+        got.keySet == want.keySet &&
+          want.forall { case (v, r) => math.abs(got(v) - r) < 1e-12 }
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(6).withInitialSeed(Seed(20261018L)), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("hits matches hand-computed mutual-reinforcement rounds") {

@@ -68,4 +68,36 @@ class CheckpointPartitioningSpec extends SparkTestBase {
     assert(c.groupBy("k").count().collect().map(_.getLong(1)).sum == 100)
     rdd.unpersist(false)
   }
+
+  test("a checkpoint carries its measured row count, so a small frame " +
+    "whose estimate is a join product still broadcasts") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // 100 rows out of a 20k x 20k equi-join: the plan's estimate is the
+    // product of its inputs' sizes, far past the broadcast threshold
+    val l = spark.range(0, 20000).select(col("id").as("k"))
+    val r = spark.range(0, 20000).select(col("id").as("k2"),
+      (col("id") * 2).as("v"))
+    val (small, smallRdd) = CheckpointOps.checkpoint(
+      l.join(r, $"k" === $"k2").where($"k" < 100).select($"k", $"v"))
+    assert(small.queryExecution.optimizedPlan.stats.rowCount ==
+      Some(BigInt(100)))
+    withSQLConf("spark.sql.adaptive.enabled" -> "false") {
+      // three long columns: 16 MB by Spark's own estimate, no broadcast
+      val big = spark.range(0, 1000000).select((col("id") % 1000).as("k"),
+        col("id").as("a"), (col("id") * 3).as("b"))
+      val joined = big.join(small, "k")
+      val plan = joined.queryExecution.executedPlan
+      assert(plan.collectFirst { case b: BroadcastHashJoinExec => b }
+        .nonEmpty, s"expected a broadcast hash join:\n$plan")
+      val built = plan.collect { case b: BroadcastExchangeExec => b }
+      assert(built.size == 1 && built.head.collect {
+        case s: RDDScanExec if s.rdd eq smallRdd => s
+      }.nonEmpty, s"the checkpoint must be the broadcast side:\n$plan")
+      // keys 0..99 of the checkpoint each meet 1,000 range rows
+      assert(joined.count() == 100000L)
+    }
+    smallRdd.unpersist(false)
+  }
 }
