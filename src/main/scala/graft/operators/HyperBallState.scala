@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointOps
@@ -62,20 +62,6 @@ private[graft] trait HbRegStore {
   /** Full max-merge resolution of hop h's standing stack. */
   def resolved(h: Int): DataFrame
 
-  /** Grow the state one hop: propagate the resolved top registers one
-    * round over ALL standing edges and append the result as the new
-    * top stack — the lazy-hop move of the adaptive saturation stop.
-    * Chains the raw top frame when the stack has exactly one (the
-    * initial-load case: identical plan to the fixed-hop rebuild). */
-  def growHop(): Unit
-
-  /** [[growHop]] that also returns the new hop's quantized global
-    * ball-sum Σ_v ⌊N̂(v)·1e6 + 0.5⌋, summed by the materializing pass
-    * itself ([[org.apache.spark.sql.graft.CheckpointOps.checkpointSum]]
-    * over [[PageRank.packedRegsWithQ]]) — the adaptive stop's per-hop
-    * scalar without a second scan of the frame the round just wrote. */
-  def growHopQ(): Long
-
   /** Track a batch/init-local materialized RDD (edge frames, empty
     * deltas) that is DEAD once the last fold lands — freed by
     * [[close]], so a long-lived session doesn't accumulate
@@ -94,7 +80,6 @@ private[graft] trait HbRegStore {
 private[graft] final class InMemoryHbRegStore(
     val spark: SparkSession, val p: Int) extends HbRegStore {
   private val m = 1 << p
-  private val mergeRegs = udaf(new RegisterMaxMerge(m))
   private var frames = Vector.empty[Vector[DataFrame]]
   private var edgeFrames = Vector.empty[DataFrame]
   private val transients =
@@ -112,8 +97,7 @@ private[graft] final class InMemoryHbRegStore(
     // skipping the agg drops an exchange per probe in the common case
     // (the resolved() fast path, applied to the semi-probed subset)
     if (probed.size == 1) probed.head
-    else probed.reduce(_ union _)
-      .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs"))
+    else PageRank.maxMergeByNode(probed.reduce(_ union _), m)
   }
 
   def seen0Nodes(keys: DataFrame): DataFrame = {
@@ -143,22 +127,7 @@ private[graft] final class InMemoryHbRegStore(
     // resolution — skipping the agg keeps the initial-load hop chain
     // (and post-compact reads) free of redundant exchanges
     if (frames(h).size == 1) frames(h).head
-    else frames(h).reduce(_ unionByName _)
-      .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs"))
-
-  def growHop(): Unit = {
-    val (next, nextRdd) = CheckpointOps.checkpointTruncated(
-      PageRank.packedPropagateRound(allEdges, resolved(maxHop), m))
-    appendDelta(maxHop + 1, next, nextRdd)
-  }
-
-  def growHopQ(): Long = {
-    val (nextQ, nextRdd, q) = CheckpointOps.checkpointSumTruncated(
-      PageRank.packedRegsWithQ(
-        PageRank.packedPropagateRound(allEdges, resolved(maxHop), m), m), 2)
-    appendDelta(maxHop + 1, nextQ.select(col("node"), col("regs")), nextRdd)
-    q
-  }
+    else PageRank.maxMergeByNode(frames(h).reduce(_ unionByName _), m)
 
   def trackTransient(rdd: RDD[InternalRow]): Unit = transients += rdd
 
@@ -185,48 +154,75 @@ private[graft] final class InMemoryHbRegStore(
   * stream == fold == rebuild is structural, not incidental. */
 private[graft] object HyperBallState {
 
-  /** Initial load: hop-0 self-sketches for the edge set's source
-    * nodes, then one [[PageRank.packedPropagateRound]] per hop chained
-    * on the previous hop's frame — the SAME shared round as the
-    * fixed-hop rebuild (the fold-equals-rebuild contract). */
+  /** Initial load: the edge projection checkpointed once, hop-0
+    * self-sketches for its source nodes, then one [[growHop]] per hop
+    * chained on the previous hop's frame. Every batch HyperBall row is
+    * this load with no batches folded, so fold == rebuild is the same
+    * code. The edge frame is materialized because each round and the
+    * node init consume it, and an un-materialized edge plan re-executes
+    * per consumer (the registry rows pass a spatial self-join worth
+    * ~1 s per execution at sf0.1, GraphBuildProbe r17); it is a
+    * transient, freed by [[HbRegStore.close]] — the estimates read only
+    * the register frames.
+    *
+    * With `trackQ`, every hop's quantized global ball-sum
+    * (Σ_v ⌊N̂_h(v)·1e6 + 0.5⌋ for h = 0..maxHops) comes out of its
+    * frame's own materializing pass — the adaptive consumer's starting
+    * sums WITHOUT a corpus-wide re-scan of the frames the init just
+    * wrote. Long addition is order-free, so the vector is bit-identical
+    * to [[HyperBallAdaptive.qsAll]] over the same state. Without it the
+    * sums read 0 and the plans carry no q column. */
   def init(store: HbRegStore, initialEdges: DataFrame, maxHops: Int,
-           srcCol: String, dstCol: String): Unit = {
-    val e0 = initEdges(store, initialEdges, srcCol, dstCol)
-    val (r0, r0Rdd) = CheckpointOps.checkpointTruncated(
-      PageRank.packedInitRegs(
-        e0.select(col("src").as("node")).distinct(), store.p))
-    store.appendDelta(0, r0, r0Rdd)
-    for (_ <- 1 to maxHops) store.growHop()
-  }
-
-  /** [[init]] that also returns every hop's quantized global ball-sum
-    * (Σ_v ⌊N̂_h(v)·1e6 + 0.5⌋ for h = 0..maxHops), each summed by its
-    * frame's own materializing pass ([[CheckpointOps.checkpointSum]] /
-    * [[HbRegStore.growHopQ]]) — the adaptive consumer's starting sums
-    * WITHOUT a corpus-wide re-scan of the frames the init just wrote.
-    * Long addition is order-free, so the vector is bit-identical to
-    * [[HyperBallAdaptive.qsAll]] over the same state. */
-  def initQ(store: HbRegStore, initialEdges: DataFrame, maxHops: Int,
-            srcCol: String, dstCol: String): Vector[Long] = {
-    val e0 = initEdges(store, initialEdges, srcCol, dstCol)
-    val (r0Q, r0Rdd, q0) = CheckpointOps.checkpointSumTruncated(
-      PageRank.packedRegsWithQ(PageRank.packedInitRegs(
-        e0.select(col("src").as("node")).distinct(), store.p), 1 << store.p),
-      2)
-    store.appendDelta(0, r0Q.select(col("node"), col("regs")), r0Rdd)
-    var qs = Vector(q0)
-    for (_ <- 1 to maxHops) qs :+= store.growHopQ()
-    qs
-  }
-
-  private def initEdges(store: HbRegStore, initialEdges: DataFrame,
-                        srcCol: String, dstCol: String): DataFrame = {
+           srcCol: String, dstCol: String,
+           trackQ: Boolean = false): Vector[Long] = {
     val (e0, e0Rdd) = CheckpointOps.checkpointTruncated(
       initialEdges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     store.trackTransient(e0Rdd)
     store.appendEdges(e0)
-    e0
+    val m = 1 << store.p
+    val (r0, r0Rdd, _, q0) = materializeRegs(
+      PageRank.packedInitRegs(
+        e0.select(col("src").as("node")).distinct(), store.p),
+      PageRank.packedQExpr(col("regs"), m), trackQ)
+    store.appendDelta(0, r0, r0Rdd)
+    q0 +: Vector.fill(maxHops)(growHop(store, trackQ))
   }
+
+  /** Grow the state one hop: propagate the resolved top registers one
+    * [[PageRank.packedPropagateRound]] over ALL standing edges and
+    * append the result as the new top stack — the initial load's hop
+    * chain and the lazy-hop move of the adaptive saturation stop. A
+    * single-frame top resolves to that frame itself, so the initial
+    * load chains the raw previous hop. Returns the new hop's quantized
+    * ball-sum under `trackQ` (see [[init]]), else 0. */
+  def growHop(store: HbRegStore, trackQ: Boolean = false): Long = {
+    val m = 1 << store.p
+    val (next, nextRdd, _, q) = materializeRegs(
+      PageRank.packedPropagateRound(store.allEdges,
+        store.resolved(store.maxHop), m),
+      PageRank.packedQExpr(col("regs"), m), trackQ)
+    store.appendDelta(store.maxHop + 1, next, nextRdd)
+    q
+  }
+
+  /** Materialize a register frame's (node, regs) columns, returning the
+    * frame, its RDD handle, its row count and — under `trackQ` — the
+    * sum of the long column `q` over its rows, taken by the
+    * materializing pass itself
+    * ([[CheckpointOps.checkpointCountSumTruncated]]), so a per-hop
+    * scalar costs no second scan of the frame. Without `trackQ` the
+    * plan is the plain checkpoint of (node, regs), no q column. */
+  private def materializeRegs(regs: DataFrame, q: Column, trackQ: Boolean)
+      : (DataFrame, RDD[InternalRow], Long, Long) =
+    if (trackQ) {
+      val (f, rdd, n, s) = CheckpointOps.checkpointCountSumTruncated(
+        regs.select(col("node"), col("regs"), q.as("q")), 2)
+      (f.select(col("node"), col("regs")), rdd, n, s)
+    } else {
+      val (f, rdd, n) = CheckpointOps.checkpointCountTruncated(
+        regs.select(col("node"), col("regs")))
+      (f, rdd, n, 0L)
+    }
 
   /** Fold one edge batch into the standing state by monotone delta
     * propagation: a batch's effect is confined to the nodes whose
@@ -260,7 +256,6 @@ private[graft] object HyperBallState {
                 srcCol: String, dstCol: String,
                 trackQ: Boolean = false): Vector[Long] = {
     val m = 1 << store.p
-    val mergeRegs = udaf(new RegisterMaxMerge(m))
     val (newE, newERdd) = CheckpointOps.checkpointTruncated(
       batch.select(col(srcCol).as("src"), col(dstCol).as("dst")))
     store.trackTransient(newERdd)
@@ -281,15 +276,7 @@ private[graft] object HyperBallState {
     val d0Plan = PageRank.packedInitRegs(
       srcNodes.join(broadcast(seen0), Seq("node"), "left_anti"), store.p)
     val (d0, d0Rdd, n0New, q0Delta) =
-      if (trackQ)
-        CheckpointOps.checkpointCountSumTruncated(
-          PageRank.packedRegsWithQ(d0Plan, m), 2) match {
-          case (f, rdd, n, s) =>
-            (f.select(col("node"), col("regs")), rdd, n, s)
-        }
-      else CheckpointOps.checkpointCountTruncated(d0Plan) match {
-        case (f, rdd, n) => (f, rdd, n, 0L)
-      }
+      materializeRegs(d0Plan, PageRank.packedQExpr(col("regs"), m), trackQ)
     if (n0New > 0) store.appendDelta(0, d0, d0Rdd)
     else store.trackTransient(d0Rdd)
     store.appendEdges(newE)
@@ -302,8 +289,7 @@ private[graft] object HyperBallState {
         .join(broadcast(srcRegs.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), col("regs"))
       val (cand, candRdd) = CheckpointOps.checkpointTruncated(
-        viaDelta.union(viaNewE).union(deltaPrev)
-          .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs")))
+        PageRank.maxMergeByNode(viaDelta.union(viaNewE).union(deltaPrev), m))
       val old = store.resolveFor(h, cand.select(col("node")))
         .withColumnRenamed("regs", "old_regs")
       val merged = cand.join(old, Seq("node"), "left")
@@ -314,20 +300,10 @@ private[graft] object HyperBallState {
           col("old_regs"))
       val changed = merged.where(col("old_regs").isNull ||
         !(col("regs") <=> col("old_regs")))
-      val (dh, dhRdd, nCh, qhDelta) =
-        if (trackQ)
-          CheckpointOps.checkpointCountSumTruncated(
-            changed.select(col("node"), col("regs"),
-              (PageRank.packedQExpr(col("regs"), m) -
-                coalesce(PageRank.packedQExpr(col("old_regs"), m),
-                  lit(0L))).as("qd")), 2) match {
-            case (f, rdd, n, s) =>
-              (f.select(col("node"), col("regs")), rdd, n, s)
-          }
-        else CheckpointOps.checkpointCountTruncated(
-          changed.select(col("node"), col("regs"))) match {
-          case (f, rdd, n) => (f, rdd, n, 0L)
-        }
+      val (dh, dhRdd, nCh, qhDelta) = materializeRegs(changed,
+        PageRank.packedQExpr(col("regs"), m) -
+          coalesce(PageRank.packedQExpr(col("old_regs"), m), lit(0L)),
+        trackQ)
       // cand is dead the moment the delta lands (its consumers — the
       // old-register probe and the merge — all ran inside dh's
       // materialization); free it instead of leaving maxHops × batches
@@ -342,8 +318,8 @@ private[graft] object HyperBallState {
   }
 
   /** The RESOLVED per-hop estimate frames (node, n$h) off a standing
-    * store — the shape [[PageRank.hyperBallHopEstimates]] yields for
-    * the rebuild form, so every downstream fold is one shared copy. */
+    * store — what every per-hop fold (harmonic, closeness, NF) reads,
+    * in the batch, in-memory incremental and at-rest forms alike. */
   def estimates(store: HbRegStore): Seq[DataFrame] =
     (0 to store.maxHop).map { h =>
       PageRank.packedEstimate(store.resolved(h), s"n$h", 1 << store.p)
@@ -378,8 +354,8 @@ private[graft] object HyperBallAdaptive {
   }
 
   /** First saturated hop over the CURRENT sums (-1: none in
-    * 1..maxHop) — the same quantized-long comparison
-    * [[PageRank.hyperBallAdaptiveQs]] drives. */
+    * 1..maxHop) — the quantized-long comparison every adaptive form
+    * drives. */
   def stopHop(qs: Vector[Long], epsilon: Double): Int =
     (1 until qs.size).find(h =>
       (qs(h) - qs(h - 1)).toDouble < epsilon * qs(h).toDouble)
@@ -388,32 +364,42 @@ private[graft] object HyperBallAdaptive {
   /** Extend the store one shared propagation round at a time until the
     * stop rule fires over the growing sums (or `hopCap`). Each growth
     * round's sum comes out of its own materialization pass
-    * ([[HbRegStore.growHopQ]]) — no second register scan per hop. */
+    * ([[HyperBallState.growHop]] with trackQ) — no second register
+    * scan per hop. A zero top sum means the state holds no nodes at
+    * all: the rule can never fire on it ((0 − 0) < ε·0 is false) and
+    * growing adds nothing, so growth stops there. */
   def growUntilSaturated(store: HbRegStore, qs0: Vector[Long],
                          hopCap: Int, epsilon: Double): Vector[Long] = {
     var qs = qs0
-    while (stopHop(qs, epsilon) < 0 && store.maxHop < hopCap) {
-      qs :+= store.growHopQ()
+    while (qs.last > 0L && stopHop(qs, epsilon) < 0 &&
+        store.maxHop < hopCap) {
+      qs :+= HyperBallState.growHop(store, trackQ = true)
     }
     qs
   }
 
-  /** The emitted rows: re-derive the stop over the FINAL corpus sums
-    * (growth during intermediate batches may have overshot — later
-    * batches can saturate an earlier hop — and the rule is first-h),
-    * then (hop, nf, frac) for hop 0..stop; empty when the state holds
-    * no mass (no edges anywhere). */
-  def emit(spark: SparkSession, qs: Vector[Long], topHop: Int,
-           hopCap: Int, epsilon: Double): DataFrame = {
-    import spark.implicits._
-    if (qs.last == 0L)
-      return Seq.empty[(Int, Double, Double)].toDF("hop", "nf", "frac")
-    val stop = stopHop(qs, epsilon) match {
+  /** The sums the emitted rows read: q_0..q_stop, the stop re-derived
+    * over the FINAL corpus sums (growth during intermediate batches may
+    * have overshot — later batches can saturate an earlier hop — and
+    * the rule is first-h; `topHop` capped at `hopCap` when it never
+    * fires). Empty when the state holds no mass (no edges anywhere). */
+  def stopped(qs: Vector[Long], topHop: Int, hopCap: Int,
+              epsilon: Double): Vector[Long] =
+    if (qs.last == 0L) Vector.empty
+    else qs.take(1 + (stopHop(qs, epsilon) match {
       case -1 => math.min(topHop, hopCap)
       case h => h
-    }
-    val nfStop = qs(stop).toDouble / 1e6
-    qs.take(stop + 1).zipWithIndex.map { case (q, h) =>
+    }))
+
+  /** The emitted rows off [[stopped]] sums: (hop, nf, frac) for hop
+    * 0..stop, the fraction relative to NF(stop) and floor-quantized
+    * with pure IEEE ops; empty for empty sums. */
+  def emit(spark: SparkSession, stoppedQs: Vector[Long]): DataFrame = {
+    import spark.implicits._
+    if (stoppedQs.isEmpty)
+      return Seq.empty[(Int, Double, Double)].toDF("hop", "nf", "frac")
+    val nfStop = stoppedQs.last.toDouble / 1e6
+    stoppedQs.zipWithIndex.map { case (q, h) =>
       val nf = q.toDouble / 1e6
       (h, nf, math.floor(nf / nfStop * 1e6 + 0.5) / 1e6)
     }.toDF("hop", "nf", "frac")

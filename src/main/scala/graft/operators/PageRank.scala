@@ -456,7 +456,7 @@ object PageRank {
     val spark = edges.sparkSession
     import spark.implicits._
     // edge frame materialized once for the node init + every round
-    // (the hyperBallHopEstimates rationale); labels are checkpoint-
+    // (the HyperBallState.init rationale); labels are checkpoint-
     // backed, so the edge blocks free when the loop ends
     val (e, eRdd) = CheckpointOps.checkpoint(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
@@ -509,7 +509,7 @@ object PageRank {
     val spark = edges.sparkSession
     import spark.implicits._
     // edge frame materialized once for the maxHops frontier joins (the
-    // hyperBallHopEstimates rationale); the returned distances are
+    // HyperBallState.init rationale); the returned distances are
     // checkpoint-backed, so the edge blocks free on exit
     val (e, eRdd) = CheckpointOps.checkpoint(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
@@ -594,7 +594,7 @@ object PageRank {
     val spark = edges.sparkSession
     import spark.implicits._
     // edge frame materialized once for the maxRounds relaxations (the
-    // hyperBallHopEstimates rationale); distances are checkpoint-backed
+    // HyperBallState.init rationale); distances are checkpoint-backed
     val (e, eRdd) = CheckpointOps.checkpoint(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w")))
@@ -642,7 +642,7 @@ object PageRank {
     * order, so the double result is an order-proof function of the
     * graph). State is Σ_v |B_maxHops(v)| pair rows — QUADRATIC in the
     * worst case, which is exactly why this is the small-graph
-    * cross-check: the 100 TB path is [[hyperBall]], whose register
+    * cross-check: the 100 TB path is [[hyperBallPacked]], whose register
     * state is a fixed m rows per node, and whose estimate this row's
     * exact values calibrate (the dd_blocking_quality exact/sampled
     * pairing, applied to centrality). */
@@ -687,7 +687,7 @@ object PageRank {
     * [[closenessExact]]: (src, node, dist) for every ordered pair
     * within `maxHops`, min-merged per round on the CheckpointOps round
     * machinery. Quadratic state by nature — the exact cross-check leg;
-    * [[hyperBall]] is the sketch-state scale path. */
+    * [[hyperBallPacked]] is the sketch-state scale path. */
   private def pairHopDistances(edges: DataFrame, maxHops: Int,
                                srcCol: String, dstCol: String,
                                stateBudgetRows: Long): DataFrame = {
@@ -696,7 +696,7 @@ object PageRank {
     val spark = edges.sparkSession
     import spark.implicits._
     // edge frame materialized once for the seed + every BFS round (the
-    // hyperBallHopEstimates rationale); the returned state is a union
+    // HyperBallState.init rationale); the returned state is a union
     // of checkpointed pair frames, so the edge blocks free on exit —
     // including the budget-trip error path (finally)
     val (e, eRdd) = CheckpointOps.checkpoint(
@@ -755,112 +755,54 @@ object PageRank {
     if (rows > budget) {
       rdds.foreach(_.unpersist(false))
       throw new CentralityStateBudgetExceeded(round, rows, budget,
-        "use the sketch-state scale path (hyperBall / hyperBallPacked) " +
+        "use the sketch-state scale path (hyperBallPacked / hyperBallCloseness) " +
           "or shrink maxHops / the source sample.")
     }
 
   /** HyperBall (Boldi & Vigna, "In-core computation of geometric
     * centralities with HyperBall", ICDMW 2013): approximate harmonic
     * centrality for EVERY node via HyperLogLog counters propagated
-    * along edges. Each node starts with the HLL register of its own id
-    * ([[Sketches.hllRegister]], the repo's md5 parity hash, so the
-    * whole computation — including the estimate — is deterministic and
-    * oracle-reproducible). Round h max-merges every node's registers
-    * with its in-neighbors'; register max commutes with set union, so
-    * after round h a node's register table IS the exact HLL sketch of
-    * its inverse ball B_h(v) (spec'd as an identity against
+    * along edges. Each node starts with the HLL register file of its
+    * own id ([[Sketches.hllRegister]], the repo's md5 parity hash, so
+    * the whole computation — including the estimate — is deterministic
+    * and oracle-reproducible). Round h max-merges every node's
+    * registers with its in-neighbors'; register max commutes with set
+    * union, so after round h a node's registers ARE the exact HLL
+    * sketch of its inverse ball B_h(v) (spec'd as an identity against
     * directly-sketched exact balls). Harmonic estimate:
     * `Σ_h (N̂_h − N̂_{h−1}) / h` with N̂_h the round-h cardinality
     * estimate.
     *
-    * THE 100 TB path for centrality: state is ≤ m = 2^p register rows
-    * per node (KB of sketch, never pairs), each round is one keyed
-    * edge join + one (node, register) max-agg — both with map-side
-    * partial combine — where the exact computation ([[harmonicExact]])
-    * carries a pair row per reachable (src, node). Accuracy is the
-    * standard HLL 1.04/√m relative error on each ball size.
+    * Registers are PACKED: one m-slot int-array row per node merged by
+    * [[RegisterMaxMerge]] (the layout HyperBall itself uses — register
+    * files, not register tuples), so each round is one keyed edge join
+    * + one per-node max-agg with map-side partial combine, O(E) array
+    * rows of shuffle. State is one m = 2^p register file per node (KB
+    * of sketch, never pairs), where the exact computation
+    * ([[harmonicExact]]) carries a pair row per reachable (src, node).
+    * Accuracy is the standard HLL 1.04/√m relative error on each ball
+    * size. The estimator's register fold sums exact powers of two
+    * (exponents in [−(32−p)−1, 0], ≤ m terms), exactly representable in
+    * an IEEE double at any summation order, so the estimate equals
+    * hllEstimate's over the same registers bit for bit.
     *
-    * @return (node, est_0 … est_maxHops column `harmonic_est`) for
-    *         every node with at least one out-edge */
-  def hyperBall(edges: DataFrame, maxHops: Int = 3, p: Int = 6,
-                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    require(maxHops >= 1, "need at least one hop")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // materialize the edge frame ONCE: the loop below consumes it every
-    // round (plus the node-set init), and an un-materialized edge plan —
-    // the registry rows pass a spatial self-join — re-executes per
-    // consumer (measured: ~1 s per execution at sf0.1, maxHops+1
-    // executions). The estimates only read the register checkpoints, so
-    // the edge blocks free the moment the loop ends.
-    val (e, eRdd) = CheckpointOps.checkpoint(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = e.select($"src".as("node")).distinct()
-    val (idx, rho) = Sketches.hllRegister(col("node").cast("string"), p)
-    // every round's register table backs one of the per-round estimates
-    // consumed in the final select, so (unlike the fixpoint loops) no
-    // round is unpersisted early — total pinned state is bounded at
-    // (maxHops+1) * m rows per node, KB-scale sketch state by design
-    var (regs, _) = CheckpointOps.checkpoint(
-      nodes.select($"node", idx.as("hll_idx"), rho.as("mj")))
-    def estimate(r: DataFrame, name: String): DataFrame =
-      Sketches.hllEstimate(r, Seq("node"), p)
-        .select($"node", col("hll_estimate").as(name))
-    var ests = Vector(estimate(regs, "n0"))
-    var hop = 1
-    while (hop <= maxHops) {
-      val fromNeighbors = e.join(regs.withColumnRenamed("node", "src"), "src")
-        .select($"dst".as("node"), $"hll_idx", $"mj")
-      val (next, _) = CheckpointOps.checkpoint(
-        fromNeighbors.union(regs)
-          .groupBy($"node", $"hll_idx").agg(max($"mj").as("mj")))
-      regs = next
-      ests :+= estimate(regs, s"n$hop")
-      hop += 1
-    }
-    eRdd.unpersist(false)
-    // fixed-order fold (n1−n0)/1 + (n2−n1)/2 + … so the IEEE result is
-    // reproducible term-for-term by the oracle
-    val joined = ests.reduce((a, b) => a.join(b, Seq("node")))
-    val harmonic = (1 to maxHops)
-      .map(h => (col(s"n$h") - col(s"n${h - 1}")) / lit(h.toDouble))
-      .reduce(_ + _)
-    joined.select($"node", harmonic.as("harmonic_est"))
-  }
-
-  /** [[hyperBall]] with PACKED registers: one m-slot int-array row per
-    * node merged by a custom max Aggregator, instead of up to m
-    * (node, register) rows. Per-round shuffle traffic drops from
-    * O(E · registers-present) rows to O(E) array rows — at the sf1
-    * probe's densified lattice that is ~40× fewer shuffle rows — which
-    * is the layout HyperBall itself uses (Boldi & Vigna keep register
-    * files, not register tuples).
+    * A batch run is the standing state of [[hyperBallIncremental]] with
+    * no batches: [[HyperBallState.init]] propagates every hop once.
     *
-    * Output is BIT-IDENTICAL to [[hyperBall]] (spec'd): the registers
-    * max-merge to the same contents regardless of layout, and the
-    * estimator's register fold sums exact powers of two (exponents in
-    * [−(32−p)−1, 0], ≤ m terms — exactly representable in an IEEE
-    * double at any summation order), so even the packed fold over
-    * empty-and-present slots together reproduces hllEstimate's
-    * present-sum-plus-empty-count double exactly. */
+    * @return (node, harmonic_est) for every node with an out-edge */
   def hyperBallPacked(edges: DataFrame, maxHops: Int = 3, p: Int = 6,
                       srcCol: String = "src",
-                      dstCol: String = "dst"): DataFrame = {
-    val joined = hyperBallEstimates(edges, maxHops, p, srcCol, dstCol)
-    val harmonic = (1 to maxHops)
-      .map(h => (col(s"n$h") - col(s"n${h - 1}")) / lit(h.toDouble))
-      .reduce(_ + _)
-    joined.select(col("node"), harmonic.as("harmonic_est"))
-  }
+                      dstCol: String = "dst"): DataFrame =
+    harmonicFold(hyperBallIncrementalEstimates(edges, Nil, maxHops, p,
+      srcCol, dstCol))
 
   /** CLOSENESS off the same HyperBall register propagation — the
-    * sketch-state counterpart [[closenessExact]] lacked (harmonic has
-    * had [[hyperBallPacked]] since r14; Boldi & Vigna's point is that
-    * the per-round ball-size estimates N̂_0..N̂_H support ALL geometric
-    * centralities, so both folds read the SAME register tables):
-    * reachable-count estimate r̂ = N̂_H − N̂_0, distance-sum estimate
-    * Σd̂ = Σ_h h·(N̂_h − N̂_{h−1}), closeness = r̂ / Σd̂ — exactly the
-    * truncated r/Σd [[closenessExact]] computes, with ball sizes
+    * sketch-state counterpart of [[closenessExact]] (Boldi & Vigna's
+    * point is that the per-round ball-size estimates N̂_0..N̂_H support
+    * ALL geometric centralities, so both folds read the SAME register
+    * tables): reachable-count estimate r̂ = N̂_H − N̂_0, distance-sum
+    * estimate Σd̂ = Σ_h h·(N̂_h − N̂_{h−1}), closeness = r̂ / Σd̂ — exactly
+    * the truncated r/Σd [[closenessExact]] computes, with ball sizes
     * replaced by their HLL estimates. Fixed fold order (h ascending,
     * numerator before denominator), so the oracle replays the doubles
     * term for term. Deterministic under the md5 parity hash, like the
@@ -870,7 +812,9 @@ object PageRank {
   def hyperBallCloseness(edges: DataFrame, maxHops: Int = 3, p: Int = 6,
                          srcCol: String = "src",
                          dstCol: String = "dst"): DataFrame = {
-    val joined = hyperBallEstimates(edges, maxHops, p, srcCol, dstCol)
+    val joined = hyperBallIncrementalEstimates(edges, Nil, maxHops, p,
+        srcCol, dstCol)
+      .reduce((a, b) => a.join(b, Seq("node")))
     val reach = col(s"n$maxHops") - col("n0")
     val distSum = (1 to maxHops)
       .map(h => lit(h.toDouble) * (col(s"n$h") - col(s"n${h - 1}")))
@@ -897,7 +841,8 @@ object PageRank {
   def hyperBallNeighborhood(edges: DataFrame, maxHops: Int = 3,
                             p: Int = 6, srcCol: String = "src",
                             dstCol: String = "dst"): DataFrame =
-    nfFold(hyperBallHopEstimates(edges, maxHops, p, srcCol, dstCol))
+    nfFold(hyperBallIncrementalEstimates(edges, Nil, maxHops, p, srcCol,
+      dstCol))
 
   /** The NF fold off per-hop estimate frames (frame h carries column
     * n$h): folds each hop's estimates DIRECTLY into its global sum — no
@@ -962,56 +907,9 @@ object PageRank {
           + lit(0.5)) / lit(1e6)).as("eff_diameter"))
   }
 
-  /** The shared per-node estimate table under [[hyperBallPacked]] /
-    * [[hyperBallCloseness]]: the per-hop frames of
-    * [[hyperBallHopEstimates]] joined on node into columns
-    * n0..n{maxHops} — the shape the per-node centrality folds read.
-    * Global folds ([[hyperBallNeighborhood]]) consume the hop frames
-    * directly instead: they need no per-node alignment, and the join
-    * would re-execute every hop's estimator per hop selection. */
-  private def hyperBallEstimates(edges: DataFrame, maxHops: Int, p: Int,
-                                 srcCol: String, dstCol: String): DataFrame =
-    hyperBallHopEstimates(edges, maxHops, p, srcCol, dstCol)
-      .reduce((a, b) => a.join(b, Seq("node")))
-
-  /** The shared HyperBall round loop: packed-register propagation for
-    * `maxHops` rounds (each round's register table checkpointed), one
-    * estimate frame (node, n$h) per hop — the per-round ball-size
-    * estimates every geometric centrality folds from. */
-  private def hyperBallHopEstimates(edges: DataFrame, maxHops: Int, p: Int,
-                                    srcCol: String, dstCol: String)
-      : Vector[DataFrame] = {
-    require(maxHops >= 1, "need at least one hop")
-    val m = 1 << p
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // edge frame materialized once — the propagation loop (and the node
-    // init) re-executes an un-materialized edge plan per round; the
-    // registry rows pass a spatial self-join worth ~1 s per execution
-    // at sf0.1 (GraphBuildProbe r17), and at corpus scale a re-executed
-    // graph build is a full extra input pass per hop. The estimate
-    // frames read only the register checkpoints, so the edge blocks
-    // free when the loop ends.
-    val (e, eRdd) = CheckpointOps.checkpoint(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = e.select($"src".as("node")).distinct()
-    var (regs, _) = CheckpointOps.checkpoint(packedInitRegs(nodes, p))
-    var ests = Vector(packedEstimate(regs, "n0", m))
-    var hop = 1
-    while (hop <= maxHops) {
-      val (next, _) = CheckpointOps.checkpoint(
-        packedPropagateRound(e, regs, m))
-      regs = next
-      ests :+= packedEstimate(regs, s"n$hop", m)
-      hop += 1
-    }
-    eRdd.unpersist(false)
-    ests
-  }
-
   /** Hop-0 PACKED register table: the m-slot HLL self-sketch per node.
-    * ONE copy (fixed / adaptive / incremental loops all start here), so
-    * the register-content identity the oracles replay survives edits. */
+    * ONE copy (every HyperBall form starts here), so the
+    * register-content identity the oracles replay survives edits. */
   private[graft] def packedInitRegs(nodes: DataFrame, p: Int): DataFrame = {
     val m = 1 << p
     val (idx, rho) = Sketches.hllRegister(col("node").cast("string"), p)
@@ -1023,23 +921,32 @@ object PageRank {
 
   /** One PACKED propagation round: every node max-merges its
     * in-neighbors' registers with its own. ONE copy shared by the
-    * fixed, adaptive, and incremental loops — the fold-equals-rebuild
-    * and adaptive-vs-fixed bit-identity contracts rest on the round
-    * being literally the same expression tree everywhere. */
+    * initial load, adaptive growth and the probes — the
+    * fold-equals-rebuild and adaptive-vs-fixed bit-identity contracts
+    * rest on the round being literally the same expression tree
+    * everywhere. */
   private[graft] def packedPropagateRound(e: DataFrame, regs: DataFrame,
-                                   m: Int): DataFrame = {
-    val mergeRegs = udaf(new RegisterMaxMerge(m))
-    e.join(regs.withColumnRenamed("node", "src"), "src")
-      .select(col("dst").as("node"), col("regs"))
-      .union(regs)
-      .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs"))
-  }
+                                   m: Int): DataFrame =
+    maxMergeByNode(
+      e.join(regs.withColumnRenamed("node", "src"), "src")
+        .select(col("dst").as("node"), col("regs"))
+        .union(regs),
+      m)
+
+  /** Max-merge a (node, regs) frame to one register file per node
+    * ([[RegisterMaxMerge]], with map-side partial combine) — the
+    * propagation round's merge and the resolution of a standing stack
+    * in every store and in compaction. */
+  private[graft] def maxMergeByNode(regs: DataFrame, m: Int): DataFrame =
+    regs.groupBy(col("node"))
+      .agg(udaf(new RegisterMaxMerge(m)).apply(col("regs")).as("regs"))
 
   /** Per-node ball-size estimate off a PACKED register table — the
     * identical estimator shapes as Sketches.hllEstimate, off the
     * packed fold (empty slots contribute pow(2, -0) = 1 directly);
     * the correction CASE is Sketches.hllCorrection — ONE copy, so the
-    * packed/exploded bit-identity contract survives threshold edits. */
+    * packed/hllEstimate bit-identity contract survives threshold
+    * edits. */
   private[graft] def packedEstimate(r: DataFrame, name: String, m: Int,
                                     keep: Seq[String] = Nil): DataFrame =
     r.select(col("node") +: keep.map(col) :+
@@ -1061,109 +968,37 @@ object PageRank {
   }
 
   /** ⌊N̂(regs)·1e6 + 0.5⌋ as a long column — ONE copy of the adaptive
-    * stop's per-node quantization ([[packedRegsWithQ]], the fold's
-    * incremental sum deltas, and [[HyperBallAdaptive.qsAll]] all reduce
-    * to this floor arithmetic), so the quantized sums cannot drift
-    * between the fused, incremental, and aggregate-job forms. */
+    * stop's per-node quantization (the sums fused into the
+    * materializing passes of [[HyperBallState]], the fold's incremental
+    * sum deltas, and [[HyperBallAdaptive.qsAll]] all reduce to this
+    * floor arithmetic), so the quantized sums cannot drift between the
+    * fused, incremental, and aggregate-job forms the oracles replay. */
   private[graft] def packedQExpr(regs: Column, m: Int): Column =
     floor(packedEstExpr(regs, m) * lit(1e6) + lit(0.5)).cast("long")
 
-  /** A register frame plus its floor-quantized per-node ball mass as a
-    * long column — ONE copy of the quantization the adaptive stop sums
-    * (fused into the materializing pass via
-    * [[org.apache.spark.sql.graft.CheckpointOps.checkpointSum]]), so
-    * the fused-sum paths cannot drift from the aggregate-job form the
-    * oracles replay. */
-  private[graft] def packedRegsWithQ(regsPlan: DataFrame,
-                                     m: Int): DataFrame =
-    regsPlan.select(col("node"), col("regs"),
-      packedQExpr(col("regs"), m).as("q"))
-
-  /** ADAPTIVE-hop register propagation: the quantized global ball-sum
-    * q_h = Σ_v ⌊N̂_h(v)·1e6 + 0.5⌋ per hop, run until SATURATION —
-    * the first h ≥ 1 with (q_h − q_{h−1}) < ε·q_h — or `hopCap`.
-    * This is Boldi & Vigna's termination (HyperBall runs "until the
-    * value … stabilizes", not for a fixed radius): a fixed maxHops
-    * silently reports ≈maxHops on any graph whose effective diameter
-    * exceeds it, and keeps paying propagation rounds past convergence
-    * on any graph whose diameter is smaller. The stop comparison is
-    * evaluated on the quantized LONGS (one scalar pair per hop on the
-    * driver — model-sized traffic), so an oracle can replay it term
-    * for term. Unlike the fixed-hop loop (whose per-hop register
-    * tables back per-node estimate columns), only the newest register
-    * table stays pinned — each hop's global sum folds immediately, so
-    * superseded tables free on handoff.
+  /** [[hyperBallNeighborhood]] with the ADAPTIVE saturation stop: the
+    * quantized global ball-sum q_h = Σ_v ⌊N̂_h(v)·1e6 + 0.5⌋ per hop,
+    * propagated until SATURATION — the first h ≥ 1 with
+    * (q_h − q_{h−1}) < ε·q_h — or `hopCap`. This is Boldi & Vigna's
+    * termination (HyperBall runs "until the value … stabilizes", not
+    * for a fixed radius): a fixed maxHops silently reports ≈maxHops on
+    * any graph whose effective diameter exceeds it, and keeps paying
+    * propagation rounds past convergence on any graph whose diameter
+    * is smaller. The stop comparison is evaluated on the quantized
+    * LONGS (one scalar per hop on the driver — model-sized traffic),
+    * so an oracle can replay it term for term; the fraction
+    * floor-quantizes with pure IEEE ops, so the output is oracle-exact.
+    * The standing state of [[hyperBallNeighborhoodIncrementalAdaptive]]
+    * with no batches.
     *
-    * @return quantized sums q_0..q_stop (stop = saturation hop or
-    *         hopCap); q_0 alone if the graph has no edges */
-  private def hyperBallAdaptiveQs(edges: DataFrame, hopCap: Int,
-                                  epsilon: Double, p: Int,
-                                  srcCol: String, dstCol: String)
-      : Vector[Long] = {
-    require(hopCap >= 1, "need at least one hop")
-    require(epsilon > 0.0 && epsilon < 1.0, "epsilon must be in (0, 1)")
-    val m = 1 << p
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // one materialization of the edge frame for the whole adaptive loop
-    // (same rationale as hyperBallHopEstimates); everything returned is
-    // driver-local longs, so the blocks free before returning
-    val (e, eRdd) = CheckpointOps.checkpoint(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = e.select($"src".as("node")).distinct()
-    // each round lands with its quantized per-node ball mass as a long
-    // column, summed BY the materializing pass itself
-    // (CheckpointOps.checkpointSum) — the separate per-hop qsum job was
-    // a second full scan of the register frame the round just wrote (a
-    // corpus-wide register pass per hop at scale). The per-node terms
-    // are the identical floor expression; long addition is order-free,
-    // so the sums are bit-identical to the aggregate-job form the
-    // oracle replays.
-    var (regsQ, regsRdd, q0) = CheckpointOps.checkpointSum(
-      packedRegsWithQ(packedInitRegs(nodes, p), m), 2)
-    var regs = regsQ.select($"node", $"regs")
-    var qs = Vector(q0)
-    var hop = 1
-    var stopped = qs(0) == 0L // no out-edge nodes at all: nothing to run
-    while (hop <= hopCap && !stopped) {
-      val (nextQ, nextRdd, qh) = CheckpointOps.checkpointSum(
-        packedRegsWithQ(packedPropagateRound(e, regs, m), m), 2)
-      regsRdd.unpersist(false)
-      regs = nextQ.select($"node", $"regs")
-      regsRdd = nextRdd
-      qs :+= qh
-      stopped =
-        (qs(hop) - qs(hop - 1)).toDouble < epsilon * qs(hop).toDouble
-      hop += 1
-    }
-    regsRdd.unpersist(false)
-    eRdd.unpersist(false)
-    qs
-  }
-
-  /** [[hyperBallNeighborhood]] with the ADAPTIVE saturation stop (see
-    * [[hyperBallAdaptiveQs]]): NF rows for hop 0..stop, the fraction
-    * relative to NF(stop). Same quantization discipline as the fixed
-    * form (per-node 1e-6 longs before the global sum; frac
-    * floor-quantized with pure IEEE ops), so the output is
-    * oracle-exact.
-    *
-    * @return (hop, nf, frac), empty if the graph has no edges */
+    * @return (hop, nf, frac) for hop 0..stop, empty if the graph has no
+    *         edges */
   def hyperBallNeighborhoodAdaptive(edges: DataFrame, hopCap: Int = 5,
                                     epsilon: Double = 0.05, p: Int = 6,
                                     srcCol: String = "src",
-                                    dstCol: String = "dst"): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val qs = hyperBallAdaptiveQs(edges, hopCap, epsilon, p, srcCol, dstCol)
-    if (qs.last == 0L)
-      return Seq.empty[(Int, Double, Double)].toDF("hop", "nf", "frac")
-    val nfStop = qs.last.toDouble / 1e6
-    qs.zipWithIndex.map { case (q, h) =>
-      val nf = q.toDouble / 1e6
-      (h, nf, math.floor(nf / nfStop * 1e6 + 0.5) / 1e6)
-    }.toDF("hop", "nf", "frac")
-  }
+                                    dstCol: String = "dst"): DataFrame =
+    hyperBallNeighborhoodIncrementalAdaptive(edges, Nil, hopCap, epsilon,
+      p, srcCol, dstCol)
 
   /** INCREMENTAL neighborhood function — maintain the per-hop HyperBall
     * register tables as APPEND-ONLY standing state and fold edge
@@ -1226,10 +1061,11 @@ object PageRank {
       maxHops, p, srcCol, dstCol))
 
   /** The harmonic-centrality fold off per-hop estimate frames (frame h
-    * carries column n$h): per-node join, then Σ_h (n_h − n_{h−1})/h —
-    * ONE copy shared by the in-memory incremental row and the at-rest
-    * table form ([[graft.streaming.HbStream]]), so their outputs
-    * cannot drift. */
+    * carries column n$h): per-node join, then Σ_h (n_h − n_{h−1})/h in
+    * fixed order, so the IEEE result is reproducible term for term by
+    * the oracle — ONE copy shared by the batch, in-memory incremental
+    * and at-rest table forms ([[graft.streaming.HbStream]]), so their
+    * outputs cannot drift. */
   private[graft] def harmonicFold(ests: Seq[DataFrame]): DataFrame = {
     val maxHops = ests.size - 1
     val joined = ests.reduce((a, b) => a.join(b, Seq("node")))
@@ -1239,17 +1075,17 @@ object PageRank {
     joined.select(col("node"), harmonic.as("harmonic_est"))
   }
 
-  /** The shared incremental register machinery: build the standing
-    * per-hop frames over the initial load ([[HyperBallState.init]]),
-    * delta-fold each batch ([[HyperBallState.foldBatch]] — ONE copy,
-    * shared with the at-rest table form in
-    * [[graft.streaming.HbStream]]), and return the RESOLVED per-hop
-    * estimate frames (node, n$h) — the same shape
-    * [[hyperBallHopEstimates]] yields for the batch form, so every
-    * downstream fold is one shared copy. The store's transient blocks
-    * (corpus-sized edge frames, empty deltas) free on close — the
-    * estimates only read the standing register frames, so a long-lived
-    * session doesn't accumulate dead edge blocks per call. */
+  /** The shared register machinery of every fixed-hop form: build the
+    * standing per-hop frames over the initial load
+    * ([[HyperBallState.init]]), delta-fold each batch
+    * ([[HyperBallState.foldBatch]] — ONE copy, shared with the at-rest
+    * table form in [[graft.streaming.HbStream]]), and return the
+    * RESOLVED per-hop estimate frames (node, n$h), so every downstream
+    * fold is one shared copy. A batch run passes no batches. The
+    * store's transient blocks (corpus-sized edge frames, empty deltas)
+    * free on close — the estimates only read the standing register
+    * frames, so a long-lived session doesn't accumulate dead edge
+    * blocks per call. */
   private def hyperBallIncrementalEstimates(initialEdges: DataFrame,
                                             batches: Seq[DataFrame],
                                             maxHops: Int, p: Int,
@@ -1266,37 +1102,50 @@ object PageRank {
   }
 
   /** [[hyperBallNeighborhoodIncremental]] under the ADAPTIVE saturation
-    * stop (see [[hyperBallAdaptiveQs]]): the standing per-hop register
-    * stacks GROW hops lazily — the initial load propagates only until
-    * the quantized rule q_h − q_{h−1} < ε·q_h fires (or `hopCap`), each
-    * batch delta-folds into the maintained hops, and when a batch
-    * un-saturates the top (its new edges shortened paths enough that
-    * the ball sums grow again) the state extends by corpus rounds off
-    * the RESOLVED top registers until the rule fires again. The emitted
-    * hops re-derive the stop over the FINAL corpus sums, so the output
-    * is [[hyperBallNeighborhoodAdaptive]] over initial ∪ batches
-    * BIT-identically (max-merge resolution reproduces the rebuild
-    * registers; growth rounds are the same shared propagation round) —
-    * the oracle replays the stop over the full corpus verbatim.
+    * stop (see [[hyperBallNeighborhoodAdaptive]]): the standing per-hop
+    * register stacks GROW hops lazily — the initial load propagates
+    * only until the quantized rule q_h − q_{h−1} < ε·q_h fires (or
+    * `hopCap`), each batch delta-folds into the maintained hops, and
+    * when a batch un-saturates the top (its new edges shortened paths
+    * enough that the ball sums grow again) the state extends by corpus
+    * rounds off the RESOLVED top registers until the rule fires again.
+    * The emitted hops re-derive the stop over the FINAL corpus sums, so
+    * the output is [[hyperBallNeighborhoodAdaptive]] over
+    * initial ∪ batches BIT-identically (max-merge resolution reproduces
+    * the rebuild registers; growth rounds are the same shared
+    * propagation round) — the oracle replays the stop over the full
+    * corpus verbatim.
     *
     * @return (hop, nf, frac) for hop 0..stop; empty if the final graph
     *         has no edges */
   def hyperBallNeighborhoodIncrementalAdaptive(
       initialEdges: DataFrame, batches: Seq[DataFrame], hopCap: Int = 5,
       epsilon: Double = 0.05, p: Int = 6, srcCol: String = "src",
-      dstCol: String = "dst"): DataFrame = {
+      dstCol: String = "dst"): DataFrame =
+    HyperBallAdaptive.emit(initialEdges.sparkSession,
+      hyperBallAdaptiveSums(initialEdges, batches, hopCap, epsilon, p,
+        srcCol, dstCol))
+
+  /** The adaptive forms' stopped sums q_0..q_stop (empty when the final
+    * graph has no edges) off an in-memory standing store. Every sum
+    * comes out of the pass that materializes its frame (init / growth /
+    * the fold's tracked deltas) — no corpus-wide register re-scan per
+    * batch: a batch grows balls at ALL hops, but resolution-after =
+    * max-merge(resolution-before, delta frame), so q_h advances by the
+    * batch's changed-node delta EXACTLY (long arithmetic; bit-identical
+    * to the qsAll re-derivation). The result is driver-local, so every
+    * standing frame is dead state on return and is freed. */
+  private def hyperBallAdaptiveSums(initialEdges: DataFrame,
+                                    batches: Seq[DataFrame], hopCap: Int,
+                                    epsilon: Double, p: Int,
+                                    srcCol: String,
+                                    dstCol: String): Vector[Long] = {
     require(hopCap >= 1, "need at least one hop")
     require(epsilon > 0.0 && epsilon < 1.0, "epsilon must be in (0, 1)")
-    val spark = initialEdges.sparkSession
-    val store = new InMemoryHbRegStore(spark, p)
-    // every sum comes out of the pass that materializes its frame
-    // (initQ / growHopQ / the fold's tracked deltas) — no corpus-wide
-    // register re-scan per batch: a batch grows balls at ALL hops, but
-    // resolution-after = max-merge(resolution-before, delta frame), so
-    // q_h advances by the batch's changed-node delta EXACTLY (long
-    // arithmetic; bit-identical to the qsAll re-derivation)
+    val store = new InMemoryHbRegStore(initialEdges.sparkSession, p)
     var qs = HyperBallAdaptive.growUntilSaturated(store,
-      HyperBallState.initQ(store, initialEdges, maxHops = 1, srcCol, dstCol),
+      HyperBallState.init(store, initialEdges, maxHops = 1, srcCol, dstCol,
+        trackQ = true),
       hopCap, epsilon)
     batches.foreach { b =>
       val dq = HyperBallState.foldBatch(store, b, srcCol, dstCol,
@@ -1306,12 +1155,8 @@ object PageRank {
       qs = HyperBallAdaptive.growUntilSaturated(store, qs, hopCap, epsilon)
     }
     val topHop = store.maxHop
-    // every sum is materialized and the emitted rows are driver-local,
-    // so the standing frames are dead state — free them all (unlike
-    // the fixed-hop incremental rows, whose returned estimates keep
-    // reading their frames)
     store.closeAll()
-    HyperBallAdaptive.emit(spark, qs, topHop, hopCap, epsilon)
+    HyperBallAdaptive.stopped(qs, topHop, hopCap, epsilon)
   }
 
   /** [[effectiveDiameter]] off the ADAPTIVE neighborhood function — on
@@ -1330,8 +1175,9 @@ object PageRank {
     require(alpha > 0.0 && alpha <= 1.0, "alpha must be in (0, 1]")
     val spark = edges.sparkSession
     import spark.implicits._
-    val qs = hyperBallAdaptiveQs(edges, hopCap, epsilon, p, srcCol, dstCol)
-    if (qs.last == 0L) return Seq.empty[Double].toDF("eff_diameter")
+    val qs = hyperBallAdaptiveSums(edges, Nil, hopCap, epsilon, p, srcCol,
+      dstCol)
+    if (qs.isEmpty) return Seq.empty[Double].toDF("eff_diameter")
     val nf = qs.map(_.toDouble / 1e6)
     val thr = nf.last * alpha
     val h = nf.indexWhere(_ >= thr) // exists: nf.last >= thr by alpha <= 1

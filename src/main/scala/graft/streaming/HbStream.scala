@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{ConnectedComponents, HbRegStore, HyperBallAdaptive,
-  HyperBallState, PageRank, RegisterMaxMerge}
+  HyperBallState, PageRank}
 
 /** Streaming HyperBall maintenance against AT-REST standing state —
   * the [[CcStream]] discipline applied to the incremental per-hop
@@ -134,7 +134,7 @@ object HbStream {
     refreshFamily(spark, prefix)
     val (p, _) = readMeta(spark, prefix)
     val store = new TableHbRegStore(spark, prefix, p, pathRoot, numBuckets)
-    try store.growHop() finally store.close()
+    try HyperBallState.growHop(store) finally store.close()
     // record the ACTUAL top (the store counts existing hop tables) —
     // recording recorded+1 would undercount forever after a crash
     // between a previous growth's table write and its property update
@@ -173,8 +173,8 @@ object HbStream {
     // the standing state may hold hops a PREVIOUS (larger-cap) call
     // grew; this call's emitted stop must not see past its own cap —
     // a rebuild at this cap never computes those sums
-    HyperBallAdaptive.emit(spark, qs.take(hopCap + 1),
-      math.min(store.maxHop, hopCap), hopCap, epsilon)
+    HyperBallAdaptive.emit(spark, HyperBallAdaptive.stopped(
+      qs.take(hopCap + 1), math.min(store.maxHop, hopCap), hopCap, epsilon))
   }
 
   /** COMPACTION: rewrite each hop's register table to its max-merge
@@ -193,7 +193,6 @@ object HbStream {
     if (compactNeedsRecovery(spark, prefix)) recoverCompact(spark, prefix)
     refreshFamily(spark, prefix)
     val (p, _) = readMeta(spark, prefix)
-    val mergeRegs = udaf(new RegisterMaxMerge(1 << p))
     // rewrite every hop table the CATALOG holds (not the recorded
     // geometry — a crashed growth's orphan top hop compacts too)
     val topHop = {
@@ -207,9 +206,7 @@ object HbStream {
       val live = regsTable(prefix, h)
       CatalogSwap.swapIn(spark, live, s"$newPathRoot/regs_h$h") {
         (tmp, path) =>
-          writeRegsTable(
-            spark.table(live).groupBy(col("node"))
-              .agg(mergeRegs(col("regs")).as("regs")),
+          writeRegsTable(PageRank.maxMergeByNode(spark.table(live), 1 << p),
             tmp, path, numBuckets)
       }
     }
@@ -364,7 +361,6 @@ object HbStream {
     private val transients =
       scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
     private val m = 1 << p
-    private val mergeRegs = udaf(new RegisterMaxMerge(m))
 
     private var topHop = {
       var h = -1
@@ -418,8 +414,7 @@ object HbStream {
     }
 
     def resolveFor(h: Int, keys: DataFrame): DataFrame =
-      probe(regsTable(prefix, h), "node", keys)
-        .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs"))
+      PageRank.maxMergeByNode(probe(regsTable(prefix, h), "node", keys), m)
 
     def seen0Nodes(keys: DataFrame): DataFrame =
       probe(regsTable(prefix, 0), "node", keys)
@@ -466,26 +461,7 @@ object HbStream {
       // a this-store-created table's single frame IS its resolution
       // (node-unique), like the in-memory single-frame fast path
       createdRegs.getOrElse(h,
-        spark.table(regsTable(prefix, h))
-          .groupBy(col("node")).agg(mergeRegs(col("regs")).as("regs")))
-
-    def growHop(): Unit = {
-      val (next, nextRdd) =
-        org.apache.spark.sql.graft.CheckpointOps.checkpointTruncated(
-          PageRank.packedPropagateRound(allEdges, resolved(maxHop), m))
-      appendDelta(maxHop + 1, next, nextRdd)
-    }
-
-    def growHopQ(): Long = {
-      val (nextQ, nextRdd, q) =
-        org.apache.spark.sql.graft.CheckpointOps.checkpointSumTruncated(
-          PageRank.packedRegsWithQ(
-            PageRank.packedPropagateRound(allEdges, resolved(maxHop), m),
-            m), 2)
-      appendDelta(maxHop + 1, nextQ.select(col("node"), col("regs")),
-        nextRdd)
-      q
-    }
+        PageRank.maxMergeByNode(spark.table(regsTable(prefix, h)), m))
 
     def trackTransient(rdd: RDD[InternalRow]): Unit = transients += rdd
 

@@ -51,8 +51,7 @@ object CentralityProbe {
       // CHECKPOINTS (and frees its predecessor) like the production
       // pairHopDistances — the earlier lazy union chain re-executed
       // every previous round inside the final count, inflating probe
-      // wall and GC pressure at sf1 (the HyperBallAB contamination
-      // lesson, applied to the probe itself).
+      // wall and GC pressure at sf1.
       var (state, stateRdd) = CheckpointOps.checkpoint(
         bidir.select($"src".as("node")).distinct()
           .select($"node".as("s"), $"node", lit(0).as("dist")))
@@ -148,21 +147,10 @@ object CentralityProbe {
           f"mre=${cal.getDouble(0)}%.4f maxre=${cal.getDouble(1)}%.4f")
       } else println(s"[centrality-closeness-cal] $dir skipped " +
         s"(ballMass=$ballMass — the exact leg's thrash regime)")
-      // layout A/B on the SAME cached edge frame (no lattice-build skew)
-      def timeOp(f: => org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        f.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val tExpl = timeOp(
-        graft.operators.PageRank.hyperBall(bidir, maxHops = 3, p = 6))
-      val tPacked = timeOp(
-        graft.operators.PageRank.hyperBallPacked(bidir, maxHops = 3, p = 6))
       println(f"[centrality] $dir nodes=$nNodes edges=$nEdges " +
         f"ballMass=$ballMass regCap=${nNodes * 64} " +
         f"exact=$tExact%.2fs hyperball=$tBall%.2fs " +
-        f"hyperballCloseness=$tBallCl%.2fs " +
-        f"exploded=$tExpl%.2fs packed=$tPacked%.2fs")
+        f"hyperballCloseness=$tBallCl%.2fs")
       stateRdd.unpersist(false)
       bidir.unpersist()
       spark.sharedState.cacheManager.clearCache()

@@ -77,7 +77,7 @@ object HbAdaptiveSumProbe {
             store, HyperBallAdaptive.qsAll(store), hopCap, epsilon))
         } else {
           val qs0 = phase(mode, "init")(
-            HyperBallState.initQ(store, init, 1, "src", "dst"))
+            HyperBallState.init(store, init, 1, "src", "dst", trackQ = true))
           phase(mode, "init-grow")(HyperBallAdaptive.growUntilSaturated(
             store, qs0, hopCap, epsilon))
         }

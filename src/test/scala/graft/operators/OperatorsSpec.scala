@@ -822,7 +822,7 @@ class OperatorsSpec extends SparkTestBase {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(PageRank.harmonicExact(empty, maxHops = 3).count() == 0L)
     assert(PageRank.closenessExact(empty, maxHops = 3).count() == 0L)
-    assert(PageRank.hyperBall(empty, maxHops = 3).count() == 0L)
+    assert(PageRank.hyperBallPacked(empty, maxHops = 3).count() == 0L)
   }
 
   test("hyperBall registers are the exact HLL sketch of each ball: the " +
@@ -833,7 +833,7 @@ class OperatorsSpec extends SparkTestBase {
     val e0 = (ring ++ chords).toDF("src", "dst")
     val bidir = e0.union(e0.select($"dst".as("src"), $"src".as("dst")))
     val maxHops = 3
-    val got = PageRank.hyperBall(bidir, maxHops = maxHops, p = 6)
+    val got = PageRank.hyperBallPacked(bidir, maxHops = maxHops, p = 6)
       .as[(Long, Double)].collect().toMap
 
     // brute-force balls B_h(v) on the driver
@@ -861,20 +861,9 @@ class OperatorsSpec extends SparkTestBase {
         s"node $v: got ${got(v)}, expected ${expected(v)}")
     }
 
-    // packed-register layout is BIT-identical (register contents are
-    // layout-independent and the estimator folds exact powers of two)
-    val packed = PageRank.hyperBallPacked(bidir, maxHops = maxHops, p = 6)
-      .as[(Long, Double)].collect().toMap
-    nodes.foreach { v =>
-      assert(packed(v) == got(v),
-        s"node $v: packed ${packed(v)} != exploded ${got(v)}")
-    }
-    assert(PageRank.hyperBallPacked(
-      Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0L)
-
     // closeness off the SAME register tables: r̂/Σd̂ with
     // r̂ = N̂_H − N̂_0 and Σd̂ = Σ h(N̂_h − N̂_{h−1}) — bit-identical to
-    // composing the exploded per-hop estimates in the same fold order
+    // composing the brute-force per-hop estimates in the same fold order
     val estMap: Map[Long, IndexedSeq[Double]] = nodes.map { v =>
       v -> (0 to maxHops).map { h =>
         val members = ball(v, h).toSeq.map(u => (v, u))
@@ -998,6 +987,24 @@ class OperatorsSpec extends SparkTestBase {
       Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0L)
     assert(PageRank.effectiveDiameterAdaptive(
       Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0L)
+    // ... and stop growing at once: every ball sum of an empty graph is
+    // 0, where the rule can never fire, so the state keeps the initial
+    // load's single hop instead of paying hopCap empty rounds
+    val emptyStore = new InMemoryHbRegStore(spark, 6)
+    val emptyQs = HyperBallAdaptive.growUntilSaturated(emptyStore,
+      HyperBallState.init(emptyStore, Seq.empty[(Long, Long)]
+        .toDF("src", "dst"), maxHops = 1, "src", "dst", trackQ = true),
+      hopCap, eps)
+    assert(emptyStore.maxHop == 1 && emptyQs == Vector(0L, 0L))
+    emptyStore.closeAll()
+    // the adaptive rows return driver-local rows, so they must release
+    // every frame they pinned (no reliance on a blanket clearCache)
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    PageRank.hyperBallNeighborhoodAdaptive(bidir, hopCap, eps, p = 6)
+      .collect()
+    PageRank.effectiveDiameterAdaptive(bidir, hopCap, eps, p = 6).collect()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
+    assert(leaked.isEmpty, s"adaptive rows left RDDs pinned: $leaked")
   }
 
   test("incremental HyperBall folds edge batches into the standing " +
@@ -1112,10 +1119,10 @@ class OperatorsSpec extends SparkTestBase {
     val b1 = all.filter(p => (p._1 + p._2) % 3 == 0 && p._1 % 2 == 0)
     val b2 = all.filter(p => (p._1 + p._2) % 3 == 0 && p._1 % 2 == 1)
     val store = new InMemoryHbRegStore(spark, 6)
-    var qs = HyperBallState.initQ(store, bidir(initial), maxHops = 3,
-      "src", "dst")
+    var qs = HyperBallState.init(store, bidir(initial), maxHops = 3,
+      "src", "dst", trackQ = true)
     assert(qs == HyperBallAdaptive.qsAll(store),
-      "initQ's fused sums != the re-derived sums")
+      "init's fused sums != the re-derived sums")
     val batches = Seq(bidir(b1), bidir(Seq.empty), bidir(b2),
       Seq((100L, 101L), (101L, 100L)).toDF("src", "dst"))
     for ((b, i) <- batches.zipWithIndex) {

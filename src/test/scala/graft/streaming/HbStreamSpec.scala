@@ -261,6 +261,16 @@ class HbStreamSpec extends SparkTestBase {
         "hb_chain_spec", s"$dir/cgrow", hopCap = 6)) ==
       nf(PageRank.hyperBallNeighborhoodAdaptive(bidir(chain), hopCap = 6)))
     dropFamily("hb_chain_spec")
+
+    // an EMPTY family never grows: its ball sums are all 0, where the
+    // stop rule cannot fire, so the read emits nothing and writes no
+    // hop table past the initial one
+    HbStream.init(Seq.empty[(Long, Long)].toDF("src", "dst"),
+      "hb_empty_spec", s"$dir/egen0", maxHops = 1, p = 6)
+    assert(HbStream.neighborhoodFunctionAdaptive(spark, "hb_empty_spec",
+      s"$dir/egrow", hopCap = 5).count() == 0L)
+    assert(!spark.catalog.tableExists("hb_empty_spec_regs_h2"))
+    dropFamily("hb_empty_spec")
   }
 
   test("a growth that crashed before its geometry update self-heals: " +
