@@ -326,7 +326,7 @@ private[graft] object RegistryCore {
 
   /** The adaptive-stop CTE tail shared by gr_hyperball_nf_adaptive /
     * gr_eff_diameter_adaptive — replays
-    * [[graft.operators.PageRank.hyperBallNeighborhoodAdaptive]]'s
+    * [[graft.operators.HyperBall.hyperBallNeighborhoodAdaptive]]'s
     * saturation rule on the SAME quantized longs the engine compares:
     * qh = per-hop global ball sums, shop = first hop whose growth
     * (q_h − q_{h−1}) drops below ε·q_h (else the cap), nf = the rows

@@ -856,7 +856,7 @@ private[graft] object TailRegistryB {
             custPoints(s, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         val bidir = bidirOf(e0)
-        PageRank.hyperBallPacked(bidir, maxHops = 3, p = 6)
+        HyperBall.hyperBallPacked(bidir, maxHops = 3, p = 6)
           .select(col("node"),
             (round(col("harmonic_est"), 4) + 0.0).as("harmonic_est"))
       },
@@ -881,7 +881,7 @@ private[graft] object TailRegistryB {
             custPoints(s, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         val bidir = bidirOf(e0)
-        PageRank.hyperBallCloseness(bidir, maxHops = 3, p = 6)
+        HyperBall.hyperBallCloseness(bidir, maxHops = 3, p = 6)
           .select(col("node"),
             (round(col("closeness_est"), 4) + 0.0).as("closeness_est"))
       },
@@ -966,7 +966,7 @@ private[graft] object TailRegistryB {
             custPoints(s, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         val bidir = bidirOf(e0)
-        PageRank.hyperBallNeighborhood(bidir, maxHops = 3, p = 6)
+        HyperBall.hyperBallNeighborhood(bidir, maxHops = 3, p = 6)
       },
       Some(hyperBallOracleSql(
         """, q AS MATERIALIZED (
@@ -997,7 +997,7 @@ private[graft] object TailRegistryB {
             custPoints(s, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         val bidir = bidirOf(e0)
-        PageRank.effectiveDiameter(bidir, maxHops = 3, p = 6, alpha = 0.9)
+        HyperBall.effectiveDiameter(bidir, maxHops = 3, p = 6, alpha = 0.9)
       },
       Some(hyperBallOracleSql(
         """, q AS MATERIALIZED (
@@ -1039,7 +1039,7 @@ private[graft] object TailRegistryB {
             custPoints(s, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         val bidir = bidirOf(e0)
-        PageRank.hyperBallNeighborhoodAdaptive(bidir, hopCap = 5,
+        HyperBall.hyperBallNeighborhoodAdaptive(bidir, hopCap = 5,
           epsilon = 0.05, p = 6)
       },
       Some(hyperBallOracleSql(
@@ -1061,7 +1061,7 @@ private[graft] object TailRegistryB {
             custPoints(s, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         val bidir = bidirOf(e0)
-        PageRank.effectiveDiameterAdaptive(bidir, hopCap = 5,
+        HyperBall.effectiveDiameterAdaptive(bidir, hopCap = 5,
           epsilon = 0.05, p = 6, alpha = 0.9)
       },
       Some(hyperBallOracleSql(
@@ -1097,7 +1097,7 @@ private[graft] object TailRegistryB {
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         withEdgesCheckpointed(bidirOf(e0)) { bidir =>
           val k = pmod(col("src") + col("dst"), lit(3))
-          PageRank.hyperBallNeighborhoodIncremental(
+          HyperBall.hyperBallNeighborhoodIncremental(
             bidir.where(k =!= 0),
             Seq(bidir.where(k === 0 && pmod(col("src"), lit(2)) === 0),
               bidir.where(k === 0 && pmod(col("src"), lit(2)) === 1)),
@@ -1140,7 +1140,7 @@ private[graft] object TailRegistryB {
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         withEdgesCheckpointed(bidirOf(e0)) { bidir =>
           val k = pmod(col("src") + col("dst"), lit(3))
-          PageRank.hyperBallNeighborhoodIncrementalAdaptive(
+          HyperBall.hyperBallNeighborhoodIncrementalAdaptive(
             bidir.where(k =!= 0),
             Seq(bidir.where(k === 0 && pmod(col("src"), lit(2)) === 0),
               bidir.where(k === 0 && pmod(col("src"), lit(2)) === 1)),
@@ -1170,7 +1170,7 @@ private[graft] object TailRegistryB {
           .select(col("a_id").as("src"), col("b_id").as("dst"))
         withEdgesCheckpointed(bidirOf(e0)) { bidir =>
           val k = pmod(col("src") + col("dst"), lit(3))
-          PageRank.hyperBallIncremental(
+          HyperBall.hyperBallIncremental(
               bidir.where(k =!= 0),
               Seq(bidir.where(k === 0 && pmod(col("src"), lit(2)) === 0),
                 bidir.where(k === 0 && pmod(col("src"), lit(2)) === 1)),

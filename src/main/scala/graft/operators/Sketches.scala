@@ -79,7 +79,7 @@ object Sketches {
     * the 32-bit saturation correction above 2^32/30, raw otherwise.
     * The SINGLE source of the correction thresholds/branches for both
     * the exploded-register [[hllEstimate]] and the packed HyperBall
-    * fold ([[PageRank.hyperBallPacked]]) — their documented bit-identity
+    * fold ([[HyperBall.hyperBallPacked]]) — their documented bit-identity
     * contract means a threshold tweak must reach both or neither. */
   def hllCorrection(raw: Column, v: Column, m: Int): Column = {
     val two32 = 4294967296.0 // 2^32

@@ -7,13 +7,13 @@ import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{ConnectedComponents, HbRegStore, HyperBallAdaptive,
-  HyperBallState, PageRank}
+import graft.operators.{ConnectedComponents, HbRegStore, HyperBall,
+  HyperBallAdaptive, HyperBallState}
 
 /** Streaming HyperBall maintenance against AT-REST standing state —
   * the [[CcStream]] discipline applied to the incremental per-hop
   * register stacks of
-  * [[PageRank.hyperBallNeighborhoodIncremental]]: where the in-memory
+  * [[HyperBall.hyperBallNeighborhoodIncremental]]: where the in-memory
   * form keeps each hop's frames as session-local localCheckpoint
   * blocks that grow one frame per batch forever (and re-unions them on
   * every probe), here each hop's stack is ONE `bucketBy(node)` catalog
@@ -110,18 +110,18 @@ object HbStream {
     val store = new TableHbRegStore(spark, prefix, p, pathRoot = null,
       numBuckets = 0)
     (0 to store.maxHop).map(h =>
-      PageRank.packedEstimate(store.resolved(h), s"n$h", 1 << p))
+      HyperBall.packedEstimate(store.resolved(h), s"n$h", 1 << p))
   }
 
   /** The neighborhood function off the standing tables — the same
     * shared fold as the rebuild and in-memory incremental forms. */
   def neighborhoodFunction(spark: SparkSession, prefix: String): DataFrame =
-    PageRank.nfFold(estimates(spark, prefix))
+    HyperBall.nfFold(estimates(spark, prefix))
 
   /** Harmonic centrality off the SAME standing tables — one standing
     * register history serves every geometric centrality. */
   def harmonic(spark: SparkSession, prefix: String): DataFrame =
-    PageRank.harmonicFold(estimates(spark, prefix))
+    HyperBall.harmonicFold(estimates(spark, prefix))
 
   /** Extend the standing state one hop: one shared propagation round
     * of the resolved top registers over the full standing edge set,
@@ -144,7 +144,7 @@ object HbStream {
 
   /** The neighborhood function off the standing tables under the
     * ADAPTIVE saturation stop — the at-rest composition of
-    * [[PageRank.hyperBallNeighborhoodIncrementalAdaptive]]: the state
+    * [[HyperBall.hyperBallNeighborhoodIncrementalAdaptive]]: the state
     * extends lazily ([[growHop]] — new hop tables at `pathRoot`) until
     * the quantized Boldi-Vigna rule fires over the standing sums or
     * `hopCap`, and the emitted hops re-derive the stop over the final
@@ -206,7 +206,7 @@ object HbStream {
       val live = regsTable(prefix, h)
       CatalogSwap.swapIn(spark, live, s"$newPathRoot/regs_h$h") {
         (tmp, path) =>
-          writeRegsTable(PageRank.maxMergeByNode(spark.table(live), 1 << p),
+          writeRegsTable(HyperBall.maxMergeByNode(spark.table(live), 1 << p),
             tmp, path, numBuckets)
       }
     }
@@ -414,7 +414,7 @@ object HbStream {
     }
 
     def resolveFor(h: Int, keys: DataFrame): DataFrame =
-      PageRank.maxMergeByNode(probe(regsTable(prefix, h), "node", keys), m)
+      HyperBall.maxMergeByNode(probe(regsTable(prefix, h), "node", keys), m)
 
     def seen0Nodes(keys: DataFrame): DataFrame =
       probe(regsTable(prefix, 0), "node", keys)
@@ -461,7 +461,7 @@ object HbStream {
       // a this-store-created table's single frame IS its resolution
       // (node-unique), like the in-memory single-frame fast path
       createdRegs.getOrElse(h,
-        PageRank.maxMergeByNode(spark.table(regsTable(prefix, h)), m))
+        HyperBall.maxMergeByNode(spark.table(regsTable(prefix, h)), m))
 
     def trackTransient(rdd: RDD[InternalRow]): Unit = transients += rdd
 

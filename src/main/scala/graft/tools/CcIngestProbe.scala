@@ -168,11 +168,11 @@ object CcIngestProbe {
       val hbBatch = eHb.where(hbK === 0).limit(1000)
       val hbInit = eHb.where(hbK =!= 0)
       val t0a = System.nanoTime()
-      graft.operators.PageRank.hyperBallNeighborhoodIncremental(
+      graft.operators.HyperBall.hyperBallNeighborhoodIncremental(
         hbInit, Seq.empty, maxHops = 3, p = 6).count()
       val wNoBatch = sec(t0a)
       val t0b = System.nanoTime()
-      graft.operators.PageRank.hyperBallNeighborhoodIncremental(
+      graft.operators.HyperBall.hyperBallNeighborhoodIncremental(
         hbInit, Seq(hbBatch), maxHops = 3, p = 6).count()
       val wOneBatch = sec(t0b)
       println(f"[hb-ingest-steady] $dir noBatch=$wNoBatch%.1fs " +

@@ -135,7 +135,7 @@ object CentralityProbe {
       // the regime where it doesn't)
       if (ballMass < 20000000L) {
         val ex = graft.operators.PageRank.closenessExact(bidir, maxHops = 3)
-        val est = graft.operators.PageRank.hyperBallCloseness(
+        val est = graft.operators.HyperBall.hyperBallCloseness(
           bidir, maxHops = 3, p = 6)
         val cal = ex.join(est, "node")
           .agg(avg(abs(($"closeness_est" - $"closeness") / $"closeness"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.RegistryCore.{bidirOf, custPoints}
-import graft.operators.PageRank
+import graft.operators.HyperBall
 
 /** Round-18 A/B for the r17 "partitioning-aware loop inputs" deferral:
   * in the sort-merge regime (register frame past the broadcast
@@ -64,20 +64,20 @@ object EdgePartProbe {
         lattice.select(col("src"), col("dst"))))
       val nodes = e.select(col("src").as("node")).distinct()
       var (regs, regsRdd) = CheckpointOps.checkpoint(
-        PageRank.packedInitRegs(nodes, p))
+        HyperBall.packedInitRegs(nodes, p))
       for (r <- 1 to 3) {
         if (shape && r == 2) {
           // round 2: regs is a checkpointed frame, the steady state
           println(s"[edgepart] $tag round-2 plan: " +
-            planShape(PageRank.packedPropagateRound(e, regs, m)))
+            planShape(HyperBall.packedPropagateRound(e, regs, m)))
         }
         val (next, nextRdd) = CheckpointOps.checkpoint(
-          PageRank.packedPropagateRound(e, regs, m))
+          HyperBall.packedPropagateRound(e, regs, m))
         regsRdd.unpersist(false)
         regs = next
         regsRdd = nextRdd
       }
-      PageRank.packedEstimate(regs, "est", m)
+      HyperBall.packedEstimate(regs, "est", m)
         .write.format("noop").mode("overwrite").save()
       regsRdd.unpersist(false)
       eRdd.unpersist(false)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.RegistryCore.custPoints
-import graft.operators.{PageRank, SpatialJoins}
+import graft.operators.{HyperBall, SpatialJoins}
 
 /** Round-17 measurement probe: where does a fixed-hop HyperBall row's
   * time actually go at the bench scale factor? Times, via the noop sink
@@ -60,19 +60,19 @@ object GraphBuildProbe {
 
     // warmup
     noop(bidirUnion)
-    noop(PageRank.hyperBallPacked(bidirUnion, maxHops = 3, p = 6))
+    noop(HyperBall.hyperBallPacked(bidirUnion, maxHops = 3, p = 6))
 
     for (r <- 1 to reps) {
       timed(s"graph_union rep$r") { noop(bidirUnion) }
       timed(s"graph_explode rep$r") { noop(bidirExplode) }
       timed(s"hb_as_declared rep$r") {
-        noop(PageRank.hyperBallPacked(bidirUnion, maxHops = 3, p = 6)
+        noop(HyperBall.hyperBallPacked(bidirUnion, maxHops = 3, p = 6)
           .select(col("node"),
             (round(col("harmonic_est"), 4) + 0.0).as("harmonic_est")))
       }
       timed(s"hb_edges_ckpt rep$r") {
         val (e, eRdd) = CheckpointOps.checkpoint(bidirExplode)
-        noop(PageRank.hyperBallPacked(e, maxHops = 3, p = 6)
+        noop(HyperBall.hyperBallPacked(e, maxHops = 3, p = 6)
           .select(col("node"),
             (round(col("harmonic_est"), 4) + 0.0).as("harmonic_est")))
         eRdd.unpersist(false)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.RegistryCore.{bidirOf, custPoints}
-import graft.operators.{HyperBallState, InMemoryHbRegStore, PageRank}
+import graft.operators.{HyperBall, HyperBallState, InMemoryHbRegStore}
 
 /** Phase-level wall + Spark-job-count breakdown of the incremental
   * HyperBall registry rows (the r18 round's biggest bench family):
@@ -95,7 +95,7 @@ object HbFoldPhaseProbe {
       phase("fold-b2")(HyperBallState.foldBatch(store, b2, "src", "dst"))
       val ests = phase("estimates")(HyperBallState.estimates(store))
       store.close()
-      val nf = PageRank.nfFold(ests)
+      val nf = HyperBall.nfFold(ests)
       phase("nf-action")(
         nf.write.format("noop").mode("overwrite").save())
       println(s"[hb-parity] $mode nf=" + nf.orderBy("hop").collect()

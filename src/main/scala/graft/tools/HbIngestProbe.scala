@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.{HyperBallState, InMemoryHbRegStore, PageRank}
+import graft.operators.{HyperBall, HyperBallState, InMemoryHbRegStore}
 import graft.streaming.HbStream
 
 /** Scale probe for the standing incremental-HyperBall state (the r16
@@ -149,7 +149,7 @@ object HbIngestProbe {
         HbStream.neighborhoodFunction(spark, "hbprobe").count()
         val readWall = sec(t0r)
         val t0b = System.nanoTime()
-        PageRank.hyperBallNeighborhood(eAll, maxHops = 3, p = 6).count()
+        HyperBall.hyperBallNeighborhood(eAll, maxHops = 3, p = 6).count()
         val rebuildWall = sec(t0b)
         println(f"[hb-reread] $dir tableRead=$readWall%.1fs " +
           f"rebuild=$rebuildWall%.1fs")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.RegistryCore.{bidirOf, custPoints}
-import graft.operators.{PageRank, SpatialJoins}
+import graft.operators.{HyperBall, SpatialJoins}
 
 /** Round-17 A/B: the HyperBall propagation round's register max-merge as
   * the RegisterMaxMerge UDAF (ObjectHashAggregate, no codegen) vs an
@@ -39,7 +39,7 @@ object RegMergeProbe {
         .select(col("a_id").as("src"), col("b_id").as("dst"))))
     val nodes = e.select(col("src").as("node")).distinct()
 
-    // column-max variant of PageRank.packedPropagateRound
+    // column-max variant of HyperBall.packedPropagateRound
     def colMaxRound(regs: DataFrame): DataFrame = {
       val unpacked = e.join(regs.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), col("regs"))
@@ -55,7 +55,7 @@ object RegMergeProbe {
 
     def runLoop(round: DataFrame => DataFrame): Unit = {
       var (regs, regsRdd) = CheckpointOps.checkpoint(
-        PageRank.packedInitRegs(nodes, p))
+        HyperBall.packedInitRegs(nodes, p))
       for (_ <- 1 to 3) {
         val (next, nextRdd) = CheckpointOps.checkpoint(round(regs))
         regsRdd.unpersist(false)
@@ -63,7 +63,7 @@ object RegMergeProbe {
         regsRdd = nextRdd
       }
       // consume the last round's estimate so both variants pay it
-      PageRank.packedEstimate(regs, "est", m)
+      HyperBall.packedEstimate(regs, "est", m)
         .write.format("noop").mode("overwrite").save()
       regsRdd.unpersist(false)
     }
@@ -76,23 +76,25 @@ object RegMergeProbe {
     }
 
     // warmup both
-    runLoop(r => PageRank.packedPropagateRound(e, r, m))
+    runLoop(r => HyperBall.packedPropagateRound(e, r, m))
     runLoop(colMaxRound)
     // parity check once: same estimates from both layouts
     val udafEst = {
-      var (regs, _) = CheckpointOps.checkpoint(PageRank.packedInitRegs(nodes, p))
+      var (regs, _) =
+        CheckpointOps.checkpoint(HyperBall.packedInitRegs(nodes, p))
       for (_ <- 1 to 3) {
         val (n2, _) = CheckpointOps.checkpoint(
-          PageRank.packedPropagateRound(e, regs, m)); regs = n2
+          HyperBall.packedPropagateRound(e, regs, m)); regs = n2
       }
-      PageRank.packedEstimate(regs, "est", m)
+      HyperBall.packedEstimate(regs, "est", m)
     }
     val colEst = {
-      var (regs, _) = CheckpointOps.checkpoint(PageRank.packedInitRegs(nodes, p))
+      var (regs, _) =
+        CheckpointOps.checkpoint(HyperBall.packedInitRegs(nodes, p))
       for (_ <- 1 to 3) {
         val (n2, _) = CheckpointOps.checkpoint(colMaxRound(regs)); regs = n2
       }
-      PageRank.packedEstimate(regs, "est", m)
+      HyperBall.packedEstimate(regs, "est", m)
     }
     val nDiff = udafEst.join(colEst.withColumnRenamed("est", "est2"), "node")
       .where(col("est") =!= col("est2")).count()
@@ -100,7 +102,7 @@ object RegMergeProbe {
 
     for (r <- 1 to reps) {
       timed(s"udaf_merge rep$r") {
-        runLoop(rg => PageRank.packedPropagateRound(e, rg, m))
+        runLoop(rg => HyperBall.packedPropagateRound(e, rg, m))
       }
       timed(s"colmax_merge rep$r") { runLoop(colMaxRound) }
     }

@@ -822,7 +822,7 @@ class OperatorsSpec extends SparkTestBase {
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(PageRank.harmonicExact(empty, maxHops = 3).count() == 0L)
     assert(PageRank.closenessExact(empty, maxHops = 3).count() == 0L)
-    assert(PageRank.hyperBallPacked(empty, maxHops = 3).count() == 0L)
+    assert(HyperBall.hyperBallPacked(empty, maxHops = 3).count() == 0L)
   }
 
   test("hyperBall registers are the exact HLL sketch of each ball: the " +
@@ -833,7 +833,7 @@ class OperatorsSpec extends SparkTestBase {
     val e0 = (ring ++ chords).toDF("src", "dst")
     val bidir = e0.union(e0.select($"dst".as("src"), $"src".as("dst")))
     val maxHops = 3
-    val got = PageRank.hyperBallPacked(bidir, maxHops = maxHops, p = 6)
+    val got = HyperBall.hyperBallPacked(bidir, maxHops = maxHops, p = 6)
       .as[(Long, Double)].collect().toMap
 
     // brute-force balls B_h(v) on the driver
@@ -872,7 +872,7 @@ class OperatorsSpec extends SparkTestBase {
           .select($"hll_estimate").as[Double].head()
       }
     }.toMap
-    val clGot = PageRank.hyperBallCloseness(bidir, maxHops = maxHops, p = 6)
+    val clGot = HyperBall.hyperBallCloseness(bidir, maxHops = maxHops, p = 6)
       .as[(Long, Double)].collect().toMap
     nodes.foreach { v =>
       val ests = estMap(v)
@@ -882,7 +882,7 @@ class OperatorsSpec extends SparkTestBase {
       assert(clGot(v) == expectedCl,
         s"node $v: closeness ${clGot(v)} != $expectedCl")
     }
-    assert(PageRank.hyperBallCloseness(
+    assert(HyperBall.hyperBallCloseness(
       Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0L)
 
     // neighborhood function: per-hop GLOBAL sums of the same estimates,
@@ -891,7 +891,7 @@ class OperatorsSpec extends SparkTestBase {
     val nfExp = (0 to maxHops).map(h =>
       nodes.map(v => math.floor(estMap(v)(h) * 1e6 + 0.5).toLong).sum
         .toDouble / 1e6)
-    val nfGot = PageRank.hyperBallNeighborhood(bidir, maxHops, p = 6)
+    val nfGot = HyperBall.hyperBallNeighborhood(bidir, maxHops, p = 6)
       .as[(Int, Double, Double)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     (0 to maxHops).foreach { h =>
@@ -909,16 +909,16 @@ class OperatorsSpec extends SparkTestBase {
       else math.floor(((hCross - 1).toDouble +
         (thr - nfExp(hCross - 1)) / (nfExp(hCross) - nfExp(hCross - 1)))
         * 1e6 + 0.5) / 1e6
-    val dGot = PageRank.effectiveDiameter(bidir, maxHops, p = 6)
+    val dGot = HyperBall.effectiveDiameter(bidir, maxHops, p = 6)
       .as[Double].head()
     assert(dGot == dExp, s"eff diameter $dGot != $dExp")
     // a threshold NF(0) already covers yields 0 by convention
-    assert(PageRank.effectiveDiameter(bidir, maxHops, p = 6, alpha = 0.01)
+    assert(HyperBall.effectiveDiameter(bidir, maxHops, p = 6, alpha = 0.01)
       .as[Double].head() == 0.0)
     // degenerate inputs stay empty, never crash
-    assert(PageRank.hyperBallNeighborhood(
+    assert(HyperBall.hyperBallNeighborhood(
       Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0L)
-    assert(PageRank.effectiveDiameter(
+    assert(HyperBall.effectiveDiameter(
       Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0L)
   }
 
@@ -955,7 +955,7 @@ class OperatorsSpec extends SparkTestBase {
     // the 12-node graph saturates well inside the cap — the rule FIRED
     assert(stop < hopCap, s"expected saturation before $hopCap, q=$q")
     val nfExp = (0 to stop).map(q(_).toDouble / 1e6)
-    val got = PageRank.hyperBallNeighborhoodAdaptive(bidir, hopCap, eps,
+    val got = HyperBall.hyperBallNeighborhoodAdaptive(bidir, hopCap, eps,
         p = 6)
       .as[(Int, Double, Double)].collect().sortBy(_._1)
     assert(got.map(_._1).toSeq == (0 to stop), got.mkString(","))
@@ -972,20 +972,20 @@ class OperatorsSpec extends SparkTestBase {
       else math.floor(((hc - 1).toDouble +
         (thr - nfExp(hc - 1)) / (nfExp(hc) - nfExp(hc - 1)))
         * 1e6 + 0.5) / 1e6
-    assert(PageRank.effectiveDiameterAdaptive(bidir, hopCap, eps, p = 6)
+    assert(HyperBall.effectiveDiameterAdaptive(bidir, hopCap, eps, p = 6)
       .as[Double].head() == dExp)
     // a long chain's ball sums keep growing past any small cap: the
     // loop must run TO the cap and report it as the last hop
     val ch0 = (1L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
     val chain = ch0.union(ch0.select($"dst".as("src"), $"src".as("dst")))
-    val capped = PageRank.hyperBallNeighborhoodAdaptive(chain, hopCap = 3,
+    val capped = HyperBall.hyperBallNeighborhoodAdaptive(chain, hopCap = 3,
         epsilon = eps, p = 6)
       .as[(Int, Double, Double)].collect()
     assert(capped.map(_._1).max == 3 && capped.length == 4)
     // degenerate inputs stay empty, never crash
-    assert(PageRank.hyperBallNeighborhoodAdaptive(
+    assert(HyperBall.hyperBallNeighborhoodAdaptive(
       Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0L)
-    assert(PageRank.effectiveDiameterAdaptive(
+    assert(HyperBall.effectiveDiameterAdaptive(
       Seq.empty[(Long, Long)].toDF("src", "dst")).count() == 0L)
     // ... and stop growing at once: every ball sum of an empty graph is
     // 0, where the rule can never fire, so the state keeps the initial
@@ -1000,9 +1000,9 @@ class OperatorsSpec extends SparkTestBase {
     // the adaptive rows return driver-local rows, so they must release
     // every frame they pinned (no reliance on a blanket clearCache)
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    PageRank.hyperBallNeighborhoodAdaptive(bidir, hopCap, eps, p = 6)
+    HyperBall.hyperBallNeighborhoodAdaptive(bidir, hopCap, eps, p = 6)
       .collect()
-    PageRank.effectiveDiameterAdaptive(bidir, hopCap, eps, p = 6).collect()
+    HyperBall.effectiveDiameterAdaptive(bidir, hopCap, eps, p = 6).collect()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
     assert(leaked.isEmpty, s"adaptive rows left RDDs pinned: $leaked")
   }
@@ -1024,34 +1024,34 @@ class OperatorsSpec extends SparkTestBase {
     val b2 = all.filter(p => (p._1 + p._2) % 3 == 0 && p._1 % 2 == 1)
     def nf(df: org.apache.spark.sql.DataFrame): Seq[(Int, Double, Double)] =
       df.as[(Int, Double, Double)].collect().sortBy(_._1).toSeq
-    val want = nf(PageRank.hyperBallNeighborhood(bidir(all), maxHops = 3))
-    val got = nf(PageRank.hyperBallNeighborhoodIncremental(
+    val want = nf(HyperBall.hyperBallNeighborhood(bidir(all), maxHops = 3))
+    val got = nf(HyperBall.hyperBallNeighborhoodIncremental(
       bidir(initial), Seq(bidir(b1), bidir(b2)), maxHops = 3))
     assert(got == want, s"fold $got != rebuild $want")
     // replaying batches is a structural no-op (no register can grow)
-    assert(nf(PageRank.hyperBallNeighborhoodIncremental(
+    assert(nf(HyperBall.hyperBallNeighborhoodIncremental(
       bidir(initial), Seq(bidir(b1), bidir(b1), bidir(b2), bidir(b2)),
       maxHops = 3)) == want)
     // a batch of BRAND-NEW nodes (disconnected component) folds in
     val extra = Seq((100L, 101L), (101L, 100L))
-    assert(nf(PageRank.hyperBallNeighborhoodIncremental(
+    assert(nf(HyperBall.hyperBallNeighborhoodIncremental(
         bidir(initial), Seq(bidir(b1), bidir(b2), extra.toDF("src", "dst")),
         maxHops = 3)) ==
-      nf(PageRank.hyperBallNeighborhood(
+      nf(HyperBall.hyperBallNeighborhood(
         bidir(all).union(extra.toDF("src", "dst")), maxHops = 3)))
     // empty batches are no-ops; empty initial load bootstraps from the
     // first batch
-    assert(nf(PageRank.hyperBallNeighborhoodIncremental(
+    assert(nf(HyperBall.hyperBallNeighborhoodIncremental(
       bidir(initial), Seq(bidir(b1), bidir(Seq.empty), bidir(b2)),
       maxHops = 3)) == want)
-    assert(nf(PageRank.hyperBallNeighborhoodIncremental(
+    assert(nf(HyperBall.hyperBallNeighborhoodIncremental(
         bidir(Seq.empty), Seq(bidir(initial ++ b1 ++ b2)), maxHops = 3)) ==
       want)
     // HARMONIC off the same standing registers == the packed rebuild,
     // bit for bit (one standing propagation serves every fold)
-    val hWant = PageRank.hyperBallPacked(bidir(all), maxHops = 3)
+    val hWant = HyperBall.hyperBallPacked(bidir(all), maxHops = 3)
       .as[(Long, Double)].collect().toMap
-    val hGot = PageRank.hyperBallIncremental(
+    val hGot = HyperBall.hyperBallIncremental(
         bidir(initial), Seq(bidir(b1), bidir(b2)), maxHops = 3)
       .as[(Long, Double)].collect().toMap
     assert(hGot == hWant, s"harmonic fold $hGot != rebuild $hWant")
@@ -1074,9 +1074,9 @@ class OperatorsSpec extends SparkTestBase {
     // the emitted hops equal the full-corpus adaptive rebuild term for
     // term: same stop hop, same quantized sums, same fractions
     for ((cap, eps) <- Seq((5, 0.05), (8, 0.30), (2, 0.05))) {
-      val want = nf(PageRank.hyperBallNeighborhoodAdaptive(
+      val want = nf(HyperBall.hyperBallNeighborhoodAdaptive(
         bidir(all), hopCap = cap, epsilon = eps))
-      val got = nf(PageRank.hyperBallNeighborhoodIncrementalAdaptive(
+      val got = nf(HyperBall.hyperBallNeighborhoodIncrementalAdaptive(
         bidir(initial), Seq(bidir(b1), bidir(b2)), hopCap = cap,
         epsilon = eps))
       assert(got == want, s"cap=$cap eps=$eps: fold $got != rebuild $want")
@@ -1087,17 +1087,17 @@ class OperatorsSpec extends SparkTestBase {
     val cInit = chain.filter(_._1 < 7L)
     val cB1 = chain.filter(p => p._1 >= 7L && p._1 < 14L)
     val cB2 = chain.filter(_._1 >= 14L)
-    assert(nf(PageRank.hyperBallNeighborhoodIncrementalAdaptive(
+    assert(nf(HyperBall.hyperBallNeighborhoodIncrementalAdaptive(
         bidir(cInit), Seq(bidir(cB1), bidir(cB2)), hopCap = 6)) ==
-      nf(PageRank.hyperBallNeighborhoodAdaptive(bidir(chain), hopCap = 6)))
+      nf(HyperBall.hyperBallNeighborhoodAdaptive(bidir(chain), hopCap = 6)))
     // no edges at all stays empty, never crashes
-    assert(PageRank.hyperBallNeighborhoodIncrementalAdaptive(
+    assert(HyperBall.hyperBallNeighborhoodIncrementalAdaptive(
       Seq.empty[(Long, Long)].toDF("src", "dst"),
       Seq(Seq.empty[(Long, Long)].toDF("src", "dst"))).count() == 0L)
     // empty initial load bootstraps from the first real batch
-    assert(nf(PageRank.hyperBallNeighborhoodIncrementalAdaptive(
+    assert(nf(HyperBall.hyperBallNeighborhoodIncrementalAdaptive(
         bidir(Seq.empty), Seq(bidir(all)), hopCap = 5)) ==
-      nf(PageRank.hyperBallNeighborhoodAdaptive(bidir(all), hopCap = 5)))
+      nf(HyperBall.hyperBallNeighborhoodAdaptive(bidir(all), hopCap = 5)))
   }
 
   test("fold-tracked ball-sum deltas advance the maintained sums to " +

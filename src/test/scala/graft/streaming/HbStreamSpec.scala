@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.operators.PageRank
+import graft.operators.HyperBall
 
 class HbStreamSpec extends SparkTestBase {
   import spark.implicits._
@@ -45,14 +45,14 @@ class HbStreamSpec extends SparkTestBase {
       mem.addData(bidirSeq(b1): _*); q.processAllAvailable()
       mem.addData(bidirSeq(b2): _*); q.processAllAvailable()
     } finally q.stop()
-    val want = nf(PageRank.hyperBallNeighborhood(bidir(all), maxHops = 3))
-    val folded = nf(PageRank.hyperBallNeighborhoodIncremental(
+    val want = nf(HyperBall.hyperBallNeighborhood(bidir(all), maxHops = 3))
+    val folded = nf(HyperBall.hyperBallNeighborhoodIncremental(
       bidir(initial), Seq(bidir(b1), bidir(b2)), maxHops = 3))
     val streamed = nf(HbStream.neighborhoodFunction(spark, "hb_stream_spec"))
     assert(streamed == folded && folded == want,
       s"streamed $streamed fold $folded rebuild $want")
     // harmonic off the SAME standing tables == the packed rebuild
-    val hWant = PageRank.hyperBallPacked(bidir(all), maxHops = 3)
+    val hWant = HyperBall.hyperBallPacked(bidir(all), maxHops = 3)
       .as[(Long, Double)].collect().toMap
     assert(HbStream.harmonic(spark, "hb_stream_spec")
       .as[(Long, Double)].collect().toMap == hWant)
@@ -95,7 +95,7 @@ class HbStreamSpec extends SparkTestBase {
     // ingest keeps working against the compacted state
     HbStream.ingestBatch(bidir(b2), "hb_compact_spec")
     assert(nf(HbStream.neighborhoodFunction(spark, "hb_compact_spec")) ==
-      nf(PageRank.hyperBallNeighborhood(bidir(all), maxHops = 3)))
+      nf(HyperBall.hyperBallNeighborhood(bidir(all), maxHops = 3)))
     dropFamily("hb_compact_spec")
   }
 
@@ -123,7 +123,7 @@ class HbStreamSpec extends SparkTestBase {
     HbStream.ingestBatch(bidir(b2), "hb_recover_spec")
     assert(!HbStream.compactNeedsRecovery(spark, "hb_recover_spec"))
     assert(nf(HbStream.neighborhoodFunction(spark, "hb_recover_spec")) ==
-      nf(PageRank.hyperBallNeighborhood(bidir(all), maxHops = 2)))
+      nf(HyperBall.hyperBallNeighborhood(bidir(all), maxHops = 2)))
     // a compact aimed at a LIVE table's current path must refuse
     // up-front (the freshness guard), leaving everything intact
     val liveLoc = spark.sessionState.catalog.getTableMetadata(
@@ -137,7 +137,7 @@ class HbStreamSpec extends SparkTestBase {
     val afterRefuse = nf(
       HbStream.neighborhoodFunction(spark, "hb_recover_spec"))
     assert(afterRefuse ==
-      nf(PageRank.hyperBallNeighborhood(bidir(all), maxHops = 2)))
+      nf(HyperBall.hyperBallNeighborhood(bidir(all), maxHops = 2)))
     // pre-registration crash shape: rewrite FILES exist at some path
     // but no _compacting catalog entry was ever made — not a recovery
     // state, the live tables serve reads, and a later compact to a
@@ -147,7 +147,7 @@ class HbStreamSpec extends SparkTestBase {
     assert(!HbStream.compactNeedsRecovery(spark, "hb_recover_spec"))
     HbStream.compact(spark, "hb_recover_spec", s"$dir/gen2")
     assert(nf(HbStream.neighborhoodFunction(spark, "hb_recover_spec")) ==
-      nf(PageRank.hyperBallNeighborhood(bidir(all), maxHops = 2)))
+      nf(HyperBall.hyperBallNeighborhood(bidir(all), maxHops = 2)))
     dropFamily("hb_recover_spec")
   }
 
@@ -175,7 +175,7 @@ class HbStreamSpec extends SparkTestBase {
       .select(input_file_name()).distinct().count()
     assert(files <= 8, s"expected compacted hop table, got $files files")
     assert(nf(HbStream.neighborhoodFunction(spark, "hb_auto_spec")) ==
-      nf(PageRank.hyperBallNeighborhood(bidir(chain), maxHops = 2)))
+      nf(HyperBall.hyperBallNeighborhood(bidir(chain), maxHops = 2)))
     dropFamily("hb_auto_spec")
   }
 
@@ -207,7 +207,7 @@ class HbStreamSpec extends SparkTestBase {
         "hb_restart_spec_regs_h0")).location.getPath
     assert(loc.contains("compact_gen1"), loc)
     assert(nf(HbStream.neighborhoodFunction(spark, "hb_restart_spec")) ==
-      nf(PageRank.hyperBallNeighborhood(bidir(chain.take(6)), maxHops = 2)))
+      nf(HyperBall.hyperBallNeighborhood(bidir(chain.take(6)), maxHops = 2)))
     dropFamily("hb_restart_spec")
   }
 
@@ -223,7 +223,7 @@ class HbStreamSpec extends SparkTestBase {
     HbStream.ingestBatch(bidir(b1), "hb_adapt_spec")
     HbStream.ingestBatch(bidir(b2), "hb_adapt_spec")
     for ((cap, eps) <- Seq((5, 0.05), (8, 0.30), (2, 0.05))) {
-      val want = nf(PageRank.hyperBallNeighborhoodAdaptive(
+      val want = nf(HyperBall.hyperBallNeighborhoodAdaptive(
         bidir(all), hopCap = cap, epsilon = eps))
       val got = nf(HbStream.neighborhoodFunctionAdaptive(spark,
         "hb_adapt_spec", s"$dir/grow", hopCap = cap, epsilon = eps))
@@ -243,7 +243,7 @@ class HbStreamSpec extends SparkTestBase {
     HbStream.compact(spark, "hb_adapt_spec", s"$dir/gen1")
     assert(nf(HbStream.neighborhoodFunctionAdaptive(spark,
         "hb_adapt_spec", s"$dir/grow2", hopCap = 5)) ==
-      nf(PageRank.hyperBallNeighborhoodAdaptive(bidir(all), hopCap = 5)))
+      nf(HyperBall.hyperBallNeighborhoodAdaptive(bidir(all), hopCap = 5)))
     dropFamily("hb_adapt_spec")
 
     // a LONG chain folded in batches forces multi-round growth at read
@@ -259,7 +259,7 @@ class HbStreamSpec extends SparkTestBase {
     assert(spark.catalog.tableExists("hb_chain_spec_regs_h2"))
     assert(nf(HbStream.neighborhoodFunctionAdaptive(spark,
         "hb_chain_spec", s"$dir/cgrow", hopCap = 6)) ==
-      nf(PageRank.hyperBallNeighborhoodAdaptive(bidir(chain), hopCap = 6)))
+      nf(HyperBall.hyperBallNeighborhoodAdaptive(bidir(chain), hopCap = 6)))
     dropFamily("hb_chain_spec")
 
     // an EMPTY family never grows: its ball sums are all 0, where the
@@ -288,7 +288,7 @@ class HbStreamSpec extends SparkTestBase {
     assert(HbStream.neighborhoodFunction(spark, "hb_grow_spec")
       .count() == 3L)
     assert(nf(HbStream.neighborhoodFunction(spark, "hb_grow_spec")) ==
-      nf(PageRank.hyperBallNeighborhood(bidir(initial), maxHops = 2)))
+      nf(HyperBall.hyperBallNeighborhood(bidir(initial), maxHops = 2)))
     // the next growth counts tables, appends hop 3, and records 3 —
     // not stale+1
     HbStream.growHop(spark, "hb_grow_spec", s"$dir/grow")
@@ -300,7 +300,7 @@ class HbStreamSpec extends SparkTestBase {
     // compaction rewrites every hop the catalog holds, orphan included
     HbStream.compact(spark, "hb_grow_spec", s"$dir/gen1")
     assert(nf(HbStream.neighborhoodFunction(spark, "hb_grow_spec")) ==
-      nf(PageRank.hyperBallNeighborhood(bidir(initial), maxHops = 3)))
+      nf(HyperBall.hyperBallNeighborhood(bidir(initial), maxHops = 3)))
     dropFamily("hb_grow_spec")
   }
 
