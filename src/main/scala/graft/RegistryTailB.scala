@@ -848,8 +848,9 @@ private[graft] object TailRegistryB {
     // parity hash, so even the ESTIMATE is oracle-exact (the sk_hll
     // discipline). Runs the PACKED layout — 3.5x over the exploded
     // register-tuple form at the sf1 probe (fresh-JVM interleaved A/B,
-    // SCALE.md r14; bit-identical outputs spec'd, so the oracle replays
-    // the exploded form unchanged).
+    // SCALE.md r14). The oracle replays the register-tuple form: both
+    // layouts sketch the same balls, and the packed estimate is spec'd
+    // equal to sketching the brute-force balls directly.
     Q("gr_hyperball",
       (s, dir) => {
         val e0 = SpatialJoins.gridSelfJoin(

@@ -575,7 +575,7 @@ private[graft] final class InMemoryHbRegStore(
   }
 
   /** [[close]] plus the STANDING register frames — for callers whose
-    * output is driver-local (the adaptive NF row), where nothing will
+    * output is driver-local (the adaptive rows), where nothing will
     * ever resolve the frames again. */
   def closeAll(): Unit = {
     close()
