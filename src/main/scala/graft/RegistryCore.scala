@@ -231,9 +231,9 @@ private[graft] object RegistryCore {
     * returned plan never re-reads the input frame. */
   def withEdgesCheckpointed(edges: DataFrame)
       (body: DataFrame => DataFrame): DataFrame = {
-    val (e, rdd) =
-      org.apache.spark.sql.graft.CheckpointOps.checkpointTruncated(edges)
-    try body(e) finally rdd.unpersist(false)
+    val e = org.apache.spark.sql.graft.CheckpointOps.materialize(edges,
+      truncate = true)
+    try body(e.df) finally e.release()
   }
 
   /** The symmetrized supplier-proximity graph several gr_* rows share:

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps.materialize
 
 /** BPE tokenizer TRAINING (Sennrich et al. 2016) — the engine already
   * APPLIES a committed GPT-2 merge list (`functions/Bpe.scala`); this
@@ -143,7 +144,7 @@ object BpeTrainer {
     // RENDERING the cached plan's tree string (CachedRDDBuilder does it
     // on every persist call) takes minutes — jstack-verified on the
     // 64-merge A/B probe.
-    var (cur, curRdd) = org.apache.spark.sql.graft.CheckpointOps.checkpoint(
+    val start = materialize(
       docs
         .select(explode(Dedup.tokens(col(textCol))).as("w"))
         .groupBy("w").agg(count(lit(1)).as("freq"))
@@ -154,8 +155,12 @@ object BpeTrainer {
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var r = 1
     var rounds = 0
-    var done = false
-    while (r <= nMerges && !done) {
+    // every round merges at least one pair, so nMerges bounds the rounds;
+    // the loop ends once the merge budget is spent, or at a round with no
+    // pair left (which returns its state unchanged)
+    val last = Rounds.iterate(start, nMerges, (_, _) => r > nMerges) {
+        (state, _) =>
+      val cur = state.df
       rounds += 1
       val want = math.min(nMerges - r + 1, maxBatch)
       val lim = want * 2 + 8
@@ -166,7 +171,7 @@ object BpeTrainer {
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
         .limit(lim).collect()
         .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
-      if (top.isEmpty) done = true
+      if (top.isEmpty) state
       else {
         val exhausted = top.length < lim
         val minCnt = top.last._3
@@ -218,17 +223,13 @@ object BpeTrainer {
         }
         val ls = batch.map(_._1).toSeq
         val rs = batch.map(_._2).toSeq
-        val (next, nextRdd) =
-          org.apache.spark.sql.graft.CheckpointOps.checkpoint(cur
-            .select(col("freq"),
-              mergeBatchUdf(col("sy"), typedlit(ls), typedlit(rs))
-                .as("sy")))
-        curRdd.unpersist(false)
-        cur = next
-        curRdd = nextRdd
+        materialize(cur
+          .select(col("freq"),
+            mergeBatchUdf(col("sy"), typedlit(ls), typedlit(rs))
+              .as("sy")))
       }
     }
-    curRdd.unpersist(false)
+    last.release()
     (merges.toSeq.toDF("rank", "lhs", "rhs", "pair_count")
       .select(col("rank").cast("int").as("rank"), col("lhs"), col("rhs"),
         col("pair_count")), rounds)

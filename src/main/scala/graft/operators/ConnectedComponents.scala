@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.{Materialized, Track,
+  materialize}
 
 /** Distributed connected components over an edge DataFrame.
   *
@@ -14,13 +15,13 @@ import org.apache.spark.sql.graft.CheckpointOps
   * must be set-stable, not root-stable).
   *
   * Each round is two shuffles (neighbor-min groupBy + label-of-label join)
-  * and exactly ONE Spark job: [[CheckpointOps.checkpointDiff]] materializes
-  * the round into persisted blocks while an accumulator counts changed
-  * labels in the same pass (no separate convergence-probe job), caps the
-  * carried size estimate (join-size products otherwise compound per round
-  * into million-digit BigInts inside stats estimation), and hands back the
-  * RDD handle so the PREVIOUS round's blocks are unpersisted as soon as the
-  * new round is on disk/memory — without that, a long run of CC-using
+  * and exactly ONE Spark job: [[org.apache.spark.sql.graft.CheckpointOps]]
+  * materializes the round into persisted blocks while an accumulator
+  * counts changed labels in the same pass (no separate convergence-probe
+  * job), carries measured stats (join-size products otherwise compound
+  * per round into million-digit BigInts inside stats estimation), and
+  * the [[Rounds]] driver releases the PREVIOUS round's blocks as soon as
+  * the new round is on disk/memory — without that, a long run of CC-using
   * queries piles dead checkpoint blocks into the block manager until
   * deferred GC lands inside later queries' wall time (round-3 bench: 2-4x
   * inflation of everything after the checkpoint-heavy queries).
@@ -137,7 +138,7 @@ object ConnectedComponents {
     // union re-executed the whole contraction subtree once per branch
     // inside this materialization (same multiset, so the distinct is
     // unchanged).
-    val (sym, symRdd) = CheckpointOps.checkpoint(
+    val symM = materialize(
       contracted.select(explode(array(
           struct($"cu".as("u"), $"cv".as("v")),
           struct($"cv".as("u"), $"cu".as("v")),
@@ -145,14 +146,15 @@ object ConnectedComponents {
           struct($"cv".as("u"), $"cv".as("v")))).as("p"))
         .select($"p.u".as("u"), $"p.v".as("v"))
         .distinct())
+    val sym = symM.df
 
-    var (labels, labelsRdd) = CheckpointOps.checkpoint(
+    val start = materialize(
       sym.groupBy($"u".as("node")).agg(min($"v").as("component")))
     val debug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val fixpoint = Rounds.iterate(start, maxIter, (_, n) => n.tracked == 0) {
+        (cur, iter) =>
       val roundT0 = System.nanoTime()
+      val labels = cur.df
       // 1) neighbor-min: min label over my neighborhood (incl. self-loop).
       //    The self-loop join row (u,u) carries u's own PREVIOUS label, so
       //    the old label for convergence counting falls out of this same
@@ -180,18 +182,13 @@ object ConnectedComponents {
           .as("component"), $"old")
       // one job: materialize + count(component != old); cols are (node=0,
       // component=1, old=2)
-      val (nextFlat, nextRdd, changed) =
-        CheckpointOps.checkpointDiff(next, 1, 2)
-      labelsRdd.unpersist(false) // previous round's blocks are dead now
-      labels = nextFlat.drop("old")
-      labelsRdd = nextRdd
-      converged = changed == 0
-      iter += 1
+      val nextM = materialize(next, track = Track.Diff(1, 2))
       if (debug) System.err.println(
-        f"CC round $iter: ${(System.nanoTime() - roundT0) / 1e9}%.2fs changed=$changed")
+        f"CC round $iter: ${(System.nanoTime() - roundT0) / 1e9}%.2fs changed=${nextM.tracked}")
+      nextM.map(_.drop("old"))
     }
-    symRdd.unpersist(false) // labels is materialized; the edge set is dead
-    labels
+    symM.release() // labels are materialized; the edge set is dead
+    fixpoint.df
   }
 
   /** STRONGLY connected components over a DIRECTED edge DataFrame — the
@@ -233,165 +230,142 @@ object ConnectedComponents {
           maxOuterRounds: Int = 60, maxInnerRounds: Int = 200): DataFrame =
     sccWithHandles(edges, srcCol, dstCol, maxOuterRounds, maxInnerRounds)._1
 
-  /** [[scc]] that also hands back the persisted RDDs backing the
-    * result (the settled per-pass frames): a caller that re-materializes
-    * the labels into its own state — [[sccTopoLevels]] — can then free
-    * them instead of leaving corpus-scale blocks pinned until GC.
-    * Callers that consume the frame lazily (the public [[scc]],
-    * [[sccCondense]]) must keep them persisted. */
+  /** [[scc]] that also hands back the handles backing the result (the
+    * settled per-pass frames): a caller that re-materializes the labels
+    * into its own state — [[sccTopoLevels]] — can then release them
+    * instead of leaving corpus-scale blocks pinned until GC. Callers that
+    * consume the frame lazily (the public [[scc]], [[sccCondense]]) must
+    * keep them persisted. */
   private[graft] def sccWithHandles(edges: DataFrame, srcCol: String = "src",
           dstCol: String = "dst", maxOuterRounds: Int = 60,
-          maxInnerRounds: Int = 200): (DataFrame, Seq[RDD]) = {
+          maxInnerRounds: Int = 200): (DataFrame, Seq[Materialized]) = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // every persisted round frame registers here; the round-cap error
-    // paths free the WHOLE live set before throwing (the checkBudget
-    // discipline — a long-lived session that catches the error must not
-    // keep round state pinned). On success the set holds exactly the
-    // blocks backing the returned union (found frames + e0) — the
-    // caller's result state, freed by its own lifecycle.
-    val pinned = scala.collection.mutable.Set.empty[RDD]
-    def pin[T](t: (DataFrame, RDD)): (DataFrame, RDD) = { pinned += t._2; t }
-    def pinC(t: (DataFrame, RDD, Long)): (DataFrame, RDD, Long) = {
-      pinned += t._2; t
-    }
-    def unpin(r: RDD): Unit = { pinned -= r; r.unpersist(false) }
-    def failScc(msg: String): Nothing = {
-      pinned.foreach(_.unpersist(false))
-      pinned.clear()
-      throw new IllegalArgumentException(msg)
-    }
-    val sel = edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst"))
-    val (e0, e0Rdd) = pin(CheckpointOps.checkpointTruncated(
-      sel.where($"esrc" =!= $"edst").distinct()))
-    var (active, activeRdd, nActive) = pinC(
-      CheckpointOps.checkpointCountTruncated(
+    // every round frame is pinned; the round-cap error paths throw and
+    // Rounds.owning frees the WHOLE live set (a long-lived session that
+    // catches the error must not keep round state pinned). On success the
+    // set holds exactly the blocks backing the returned union (the found
+    // frames) — the caller's result state, freed by its own lifecycle.
+    Rounds.owning { pinned =>
+      def pin(df: DataFrame): Materialized =
+        pinned.add(materialize(df, truncate = true))
+      val sel = edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst"))
+      val e0 = pin(sel.where($"esrc" =!= $"edst").distinct())
+      var active = pin(
         sel.select($"esrc".as("node")).union(sel.select($"edst".as("node")))
-          .distinct().select($"node", lit("r").as("part"))))
-    val emptyOut = sel.select($"esrc".as("node"), $"esrc".as("scc"))
-      .where(lit(false))
-    val found = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var outer = 0
-    while (nActive > 0) {
-      if (outer >= maxOuterRounds) failScc(
-        s"SCC did not finish in $maxOuterRounds FW-BW passes " +
-          s"($nActive nodes still live) — raise maxOuterRounds")
-      // live edges: both endpoints in the same partition class
-      val (aliveE, aliveERdd) = pin(CheckpointOps.checkpointTruncated(e0
-        .join(active.select($"node".as("esrc"), $"part"), "esrc")
-        .join(active.select($"node".as("edst"), $"part".as("p2")), "edst")
-        .where($"part" === $"p2")
-        .select($"part", $"esrc", $"edst")))
-      // TRIM: a node missing a live out-edge or in-edge inside its class
-      // lies on no cycle — a singleton SCC, settled without a flood
-      // fill. Without this, nodes whose edges all crossed into removed
-      // classes pool into ONE edge-free class that FW-BW would peel a
-      // single pivot at a time (measured: the 1500-node registry graph
-      // stranded 1204 such singletons — Θ(n) passes); with it they all
-      // settle in the pass that strands them.
-      val kept = active
-        .join(aliveE.select($"part", $"esrc".as("node")).distinct(),
-          Seq("part", "node"), "left_semi")
-        .join(aliveE.select($"part", $"edst".as("node")).distinct(),
-          Seq("part", "node"), "left_semi")
-      val (trimmed, trimmedRdd, nTrim) = pinC(CheckpointOps
-        .checkpointCountTruncated(active
+          .distinct().select($"node", lit("r").as("part")))
+      val emptyOut = sel.select($"esrc".as("node"), $"esrc".as("scc"))
+        .where(lit(false))
+      val found = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      var outer = 0
+      while (active.rows > 0) {
+        if (outer >= maxOuterRounds) throw new IllegalArgumentException(
+          s"SCC did not finish in $maxOuterRounds FW-BW passes " +
+            s"(${active.rows} nodes still live) — raise maxOuterRounds")
+        // live edges: both endpoints in the same partition class
+        val aliveE = pin(e0.df
+          .join(active.df.select($"node".as("esrc"), $"part"), "esrc")
+          .join(active.df.select($"node".as("edst"), $"part".as("p2")), "edst")
+          .where($"part" === $"p2")
+          .select($"part", $"esrc", $"edst"))
+        // TRIM: a node missing a live out-edge or in-edge inside its class
+        // lies on no cycle — a singleton SCC, settled without a flood
+        // fill. Without this, nodes whose edges all crossed into removed
+        // classes pool into ONE edge-free class that FW-BW would peel a
+        // single pivot at a time (measured: the 1500-node registry graph
+        // stranded 1204 such singletons — Θ(n) passes); with it they all
+        // settle in the pass that strands them.
+        val kept = active.df
+          .join(aliveE.df.select($"part", $"esrc".as("node")).distinct(),
+            Seq("part", "node"), "left_semi")
+          .join(aliveE.df.select($"part", $"edst".as("node")).distinct(),
+            Seq("part", "node"), "left_semi")
+        val trimmed = pin(active.df
           .join(kept.select($"part", $"node"), Seq("part", "node"),
             "left_anti")
-          .select($"node", $"node".as("scc"))))
-      if (nTrim > 0) found += trimmed else unpin(trimmedRdd)
-      val (keptFlat, keptRdd, nKept) =
-        pinC(CheckpointOps.checkpointCountTruncated(kept))
-      if (nKept == 0) {
-        unpin(activeRdd)
-        unpin(aliveERdd)
-        active = keptFlat
-        activeRdd = keptRdd
-        nActive = 0
-      } else {
-      val pr = Dedup.md5Hash32($"node".cast("string"), lit(0))
-      // deterministic pseudo-random pivot: min md5 priority per class —
-      // a min-ID pivot on chain-shaped remainders peels one SCC per
-      // pass; the hash pivot splits like a quicksort partition
-      val piv = keptFlat
-        .select($"part", struct(pr.as("h"), $"node").as("hn"))
-        .groupBy($"part").agg(min($"hn").as("m"))
-        .select($"part", $"m.node".as("node"))
-      // frontier BFS from each part's pivot along (part, u) -> v. Each
-      // round materializes only the freshly-reached nodes; the reached
-      // set is the lazy union of the per-round frames (pairHopDistances
-      // discipline — rows are written once, not rewritten per round).
-      def reach(dirEdges: DataFrame): (DataFrame, Seq[RDD]) = {
-        var (reached, seedRdd) = pin(CheckpointOps.checkpointTruncated(piv))
-        var rdds = Vector[RDD](seedRdd)
-        var frontier = reached
-        var inner = 0
-        var grew = true
-        while (grew) {
-          if (inner >= maxInnerRounds) failScc(
-            s"SCC flood fill exceeded $maxInnerRounds hops — " +
-              "raise maxInnerRounds for very-high-diameter graphs")
-          val step = dirEdges
-            .join(frontier.select($"part", $"node".as("u")), Seq("part", "u"))
-            .select($"part", $"v".as("node")).distinct()
-          val (fresh, freshRdd, nFresh) = pinC(
-            CheckpointOps.checkpointCountTruncated(
-              step.join(reached, Seq("part", "node"), "left_anti")))
-          if (nFresh == 0) {
-            unpin(freshRdd)
-            grew = false
-          } else {
-            rdds :+= freshRdd
-            reached = reached.union(fresh)
-            frontier = fresh
+          .select($"node", $"node".as("scc")))
+        if (trimmed.rows > 0) found += trimmed.df else pinned.release(trimmed)
+        val keptM = pin(kept)
+        if (keptM.rows == 0) {
+          pinned.release(active)
+          pinned.release(aliveE)
+          active = keptM
+        } else {
+        val pr = Dedup.md5Hash32($"node".cast("string"), lit(0))
+        // deterministic pseudo-random pivot: min md5 priority per class —
+        // a min-ID pivot on chain-shaped remainders peels one SCC per
+        // pass; the hash pivot splits like a quicksort partition
+        val piv = keptM.df
+          .select($"part", struct(pr.as("h"), $"node").as("hn"))
+          .groupBy($"part").agg(min($"hn").as("m"))
+          .select($"part", $"m.node".as("node"))
+        // frontier BFS from each part's pivot along (part, u) -> v. Each
+        // round materializes only the freshly-reached nodes; the reached
+        // set is the lazy union of the per-round frames (pairHopDistances
+        // discipline — rows are written once, not rewritten per round).
+        def reach(dirEdges: DataFrame): (DataFrame, Seq[Materialized]) = {
+          val seed = pin(piv)
+          var frames = Vector(seed)
+          var reached = seed.df
+          var frontier = seed.df
+          var inner = 0
+          var grew = true
+          while (grew) {
+            if (inner >= maxInnerRounds) throw new IllegalArgumentException(
+              s"SCC flood fill exceeded $maxInnerRounds hops — " +
+                "raise maxInnerRounds for very-high-diameter graphs")
+            val step = dirEdges
+              .join(frontier.select($"part", $"node".as("u")), Seq("part", "u"))
+              .select($"part", $"v".as("node")).distinct()
+            val fresh = pin(step.join(reached, Seq("part", "node"), "left_anti"))
+            grew = fresh.rows > 0
+            if (!grew) pinned.release(fresh)
+            else {
+              frames :+= fresh
+              reached = reached.union(fresh.df)
+              frontier = fresh.df
+            }
+            inner += 1
           }
-          inner += 1
+          (reached, frames)
         }
-        (reached, rdds)
+        val (fwd, fwdFrames) =
+          reach(aliveE.df.select($"part", $"esrc".as("u"), $"edst".as("v")))
+        val (bwd, bwdFrames) =
+          reach(aliveE.df.select($"part", $"edst".as("u"), $"esrc".as("v")))
+        val sccSet = fwd.join(bwd, Seq("part", "node"))
+        found += pin(
+          sccSet.join(sccSet.groupBy($"part").agg(min($"node").as("scc")),
+              "part")
+            .select($"node", $"scc")).df
+        // remainder splits into D\S ('f'), A\S ('b'), neither ('n') — no
+        // SCC straddles these, so each class recurses independently
+        val nextActive = keptM.df
+          .join(sccSet.select($"part", $"node", lit(1).as("in_s")),
+            Seq("part", "node"), "left")
+          .where($"in_s".isNull)
+          .join(fwd.select($"part", $"node", lit(1).as("in_f")),
+            Seq("part", "node"), "left")
+          .join(bwd.select($"part", $"node", lit(1).as("in_b")),
+            Seq("part", "node"), "left")
+          .select($"node",
+            concat($"part",
+              when($"in_f".isNotNull, lit("f"))
+                .when($"in_b".isNotNull, lit("b"))
+                .otherwise(lit("n"))).as("part"))
+        val nxt = pin(nextActive)
+        (Seq(active, aliveE, keptM) ++ fwdFrames ++ bwdFrames)
+          .foreach(pinned.release)
+        active = nxt
+        }
+        outer += 1
       }
-      val (fwd, fwdRdds) =
-        reach(aliveE.select($"part", $"esrc".as("u"), $"edst".as("v")))
-      val (bwd, bwdRdds) =
-        reach(aliveE.select($"part", $"edst".as("u"), $"esrc".as("v")))
-      val sccSet = fwd.join(bwd, Seq("part", "node"))
-      val (out, _) = pin(CheckpointOps.checkpointTruncated(
-        sccSet.join(sccSet.groupBy($"part").agg(min($"node").as("scc")),
-            "part")
-          .select($"node", $"scc")))
-      found += out
-      // remainder splits into D\S ('f'), A\S ('b'), neither ('n') — no
-      // SCC straddles these, so each class recurses independently
-      val nextActive = keptFlat
-        .join(sccSet.select($"part", $"node", lit(1).as("in_s")),
-          Seq("part", "node"), "left")
-        .where($"in_s".isNull)
-        .join(fwd.select($"part", $"node", lit(1).as("in_f")),
-          Seq("part", "node"), "left")
-        .join(bwd.select($"part", $"node", lit(1).as("in_b")),
-          Seq("part", "node"), "left")
-        .select($"node",
-          concat($"part",
-            when($"in_f".isNotNull, lit("f"))
-              .when($"in_b".isNotNull, lit("b"))
-              .otherwise(lit("n"))).as("part"))
-      val (nxt, nxtRdd, nNxt) =
-        pinC(CheckpointOps.checkpointCountTruncated(nextActive))
-      unpin(activeRdd)
-      unpin(aliveERdd)
-      unpin(keptRdd)
-      fwdRdds.foreach(unpin)
-      bwdRdds.foreach(unpin)
-      active = nxt
-      activeRdd = nxtRdd
-      nActive = nNxt
-      }
-      outer += 1
+      pinned.release(active)
+      pinned.release(e0)
+      // pinned now holds exactly the found frames' blocks — the result's
+      // backing state, surfaced to handle-aware callers
+      (found.foldLeft(emptyOut)(_ union _), pinned.handles)
     }
-    unpin(activeRdd)
-    unpin(e0Rdd)
-    // pinned now holds exactly the found frames' blocks — the result's
-    // backing state, surfaced to handle-aware callers
-    (found.foldLeft(emptyOut)(_ union _), pinned.toSeq)
   }
 
   /** INCREMENTAL connected-components maintenance — fold an ingest
@@ -478,8 +452,8 @@ object ConnectedComponents {
     * and `newAlias` read, which [[release]] unpersists once the caller
     * has materialized both. */
   private[graft] final case class MergeParts(inserts: DataFrame,
-      newAlias: DataFrame, solved: DataFrame, pinned: Seq[RDD]) {
-    def release(): Unit = pinned.foreach(_.unpersist(false))
+      newAlias: DataFrame, solved: DataFrame, pinned: Seq[Materialized]) {
+    def release(): Unit = pinned.foreach(_.release())
   }
 
   /** See [[incrementalMergeParts]]. */
@@ -499,8 +473,9 @@ object ConnectedComponents {
     // and the merge solve — a batch DERIVED from a corpus-sized
     // source (the registry rows slice a spatial self-join) would
     // otherwise re-execute that derivation per consumer
-    val (e, eRdd) = CheckpointOps.checkpointTruncated(
-      batch.select(col(srcCol).as("a"), col(dstCol).as("b")))
+    val eM = materialize(
+      batch.select(col(srcCol).as("a"), col(dstCol).as("b")), truncate = true)
+    val e = eM.df
     val distinctNodes = e.select($"a".as("node"))
       .union(e.select($"b".as("node"))).distinct()
     val nodeVals = distinctNodes.limit(maxPointLookup + 1).collect()
@@ -515,7 +490,8 @@ object ConnectedComponents {
       if (nodeVals.isEmpty) base.where(lit(false))
       else if (pointPath) probeBaseLabelsPoint(base, nodeVals)
       else probeBaseLabels(base, nodes)
-    val (seen, seenRdd) = CheckpointOps.checkpointTruncated(seen0)
+    val seenM = materialize(seen0, truncate = true)
+    val seen = seenM.df
     // the broadcast hint is only sound on the point path (≤ the lookup
     // cap by construction); an oversized batch's frames stay unhinted —
     // Spark broadcasts them when they fit the threshold and falls back
@@ -553,7 +529,7 @@ object ConnectedComponents {
         Seq("canon"), "left")
       .select($"c", coalesce($"canon2", $"canon").as("canon"))
     MergeParts(inserts, remapped.unionByName(mergeMap), solved,
-      Seq(eRdd, seenRdd))
+      Seq(eM, seenM))
   }
 
   /** Batch node sets up to this size probe the base as a pushed-down
@@ -611,32 +587,29 @@ object ConnectedComponents {
     * batch writes O(batches · corpus)). This is the in-memory mirror of
     * what [[graft.streaming.CcStream]]'s at-rest form gets for free by
     * appending to the base table. Frames checkpoint lineage-truncating
-    * (batch count is unbounded); only the superseded alias and each
-    * batch's merge snapshots unpersist — every base frame stays live
-    * state until the resolve. */
+    * (batch count is unbounded); the alias hands off on the [[Rounds]]
+    * driver and each batch's merge snapshots are released — every base
+    * frame stays live state until the resolve. */
   def incrementalFold(initialEdges: DataFrame, batches: Seq[DataFrame],
                       srcCol: String = "src", dstCol: String = "dst")
       : DataFrame = {
     val spark = initialEdges.sparkSession
     import spark.implicits._
-    val (base0, _) = CheckpointOps.checkpointTruncated(
-      run(initialEdges, srcCol, dstCol))
+    val base0 = materialize(run(initialEdges, srcCol, dstCol),
+      truncate = true).df
     var frames = Vector(base0)
-    var (alias, aliasRdd) = CheckpointOps.checkpointTruncated(
+    val alias0 = materialize(
       base0.select($"component".as("c"), $"component".as("canon"))
-        .where(lit(false)))
-    batches.foreach { b =>
-      val base = frames.reduce(_ unionByName _)
-      val p = mergeParts(base, alias, b, srcCol, dstCol)
-      val (insFlat, _) = CheckpointOps.checkpointTruncated(p.inserts)
-      val (naFlat, naRdd) = CheckpointOps.checkpointTruncated(p.newAlias)
+        .where(lit(false)), truncate = true)
+    val alias = Rounds.iterate(alias0, batches.size) { (alias, i) =>
+      val p = mergeParts(frames.reduce(_ unionByName _), alias.df,
+        batches(i - 1), srcCol, dstCol)
+      frames :+= materialize(p.inserts, truncate = true).df
+      val next = materialize(p.newAlias, truncate = true)
       p.release()
-      aliasRdd.unpersist(false)
-      frames :+= insFlat
-      alias = naFlat
-      aliasRdd = naRdd
+      next
     }
-    resolveLabels(frames.reduce(_ unionByName _), alias)
+    resolveLabels(frames.reduce(_ unionByName _), alias.df)
   }
 
   /** CONDENSATION of the directed graph: collapse every SCC to one node
@@ -691,73 +664,57 @@ object ConnectedComponents {
                     dstCol: String = "dst"): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // the pinned-set discipline of scc(): every live round frame
-    // registers; the cycle-guard error path frees the WHOLE set
-    val pinned = scala.collection.mutable.Set.empty[RDD]
-    def pin(t: (DataFrame, RDD)): (DataFrame, RDD) = { pinned += t._2; t }
-    def pinC(t: (DataFrame, RDD, Long)): (DataFrame, RDD, Long) = {
-      pinned += t._2; t
-    }
-    def unpin(r: RDD): Unit = { pinned -= r; r.unpersist(false) }
-    val (sccDf, sccRdds) = sccWithHandles(edges, srcCol, dstCol)
-    sccRdds.foreach(pinned += _)
-    val (lab, labRdd) = pin(CheckpointOps.checkpointTruncated(sccDf))
-    val e = edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst"))
-      .where($"esrc" =!= $"edst").distinct()
-    val ce = e
-      .join(lab.select($"node".as("esrc"), $"scc".as("s")), "esrc")
-      .join(lab.select($"node".as("edst"), $"scc".as("d")), "edst")
-      .where($"s" =!= $"d").select($"s", $"d").distinct()
-    var (rem, remRdd, nRem) = pinC(CheckpointOps.checkpointCountTruncated(
-      lab.select($"scc").distinct()))
-    var (remE, remERdd) = pin(CheckpointOps.checkpointTruncated(ce))
-    // condensation materialized: the labels AND the scc run's own
-    // settled frames behind them are dead state now — free both
-    // (leaving them pinned is the deferred-cleanup inflation
-    // CheckpointOps documents)
-    unpin(labRdd)
-    sccRdds.foreach(unpin)
-    val found = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val emptyOut = rem.select($"scc", lit(0).as("level")).where(lit(false))
-    var level = 0
-    while (nRem > 0) {
-      val srcs = rem
-        .join(remE.select($"d".as("scc")).distinct(), Seq("scc"),
-          "left_anti")
-        .select($"scc", lit(level).as("level"))
-      val (srcsFlat, srcsRdd, nSrcs) =
-        pinC(CheckpointOps.checkpointCountTruncated(srcs))
-      // impossible after SCC condensation (the DAG property); guards
-      // an infinite peel if a caller feeds pre-labeled non-SCC input —
-      // and frees every pinned round frame before throwing, like scc()
-      if (nSrcs == 0) {
-        pinned.foreach(_.unpersist(false))
-        pinned.clear()
-        throw new IllegalArgumentException(
-          s"topological peel found no sources with $nRem nodes left — " +
-            "the condensed graph has a cycle")
+    // the pinned-set discipline of scc(): every live round frame is
+    // pinned, and the cycle-guard error path frees the WHOLE set
+    Rounds.owning { pinned =>
+      def pin(df: DataFrame): Materialized =
+        pinned.add(materialize(df, truncate = true))
+      val (sccDf, sccHandles) = sccWithHandles(edges, srcCol, dstCol)
+      sccHandles.foreach(pinned.add)
+      val lab = pin(sccDf)
+      val e = edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst"))
+        .where($"esrc" =!= $"edst").distinct()
+      val ce = e
+        .join(lab.df.select($"node".as("esrc"), $"scc".as("s")), "esrc")
+        .join(lab.df.select($"node".as("edst"), $"scc".as("d")), "edst")
+        .where($"s" =!= $"d").select($"s", $"d").distinct()
+      var rem = pin(lab.df.select($"scc").distinct())
+      var remE = pin(ce)
+      // condensation materialized: the labels AND the scc run's own
+      // settled frames behind them are dead state now — free both
+      // (leaving them pinned is the deferred-cleanup inflation
+      // CheckpointOps documents)
+      (lab +: sccHandles).foreach(pinned.release)
+      val found = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val emptyOut =
+        rem.df.select($"scc", lit(0).as("level")).where(lit(false))
+      var level = 0
+      while (rem.rows > 0) {
+        val srcs = pin(rem.df
+          .join(remE.df.select($"d".as("scc")).distinct(), Seq("scc"),
+            "left_anti")
+          .select($"scc", lit(level).as("level")))
+        // impossible after SCC condensation (the DAG property); guards
+        // an infinite peel if a caller feeds pre-labeled non-SCC input
+        if (srcs.rows == 0) throw new IllegalArgumentException(
+          s"topological peel found no sources with ${rem.rows} nodes " +
+            "left — the condensed graph has a cycle")
+        found += srcs.df
+        val nxt = pin(
+          rem.df.join(srcs.df.select($"scc"), Seq("scc"), "left_anti"))
+        val nxtE = pin(
+          remE.df.join(srcs.df.select($"scc".as("s")), Seq("s"), "left_anti"))
+        pinned.release(rem)
+        pinned.release(remE)
+        rem = nxt
+        remE = nxtE
+        level += 1
       }
-      found += srcsFlat
-      val (nxt, nxtRdd, nNxt) = pinC(CheckpointOps.checkpointCountTruncated(
-        rem.join(srcsFlat.select($"scc"), Seq("scc"), "left_anti")))
-      val (nxtE, nxtERdd) = pin(CheckpointOps.checkpointTruncated(
-        remE.join(srcsFlat.select($"scc".as("s")), Seq("s"), "left_anti")))
-      unpin(remRdd)
-      unpin(remERdd)
-      rem = nxt
-      remRdd = nxtRdd
-      nRem = nNxt
-      remE = nxtE
-      remERdd = nxtERdd
-      level += 1
+      pinned.release(rem)
+      pinned.release(remE)
+      found.foldLeft(emptyOut)(_ unionByName _)
     }
-    unpin(remRdd)
-    unpin(remERdd)
-    found.foldLeft(emptyOut)(_ unionByName _)
   }
-
-  private type RDD =
-    org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]
 
   /** Connected components when a partition column is KNOWN to bound every
     * component — e.g. the reference's per-city ER blocking

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.{Materialized, Track,
+  materialize}
 
 /** HyperBall (Boldi & Vigna, ICDMW 2013) — the ONE module that knows
   * the packed register format: the public batch, incremental and
@@ -481,7 +480,7 @@ private[graft] trait HbRegStore {
   /** Append a MATERIALIZED (checkpointed) delta frame to hop h's
     * standing stack. Each appended frame is node-unique (they are all
     * groupBy/distinct outputs), but nodes repeat ACROSS frames. */
-  def appendDelta(h: Int, delta: DataFrame, rdd: RDD[InternalRow]): Unit
+  def appendDelta(h: Int, delta: Materialized): Unit
 
   /** Append a materialized edge frame to the standing edge set. */
   def appendEdges(e: DataFrame): Unit
@@ -500,11 +499,11 @@ private[graft] trait HbRegStore {
   /** Full max-merge resolution of hop h's standing stack. */
   def resolved(h: Int): DataFrame
 
-  /** Track a batch/init-local materialized RDD (edge frames, empty
-    * deltas) that is DEAD once the last fold lands — freed by
+  /** Track a batch/init-local materialized frame (edge frames, empty
+    * deltas) that is DEAD once the last fold lands — released by
     * [[close]], so a long-lived session doesn't accumulate
     * corpus-scale blocks that nothing will read again. */
-  def trackTransient(rdd: RDD[InternalRow]): Unit
+  def trackTransient(t: Materialized): Unit
 
   /** Free every transient block. Standing register frames (the live
     * state backing [[resolved]]) are NOT touched. Call after the last
@@ -520,10 +519,8 @@ private[graft] final class InMemoryHbRegStore(
   private val m = 1 << p
   private var frames = Vector.empty[Vector[DataFrame]]
   private var edgeFrames = Vector.empty[DataFrame]
-  private val transients =
-    scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
-  private val frameRdds =
-    scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
+  private val transients = new Rounds.Pinned
+  private val standing = new Rounds.Pinned
 
   def maxHop: Int = frames.size - 1
 
@@ -545,10 +542,10 @@ private[graft] final class InMemoryHbRegStore(
     else probed.reduce(_ union _).select(col("node")).distinct()
   }
 
-  def appendDelta(h: Int, delta: DataFrame, rdd: RDD[InternalRow]): Unit = {
-    frameRdds += rdd
-    if (h == frames.size) frames :+= Vector(delta)
-    else frames = frames.updated(h, frames(h) :+ delta)
+  def appendDelta(h: Int, delta: Materialized): Unit = {
+    standing.add(delta)
+    if (h == frames.size) frames :+= Vector(delta.df)
+    else frames = frames.updated(h, frames(h) :+ delta.df)
   }
 
   def appendEdges(e: DataFrame): Unit = edgeFrames :+= e
@@ -567,20 +564,16 @@ private[graft] final class InMemoryHbRegStore(
     if (frames(h).size == 1) frames(h).head
     else HyperBall.maxMergeByNode(frames(h).reduce(_ unionByName _), m)
 
-  def trackTransient(rdd: RDD[InternalRow]): Unit = transients += rdd
+  def trackTransient(t: Materialized): Unit = transients.add(t)
 
-  def close(): Unit = {
-    transients.foreach(_.unpersist(false))
-    transients.clear()
-  }
+  def close(): Unit = transients.releaseAll()
 
   /** [[close]] plus the STANDING register frames — for callers whose
     * output is driver-local (the adaptive rows), where nothing will
     * ever resolve the frames again. */
   def closeAll(): Unit = {
     close()
-    frameRdds.foreach(_.unpersist(false))
-    frameRdds.clear()
+    standing.releaseAll()
     frames = Vector.empty
     edgeFrames = Vector.empty
   }
@@ -613,17 +606,17 @@ private[graft] object HyperBallState {
   def init(store: HbRegStore, initialEdges: DataFrame, maxHops: Int,
            srcCol: String, dstCol: String,
            trackQ: Boolean = false): Vector[Long] = {
-    val (e0, e0Rdd) = CheckpointOps.checkpointTruncated(
-      initialEdges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    store.trackTransient(e0Rdd)
-    store.appendEdges(e0)
+    val e0 = materialize(initialEdges.select(col(srcCol).as("src"),
+      col(dstCol).as("dst")), truncate = true)
+    store.trackTransient(e0)
+    store.appendEdges(e0.df)
     val m = 1 << store.p
-    val (r0, r0Rdd, _, q0) = materializeRegs(
+    val r0 = materializeRegs(
       HyperBall.packedInitRegs(
-        e0.select(col("src").as("node")).distinct(), store.p),
+        e0.df.select(col("src").as("node")).distinct(), store.p),
       HyperBall.packedQExpr(col("regs"), m), trackQ)
-    store.appendDelta(0, r0, r0Rdd)
-    q0 +: Vector.fill(maxHops)(growHop(store, trackQ))
+    store.appendDelta(0, r0)
+    r0.tracked +: Vector.fill(maxHops)(growHop(store, trackQ))
   }
 
   /** Grow the state one hop: propagate the resolved top registers one
@@ -635,32 +628,27 @@ private[graft] object HyperBallState {
     * ball-sum under `trackQ` (see [[init]]), else 0. */
   def growHop(store: HbRegStore, trackQ: Boolean = false): Long = {
     val m = 1 << store.p
-    val (next, nextRdd, _, q) = materializeRegs(
+    val next = materializeRegs(
       HyperBall.packedPropagateRound(store.allEdges,
         store.resolved(store.maxHop), m),
       HyperBall.packedQExpr(col("regs"), m), trackQ)
-    store.appendDelta(store.maxHop + 1, next, nextRdd)
-    q
+    store.appendDelta(store.maxHop + 1, next)
+    next.tracked
   }
 
-  /** Materialize a register frame's (node, regs) columns, returning the
-    * frame, its RDD handle, its row count and — under `trackQ` — the
-    * sum of the long column `q` over its rows, taken by the
-    * materializing pass itself
-    * ([[CheckpointOps.checkpointCountSumTruncated]]), so a per-hop
-    * scalar costs no second scan of the frame. Without `trackQ` the
-    * plan is the plain checkpoint of (node, regs), no q column. */
+  /** Materialize a register frame's (node, regs) columns, lineage
+    * truncated. Under `trackQ` the handle's `tracked` is the sum of the
+    * long column `q` over its rows, taken by the materializing pass
+    * itself ([[Track.Sum]]), so a per-hop scalar costs no second scan of
+    * the frame; without it the plan is the plain checkpoint of
+    * (node, regs), no q column, and `tracked` reads 0. */
   private def materializeRegs(regs: DataFrame, q: Column, trackQ: Boolean)
-      : (DataFrame, RDD[InternalRow], Long, Long) =
-    if (trackQ) {
-      val (f, rdd, n, s) = CheckpointOps.checkpointCountSumTruncated(
-        regs.select(col("node"), col("regs"), q.as("q")), 2)
-      (f.select(col("node"), col("regs")), rdd, n, s)
-    } else {
-      val (f, rdd, n) = CheckpointOps.checkpointCountTruncated(
-        regs.select(col("node"), col("regs")))
-      (f, rdd, n, 0L)
-    }
+      : Materialized = {
+    val cols = Seq(col("node"), col("regs"))
+    val m = materialize(regs.select(cols ++ Option.when(trackQ)(q.as("q")): _*),
+      truncate = true, track = if (trackQ) Track.Sum(2) else Track.Off)
+    if (trackQ) m.map(_.select(cols: _*)) else m
+  }
 
   /** Fold one edge batch into the standing state by monotone delta
     * propagation: a batch's effect is confined to the nodes whose
@@ -694,9 +682,11 @@ private[graft] object HyperBallState {
                 srcCol: String, dstCol: String,
                 trackQ: Boolean = false): Vector[Long] = {
     val m = 1 << store.p
-    val (newE, newERdd) = CheckpointOps.checkpointTruncated(
-      batch.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    store.trackTransient(newERdd)
+    val newEM = materialize(
+      batch.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+      truncate = true)
+    store.trackTransient(newEM)
+    val newE = newEM.df
     // new SRC nodes seed hop-0 sketches — hop-0 presence is "has an
     // out-edge" (the rebuild's n0 node set); a node already known as a
     // pure dst still seeds here, and its self-sketch then carries up
@@ -705,29 +695,32 @@ private[graft] object HyperBallState {
     // old-register resolve all consume it — left lazy, the distinct
     // shuffle re-executes in each of those jobs (batch-local, freed on
     // close)
-    val (srcNodes, srcNodesRdd) = CheckpointOps.checkpointTruncated(
-      newE.select(col("src").as("node")).distinct())
-    store.trackTransient(srcNodesRdd)
+    val srcNodesM = materialize(
+      newE.select(col("src").as("node")).distinct(), truncate = true)
+    store.trackTransient(srcNodesM)
+    val srcNodes = srcNodesM.df
     val seen0 = store.seen0Nodes(srcNodes)
     // hop-0 delta: new nodes only (anti-join), so q_old = 0 and the
     // tracked sum delta is just Σ q(self-sketch)
     val d0Plan = HyperBall.packedInitRegs(
       srcNodes.join(broadcast(seen0), Seq("node"), "left_anti"), store.p)
-    val (d0, d0Rdd, n0New, q0Delta) =
+    val d0 =
       materializeRegs(d0Plan, HyperBall.packedQExpr(col("regs"), m), trackQ)
-    if (n0New > 0) store.appendDelta(0, d0, d0Rdd)
-    else store.trackTransient(d0Rdd)
+    if (d0.rows > 0) store.appendDelta(0, d0)
+    else store.trackTransient(d0)
     store.appendEdges(newE)
-    var qDeltas = Vector(q0Delta)
-    var deltaPrev = d0 // empty when n0New == 0 — still a valid frame
+    var qDeltas = Vector(d0.tracked)
+    var deltaPrev = d0.df // empty when d0.rows == 0 — still a valid frame
     for (h <- 1 to store.maxHop) {
       val viaDelta = store.propagateAlong(deltaPrev)
       val srcRegs = store.resolveFor(h - 1, srcNodes)
       val viaNewE = newE
         .join(broadcast(srcRegs.withColumnRenamed("node", "src")), "src")
         .select(col("dst").as("node"), col("regs"))
-      val (cand, candRdd) = CheckpointOps.checkpointTruncated(
-        HyperBall.maxMergeByNode(viaDelta.union(viaNewE).union(deltaPrev), m))
+      val candM = materialize(
+        HyperBall.maxMergeByNode(viaDelta.union(viaNewE).union(deltaPrev), m),
+        truncate = true)
+      val cand = candM.df
       val old = store.resolveFor(h, cand.select(col("node")))
         .withColumnRenamed("regs", "old_regs")
       val merged = cand.join(old, Seq("node"), "left")
@@ -738,7 +731,7 @@ private[graft] object HyperBallState {
           col("old_regs"))
       val changed = merged.where(col("old_regs").isNull ||
         !(col("regs") <=> col("old_regs")))
-      val (dh, dhRdd, nCh, qhDelta) = materializeRegs(changed,
+      val dh = materializeRegs(changed,
         HyperBall.packedQExpr(col("regs"), m) -
           coalesce(HyperBall.packedQExpr(col("old_regs"), m), lit(0L)),
         trackQ)
@@ -746,11 +739,11 @@ private[graft] object HyperBallState {
       // old-register probe and the merge — all ran inside dh's
       // materialization); free it instead of leaving maxHops × batches
       // ball-sized frames to GC
-      candRdd.unpersist(false)
-      if (nCh > 0) store.appendDelta(h, dh, dhRdd)
-      else store.trackTransient(dhRdd)
-      qDeltas :+= qhDelta
-      deltaPrev = dh
+      candM.release()
+      if (dh.rows > 0) store.appendDelta(h, dh)
+      else store.trackTransient(dh)
+      qDeltas :+= dh.tracked
+      deltaPrev = dh.df
     }
     qDeltas
   }

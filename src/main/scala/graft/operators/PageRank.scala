@@ -1,33 +1,12 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.{Materialized, Track,
+  materialize}
 import org.apache.spark.storage.StorageLevel
 
-/** Power-iteration PageRank over an edge DataFrame — the second iterative
-  * consumer of the [[org.apache.spark.sql.graft.CheckpointOps]] round
-  * machinery (after [[ConnectedComponents]]), showing the fixpoint
-  * pattern generalizes: materialize each round, free the previous round's
-  * blocks, keep carried stats truncated so planning cost stays flat.
-  *
-  * Semantics: directed edges, uniform teleport `(1-d)/N`, dangling mass
-  * NOT redistributed (the simplified formulation: a dangling node keeps
-  * only its teleport share; downstream ranks renormalize by total mass).
-  * A FIXED iteration count keeps the result deterministic and
-  * oracle-reproducible — no convergence epsilon on floating point.
-  *
-  * The input is read once: its `(src, dst)` projection is checkpointed,
-  * and one aggregate over it yields every node with its out-degree
-  * `deg` (0 = dangling). Rank state is (node, rank, deg) — tiny relative
-  * to edges, and it broadcasts into each round's edge join because
-  * checkpoints carry measured stats. Each round is contribution-scatter
-  * + sum: one shuffle on dst (partial aggregation map-side) + one join
-  * back onto the rank state.
-  */
 /** Named fail-fast for the EXACT pair-state centrality legs: their state
   * is Σ|B_h(v)| pair rows — quadratic in the worst case — and on a graph
   * whose ball mass the executors can't hold the failure mode is not an
@@ -45,6 +24,26 @@ final class CentralityStateBudgetExceeded(
         s"calibration tool; at this ball mass $hint Override " +
         "stateBudgetRows to raise the budget deliberately.")
 
+/** Power-iteration PageRank over an edge DataFrame — the second iterative
+  * consumer of the [[Rounds]] driver (after [[ConnectedComponents]]),
+  * showing the fixpoint pattern generalizes: materialize each round, free
+  * the previous round's blocks, carry measured stats so planning cost
+  * stays flat.
+  *
+  * Semantics: directed edges, uniform teleport `(1-d)/N`, dangling mass
+  * NOT redistributed (the simplified formulation: a dangling node keeps
+  * only its teleport share; downstream ranks renormalize by total mass).
+  * A FIXED iteration count keeps the result deterministic and
+  * oracle-reproducible — no convergence epsilon on floating point.
+  *
+  * The input is read once: its `(src, dst)` projection is checkpointed,
+  * and one aggregate over it yields every node with its out-degree
+  * `deg` (0 = dangling). Rank state is (node, rank, deg) — tiny relative
+  * to edges, and it broadcasts into each round's edge join because
+  * checkpoints carry measured stats. Each round is contribution-scatter
+  * + sum: one shuffle on dst (partial aggregation map-side) + one join
+  * back onto the rank state.
+  */
 object PageRank {
 
   /** Default pair-state budget: the rows a round may materialize before
@@ -107,10 +106,11 @@ object PageRank {
   }
 
   /** A PageRank input read once: the edge checkpoint and the node
-    * checkpoint with its row count (see [[graph]]). */
-  private[graft] final case class Graph(
-      edges: DataFrame, edgesRdd: RDD[InternalRow],
-      nodes: DataFrame, nodesRdd: RDD[InternalRow], n: Long)
+    * checkpoint, whose row count is the node count (see [[graph]]). */
+  private[graft] final case class Graph(edges: Materialized,
+                                        nodes: Materialized) {
+    def n: Long = nodes.rows
+  }
 
   /** The input read [[run]], [[weighted]] and [[personalized]] share:
     * the `(src, dst[, w])` projection checkpointed once, and ONE
@@ -124,8 +124,9 @@ object PageRank {
                            weightCol: Option[String] = None,
                            seeds: Option[DataFrame] = None): Graph = {
     val w = weightCol.map(c => col(c).cast("double").as("w")).toSeq
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val edges = materialize(
       input.select(Seq(col(srcCol).as("src"), col(dstCol).as("dst")) ++ w: _*))
+    val e = edges.df
     val wOut = weightCol.map(_ => col("w").as("wd")).toSeq
     val wIn = weightCol.map(_ => lit(0.0).as("wd")).toSeq
     val wdeg = weightCol.map(_ => sum(col("wd")).as("wdeg")).toSeq
@@ -137,25 +138,15 @@ object PageRank {
           .select(col("node"), lit(1.0).as("s")), Seq("node"), "left")
         .withColumn("s", coalesce(col("s"), lit(0.0)))
     }
-    val (nodes, nodesRdd, n) = CheckpointOps.checkpointCount(withSeeds)
-    Graph(e, eRdd, nodes, nodesRdd, n)
+    Graph(edges, materialize(withSeeds))
   }
 
   /** `iterations` rounds of `round` from `start` (a projection of the
-    * [[Graph]] node checkpoint `startRdd`), each round materialized
-    * before the previous one's blocks are freed. */
-  private def iterate(start: DataFrame, startRdd: RDD[InternalRow],
-                      iterations: Int)(round: DataFrame => DataFrame)
-      : DataFrame = {
-    var (ranks, ranksRdd) = (start, startRdd)
-    for (_ <- 1 to iterations) {
-      val (next, nextRdd) = CheckpointOps.checkpoint(round(ranks))
-      ranksRdd.unpersist(false)
-      ranks = next
-      ranksRdd = nextRdd
-    }
-    ranks
-  }
+    * [[Graph]] node checkpoint), each round materialized before the
+    * previous one's blocks are freed. */
+  private def iterate(start: Materialized, iterations: Int)
+                     (round: DataFrame => DataFrame): DataFrame =
+    Rounds.iterate(start, iterations)((s, _) => materialize(round(s.df))).df
 
   /** @param redistributeDangling when true, each round adds the total
     *        rank mass sitting on dangling nodes (`deg = 0`) back
@@ -176,9 +167,9 @@ object PageRank {
     require(iterations >= 1, "need at least one iteration")
     val g = graph(edges, srcCol, dstCol)
     val ranks = iterate(
-      g.nodes.select(col("node"), lit(1.0 / g.n).as("rank"), col("deg")),
-      g.nodesRdd, iterations)(runRound(g, _, damping, redistributeDangling))
-    g.edgesRdd.unpersist(false)
+      g.nodes.map(_.select(col("node"), lit(1.0 / g.n).as("rank"), col("deg"))),
+      iterations)(runRound(g, _, damping, redistributeDangling))
+    g.edges.release()
     ranks.select("node", "rank")
   }
 
@@ -207,7 +198,7 @@ object PageRank {
     * broadcast and the edge side is never shuffled. */
   private def withInMass(g: Graph, ranks: DataFrame, term: Column)
       : DataFrame = {
-    val contribs = g.edges
+    val contribs = g.edges.df
       .join(ranks.where(col("deg") > 0).withColumnRenamed("node", "src"),
         "src")
       .groupBy(col("dst").as("node"))
@@ -242,14 +233,14 @@ object PageRank {
     val nNodes = g.n.toDouble
     val teleport = (1.0 - damping) / nNodes
     val ranks = iterate(
-      g.nodes.select($"node", lit(1.0 / nNodes).as("rank"), $"deg", $"wdeg"),
-      g.nodesRdd, iterations) { ranks =>
+      g.nodes.map(_.select($"node", lit(1.0 / nNodes).as("rank"), $"deg",
+        $"wdeg")), iterations) { ranks =>
       withInMass(g, ranks, $"rank" * $"w" / $"wdeg")
         .select($"node",
           (lit(teleport) + lit(damping) * coalesce($"in_mass", lit(0.0)))
             .as("rank"), $"deg", $"wdeg")
     }
-    g.edgesRdd.unpersist(false)
+    g.edges.release()
     ranks.select($"node", $"rank")
   }
 
@@ -275,15 +266,15 @@ object PageRank {
     if (g.n == 0) {
       // empty edge set -> no nodes at all: the rank table is empty (the
       // same answer the SQL formulation gives), not an error
-      g.edgesRdd.unpersist(false)
-      g.nodesRdd.unpersist(false)
-      return g.nodes.select($"node", $"s".as("rank"))
+      g.edges.release()
+      g.nodes.release()
+      return g.nodes.df.select($"node", $"s".as("rank"))
     }
-    val nSeeds = g.nodes.agg(sum($"s")).head.getDouble(0)
+    val nSeeds = g.nodes.df.agg(sum($"s")).head.getDouble(0)
     require(nSeeds > 0, "no seed is present in the graph")
     val ranks = iterate(
-      g.nodes.select($"node", ($"s" / nSeeds).as("rank"), $"deg", $"s"),
-      g.nodesRdd, iterations) { ranks =>
+      g.nodes.map(_.select($"node", ($"s" / nSeeds).as("rank"), $"deg", $"s")),
+      iterations) { ranks =>
       withInMass(g, ranks, $"rank" / $"deg")
         .crossJoin(danglingMass(ranks))
         .select($"node",
@@ -291,7 +282,7 @@ object PageRank {
             + lit(damping) * coalesce($"in_mass", lit(0.0))).as("rank"),
           $"deg", $"s")
     }
-    g.edgesRdd.unpersist(false)
+    g.edges.release()
     ranks.select($"node", $"rank")
   }
 
@@ -317,14 +308,15 @@ object PageRank {
     require(iterations >= 1, "need at least one iteration")
     val spark = edges.sparkSession
     import spark.implicits._
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val eM = materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
+    val e = eM.df
+    val nodesM = materialize(
       e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct())
-    var (state, stateRdd) = CheckpointOps.checkpoint(
+    val nodes = nodesM.df
+    val start = materialize(
       nodes.select($"node", lit(1.0).as("hub"), lit(0.0).as("auth")))
-    var iter = 0
-    while (iter < iterations) {
+    val last = Rounds.iterate(start, iterations) { (state, _) =>
       // each scatter result feeds multiple consumers (its normalizer
       // aggregate, the node join, and — for auths — the hub scatter AND
       // the final zip); without persists every consumer re-runs the
@@ -332,7 +324,7 @@ object PageRank {
       // (measured 6.9 s -> 2.9 s at sf0.1). The persisted frames are
       // node-sized; all are dropped once the round's checkpoint has
       // materialized.
-      val authRaw = e.join(state.select($"node".as("src"), $"hub"), "src")
+      val authRaw = e.join(state.df.select($"node".as("src"), $"hub"), "src")
         .groupBy($"dst".as("node")).agg(sum($"hub").as("raw"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val authNorm = authRaw.agg(sum($"raw").as("s"))
@@ -350,29 +342,17 @@ object PageRank {
         .select($"node", (coalesce($"raw", lit(0.0)) / $"s").as("hub"))
         .join(auths, Seq("node"))
         .select($"node", $"hub", $"auth")
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
+      val nextM = materialize(next)
       authRaw.unpersist(false)
       auths.unpersist(false)
       hubRaw.unpersist(false)
-      stateRdd.unpersist(false)
-      state = nextFlat
-      stateRdd = nextRdd
-      iter += 1
+      nextM
     }
-    eRdd.unpersist(false)
-    nodesRdd.unpersist(false)
-    state
+    eM.release()
+    nodesM.release()
+    last.df
   }
 
-  /** The wedge set of the DEGREE-oriented graph: every undirected edge
-    * {u,v} (directions/dups collapsed, self-loops dropped) is directed
-    * from the (degree, id)-smaller endpoint to the larger, and a wedge is
-    * a pair of out-edges (ctr->x, ctr->y) with x before y in the same
-    * order. Low-degree-first orientation is what bounds the wedge count
-    * by O(m^1.5) on skewed graphs — a hub of degree d under id
-    * orientation can center Θ(d²) wedges, but under degree orientation
-    * its out-degree (and every node's) is at most O(sqrt(m)).
-    * Exposed for the skew spec; [[closedWedges]] closes these. */
   /** Canonical undirected simple edges: {a < b}, dups/self-loops gone. */
   private def undirected(edges: DataFrame, srcCol: String,
                          dstCol: String): DataFrame = {
@@ -405,6 +385,15 @@ object PageRank {
         col("o2.v").as("y"))
   }
 
+  /** The wedge set of the DEGREE-oriented graph: every undirected edge
+    * {u,v} (directions/dups collapsed, self-loops dropped) is directed
+    * from the (degree, id)-smaller endpoint to the larger, and a wedge is
+    * a pair of out-edges (ctr->x, ctr->y) with x before y in the same
+    * order. Low-degree-first orientation is what bounds the wedge count
+    * by O(m^1.5) on skewed graphs — a hub of degree d under id
+    * orientation can center Θ(d²) wedges, but under degree orientation
+    * its out-degree (and every node's) is at most O(sqrt(m)).
+    * Exposed for the skew spec; [[closedWedges]] closes these. */
   def orientedWedges(edges: DataFrame, srcCol: String = "src",
                      dstCol: String = "dst"): DataFrame =
     wedgesOf(undirected(edges, srcCol, dstCol))
@@ -458,16 +447,16 @@ object PageRank {
     // edge frame materialized once for the node init + every round
     // (the HyperBallState.init rationale); labels are checkpoint-
     // backed, so the edge blocks free when the loop ends
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val eM = materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val (nodes, nodesRdd) = CheckpointOps.checkpoint(
+    val e = eM.df
+    val nodesM = materialize(
       e.select($"src".as("node")).union(e.select($"dst".as("node"))).distinct())
-    var (labels, labelsRdd) = CheckpointOps.checkpoint(
-      nodes.select($"node", $"node".as("label")))
-    var iter = 0
-    while (iter < iterations) {
+    val nodes = nodesM.df
+    val start = materialize(nodes.select($"node", $"node".as("label")))
+    val labels = Rounds.iterate(start, iterations) { (cur, _) =>
       val counts = e
-        .join(labels.select($"node".as("src"), $"label"), "src")
+        .join(cur.df.select($"node".as("src"), $"label"), "src")
         .groupBy($"dst", $"label").agg(count(lit(1)).as("c"))
       // argmax(count) with min-label tiebreak, as one partial agg:
       // max over (c, -label) picks the largest count, then the most
@@ -476,17 +465,13 @@ object PageRank {
         .groupBy($"dst".as("node"))
         .agg(max(struct($"c", (-$"label").as("nl"))).as("m"))
         .select($"node", (-$"m.nl").as("label"))
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(
+      materialize(
         nodes.join(next, Seq("node"), "left") // isolated dsts keep a row
           .select($"node", coalesce($"label", $"node").as("label")))
-      labelsRdd.unpersist(false)
-      labels = nextFlat
-      labelsRdd = nextRdd
-      iter += 1
     }
-    eRdd.unpersist(false)
-    nodesRdd.unpersist(false)
-    labels
+    eM.release()
+    nodesM.release()
+    labels.df
   }
 
   /** Multi-source BFS shortest hop distances, bounded at `maxHops`
@@ -511,25 +496,19 @@ object PageRank {
     // edge frame materialized once for the maxHops frontier joins (the
     // HyperBallState.init rationale); the returned distances are
     // checkpoint-backed, so the edge blocks free on exit
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val eM = materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    var (dist, distRdd) = CheckpointOps.checkpoint(
+    val start = materialize(
       sources.select($"node").distinct().select($"node", lit(0).as("dist")))
-    var hop = 1
-    while (hop <= maxHops) {
-      val frontier = dist.where($"dist" === (hop - 1)).select($"node")
-      val reached = e.join(frontier.select($"node".as("src")), "src")
+    val dist = Rounds.iterate(start, maxHops) { (cur, hop) =>
+      val frontier = cur.df.where($"dist" === (hop - 1)).select($"node")
+      val reached = eM.df.join(frontier.select($"node".as("src")), "src")
         .select($"dst".as("node"), lit(hop).as("dist"))
-      val next = dist.union(reached)
-        .groupBy($"node").agg(min($"dist").as("dist"))
-      val (nextFlat, nextRdd) = CheckpointOps.checkpoint(next)
-      distRdd.unpersist(false)
-      dist = nextFlat
-      distRdd = nextRdd
-      hop += 1
+      materialize(cur.df.union(reached)
+        .groupBy($"node").agg(min($"dist").as("dist")))
     }
-    eRdd.unpersist(false)
-    dist
+    eM.release()
+    dist.df
   }
 
   /** Bounded k-core peeling: `rounds` SYNCHRONOUS rounds of deleting
@@ -542,7 +521,7 @@ object PageRank {
     * Per round: one partial-agg degree count + two semi-joins keeping
     * only edges whose BOTH endpoints survive. The edge set shrinks
     * monotonically, so per-round cost decays; state is the edge list
-    * itself on the CheckpointOps round machinery.
+    * itself on the [[Rounds]] driver.
     *
     * @param edges symmetrized, duplicate-free undirected edge list
     *              (each arc once per direction) — degree = out-degree */
@@ -551,21 +530,16 @@ object PageRank {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
     val spark = edges.sparkSession
     import spark.implicits._
-    var (e, eRdd) = CheckpointOps.checkpoint(
+    val start = materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    var round = 0
-    while (round < rounds) {
-      val keep = e.groupBy($"src").agg(count(lit(1)).as("deg"))
+    val e = Rounds.iterate(start, rounds) { (cur, _) =>
+      val keep = cur.df.groupBy($"src").agg(count(lit(1)).as("deg"))
         .where($"deg" >= k).select($"src".as("node"))
-      val (e2, e2Rdd) = CheckpointOps.checkpoint(
-        e.join(keep.select($"node".as("src")), Seq("src"), "left_semi")
+      materialize(
+        cur.df.join(keep.select($"node".as("src")), Seq("src"), "left_semi")
           .join(keep.select($"node".as("dst")), Seq("dst"), "left_semi")
           .select($"src", $"dst"))
-      eRdd.unpersist(false)
-      e = e2
-      eRdd = e2Rdd
-      round += 1
-    }
+    }.df
     e.groupBy($"src".as("node")).agg(count(lit(1)).as("deg"))
   }
 
@@ -582,7 +556,7 @@ object PageRank {
     * Per round: one shuffle on dst (map-side partial min) + one
     * full-outer min-merge join on the (node, dist) state — the same
     * frontier discipline as [[bfsDistances]] with weights replacing hop
-    * counts, on the CheckpointOps round machinery. Unreached nodes are
+    * counts, on the [[Rounds]] driver. Unreached nodes are
     * absent from the output.
     *
     * @param edges   (src, dst, w) with non-negative integral w
@@ -595,36 +569,33 @@ object PageRank {
     import spark.implicits._
     // edge frame materialized once for the maxRounds relaxations (the
     // HyperBallState.init rationale); distances are checkpoint-backed
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val eM = materialize(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w")))
-    var (dist, distRdd) = CheckpointOps.checkpoint(
+    // state (node, dist, improved): every seed starts improved, so the
+    // first round relaxes them all
+    val start = materialize(
       sources.select($"node").distinct()
-        .select($"node", lit(0L).as("dist")))
-    var frontier = dist
-    var round = 1
-    while (round <= maxRounds) {
-      val relax = e
-        .join(frontier.select($"node".as("src"), $"dist"), "src")
+        .select($"node", lit(0L).as("dist"), lit(true).as("improved")))
+    val merged = Rounds.iterate(start, maxRounds) { (cur, _) =>
+      val dist = cur.df.select($"node", $"dist")
+      val relax = eM.df
+        .join(cur.df.where($"improved").select($"node".as("src"), $"dist"),
+          "src")
         .select($"dst".as("node"), ($"dist" + $"w").as("cand"))
         .groupBy($"node").agg(min($"cand").as("cand"))
       // full-outer min-merge: keep the improved flag so the next round
       // relaxes only nodes this round actually changed
-      val (merged, mergedRdd) = CheckpointOps.checkpoint(
+      materialize(
         dist.join(relax, Seq("node"), "full_outer")
           .select($"node",
             least(coalesce($"dist", $"cand"), coalesce($"cand", $"dist"))
               .as("dist"),
             ($"cand".isNotNull && ($"dist".isNull || $"cand" < $"dist"))
               .as("improved")))
-      distRdd.unpersist(false)
-      dist = merged.select($"node", $"dist")
-      frontier = merged.where($"improved").select($"node", $"dist")
-      distRdd = mergedRdd
-      round += 1
     }
-    eRdd.unpersist(false)
-    dist
+    eM.release()
+    merged.df.select($"node", $"dist")
   }
 
   /** EXACT bounded-radius harmonic centrality: for every node v with at
@@ -699,66 +670,60 @@ object PageRank {
     // edge frame materialized once for the seed + every BFS round (the
     // HyperBallState.init rationale); the returned state is a union
     // of checkpointed pair frames, so the edge blocks free on exit —
-    // including the budget-trip error path (finally)
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    // including the budget-trip error path, where the pinned pair frames
+    // free with them
+    val eM = materialize(
       edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst")))
-    // FRONTIER-frame accumulation: each round materializes only the
-    // newly-reached (src, node) pairs (first reach == min dist on an
-    // unweighted graph); the cumulative state is the lazy union of the
-    // per-round frames. Total writes are Σ|B_maxHops| rows ONCE — the
-    // earlier cumulative re-checkpoint rewrote the whole state every
-    // round (O(maxHops · state) write amplification, the dominant cost
-    // of the exact legs at sf1).
-    val (seed, seedRdd, seedRows) = CheckpointOps.checkpointCount(
-      e.select($"esrc".as("src")).distinct()
-        .select($"src", $"src".as("node"), lit(0).as("dist")))
-    var frameRdds = Vector[RDD[InternalRow]](seedRdd)
-    var total = seedRows
-    checkBudget(0, total, stateBudgetRows, frameRdds)
-    var state = seed
-    var frontier = seed
-    var hop = 1
-    try {
-      while (hop <= maxHops && total > 0) {
+    val e = eM.df
+    try Rounds.owning { pinned =>
+      // FRONTIER-frame accumulation: each round materializes only the
+      // newly-reached (src, node) pairs (first reach == min dist on an
+      // unweighted graph); the cumulative state is the lazy union of the
+      // per-round frames. Total writes are Σ|B_maxHops| rows ONCE — the
+      // earlier cumulative re-checkpoint rewrote the whole state every
+      // round (O(maxHops · state) write amplification, the dominant cost
+      // of the exact legs at sf1).
+      val seed = pinned.add(materialize(
+        e.select($"esrc".as("src")).distinct()
+          .select($"src", $"src".as("node"), lit(0).as("dist"))))
+      checkBudget(0, pinned.rows, stateBudgetRows)
+      var state = seed.df
+      var frontier = seed.df
+      var hop = 1
+      var grew = seed.rows > 0
+      while (hop <= maxHops && grew) {
         val step = e.join(frontier.select($"src", $"node".as("esrc")), "esrc")
           .select($"src", $"edst".as("node")).distinct()
-        val (fresh, freshRdd, n) = CheckpointOps.checkpointCount(
+        val fresh = pinned.add(materialize(
           step.join(state.select($"src", $"node"), Seq("src", "node"),
               "left_anti")
-            .select($"src", $"node", lit(hop).as("dist")))
-        frameRdds :+= freshRdd
-        total += n
-        checkBudget(hop, total, stateBudgetRows, frameRdds)
-        if (n == 0) {
-          // BFS exhausted early — no pair can appear at a later hop
-          freshRdd.unpersist(false)
-          hop = maxHops
-        } else {
-          state = state.union(fresh)
-          frontier = fresh
-        }
+            .select($"src", $"node", lit(hop).as("dist"))))
+        checkBudget(hop, pinned.rows, stateBudgetRows)
+        // an empty round exhausts the BFS: no pair can appear later
+        grew = fresh.rows > 0
+        if (grew) {
+          state = state.union(fresh.df)
+          frontier = fresh.df
+        } else pinned.release(fresh)
         hop += 1
       }
-    } finally eRdd.unpersist(false)
-    state
+      state
+    } finally eM.release()
   }
 
   /** The budget trip shared by [[pairHopDistances]] and
-    * [[betweennessBounded]]'s forward pass: frees every materialized
-    * frame (nothing downstream will consume them) and raises the named
-    * error. Checked AFTER each round lands — the count is the free
-    * byproduct of the round's own materialization
-    * ([[CheckpointOps.checkpointCount]]), so the guard costs zero jobs;
-    * the round that crosses the line is the last one paid for. `rows`
-    * is the CUMULATIVE pair state across frames. */
-  private def checkBudget(round: Int, rows: Long, budget: Long,
-                          rdds: Seq[RDD[InternalRow]]): Unit =
-    if (rows > budget) {
-      rdds.foreach(_.unpersist(false))
+    * [[betweennessBounded]]'s forward pass: raises the named error, and
+    * the enclosing [[Rounds.owning]] frees every materialized frame
+    * (nothing downstream will consume them). Checked AFTER each round
+    * lands — `rows` is the CUMULATIVE pair state across frames, the
+    * free byproduct of the rounds' own materializations, so the guard
+    * costs zero jobs; the round that crosses the line is the last one
+    * paid for. */
+  private def checkBudget(round: Int, rows: Long, budget: Long): Unit =
+    if (rows > budget)
       throw new CentralityStateBudgetExceeded(round, rows, budget,
         "use the sketch-state scale path (HyperBall.hyperBallPacked / " +
           "hyperBallCloseness) or shrink maxHops / the source sample.")
-    }
 
   /** [[HyperBall.hyperBallNeighborhood]] under its earlier name: the
     * benchmark's stream_ingest check (perfbench `StreamIngest`) calls
@@ -803,85 +768,77 @@ object PageRank {
     // edge frame materialized once — both passes consume it every level
     // (2·maxHops−1 joins), and an un-materialized spatial-join edge plan
     // re-executes per consumer; freed on exit including the budget trip
-    val (e, eRdd) = CheckpointOps.checkpoint(
+    val eM = materialize(
       edges.select(col(srcCol).as("esrc"), col(dstCol).as("edst")))
-    try {
-    // forward pass as HOP-INDEXED frontier frames (the pairHopDistances
-    // discipline): round h materializes only the pairs first reached at
-    // h with their σ — Σ ball-mass rows written ONCE instead of a
-    // cumulative state rewritten every round — and the backward pass
-    // reads each level's frame directly instead of filtering the full
-    // union per level.
-    val (seed, seedRdd, seedRows) = CheckpointOps.checkpointCount(
-      sources.select($"node").distinct()
-        .select($"node".as("s"), $"node", lit(1L).as("sigma")))
-    var frames = Vector(seed)
-    var frameRdds = Vector[RDD[InternalRow]](seedRdd)
-    var total = seedRows
-    checkBudget(0, total, stateBudgetRows, frameRdds)
-    var seen = seed.select($"s", $"node")
-    var hop = 1
-    while (hop <= maxHops) {
-      val frontier = frames(hop - 1)
-        .select($"s", $"node".as("esrc"), $"sigma")
-      // σ of a node first reached at round h = Σ σ over its dist-(h−1)
-      // predecessors (all final by round h−1) — integer-exact
-      val cand = e.join(frontier, "esrc")
-        .groupBy($"s", $"edst".as("node"))
-        .agg(sum($"sigma").as("sigma"))
-      val (fresh, freshRdd, n) = CheckpointOps.checkpointCount(
-        cand.join(seen, Seq("s", "node"), "left_anti"))
-      frames :+= fresh
-      frameRdds :+= freshRdd
-      total += n
-      checkBudget(hop, total, stateBudgetRows, frameRdds)
-      seen = seen.union(fresh.select($"s", $"node"))
-      hop += 1
-    }
-    // backward: δ at the radius boundary is 0; each level pulls from the
-    // one below through the edges that realize the shortest paths. The
-    // per-level δ frames all feed the final per-node sum, so instead of
-    // pinning every level until the end, a running cumulative union is
-    // re-checkpointed per level and the superseded accumulator + the
-    // consumed previous level free immediately — peak pinned state is
-    // two accumulator copies during the handoff, not maxHops frames.
-    var delta = frames(maxHops)
-      .select($"s", $"node", lit(0.0).as("delta"))
-    var deltaRdd: RDD[InternalRow] = null
-    var (accum, accumRdd) = CheckpointOps.checkpoint(delta)
-    delta = accum
-    var level = maxHops - 1
-    while (level >= 1) {
-      val v = frames(level)
-        .select($"s", $"node", $"sigma")
-      val w = frames(level + 1)
-        .select($"s".as("ws"), $"node".as("wnode"), $"sigma".as("wsigma"))
-        .join(delta.select($"s".as("ws"), $"node".as("wnode"),
-          $"delta".as("wdelta")), Seq("ws", "wnode"))
-      val contrib = v
-        .join(e, $"node" === $"esrc")
-        .join(w, $"s" === $"ws" && $"edst" === $"wnode")
-      val scored = contrib
-        .groupBy($"s", $"node")
-        .agg(sum(($"sigma".cast("double") / $"wsigma")
-          * (lit(1.0) + $"wdelta")).as("acc"))
-      val nextDelta = v.select($"s", $"node")
-        .join(scored, Seq("s", "node"), "left_outer")
-        .select($"s", $"node", coalesce($"acc", lit(0.0)).as("delta"))
-      val (flat, flatRdd) = CheckpointOps.checkpoint(nextDelta)
-      val (nextAccum, nextAccumRdd) =
-        CheckpointOps.checkpoint(accum.union(flat))
-      if (deltaRdd != null) deltaRdd.unpersist(false)
-      accumRdd.unpersist(false)
-      delta = flat
-      deltaRdd = flatRdd
-      accum = nextAccum
-      accumRdd = nextAccumRdd
-      level -= 1 // level 0 (the source itself) never scores, so the
-    }            // backward pass stops at level 1
-    if (deltaRdd != null) deltaRdd.unpersist(false)
-    accum.groupBy($"node").agg(sum($"delta").as("bc"))
-    } finally eRdd.unpersist(false)
+    val e = eM.df
+    try Rounds.owning { pinned =>
+      // forward pass as HOP-INDEXED frontier frames (the pairHopDistances
+      // discipline): round h materializes only the pairs first reached at
+      // h with their σ — Σ ball-mass rows written ONCE instead of a
+      // cumulative state rewritten every round — and the backward pass
+      // reads each level's frame directly instead of filtering the full
+      // union per level.
+      val seed = pinned.add(materialize(
+        sources.select($"node").distinct()
+          .select($"node".as("s"), $"node", lit(1L).as("sigma"))))
+      checkBudget(0, pinned.rows, stateBudgetRows)
+      var frames = Vector(seed.df)
+      var seen = seed.df.select($"s", $"node")
+      for (hop <- 1 to maxHops) {
+        val frontier = frames(hop - 1)
+          .select($"s", $"node".as("esrc"), $"sigma")
+        // σ of a node first reached at round h = Σ σ over its dist-(h−1)
+        // predecessors (all final by round h−1) — integer-exact
+        val cand = e.join(frontier, "esrc")
+          .groupBy($"s", $"edst".as("node"))
+          .agg(sum($"sigma").as("sigma"))
+        val fresh = pinned.add(materialize(
+          cand.join(seen, Seq("s", "node"), "left_anti"))).df
+        checkBudget(hop, pinned.rows, stateBudgetRows)
+        frames :+= fresh
+        seen = seen.union(fresh.select($"s", $"node"))
+      }
+      // backward: δ at the radius boundary is 0; each level pulls from the
+      // one below through the edges that realize the shortest paths. The
+      // per-level δ frames all feed the final per-node sum, so instead of
+      // pinning every level until the end, a running cumulative union is
+      // re-checkpointed per level and the superseded accumulator + the
+      // consumed previous level free immediately — peak pinned state is
+      // two accumulator copies during the handoff, not maxHops frames.
+      val accum0 = materialize(
+        frames(maxHops).select($"s", $"node", lit(0.0).as("delta")))
+      var delta = accum0
+      // round i scores level maxHops − i; level 0 (the source itself)
+      // never scores, so the backward pass stops at level 1
+      val accum = Rounds.iterate(accum0, maxHops - 1) { (acc, i) =>
+        val level = maxHops - i
+        val v = frames(level)
+          .select($"s", $"node", $"sigma")
+        val w = frames(level + 1)
+          .select($"s".as("ws"), $"node".as("wnode"), $"sigma".as("wsigma"))
+          .join(delta.df.select($"s".as("ws"), $"node".as("wnode"),
+            $"delta".as("wdelta")), Seq("ws", "wnode"))
+        val contrib = v
+          .join(e, $"node" === $"esrc")
+          .join(w, $"s" === $"ws" && $"edst" === $"wnode")
+        val scored = contrib
+          .groupBy($"s", $"node")
+          .agg(sum(($"sigma".cast("double") / $"wsigma")
+            * (lit(1.0) + $"wdelta")).as("acc"))
+        val nextDelta = v.select($"s", $"node")
+          .join(scored, Seq("s", "node"), "left_outer")
+          .select($"s", $"node", coalesce($"acc", lit(0.0)).as("delta"))
+        val flat = pinned.add(materialize(nextDelta))
+        val next = materialize(acc.df.union(flat.df))
+        if (delta ne acc) pinned.release(delta)
+        delta = flat
+        next
+      }
+      // the accumulator holds every δ: the forward frames and the last
+      // level are dead
+      pinned.releaseAll()
+      accum.df.groupBy($"node").agg(sum($"delta").as("bc"))
+    } finally eM.release()
   }
 
   /** Common-neighbor link prediction over the undirected graph: for every
@@ -1155,7 +1112,7 @@ object PageRank {
 
   /** [[louvainMoveRound]] iterated to a fixpoint (or `maxRounds`) under
     * the CC loop discipline: edges pinned once across rounds, each
-    * round's labels materialized with capped stats, the previous
+    * round's labels materialized with measured stats, the previous
     * round's blocks released. Rounds are MOVE-GATED (see
     * [[fixpointWeighted]]): round r applies only the md5(node:r)-coin
     * half's moves, so symmetric structures converge instead of
@@ -1167,22 +1124,17 @@ object PageRank {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val e = CacheScope.pin(edges.select(col("src"), col("dst"))
       .withColumn("w", lit(1L)))
-    val (lab, _, _) = fixpointWeighted(e, labels0, maxRounds)
+    val (lab, _) = fixpointWeighted(e, labels0, maxRounds)
     e.unpersist(false) // lab is checkpoint-backed; the edge pin is dead
-    lab
+    lab.df
   }
 
   /** [[louvainMoveRoundWeighted]] iterated to a fixpoint (or
-    * `maxRounds`) over an already-materialized weighted edge frame —
-    * the [[org.apache.spark.sql.graft.CheckpointOps]] loop discipline:
-    * each round materializes through checkpointDiff (stats CAPPED —
-    * `Dataset.localCheckpoint` carries origin stats forward, and a
-    * per-round join tree over last round's checkpoint compounds
-    * sizeInBytes DOUBLE-exponentially until stats estimation spends
-    * minutes multiplying million-digit BigInts; measured as rounds
-    * 3/4/5 taking 48 s/96 s/8 min on a 12-node graph), the move count
-    * fused into the same pass (no second convergence-probe job), the
-    * previous round's blocks released the moment the next lands.
+    * `maxRounds`) over an already-materialized weighted edge frame on
+    * the [[Rounds]] driver: each round materializes with measured stats
+    * and the move count fused into the same pass as a [[Track.Diff]]
+    * (no second convergence-probe job), the previous round's blocks
+    * released the moment the next lands.
     *
     * MOVE GATING: round r applies only the moves of nodes with
     * md5(node:r) % 2 == 0 — the distributed-Louvain coloring trick
@@ -1203,13 +1155,12 @@ object PageRank {
     * replays of further rounds are provable no-ops. Deterministic end
     * to end (seeded md5), oracle-replayable round by round.
     *
-    * @return (labels, blocks-handle, settled) — settled means the last
-    *         round had zero PENDING moves (a real fixpoint), not just
-    *         the round budget running out */
+    * @return (labels, settled) — settled means the last round had zero
+    *         PENDING moves (a real fixpoint), not just the round budget
+    *         running out */
   private def fixpointWeighted(e: DataFrame, labels0: DataFrame,
-      maxRounds: Int): (DataFrame, RDD[InternalRow], Boolean) = {
-    var (lab, labRdd) = CheckpointOps.checkpoint(
-      labels0.select(col("node"), col("label")))
+      maxRounds: Int): (Materialized, Boolean) = {
+    val lab0 = materialize(labels0.select(col("node"), col("label")))
     // round-invariant inputs computed ONCE: the per-node weighted
     // degree (pinned) and the Σw scalar (collected — 1 double), where
     // before every round's plan re-paid an edge-sized aggregation AND
@@ -1221,33 +1172,27 @@ object PageRank {
     // entering rounds whose ΔQ would divide by zero.
     val m2v = e.agg(coalesce(sum(col("w")), lit(0L)).cast("double"))
       .head().getDouble(0)
-    if (m2v == 0.0) return (lab, labRdd, true)
+    if (m2v == 0.0) return (lab0, true)
     val deg = CacheScope.pin(
       e.groupBy(col("src").as("node")).agg(sum(col("w")).as("ki")))
-    var rounds = 0
-    var pending = 1L
-    while (rounds < maxRounds && pending > 0) {
-      val r = rounds + 1
+    val lab = Rounds.iterate(lab0, maxRounds, (_, n) => n.tracked == 0) {
+        (cur, r) =>
       val gate = pmod(Dedup.md5Hash32(
         concat(col("node").cast("string"), lit(s":$r")), lit(0)),
         lit(2L)) === 0
       // columns (node, old_label, want, new_label): the 1-vs-2 diff
       // counts nodes that WANT to move (pre-gate), accumulated during
       // the same materialization pass — zero proves the fixpoint
-      val (step, stepRdd, diff) = CheckpointOps.checkpointDiff(
-        louvainMoveCore(e, lab, deg, m2v)
+      materialize(
+        louvainMoveCore(e, cur.df, deg, m2v)
           .select(col("node"), col("old_label"),
             col("new_label").as("want"),
             when(gate, col("new_label")).otherwise(col("old_label"))
-              .as("new_label")), 1, 2)
-      pending = diff
-      lab = step.select(col("node"), col("new_label").as("label"))
-      labRdd.unpersist(false)
-      labRdd = stepRdd
-      rounds += 1
+              .as("new_label")), track = Track.Diff(1, 2))
+        .map(_.select(col("node"), col("new_label").as("label")))
     }
     deg.unpersist(false)
-    (lab, labRdd, pending == 0)
+    (lab, lab.tracked == 0)
   }
 
   /** Community contraction (Blondel phase 2): collapse each community
@@ -1302,55 +1247,54 @@ object PageRank {
                            maxLevels: Int = 3): DataFrame = {
     require(maxRounds >= 1 && maxLevels >= 1,
       "maxRounds and maxLevels must be >= 1")
-    var (g, gRdd) = CheckpointOps.checkpoint(
-      edges.select(col("src"), col("dst"), col("w")))
-    var mapping: DataFrame = null // original node -> current community
-    var mapRdd: RDD[InternalRow] = null
-    var curLabels = labels0.select(col("node"), col("label"))
-    // a level's fix frame is still lazily referenced by the NEXT
-    // level's start labels, so its blocks are released one level late —
-    // after fixpointWeighted has eagerly checkpointed those labels
-    // (its first action)
-    var pendingFixRdd: RDD[InternalRow] = null
-    var level = 0
-    var done = false
-    while (level < maxLevels && !done) {
-      val (fix, fixRdd, settled) =
-        fixpointWeighted(g, curLabels, maxRounds)
-      if (pendingFixRdd != null) pendingFixRdd.unpersist(false)
-      val (newMapping, newMapRdd) = CheckpointOps.checkpoint(
-        if (mapping == null) fix
-        else mapping.select(col("node"), col("label").as("sn"))
-          .join(fix.select(col("node").as("sn"), col("label")), "sn")
-          .select(col("node"), col("label")))
-      if (mapRdd != null) mapRdd.unpersist(false)
-      mapping = newMapping
-      mapRdd = newMapRdd
-      // one job for both convergence counts, not two
-      val cnt = fix.agg(count(lit(1)), countDistinct(col("label")))
-        .head()
-      val nNodes = cnt.getLong(0)
-      val nSuper = cnt.getLong(1)
-      // provable no-op state only: a level that stopped on its round
-      // BUDGET (moves pending) or that merged nodes must still contract
-      // and recurse, or the result would depend on the budget in a way
-      // the unrolled oracle can't see
-      done = settled && nSuper == nNodes
-      if (!done && level + 1 < maxLevels) {
-        // eager: reads g + fix now
-        val (g2, g2Rdd) = CheckpointOps.checkpoint(contract(g, fix))
-        gRdd.unpersist(false)
-        g = g2
-        gRdd = g2Rdd
-        curLabels = fix.select(col("label")).distinct()
-          .select(col("label").as("node"), col("label"))
+    Rounds.owning { pinned =>
+      var g = pinned.add(materialize(
+        edges.select(col("src"), col("dst"), col("w"))))
+      var mapping: Materialized = null // original node -> current community
+      var curLabels = labels0.select(col("node"), col("label"))
+      // a level's fix frame is still lazily referenced by the NEXT
+      // level's start labels, so its blocks are released one level late —
+      // after fixpointWeighted has eagerly checkpointed those labels
+      // (its first action)
+      var pendingFix: Materialized = null
+      var level = 0
+      var done = false
+      while (level < maxLevels && !done) {
+        val (fixM, settled) = fixpointWeighted(g.df, curLabels, maxRounds)
+        val fix = pinned.add(fixM).df
+        if (pendingFix != null) pinned.release(pendingFix)
+        val newMapping = pinned.add(materialize(
+          if (mapping == null) fix
+          else mapping.df.select(col("node"), col("label").as("sn"))
+            .join(fix.select(col("node").as("sn"), col("label")), "sn")
+            .select(col("node"), col("label"))))
+        if (mapping != null) pinned.release(mapping)
+        mapping = newMapping
+        // one job for both convergence counts, not two
+        val cnt = fix.agg(count(lit(1)), countDistinct(col("label")))
+          .head()
+        val nNodes = cnt.getLong(0)
+        val nSuper = cnt.getLong(1)
+        // provable no-op state only: a level that stopped on its round
+        // BUDGET (moves pending) or that merged nodes must still contract
+        // and recurse, or the result would depend on the budget in a way
+        // the unrolled oracle can't see
+        done = settled && nSuper == nNodes
+        if (!done && level + 1 < maxLevels) {
+          // eager: reads g + fix now
+          val g2 = pinned.add(materialize(contract(g.df, fix)))
+          pinned.release(g)
+          g = g2
+          curLabels = fix.select(col("label")).distinct()
+            .select(col("label").as("node"), col("label"))
+        }
+        pendingFix = fixM
+        level += 1
       }
-      pendingFixRdd = fixRdd
-      level += 1
+      if (pendingFix != null) pinned.release(pendingFix)
+      pinned.release(g)
+      mapping.df
     }
-    if (pendingFixRdd != null) pendingFixRdd.unpersist(false)
-    gRdd.unpersist(false)
-    mapping
   }
 
   /** k-CORE: the maximal subgraph where every node keeps >= k
@@ -1360,10 +1304,10 @@ object PageRank {
     * node whose degree WITHIN the current survivor set is < k,
     * repeat; a round that drops nothing is the fixpoint, so the
     * unrolled-CTE oracle's extra rounds replay as no-ops (the
-    * louvainMulti replayability contract). Rounds materialize through
-    * [[org.apache.spark.sql.graft.CheckpointOps]] (capped stats, one
-    * job per round); per-round frames are node-sized, the degree count
-    * is one edge-sized keyed aggregation.
+    * louvainMulti replayability contract). Rounds run on the [[Rounds]]
+    * driver, one materializing job per round whose row count is the
+    * survivor count (no separate count job); per-round frames are
+    * node-sized, the degree count is one edge-sized keyed aggregation.
     *
     * @param edges bidirectional (src, dst) — both directions present,
     *              the [[modularity]] convention
@@ -1377,37 +1321,28 @@ object PageRank {
   def kCore(edges: DataFrame, k: Int, maxRounds: Int = 20): DataFrame = {
     require(k >= 1 && maxRounds >= 1, "k and maxRounds must be >= 1")
     val e = CacheScope.pin(edges.select(col("src"), col("dst")))
-    var (nodes, nodesRdd) = CheckpointOps.checkpoint(
-      e.select(col("src").as("node")).distinct())
-    var before = nodes.count()
-    var rounds = 0
-    var dropped = 1L
-    while (rounds < maxRounds && dropped > 0 && before > 0) {
+    val start = materialize(e.select(col("src").as("node")).distinct())
+    // a round that drops nothing (or empties the set) is the fixpoint
+    val nodes = Rounds.iterate(start, if (start.rows > 0) maxRounds else 0,
+        (prev, next) => next.rows == prev.rows || next.rows == 0) {
+        (cur, _) =>
       val deg = e
-        .join(nodes.select(col("node").as("src")), "src")
-        .join(nodes.select(col("node").as("dst")), "dst")
+        .join(cur.df.select(col("node").as("src")), "src")
+        .join(cur.df.select(col("node").as("dst")), "dst")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      val (next, nextRdd) = CheckpointOps.checkpoint(
-        deg.where(col("d") >= k).select(col("node")))
-      val after = next.count()
-      dropped = before - after
-      before = after
-      nodesRdd.unpersist(false)
-      nodes = next
-      nodesRdd = nextRdd
-      rounds += 1
+      materialize(deg.where(col("d") >= k).select(col("node")))
     }
     // within-core degrees over the FINAL set (== the last round's deg
     // only at a true fixpoint, so recompute); checkpointed so the
     // returned frame owns its blocks and the pins below can release
-    val (out, _) = CheckpointOps.checkpoint(e
-      .join(nodes.select(col("node").as("src")), "src")
-      .join(nodes.select(col("node").as("dst")), "dst")
+    val out = materialize(e
+      .join(nodes.df.select(col("node").as("src")), "src")
+      .join(nodes.df.select(col("node").as("dst")), "dst")
       .groupBy(col("src").as("node"))
       .agg(count(lit(1)).cast("long").as("core_deg")))
-    nodesRdd.unpersist(false)
+    nodes.release()
     e.unpersist(false)
-    out
+    out.df
   }
 
   /** DETERMINISTIC truncated random walks — the DeepWalk/node2vec
@@ -1433,41 +1368,37 @@ object PageRank {
     // edge frame materialized once — the neighbor index AND the walk
     // seed both read it (an un-materialized spatial-join edge plan
     // would execute twice); freed with the index once the steps land
-    val (e, eRdd) = CheckpointOps.checkpoint(
-      edges.select(col("src"), col("dst")))
-    val w = Window.partitionBy("src").orderBy("dst")
-    val nbr = CacheScope.pin(e
-      .withColumn("rn", row_number().over(w) - 1)
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src"))))
-    var (cur, _) = CheckpointOps.checkpoint(
-      e.select(col("src").as("node")).distinct()
-        .withColumn("walk",
-          explode(sequence(lit(0), lit(walksPerNode - 1))))
-        .select(col("node"), col("walk"), lit(0).as("step"),
-          col("node").as("visited")))
-    val outs = scala.collection.mutable.ListBuffer(cur)
-    var s = 1
-    while (s <= length) {
-      val pick = pmod(Dedup.md5Hash32(
-        concat(col("node").cast("string"), lit(":"),
-          col("walk").cast("string"), lit(":"), lit(s.toString)),
-        lit(seed)), col("deg"))
-      val (next, _) = CheckpointOps.checkpoint(cur
-        .select(col("node"), col("walk"), col("visited").as("src"))
-        .join(nbr, "src")
-        .where(col("rn") === pick)
-        .select(col("node"), col("walk"), lit(s).as("step"),
-          col("dst").as("visited")))
-      outs += next
-      // every step frame is PART of the output, so its blocks stay
-      // alive; the caller owns them all (blanket-clear or CacheScope
-      // releases them per the loop convention)
-      cur = next
-      s += 1
+    // every step frame is PART of the output, so its blocks stay alive
+    // on success; the caller owns them (blanket-clear or CacheScope
+    // releases them per the loop convention)
+    Rounds.owning { pinned =>
+      val eM = pinned.add(materialize(edges.select(col("src"), col("dst"))))
+      val e = eM.df
+      val w = Window.partitionBy("src").orderBy("dst")
+      val nbr = CacheScope.pin(e
+        .withColumn("rn", row_number().over(w) - 1)
+        .withColumn("deg", count(lit(1)).over(Window.partitionBy("src"))))
+      val steps = (1 to length).scanLeft(pinned.add(materialize(
+        e.select(col("src").as("node")).distinct()
+          .withColumn("walk",
+            explode(sequence(lit(0), lit(walksPerNode - 1))))
+          .select(col("node"), col("walk"), lit(0).as("step"),
+            col("node").as("visited"))))) { (cur, s) =>
+        val pick = pmod(Dedup.md5Hash32(
+          concat(col("node").cast("string"), lit(":"),
+            col("walk").cast("string"), lit(":"), lit(s.toString)),
+          lit(seed)), col("deg"))
+        pinned.add(materialize(cur.df
+          .select(col("node"), col("walk"), col("visited").as("src"))
+          .join(nbr, "src")
+          .where(col("rn") === pick)
+          .select(col("node"), col("walk"), lit(s).as("step"),
+            col("dst").as("visited"))))
+      }
+      nbr.unpersist(false)
+      pinned.release(eM)
+      steps.map(_.df).reduce(_ unionByName _)
     }
-    nbr.unpersist(false)
-    eRdd.unpersist(false)
-    outs.reduce(_ unionByName _)
   }
 
   /** FULL coreness decomposition — every node's maximal k such that it
@@ -1489,7 +1420,7 @@ object PageRank {
   def coreness(edges: DataFrame, maxRounds: Int = 30): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be >= 1")
     val e = CacheScope.pin(edges.select(col("src"), col("dst")))
-    var (core, coreRdd) = CheckpointOps.checkpoint(
+    val start = materialize(
       e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).cast("long").as("core")))
     // one H-index round as a PLAN over the current estimate — kept
@@ -1506,22 +1437,20 @@ object PageRank {
         .groupBy("node")
         .agg(max(least(col("nc"), col("rn"))).cast("long").as("core"))
     }
-    var rounds = 0
-    var changed = 1L
-    while (rounds < maxRounds && changed > 0) {
-      val steps = math.min(2, maxRounds - rounds)
-      val hx = (1 to steps).foldLeft(core)((cur, _) => hRound(cur))
+    // materialization i covers H-index rounds 2i−1 and 2i (one when
+    // maxRounds is odd and i is the last)
+    val core = Rounds.iterate(start, (maxRounds + 1) / 2,
+        (_, n) => n.tracked == 0) { (cur, i) =>
+      val steps = math.min(2, maxRounds - 2 * (i - 1))
+      val hx = (1 to steps).foldLeft(cur.df)((c, _) => hRound(c))
       // (node, old, new): the fused diff counts changed nodes
-      val (step, stepRdd, diff) = CheckpointOps.checkpointDiff(
-        core.join(hx.select(col("node"), col("core").as("h")), "node")
-          .select(col("node"), col("core"), col("h")), 1, 2)
-      changed = diff
-      core = step.select(col("node"), col("h").as("core"))
-      coreRdd.unpersist(false)
-      coreRdd = stepRdd
-      rounds += steps
+      materialize(
+        cur.df.join(hx.select(col("node"), col("core").as("h")), "node")
+          .select(col("node"), col("core"), col("h")),
+        track = Track.Diff(1, 2))
+        .map(_.select(col("node"), col("h").as("core")))
     }
     e.unpersist(false)
-    core
+    core.df
   }
 }

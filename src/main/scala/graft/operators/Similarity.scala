@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.materialize
 
 /** Approximate & exact nearest-neighbor search over embedding columns
   * (`array<float>`/`array<double>`).
@@ -16,9 +16,9 @@ import org.apache.spark.sql.graft.CheckpointOps
   */
 object Similarity {
 
-  /** JIT-compiled cosine kernel: sequential double folds, identical to the
-    * expression form below (higher-order functions are interpreted per
-    * element, so the hot paths use this JVM loop instead). */
+  /** JIT-compiled cosine kernel: sequential double folds (higher-order
+    * array functions are interpreted per element, so the hot paths use
+    * this JVM loop instead). */
   def cosineKernel(a: Seq[Float], b: Seq[Float]): Double = {
     var dot = 0.0
     var na = 0.0
@@ -43,15 +43,6 @@ object Similarity {
     * [[cosineKernel]] by construction (spec'd). */
   def cosineCol(a: Column, b: Column): Column =
     graft.plans.VectorExpressions.cosineSim(a, b)
-
-  /** Pure-expression cosine (kept for non-float inputs / reference). */
-  def cosineExprCol(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-    val na = sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-    val nb = sqrt(aggregate(b, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-    when(na === 0 || nb === 0, 0.0).otherwise(dot / (na * nb))
-  }
 
   /** Per-query top-k over a scored candidate frame WITHOUT a window sort:
     * `PARTITION BY q_id ORDER BY score ... ROW_NUMBER() <= k` funnels a
@@ -121,7 +112,7 @@ object Similarity {
     * Scale shape: lists are nk rows; the undirected list graph is
     * ≤ 2nk edges with per-node out-degree ≤ 2k, so one round's
     * candidate join emits ≤ 4nk² pairs — linear in n at fixed k —
-    * and every round materializes through CheckpointOps (capped
+    * and every round materializes on the [[Rounds]] driver (measured
     * stats). Rounds are synchronized and deterministic, so an
     * unrolled-CTE oracle replays them exactly.
     *
@@ -147,15 +138,15 @@ object Similarity {
     val b = CacheScope.pin(
       srpBucketed(emb, idCol, vecCol, numPlanes, tables)
         .select(col("table"), col("bucket"), col("id")))
-    var (lists, listsRdd) = CheckpointOps.checkpoint(scoreAndKeep(
+    val start = materialize(scoreAndKeep(
       b.select(col("table"), col("bucket"), col("id").as("q_id"))
         .join(b.select(col("table"), col("bucket"),
           col("id").as("c_id")), Seq("table", "bucket"))
         .where(col("q_id") =!= col("c_id"))
         .select("q_id", "c_id").distinct()))
     b.unpersist(false)
-    var r = 0
-    while (r < rounds) {
+    val last = Rounds.iterate(start, rounds) { (cur, _) =>
+      val lists = cur.df
       // k-capped reverse lists keep hub in-degrees from exploding the
       // local join (the paper's reverse-sampling, made deterministic)
       val rev = topKPerQuery(lists.select(col("c_id").as("q_id"),
@@ -173,15 +164,12 @@ object Similarity {
         .select(col("a").as("q_id"), col("c").as("c_id"))
         .unionByName(lists.select("q_id", "c_id"))
         .distinct()
-      val (next, nextRdd) = CheckpointOps.checkpoint(scoreAndKeep(cand))
+      val next = materialize(scoreAndKeep(cand))
       und.unpersist(false)
-      listsRdd.unpersist(false)
-      lists = next
-      listsRdd = nextRdd
-      r += 1
+      next
     }
     v.unpersist(false)
-    lists.select(col("q_id").as("id"), col("c_id").as("nbr_id"),
+    last.df.select(col("q_id").as("id"), col("c_id").as("nbr_id"),
       (floor(col("cosine") * 1e6 + 0.5) / 1e6).as("cosine"), col("rank"))
   }
 
@@ -342,33 +330,19 @@ object Similarity {
           col("cosine"), col("rank"), lit("updated").as("kind")))
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane p, dim d):
-    * md5-derived value mapped to {-1, +1} — engine-agnostic, so the oracle
-    * can reproduce the exact bucketing. */
-  private def planeSign(p: Column, d: Column): Column =
-    when(pmod(Dedup.md5Hash32(d.cast("string"), p), lit(2L)) === 0, lit(1.0))
-      .otherwise(lit(-1.0))
-
-  /** Sign-random-projection (SimHash-for-vectors) bucket key over
-    * `numPlanes` hyperplanes with +-1 coefficients. */
-  def srpBucket(vec: Column, numPlanes: Int): Column =
-    aggregate(sequence(lit(0), lit(numPlanes - 1)), lit(0L), (acc, p) => {
-      val dotSign = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, d) => x.cast("double") * planeSign(p, d)),
-        lit(0.0), (a2, v) => a2 + v)
-      acc + when(dotSign > 0, pow(lit(2.0), p).cast("long")).otherwise(0L)
-    })
-
-  /** Memoized JIT form of planeSign: the +-1 coefficient depends only on
-    * (planeId, dim), so the md5 is computed once per pair process-wide. */
   private val signCache = new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Double]()
+
+  /** Deterministic pseudo-random hyperplane component for (plane p, dim d):
+    * md5(d) seeded by p, mapped to {-1, +1} — engine-agnostic, so the
+    * oracle can reproduce the exact bucketing. Memoized: the coefficient
+    * depends only on (planeId, dim), so the md5 is computed once per pair
+    * process-wide. */
   def planeSignKernel(planeId: Int, d: Int): Double =
     signCache.computeIfAbsent((planeId.toLong << 32) | d.toLong,
       _ => if (Dedup.md5Hash32Kernel(d.toString, planeId) % 2 == 0) 1.0 else -1.0)
 
-  /** All tables' SRP buckets for one vector — identical math to the
-    * expression form (sequential double dot, acc = t*2^40 + sum 2^p). */
+  /** All tables' SRP buckets for one vector (sequential double dot,
+    * acc = t*2^40 + sum 2^p). */
   def srpBucketsKernel(vec: Seq[Float], numPlanes: Int, tables: Int): Seq[Long] =
     (0 until tables).map { t =>
       var acc = t.toLong * (1L << 40)

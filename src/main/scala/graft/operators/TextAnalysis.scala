@@ -382,10 +382,6 @@ object TextAnalysis {
     * standard intra-doc repetition signal. 0 for empty text. */
   def topTokenFrac(c: Column): Column = repetitionUdf(c).getField("_2")
 
-  /** Both repetition signals from ONE kernel evaluation (use this in
-    * pipelines so the tokenization isn't repeated per signal). */
-  def repetitionSignals(c: Column): Column = repetitionUdf(c)
-
   /** PII patterns a training-data pipeline scrubs before the corpus ships:
     * emails, URLs, international-format phone runs, IPv4 literals. Plain
     * character-class regexes (no lookaround) so Java regex and RE2 agree

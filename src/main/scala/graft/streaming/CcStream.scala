@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.materialize
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.ConnectedComponents
@@ -99,18 +99,16 @@ object CcStream {
         // executing newAlias after the base append would derive the
         // alias from a base the merge never saw, an invariant otherwise
         // held only by coalesce ordering
-        val (insertsSnap, insertsRdd) =
-          CheckpointOps.checkpointTruncated(parts.inserts)
-        pinned :+= insertsRdd
-        val (aliasSnap, aliasRdd, aliasRows) =
-          CheckpointOps.checkpointCountTruncated(parts.newAlias)
-        pinned :+= aliasRdd
+        val insertsSnap = materialize(parts.inserts, truncate = true)
+        pinned :+= insertsSnap
+        val aliasSnap = materialize(parts.newAlias, truncate = true)
+        pinned :+= aliasSnap
         // base append (replay-safe: only previously-unseen nodes insert)
-        insertsSnap.write.mode("append").insertInto(baseTable)
+        insertsSnap.df.write.mode("append").insertInto(baseTable)
         // alias rewrite: model-small
-        aliasSnap.write.mode("overwrite").insertInto(aliasTable)
-        aliasRows
-      } finally pinned.foreach(_.unpersist(false))
+        aliasSnap.df.write.mode("overwrite").insertInto(aliasTable)
+        aliasSnap.rows
+      } finally pinned.foreach(_.release())
     } finally b.unpersist(false)
   }
 

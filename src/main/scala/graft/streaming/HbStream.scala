@@ -1,14 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps.Materialized
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{ConnectedComponents, HbRegStore, HyperBall,
-  HyperBallAdaptive, HyperBallState}
+  HyperBallAdaptive, HyperBallState, Rounds}
 
 /** Streaming HyperBall maintenance against AT-REST standing state —
   * the [[CcStream]] discipline applied to the incremental per-hop
@@ -358,8 +357,7 @@ object HbStream {
       spark: SparkSession, prefix: String, val p: Int,
       pathRoot: String, numBuckets: Int) extends HbRegStore {
     private val cap = ConnectedComponents.MaxPointLookupNodes
-    private val transients =
-      scala.collection.mutable.ArrayBuffer.empty[RDD[InternalRow]]
+    private val transients = new Rounds.Pinned
     private val m = 1 << p
 
     private var topHop = {
@@ -420,18 +418,17 @@ object HbStream {
       probe(regsTable(prefix, 0), "node", keys)
         .select(col("node")).distinct()
 
-    def appendDelta(h: Int, delta: DataFrame,
-                    rdd: RDD[InternalRow]): Unit = {
-      transients += rdd
+    def appendDelta(h: Int, delta: Materialized): Unit = {
+      transients.add(delta)
       val t = regsTable(prefix, h)
       if (spark.catalog.tableExists(t)) {
-        delta.write.mode("append").insertInto(t)
+        delta.df.write.mode("append").insertInto(t)
         createdRegs.remove(h)
       } else {
         require(pathRoot != null,
           s"register table $t missing — run HbStream.init first")
-        writeRegsTable(delta, t, s"$pathRoot/regs_h$h", numBuckets)
-        createdRegs(h) = delta
+        writeRegsTable(delta.df, t, s"$pathRoot/regs_h$h", numBuckets)
+        createdRegs(h) = delta.df
       }
       if (h > topHop) topHop = h
     }
@@ -463,11 +460,8 @@ object HbStream {
       createdRegs.getOrElse(h,
         HyperBall.maxMergeByNode(spark.table(regsTable(prefix, h)), m))
 
-    def trackTransient(rdd: RDD[InternalRow]): Unit = transients += rdd
+    def trackTransient(t: Materialized): Unit = transients.add(t)
 
-    def close(): Unit = {
-      transients.foreach(_.unpersist(false))
-      transients.clear()
-    }
+    def close(): Unit = transients.releaseAll()
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps.{Materialized, materialize}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
@@ -44,8 +45,7 @@ object KnnGraphStream {
     // previous steps' checkpoint handles: releasable once the NEXT
     // state materializes (each delta's own pin fills during that job,
     // so the output union never re-reads an old state frame)
-    var gRdd: org.apache.spark.rdd.RDD[_] = null
-    var idxRdd: org.apache.spark.rdd.RDD[_] = null
+    var held = Seq.empty[Materialized]
     val outs = batches.zipWithIndex.map { case (b, i) =>
       val delta = Similarity.knnDescentIncremental(g, idx, b, idCol,
         vecCol, k, rounds, numPlanes, tables)
@@ -62,20 +62,15 @@ object KnnGraphStream {
       // checkpointing makes the folded state an RDD-backed leaf, the
       // same thing the streaming path gets for free from its standing
       // TABLES).
-      val (g2, g2Rdd) = org.apache.spark.sql.graft.CheckpointOps
-        .checkpoint(
-          g.join(delta.select(col("id")).distinct(), Seq("id"),
-            "left_anti")
+      val g2 = materialize(
+        g.join(delta.select(col("id")).distinct(), Seq("id"), "left_anti")
           .unionByName(delta.select("id", "nbr_id", "cosine", "rank")))
-      val (idx2, idx2Rdd) = org.apache.spark.sql.graft.CheckpointOps
-        .checkpoint(idx.unionByName(
-          Similarity.srpBucketed(b, idCol, vecCol, numPlanes, tables)))
-      if (gRdd != null) gRdd.unpersist(false)
-      if (idxRdd != null) idxRdd.unpersist(false)
-      g = g2
-      idx = idx2
-      gRdd = g2Rdd
-      idxRdd = idx2Rdd
+      val idx2 = materialize(idx.unionByName(
+        Similarity.srpBucketed(b, idCol, vecCol, numPlanes, tables)))
+      held.foreach(_.release())
+      held = Seq(g2, idx2)
+      g = g2.df
+      idx = idx2.df
       delta.withColumn("batch_id", lit(i.toLong))
     }
     if (outs.isEmpty)

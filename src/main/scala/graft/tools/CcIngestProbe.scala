@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.materialize
 
-import graft.operators.ConnectedComponents
+import graft.operators.{ConnectedComponents, Rounds}
 import graft.streaming.CcStream
 
 /** Scale probe for the standing-CC ingest path (the r15 verdict's weak
@@ -106,24 +106,21 @@ object CcIngestProbe {
       val batches = (0 until 3).map(i => edges.where(k === i).limit(1000))
       if (want("fold")) {
       val t0full = System.nanoTime()
-      val (base0, _) = CheckpointOps.checkpointTruncated(
-        ConnectedComponents.run(initial))
+      val base0 = materialize(ConnectedComponents.run(initial),
+        truncate = true).df
       val tInit = sec(t0full)
       var frames = Vector(base0)
-      var (alias, aliasRdd) = CheckpointOps.checkpointTruncated(
-        base0.select($"component".as("c"), $"component".as("canon"))
-          .where(lit(false)))
-      val stepWalls = batches.zipWithIndex.map { case (b, i) =>
+      val stepWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
+      Rounds.iterate(materialize(
+          base0.select($"component".as("c"), $"component".as("canon"))
+            .where(lit(false)), truncate = true), batches.size) { (alias, i) =>
         val t0 = System.nanoTime()
         val (ins, na) = ConnectedComponents.incrementalMergeParts(
-          frames.reduce(_ unionByName _), alias, b)
-        val (insFlat, _) = CheckpointOps.checkpointTruncated(ins)
-        val (naFlat, naRdd) = CheckpointOps.checkpointTruncated(na)
-        aliasRdd.unpersist(false)
-        frames :+= insFlat
-        alias = naFlat
-        aliasRdd = naRdd
-        sec(t0)
+          frames.reduce(_ unionByName _), alias.df, batches(i - 1))
+        frames :+= materialize(ins, truncate = true).df
+        val next = materialize(na, truncate = true)
+        stepWalls += sec(t0)
+        next
       }
       println(f"[cc-fold-step] $dir init=$tInit%.1fs perBatch=" +
         stepWalls.map(w => f"$w%.2f").mkString("/") + "s")

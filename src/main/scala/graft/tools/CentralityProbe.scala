@@ -2,7 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.materialize
+
+import graft.operators.Rounds
 
 /** Growth probe for the centrality family (exact pair-BFS vs HyperBall
   * sketch): times the registry rows per dir and measures the structural
@@ -52,22 +54,18 @@ object CentralityProbe {
       // pairHopDistances — the earlier lazy union chain re-executed
       // every previous round inside the final count, inflating probe
       // wall and GC pressure at sf1.
-      var (state, stateRdd) = CheckpointOps.checkpoint(
-        bidir.select($"src".as("node")).distinct()
-          .select($"node".as("s"), $"node", lit(0).as("dist")))
-      for (hop <- 1 to 3) {
-        val frontier = state.where($"dist" === (hop - 1))
+      val state = Rounds.iterate(materialize(
+          bidir.select($"src".as("node")).distinct()
+            .select($"node".as("s"), $"node", lit(0).as("dist"))), 3) {
+          (cur, hop) =>
+        val frontier = cur.df.where($"dist" === (hop - 1))
           .select($"s", $"node".as("src"))
         val reached = bidir.join(frontier, "src")
           .select($"s", $"dst".as("node"), lit(hop).as("dist"))
-        val (next, nextRdd) = CheckpointOps.checkpoint(
-          state.union(reached)
-            .groupBy($"s", $"node").agg(min($"dist").as("dist")))
-        stateRdd.unpersist(false)
-        state = next
-        stateRdd = nextRdd
+        materialize(cur.df.union(reached)
+          .groupBy($"s", $"node").agg(min($"dist").as("dist")))
       }
-      val ballMass = state.count()
+      val ballMass = state.rows
       // registry rows run under the DEFAULT budget — at sf1's ball mass
       // the exact legs trip it (by design: the default is anchored to
       // the measured thrash point), which the probe reports as a
@@ -112,7 +110,7 @@ object CentralityProbe {
         val seeds = cust
           .where(pmod(col("c_custkey"), lit(rate)) === 1)
           .select(col("c_custkey").as("node"))
-        val mass = state.where(pmod($"s", lit(rate)) === 1).count()
+        val mass = state.df.where(pmod($"s", lit(rate)) === 1).count()
         val t0 = System.nanoTime()
         // same guard as time(): at a scale where the sampled ball mass
         // crosses the default budget this trips — print the sentinel
@@ -151,7 +149,7 @@ object CentralityProbe {
         f"ballMass=$ballMass regCap=${nNodes * 64} " +
         f"exact=$tExact%.2fs hyperball=$tBall%.2fs " +
         f"hyperballCloseness=$tBallCl%.2fs")
-      stateRdd.unpersist(false)
+      state.release()
       bidir.unpersist()
       spark.sharedState.cacheManager.clearCache()
     }

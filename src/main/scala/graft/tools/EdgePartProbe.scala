@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.materialize
 
 import graft.RegistryCore.{bidirOf, custPoints}
-import graft.operators.HyperBall
+import graft.operators.{HyperBall, Rounds}
 
 /** Round-18 A/B for the r17 "partitioning-aware loop inputs" deferral:
   * in the sort-merge regime (register frame past the broadcast
@@ -60,27 +60,22 @@ object EdgePartProbe {
     def runLoop(tag: String, prep: DataFrame => DataFrame,
                 shape: Boolean): Double = {
       val t0 = System.nanoTime()
-      val (e, eRdd) = CheckpointOps.checkpoint(prep(
-        lattice.select(col("src"), col("dst"))))
+      val eM = materialize(prep(lattice.select(col("src"), col("dst"))))
+      val e = eM.df
       val nodes = e.select(col("src").as("node")).distinct()
-      var (regs, regsRdd) = CheckpointOps.checkpoint(
-        HyperBall.packedInitRegs(nodes, p))
-      for (r <- 1 to 3) {
+      val regs = Rounds.iterate(
+          materialize(HyperBall.packedInitRegs(nodes, p)), 3) { (cur, r) =>
         if (shape && r == 2) {
           // round 2: regs is a checkpointed frame, the steady state
           println(s"[edgepart] $tag round-2 plan: " +
-            planShape(HyperBall.packedPropagateRound(e, regs, m)))
+            planShape(HyperBall.packedPropagateRound(e, cur.df, m)))
         }
-        val (next, nextRdd) = CheckpointOps.checkpoint(
-          HyperBall.packedPropagateRound(e, regs, m))
-        regsRdd.unpersist(false)
-        regs = next
-        regsRdd = nextRdd
+        materialize(HyperBall.packedPropagateRound(e, cur.df, m))
       }
-      HyperBall.packedEstimate(regs, "est", m)
+      HyperBall.packedEstimate(regs.df, "est", m)
         .write.format("noop").mode("overwrite").save()
-      regsRdd.unpersist(false)
-      eRdd.unpersist(false)
+      regs.release()
+      eM.release()
       (System.nanoTime() - t0) / 1e9
     }
 

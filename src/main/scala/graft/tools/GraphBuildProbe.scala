@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.materialize
 
 import graft.RegistryCore.custPoints
 import graft.operators.{HyperBall, SpatialJoins}
@@ -71,11 +71,11 @@ object GraphBuildProbe {
             (round(col("harmonic_est"), 4) + 0.0).as("harmonic_est")))
       }
       timed(s"hb_edges_ckpt rep$r") {
-        val (e, eRdd) = CheckpointOps.checkpoint(bidirExplode)
-        noop(HyperBall.hyperBallPacked(e, maxHops = 3, p = 6)
+        val e = materialize(bidirExplode)
+        noop(HyperBall.hyperBallPacked(e.df, maxHops = 3, p = 6)
           .select(col("node"),
             (round(col("harmonic_est"), 4) + 0.0).as("harmonic_est")))
-        eRdd.unpersist(false)
+        e.release()
       }
     }
     spark.stop()

@@ -60,8 +60,9 @@ object HbAdaptiveSumProbe {
       val e0 = graft.operators.SpatialJoins.gridSelfJoin(
           custPoints(spark, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
         .select(col("a_id").as("src"), col("b_id").as("dst"))
-      val (bidir, bidirRdd) = org.apache.spark.sql.graft.CheckpointOps
-        .checkpointTruncated(bidirOf(e0))
+      val bidirM = org.apache.spark.sql.graft.CheckpointOps
+        .materialize(bidirOf(e0), truncate = true)
+      val bidir = bidirM.df
       val k = pmod(col("src") + col("dst"), lit(3))
       val init = bidir.where(k =!= 0)
       val batches = Seq(
@@ -97,7 +98,7 @@ object HbAdaptiveSumProbe {
       }
       val topHop = store.maxHop
       store.closeAll()
-      bidirRdd.unpersist(false)
+      bidirM.release()
       val total = (System.nanoTime() - t0) / 1e9
       println(f"[hb-adaptive] $mode rep$r TOTAL wall=$total%6.2fs " +
         s"top=$topHop qs=${qs.mkString(",")}")

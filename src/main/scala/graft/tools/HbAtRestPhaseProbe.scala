@@ -48,8 +48,9 @@ object HbAtRestPhaseProbe {
       val e0 = graft.operators.SpatialJoins.gridSelfJoin(
           custPoints(spark, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
         .select(col("a_id").as("src"), col("b_id").as("dst"))
-      val (bidir, bidirRdd) = org.apache.spark.sql.graft.CheckpointOps
-        .checkpointTruncated(bidirOf(e0))
+      val bidirM = org.apache.spark.sql.graft.CheckpointOps
+        .materialize(bidirOf(e0), truncate = true)
+      val bidir = bidirM.df
       val k = pmod(col("src") * 31 + col("dst"), lit(1009))
       val prefix = "graft_hb_probe"
       val root = s"/tmp/graft_bucketed/probe_hb_r$r"
@@ -60,7 +61,7 @@ object HbAtRestPhaseProbe {
       phase("ingest2")(HbStream.ingestBatch(bidir.where(k === 1), prefix))
       phase("nf-read")(HbStream.neighborhoodFunction(spark, prefix)
         .write.format("noop").mode("overwrite").save())
-      bidirRdd.unpersist(false)
+      bidirM.release()
     }
     spark.stop()
   }

@@ -76,14 +76,12 @@ object HbFoldPhaseProbe {
           custPoints(spark, dir), "c_custkey", "lat", "lon", radiusM = 250.0)
         .select(col("a_id").as("src"), col("b_id").as("dst"))
       val bidirLazy = bidirOf(e0)
-      val (bidir, bidirRdd) =
-        if (mode == "ckpt")
-          phase("bidir-ckpt") {
-            val (f, rdd) = org.apache.spark.sql.graft.CheckpointOps
-              .checkpointTruncated(bidirOf(e0))
-            (f, Some(rdd))
-          }
-        else (bidirLazy, None)
+      val bidirM =
+        if (mode == "ckpt") phase("bidir-ckpt")(Some(
+          org.apache.spark.sql.graft.CheckpointOps
+            .materialize(bidirOf(e0), truncate = true)))
+        else None
+      val bidir = bidirM.fold(bidirLazy)(_.df)
       val k = pmod(col("src") + col("dst"), lit(3))
       val init = bidir.where(k =!= 0)
       val b1 = bidir.where(k === 0 && pmod(col("src"), lit(2)) === 0)
@@ -101,7 +99,7 @@ object HbFoldPhaseProbe {
       println(s"[hb-parity] $mode nf=" + nf.orderBy("hop").collect()
         .map(r => s"${r.get(0)}:${r.get(1)}:${r.get(2)}").mkString(","))
       store.closeAll()
-      bidirRdd.foreach(_.unpersist(false))
+      bidirM.foreach(_.release())
     }
     spark.stop()
   }

@@ -2,10 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.materialize
 
 import graft.RegistryCore.{bidirOf, custPoints}
-import graft.operators.{HyperBall, SpatialJoins}
+import graft.operators.{HyperBall, Rounds, SpatialJoins}
 
 /** Round-17 A/B: the HyperBall propagation round's register max-merge as
   * the RegisterMaxMerge UDAF (ObjectHashAggregate, no codegen) vs an
@@ -32,11 +32,11 @@ object RegMergeProbe {
     val p = 6
     val m = 1 << p
 
-    val (e, _) = CheckpointOps.checkpoint(
+    val e = materialize(
       bidirOf(SpatialJoins.gridSelfJoin(
           custPoints(spark, sfDir), "c_custkey", "lat", "lon",
           radiusM = 250.0)
-        .select(col("a_id").as("src"), col("b_id").as("dst"))))
+        .select(col("a_id").as("src"), col("b_id").as("dst")))).df
     val nodes = e.select(col("src").as("node")).distinct()
 
     // column-max variant of HyperBall.packedPropagateRound
@@ -53,19 +53,17 @@ object RegMergeProbe {
           array((0 until m).map(j => col(s"r$j")): _*).as("regs"))
     }
 
-    def runLoop(round: DataFrame => DataFrame): Unit = {
-      var (regs, regsRdd) = CheckpointOps.checkpoint(
-        HyperBall.packedInitRegs(nodes, p))
-      for (_ <- 1 to 3) {
-        val (next, nextRdd) = CheckpointOps.checkpoint(round(regs))
-        regsRdd.unpersist(false)
-        regs = next
-        regsRdd = nextRdd
+    def rounds(round: DataFrame => DataFrame) =
+      Rounds.iterate(materialize(HyperBall.packedInitRegs(nodes, p)), 3) {
+        (cur, _) => materialize(round(cur.df))
       }
+
+    def runLoop(round: DataFrame => DataFrame): Unit = {
+      val regs = rounds(round)
       // consume the last round's estimate so both variants pay it
-      HyperBall.packedEstimate(regs, "est", m)
+      HyperBall.packedEstimate(regs.df, "est", m)
         .write.format("noop").mode("overwrite").save()
-      regsRdd.unpersist(false)
+      regs.release()
     }
 
     def timed(name: String)(body: => Unit): Unit = {
@@ -79,23 +77,9 @@ object RegMergeProbe {
     runLoop(r => HyperBall.packedPropagateRound(e, r, m))
     runLoop(colMaxRound)
     // parity check once: same estimates from both layouts
-    val udafEst = {
-      var (regs, _) =
-        CheckpointOps.checkpoint(HyperBall.packedInitRegs(nodes, p))
-      for (_ <- 1 to 3) {
-        val (n2, _) = CheckpointOps.checkpoint(
-          HyperBall.packedPropagateRound(e, regs, m)); regs = n2
-      }
-      HyperBall.packedEstimate(regs, "est", m)
-    }
-    val colEst = {
-      var (regs, _) =
-        CheckpointOps.checkpoint(HyperBall.packedInitRegs(nodes, p))
-      for (_ <- 1 to 3) {
-        val (n2, _) = CheckpointOps.checkpoint(colMaxRound(regs)); regs = n2
-      }
-      HyperBall.packedEstimate(regs, "est", m)
-    }
+    val udafEst = HyperBall.packedEstimate(
+      rounds(r => HyperBall.packedPropagateRound(e, r, m)).df, "est", m)
+    val colEst = HyperBall.packedEstimate(rounds(colMaxRound).df, "est", m)
     val nDiff = udafEst.join(colEst.withColumnRenamed("est", "est2"), "node")
       .where(col("est") =!= col("est2")).count()
     println(s"PROBE parity diff rows = $nDiff")

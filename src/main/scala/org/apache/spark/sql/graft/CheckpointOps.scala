@@ -15,21 +15,28 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
-/** Manual materialization for iterative dataflows — `localCheckpoint`
-  * with the two pieces `Dataset.localCheckpoint` doesn't give you:
+/** Manual materialization for iterative dataflows: one [[materialize]]
+  * call, `localCheckpoint`-like, with the three pieces
+  * `Dataset.localCheckpoint` doesn't give you:
   *
-  *  1. **A handle on the persisted RDD**, so the caller can `unpersist`
-  *     a round's blocks the moment the next round has materialized.
-  *     `Dataset.localCheckpoint` leaks every round's blocks until driver
-  *     GC + ContextCleaner get around to them; in a long back-to-back
-  *     query run (or a long-lived cluster app) that deferred cleanup
-  *     lands inside LATER queries' run time — measured in round 3 as a
-  *     2-4x inflation of everything benched after the checkpoint-heavy
-  *     queries.
-  *  2. **Fused change-detection**: an accumulator counts rows where two
-  *     columns differ DURING the materialization pass, so an iterative
-  *     fixpoint (connected components) needs one Spark job per round,
-  *     not checkpoint + a second convergence-probe job.
+  *  1. **A handle on the persisted RDD** ([[Materialized.release]]), so
+  *     the caller frees a round's blocks the moment the next round has
+  *     materialized. `Dataset.localCheckpoint` leaks every round's blocks
+  *     until driver GC + ContextCleaner get around to them; in a long
+  *     back-to-back query run (or a long-lived cluster app) that deferred
+  *     cleanup lands inside LATER queries' run time — measured in round 3
+  *     as a 2-4x inflation of everything benched after the
+  *     checkpoint-heavy queries. [[graft.operators.Rounds]] owns the
+  *     hand-off and the release for the round loops.
+  *  2. **The row count** the persisting `rdd.count()` takes anyway, so a
+  *     state-budget guard or a did-anything-change test needs no second
+  *     job.
+  *  3. **Fused tracking** ([[Track]]): an accumulator counts rows where
+  *     two columns differ, or sums a long column, DURING the
+  *     materialization pass, so an iterative fixpoint (connected
+  *     components) needs one Spark job per round, not checkpoint + a
+  *     second convergence-probe job. Updates happen inside the persisting
+  *     count action, so Spark applies each task's update exactly once.
   *
   * The frame carries MEASURED statistics: `rowCount` is the row count
   * the persisting `rdd.count()` just took, and `sizeInBytes` is that
@@ -50,82 +57,77 @@ import org.apache.spark.util.LongAccumulator
   * "huge", so small loop state never broadcasts. A measured leaf needs no
   * cap: it is a Long row count times a fixed row width, never a product
   * of upstream estimates, so each round's stats restart from the truth.
-  *
-  * Unlike `RDD.localCheckpoint`, lineage is NOT truncated — on block loss
-  * (executor death on a real cluster) Spark can still recompute through
-  * the parent chain, at the cost of a driver-side plan chain that grows
-  * O(rounds); bounded in practice by `maxIter`.
   */
 object CheckpointOps {
-  /** Materialize `df` into persisted blocks and return (frame-on-blocks,
-    * rdd-handle, count-of-rows-where-col(aIdx) != col(bIdx)). Pass
-    * aIdx = bIdx to skip the diff (returns 0). Null-safe: null != non-null
-    * counts as a change. */
-  def checkpointDiff(df: DataFrame, aIdx: Int, bIdx: Int)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, diff, _) = materialize(df, aIdx, bIdx, truncate = false)
-    (out, rdd, diff)
+
+  /** What the materializing pass accumulates besides the row count. */
+  sealed trait Track
+  object Track {
+    case object Off extends Track
+    /** Rows where column `a` != column `b`. Null-safe: null != non-null
+      * counts as a change. */
+    final case class Diff(a: Int, b: Int) extends Track {
+      require(a != b, "a diff needs two distinct columns")
+    }
+    /** Sum of the long column `col`; null sums as 0. */
+    final case class Sum(col: Int) extends Track
   }
 
-  /** [[checkpointTruncated]] that ALSO sums a long column during the
-    * materialization pass (the [[checkpointDiff]] accumulator
-    * discipline: updates happen inside the persisting count action, so
-    * Spark applies each task's update exactly once). An iterative loop
-    * that needs a global scalar per round (the adaptive-HyperBall
-    * quantized ball-sum) gets it without a second full scan of the
-    * frame it just wrote — at corpus scale that second scan is a full
-    * register-table pass per hop. Null sums as 0. */
-  def checkpointSum(df: DataFrame, sumIdx: Int)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, s, _) =
-      materialize(df, 0, 0, truncate = false, sumIdx = sumIdx)
-    (out, rdd, s)
+  /** A materialized frame: `df` reads the persisted `rdd`, which held
+    * `rows` rows when it landed; `tracked` is the [[Track]] result (0
+    * under [[Track.Off]]). [[release]] frees the blocks. */
+  final case class Materialized(df: DataFrame, rdd: RDD[InternalRow],
+                                rows: Long, tracked: Long) {
+    def release(): Unit = rdd.unpersist(false)
+    /** The same blocks behind a derived frame (a projection of `df`). */
+    def map(f: DataFrame => DataFrame): Materialized = copy(df = f(df))
   }
 
-  /** [[checkpointSum]] with lineage truncation (see
-    * [[checkpointTruncated]]). */
-  def checkpointSumTruncated(df: DataFrame, sumIdx: Int)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, s, _) =
-      materialize(df, 0, 0, truncate = true, sumIdx = sumIdx)
-    (out, rdd, s)
-  }
-
-  /** [[checkpointSumTruncated]] that ALSO surfaces the materialized row
-    * count (free — the persisting `rdd.count()` already ran): an
-    * iterative fold that needs both a did-anything-change count and a
-    * global scalar per round (the incremental adaptive-HyperBall
-    * ball-sum deltas) gets them from the ONE materializing pass. */
-  def checkpointCountSumTruncated(df: DataFrame, sumIdx: Int)
-      : (DataFrame, RDD[InternalRow], Long, Long) = {
-    val (out, rdd, s, n) =
-      materialize(df, 0, 0, truncate = true, sumIdx = sumIdx)
-    (out, rdd, n, s)
-  }
-
-  private def materialize(df: DataFrame, aIdx: Int, bIdx: Int,
-                          truncate: Boolean, sumIdx: Int = -1)
-      : (DataFrame, RDD[InternalRow], Long, Long) = {
+  /** Materialize `df` into persisted blocks (MEMORY_AND_DISK).
+    *
+    * @param truncate cut the lineage (`RDD.localCheckpoint` before the
+    *        materializing count). Kept lineage is right for FIXED-round
+    *        loops (3-5 rounds: recompute-on-block-loss survives, the plan
+    *        chain stays small), but a loop whose round count is
+    *        DATA-DEPENDENT — SCC's flood fills run for the live
+    *        subgraph's diameter — serializes the whole parent RDD chain
+    *        into every task: measured on the 48-node chain spec, task
+    *        binaries grew 2.3 → 5.3 MiB over the run, O(rounds²) total
+    *        serialization. Truncating caps the chain at the previous
+    *        round's materialized blocks. Trade, explicitly: truncated
+    *        state CANNOT be recomputed after executor loss — a long-lived
+    *        cluster deployment should periodically reliable-checkpoint the
+    *        loop state instead (`sparkContext.setCheckpointDir` +
+    *        `RDD.checkpoint`); in this engine the truncated frames are
+    *        round-internal and superseded copies are released only after
+    *        their successor lands. Without truncation, on block loss
+    *        (executor death on a real cluster) Spark recomputes through
+    *        the parent chain, at the cost of a driver-side plan chain that
+    *        grows O(rounds).
+    * @param track what the same pass accumulates into
+    *        [[Materialized.tracked]]; an accumulator is registered (and
+    *        shipped in the task closure) only when one is asked for. */
+  def materialize(df: DataFrame, truncate: Boolean = false,
+                  track: Track = Track.Off): Materialized = {
     val cdf = df.asInstanceOf[classic.Dataset[Row]]
     val spark = cdf.sparkSession
     val qe = cdf.queryExecution
     val output = qe.analyzed.output
-    // an accumulator is registered (and shipped in the task closure) only
-    // by the variants that read one: most calls are plain checkpoints
-    val tracked: Option[(LongAccumulator, InternalRow => Long)] =
-      if (aIdx != bIdx) {
+    val tracked: Option[(LongAccumulator, InternalRow => Long)] = track match {
+      case Track.Off => None
+      case Track.Diff(aIdx, bIdx) =>
         val (aType, bType) = (output(aIdx).dataType, output(bIdx).dataType)
-        Some(spark.sparkContext.longAccumulator("graft.checkpointDiff") -> {
+        Some(spark.sparkContext.longAccumulator("graft.trackDiff") -> {
           (r: InternalRow) =>
             val a = if (r.isNullAt(aIdx)) null else r.get(aIdx, aType)
             val b = if (r.isNullAt(bIdx)) null else r.get(bIdx, bType)
             if (a != b) 1L else 0L
         })
-      } else if (sumIdx >= 0) {
-        Some(spark.sparkContext.longAccumulator("graft.checkpointSum") -> {
+      case Track.Sum(sumIdx) =>
+        Some(spark.sparkContext.longAccumulator("graft.trackSum") -> {
           (r: InternalRow) => if (r.isNullAt(sumIdx)) 0L else r.getLong(sumIdx)
         })
-      } else None
+    }
     val rdd = tracked match {
       case Some((acc, term)) =>
         qe.toRdd.mapPartitions(_.map { r => acc.add(term(r)); r.copy() })
@@ -150,8 +152,8 @@ object CheckpointOps {
     }
     val plan = LogicalRDD(
       output, rdd, declared, Nil, false, None)(spark, Some(measured), None)
-    (classic.Dataset.ofRows(spark, plan), rdd,
-      tracked.fold(0L)(_._1.value), n)
+    Materialized(classic.Dataset.ofRows(spark, plan), rdd, n,
+      tracked.fold(0L)(_._1.value))
   }
 
   /** The materialized frame's physical partitioning, carried onto the
@@ -192,48 +194,5 @@ object CheckpointOps {
       })
       case other => other // non-expression: Unknown/RoundRobin/Single
     }
-  }
-
-  /** [[checkpointDiff]] without the diff. */
-  def checkpoint(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val (out, rdd, _) = checkpointDiff(df, 0, 0)
-    (out, rdd)
-  }
-
-  /** [[checkpoint]] that also returns the materialized ROW COUNT — free
-    * (the persisting `rdd.count()` already ran; this just surfaces its
-    * value), and the hook state-budget guards need: an iterative loop
-    * whose per-round state can blow up (pair-state BFS) checks the
-    * count the moment each round lands, no second job. */
-  def checkpointCount(df: DataFrame): (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, _, n) = materialize(df, 0, 0, truncate = false)
-    (out, rdd, n)
-  }
-
-  /** [[checkpoint]] / [[checkpointCount]] with LINEAGE TRUNCATION
-    * (`RDD.localCheckpoint` before the materializing count). The
-    * kept-lineage default is right for FIXED-round loops (3-5 rounds:
-    * recompute-on-block-loss survives, plan chain stays small), but a
-    * loop whose round count is DATA-DEPENDENT — SCC's flood fills run
-    * for the live subgraph's diameter — serializes the whole parent RDD
-    * chain into every task: measured on the 48-node chain spec, task
-    * binaries grew 2.3 → 5.3 MiB over the run, O(rounds²) total
-    * serialization. Truncating caps the chain at the previous round's
-    * materialized blocks. Trade, explicitly: truncated state CANNOT be
-    * recomputed after executor loss — a long-lived cluster deployment
-    * should periodically reliable-checkpoint the loop state instead
-    * (same knob, `sparkContext.setCheckpointDir` + `RDD.checkpoint`);
-    * in this engine the truncated frames are round-internal and
-    * superseded copies unpersist only after their successor lands. */
-  def checkpointTruncated(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
-    val (out, rdd, _, _) = materialize(df, 0, 0, truncate = true)
-    (out, rdd)
-  }
-
-  /** See [[checkpointTruncated]]. */
-  def checkpointCountTruncated(df: DataFrame)
-      : (DataFrame, RDD[InternalRow], Long) = {
-    val (out, rdd, _, n) = materialize(df, 0, 0, truncate = true)
-    (out, rdd, n)
   }
 }

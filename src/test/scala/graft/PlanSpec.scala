@@ -610,13 +610,14 @@ class PlanSpec extends SparkTestBase {
       withSQLConf("spark.sql.adaptive.enabled" -> "false") {
         for (redistribute <- Seq(false, true)) {
           val round = PageRank.runRound(g,
-            g.nodes.select(col("node"), lit(1.0 / g.n).as("rank"), col("deg")),
+            g.nodes.df.select(col("node"), lit(1.0 / g.n).as("rank"),
+              col("deg")),
             0.85, redistribute)
           round.collect()
           val p = round.queryExecution.executedPlan
           // the subtree between a join and the edge checkpoint's scan
           def edgeLeg(q: SparkPlan): Boolean = q match {
-            case r: RDDScanExec => r.rdd eq g.edgesRdd
+            case r: RDDScanExec => r.rdd eq g.edges.rdd
             case _: BaseJoinExec => false
             case o => o.children.exists(edgeLeg)
           }
@@ -632,8 +633,8 @@ class PlanSpec extends SparkTestBase {
         }
       }
     } finally {
-      g.edgesRdd.unpersist(false)
-      g.nodesRdd.unpersist(false)
+      g.edges.release()
+      g.nodes.release()
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointOps
+import org.apache.spark.sql.graft.CheckpointOps.materialize
 
 import graft.SparkTestBase
 
@@ -27,16 +27,15 @@ class CheckpointPartitioningSpec extends SparkTestBase {
     // big enough that AQE doesn't collapse to a single partition trivially
     val base = spark.range(0, 4000)
       .select((col("id") % 997).as("k"), col("id").as("v"))
-    val (agg, aggRdd) = CheckpointOps.checkpoint(
-      base.groupBy("k").agg(sum("v").as("s")))
+    val agg = materialize(base.groupBy("k").agg(sum("v").as("s")))
     // same-key re-aggregation: the checkpoint's HashPartitioning(k)
     // satisfies the grouping distribution — no Exchange above the scan
-    val re = agg.groupBy("k").agg(max("s").as("m"))
+    val re = agg.df.groupBy("k").agg(max("s").as("m"))
     val rePlan = executedString(re)
     assert(!rePlan.contains("Exchange"),
       s"same-key aggregation re-exchanged a partitioned checkpoint:\n" +
         rePlan.take(2000))
-    aggRdd.unpersist(false)
+    agg.release()
   }
 
   test("checkpointed-join results equal the unpartitioned reference " +
@@ -45,28 +44,26 @@ class CheckpointPartitioningSpec extends SparkTestBase {
       .select((col("id") % 61).as("k"), col("id").as("a"))
     val right = spark.range(0, 3000)
       .select((col("id") % 61).as("k"), (col("id") * 2).as("b"))
-    val (lc, lr) = CheckpointOps.checkpoint(
-      left.groupBy("k").agg(sum("a").as("a")))
-    val (rc, rr) = CheckpointOps.checkpoint(
-      right.groupBy("k").agg(sum("b").as("b")))
-    val joined = lc.join(rc, "k").select($"k", ($"a" + $"b").as("ab"))
+    val lc = materialize(left.groupBy("k").agg(sum("a").as("a")))
+    val rc = materialize(right.groupBy("k").agg(sum("b").as("b")))
+    val joined = lc.df.join(rc.df, "k").select($"k", ($"a" + $"b").as("ab"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val ref = left.groupBy("k").agg(sum("a").as("a"))
       .join(right.groupBy("k").agg(sum("b").as("b")), "k")
       .select($"k", ($"a" + $"b").as("ab"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(joined.sameElements(ref))
-    lr.unpersist(false)
-    rr.unpersist(false)
+    lc.release()
+    rc.release()
   }
 
   test("a frame with no exploitable partitioning still checkpoints and " +
     "computes (fallback path)") {
     val df = spark.range(0, 100).select(col("id"), (col("id") % 7).as("k"))
-    val (c, rdd) = CheckpointOps.checkpoint(df) // range: no hash part.
-    assert(c.count() == 100)
-    assert(c.groupBy("k").count().collect().map(_.getLong(1)).sum == 100)
-    rdd.unpersist(false)
+    val c = materialize(df) // range: no hash part.
+    assert(c.df.count() == 100)
+    assert(c.df.groupBy("k").count().collect().map(_.getLong(1)).sum == 100)
+    c.release()
   }
 
   test("a checkpoint carries its measured row count, so a small frame " +
@@ -79,8 +76,9 @@ class CheckpointPartitioningSpec extends SparkTestBase {
     val l = spark.range(0, 20000).select(col("id").as("k"))
     val r = spark.range(0, 20000).select(col("id").as("k2"),
       (col("id") * 2).as("v"))
-    val (small, smallRdd) = CheckpointOps.checkpoint(
+    val smallM = materialize(
       l.join(r, $"k" === $"k2").where($"k" < 100).select($"k", $"v"))
+    val (small, smallRdd) = (smallM.df, smallM.rdd)
     assert(small.queryExecution.optimizedPlan.stats.rowCount ==
       Some(BigInt(100)))
     withSQLConf("spark.sql.adaptive.enabled" -> "false") {
@@ -98,6 +96,6 @@ class CheckpointPartitioningSpec extends SparkTestBase {
       // keys 0..99 of the checkpoint each meet 1,000 range rows
       assert(joined.count() == 100000L)
     }
-    smallRdd.unpersist(false)
+    smallM.release()
   }
 }
