@@ -72,7 +72,8 @@ object Bench {
     def timed(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame, recordFailure: Boolean): Double = {
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      spark.sparkContext.getPersistentRDDs.values.foreach(
+        org.apache.spark.sql.graft.CheckpointOps.free)
       System.gc()
       val t0 = System.nanoTime()
       try {

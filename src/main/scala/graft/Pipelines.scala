@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.graft.CheckpointOps
+
 import graft.operators.{BpeTrainer, CacheScope, Dedup, LanguageModel, Sampling, TextAnalysis}
 
 /** The library-facing corpus-pipeline composers behind the `pipe_*`
@@ -11,11 +13,13 @@ import graft.operators.{BpeTrainer, CacheScope, Dedup, LanguageModel, Sampling, 
   * `/root/reference/etl/pipeline.py`).
   *
   * Two surfaces per pipeline:
-  *  - `build*` returns the composed frame without running anything (the
-  *    internal checkpoint is lazy); its pinned blocks appear at the
-  *    caller's first action and the CALLER owns their lifetime — the
-  *    registry rows rely on the engine's runners blanket-clearing
-  *    between queries;
+  *  - `build*` returns the composed frame after running ONE small job
+  *    eagerly: the near-duplicate (and, for the training corpus,
+  *    contamination) drop ids, materialised so the final anti join plans
+  *    on their measured size. That job also lands the exact-dedup
+  *    checkpoint; every other stage runs at the caller's first action. The
+  *    CALLER owns the lifetime of all these blocks — the registry rows
+  *    rely on the engine's runners blanket-clearing between queries;
   *  - the apply-style entry (`cleanCorpus(docs)(_.write.parquet(out))`)
   *    runs the build under [[CacheScope.materialized]], so a caller
   *    embedding the pipeline in a long-lived session gets the cleanup
@@ -35,8 +39,7 @@ object Pipelines {
       .withColumn("q", TextAnalysis.qualityScore(col("text")))
       .withColumn("pred_lang", TextAnalysis.langId(col("text")))
       .where(col("q") >= minQuality && col("pred_lang") === lang)
-    val kept = exactDedup(gated)
-    kept.join(lshDrops(kept), Seq("doc_id"), "left_anti")
+    dropNearDups(exactDedup(gated))
       .select(col("doc_id"), col("pred_lang"), col("q"))
   }
 
@@ -61,11 +64,8 @@ object Pipelines {
       .where(col("q") >= minQuality && col("pred_lang") === lang &&
         col("rep") <= maxRepetition)
     val kept = exactDedup(gated)
-    val contaminated = Dedup.ngramContamination(kept, probes,
-        "doc_id", "text", shingleN = 3, minHits = 2)
-      .select("doc_id").distinct()
-    val clean = kept.join(lshDrops(kept), Seq("doc_id"), "left_anti")
-      .join(contaminated, Seq("doc_id"), "left_anti")
+    val clean = dropNearDups(kept, Dedup.ngramContamination(kept, probes,
+        "doc_id", "text", shingleN = 3, minHits = 2).select("doc_id"))
     Sampling.mixBySource(clean, "doc_id", "source", mixWeights, seed)
       .select(col("doc_id"), col("source"), col("pred_lang"), col("q"),
         md5(TextAnalysis.redactPii(col("text"))).as("redacted_md5"))
@@ -90,8 +90,7 @@ object Pipelines {
       .withColumn("q", TextAnalysis.qualityScore(col("text")))
       .withColumn("pred_lang", TextAnalysis.langId(col("text")))
       .where(col("q") >= minQuality && col("pred_lang") === lang)
-    val kept = exactDedup(gated)
-    kept.join(lshDrops(kept), Seq("doc_id"), "left_anti")
+    dropNearDups(exactDedup(gated))
       .select(col("doc_id"), col("source"), col("pred_lang"), col("q"))
   }
 
@@ -115,8 +114,7 @@ object Pipelines {
                     minWords: Int = 50, minStopHits: Int = 2): DataFrame = {
     val lined = Dedup.lineDedup(docs, "doc_id", "text", minLen = minLineLen)
     val gated = gopherGate(lined, minWords, minStopHits)
-    val kept = exactDedup(gated)
-    kept.join(lshDrops(kept), Seq("doc_id"), "left_anti")
+    dropNearDups(exactDedup(gated))
       .select(col("doc_id"), col("n_lines"), col("n_dropped"),
         col("n_words"), md5(col("text")).as("text_md5"))
   }
@@ -152,8 +150,7 @@ object Pipelines {
                           minStopHits: Int = 2): DataFrame = {
     val lined = Dedup.lineDedup(docs, "doc_id", "text", minLen = minLineLen)
     val gated = gopherGate(lined, minWords, minStopHits)
-    val kept = exactDedup(gated)
-    val survivors = kept.join(lshDrops(kept), Seq("doc_id"), "left_anti")
+    val survivors = dropNearDups(exactDedup(gated))
       .select(col("doc_id"), col("text"), col("n_words"))
       .localCheckpoint(eager = false) // feeds the LM train AND score legs
     val scored = LanguageModel.knLogPerplexity(survivors, "doc_id", "text",
@@ -191,8 +188,7 @@ object Pipelines {
       nMerges: Int = 6, seqLen: Int = 512): DataFrame = {
     val lined = Dedup.lineDedup(docs, "doc_id", "text", minLen = minLineLen)
     val gated = gopherGate(lined, minWords, minStopHits)
-    val kept = exactDedup(gated)
-    val survivors = kept.join(lshDrops(kept), Seq("doc_id"), "left_anti")
+    val survivors = dropNearDups(exactDedup(gated))
       .select(col("doc_id"), col("text"), col("n_words"))
       .localCheckpoint(eager = false) // feeds the LM train AND score legs
     val scored = LanguageModel.knLogPerplexity(survivors, "doc_id", "text",
@@ -224,9 +220,8 @@ object Pipelines {
       buildC4Corpus(docs, minLineLen, minWords, minStopHits))(materialize)
 
   /** Exact dedup keeping the smallest doc_id per text digest. The kept
-    * frame feeds BOTH the LSH candidate generation and the final
-    * anti-join, so it checkpoints (LAZILY — building a pipeline never
-    * runs a job; the checkpoint computes at the caller's first action)
+    * frame feeds BOTH the drop-set job and the final anti join, so it
+    * checkpoints (lazily: the drop-set job in [[dropNearDups]] lands it)
     * instead of recomputing the gate expressions per branch. The pinned
     * blocks live until released: the apply-style entries' enclosing
     * [[CacheScope.materialized]] does that per call, the engine's own
@@ -239,9 +234,21 @@ object Pipelines {
       .localCheckpoint(eager = false)
   }
 
-  /** The higher doc_id of every verified MinHash-LSH near-dup pair. */
-  private def lshDrops(kept: DataFrame): DataFrame =
-    Dedup.minHashLSH(kept, "doc_id", "text",
+  /** `kept` minus its near duplicates (the higher doc_id of every
+    * verified MinHash-LSH pair) and minus the `doc_id`s of `moreDrops`.
+    * The drop ids form one frame that [[CheckpointOps.materialize]] runs
+    * eagerly — a small id-only job, which also lands `kept`'s lazy
+    * checkpoint — so the anti join plans on its MEASURED size: Spark's own
+    * `autoBroadcastJoinThreshold` broadcasts a small drop set before any
+    * stage of the join runs and `kept` is never shuffled for it, while a
+    * drop set too big to broadcast still plans a shuffled join (no hint:
+    * the set is unbounded at scale). The drop set's blocks belong to the
+    * caller, like `kept`'s. */
+  private def dropNearDups(kept: DataFrame, moreDrops: DataFrame*): DataFrame = {
+    val near = Dedup.minHashLSH(kept, "doc_id", "text",
         shingleN = 3, bands = 8, rowsPerBand = 2, simThreshold = 0.5)
-      .select(col("b_id").as("doc_id")).distinct()
+      .select(col("b_id").as("doc_id"))
+    val drops = (near +: moreDrops).reduce(_ union _).distinct()
+    kept.join(CheckpointOps.materialize(drops).df, Seq("doc_id"), "left_anti")
+  }
 }

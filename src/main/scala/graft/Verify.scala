@@ -30,7 +30,8 @@ object Verify {
       // and 220 queries of accumulated blocks would squeeze execution
       // memory at the larger scale factors) — the Bench isolation rule
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      spark.sparkContext.getPersistentRDDs.values.foreach(
+        org.apache.spark.sql.graft.CheckpointOps.free)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.CheckpointOps
 
 /** Bookkeeping for operator-pinned cache blocks.
   *
@@ -68,7 +69,7 @@ object CacheScope {
       pins.foreach(_.unpersist(blocking = false)) // CacheManager-aware
       sc.getPersistentRDDs // checkpoint/unregistered leftovers
         .filterNot { case (id, _) => before.contains(id) }
-        .values.foreach(_.unpersist(blocking = false))
+        .values.foreach(CheckpointOps.free)
     }
   }
 }

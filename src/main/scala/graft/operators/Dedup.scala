@@ -86,7 +86,6 @@ object Dedup {
     * transform(tokens(c), t => md5Hash32(t, 0)). */
   def hashedTokensKernel(text: String): Seq[Long] =
     tokensKernel(text).map(t => md5Hash32Kernel(t, 0)).toSeq
-  private val hashedTokensUdf = udf(hashedTokensKernel _)
 
   /** Exact duplicate removal: group identical normalized texts by md5 digest,
     * keep the smallest id. Returns (keep_id, dup_count, digest). */
@@ -112,51 +111,53 @@ object Dedup {
       i => coalesce(array_min(transform(baseHashes,
         h => (h * (i * 2 + 3) + i * lit(12582917L)) % 4294967291L)), lit(0L)))
 
-  /** MinHash + LSH banding: near-duplicate candidate pairs with verified
-    * signature similarity >= simThreshold.
-    *
-    * bands x rowsPerBand = numHashes. Each doc emits one bucket key per band
-    * (md5 of the band's signature slice); docs sharing any bucket become a
-    * candidate pair (deduped), then pairs are verified on full-signature
-    * agreement rate — an unbiased jaccard estimate.
-    *
-    * Output: (a_id, b_id, sig_sim). */
-  /** (id, h1) with h1 = distinct md5-hashed word n-gram shingles,
-    * materialized behind an exchange: without the barrier Catalyst collapses
-    * projections and re-evaluates the whole hash pipeline once per exploded
-    * band row / join output row. */
+  /** (id, h1) with h1 = distinct md5-hashed word n-gram shingles, keyed
+    * by id behind an exchange. Only for a caller that reads the arrays
+    * more than once ([[ngramJaccardPairs]]: the signature, then both
+    * sides of the pair verify): exchange reuse makes those reads share
+    * one shuffle of the arrays instead of re-shingling the text per read.
+    * A single-consumer caller gets its per-document value from a kernel
+    * in a plain projection instead ([[signedDocs]], [[ngramContamination]]),
+    * which shuffles no array at all. */
   def hashedShingleDocs(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int): DataFrame =
     docs.select(col(idCol).as("id"),
         hashedShinglesUdf(col(textCol), lit(shingleN)).as("h1"))
       .repartition(col("id"))
 
-  /** LSH banding over a (id, h1) frame: MinHash signatures, one bucket key
-    * per band (md5 of the band's signature slice). Returns
-    * (id, sig, band, bucket) — candidate pairs are docs sharing any
-    * (band, bucket), always a shuffle equi-join, never all-pairs. */
-  private def lshBanded(hashed: DataFrame, bands: Int,
-                        rowsPerBand: Int): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    // barrier: the signature must be materialized BEFORE the band explode
-    // or it is re-evaluated per band row; the JIT kernel replaces the
-    // interpreted higher-order-function fold
-    val sig = hashed.select(col("id"),
-        minHashSigUdf(col("h1"), lit(numHashes)).as("sig"))
-      .repartition(col("id"))
-    sig.select(col("id"), col("sig"),
+  /** (id, sig): each document's MinHash signature from one
+    * [[shingleSigKernel]] call in a plain projection, so the text is read
+    * once per document and only the fixed-width signature leaves the scan
+    * stage. */
+  private def signedDocs(docs: DataFrame, idCol: String, textCol: String,
+                         shingleN: Int, numHashes: Int): DataFrame =
+    docs.select(col(idCol).as("id"),
+      shingleSigUdf(col(textCol), lit(shingleN), lit(numHashes)).as("sig"))
+
+  /** LSH banding over an (id, sig) frame: one bucket key per band (md5 of
+    * the band's signature slice). Returns (id, sig, band, bucket) —
+    * candidate pairs are docs sharing any (band, bucket), always a
+    * shuffle equi-join, never all-pairs. The band explode is a Generate
+    * over the signature projection, which Catalyst never collapses into
+    * it, so the signature is computed once per document, not once per
+    * band row. */
+  private def lshBanded(signed: DataFrame, bands: Int,
+                        rowsPerBand: Int): DataFrame =
+    signed.select(col("id"), col("sig"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
         b => md5(concat_ws("_",
           concat(array(b.cast("string")),
             transform(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
               x => x.cast("string"))))))))
       .withColumnRenamed("col", "bucket").withColumnRenamed("pos", "band")
-  }
 
-  /** Distinct candidate pairs (a_id, b_id, a_sig, b_sig) from LSH banding. */
-  private def lshCandidates(hashed: DataFrame, bands: Int,
+  /** Candidate pair rows (a_id, b_id, a_sig, b_sig), a_id < b_id, from LSH
+    * banding of an (id, sig) frame: one row per shared (band, bucket), so
+    * a pair repeats once per band it shares. Callers verify first and
+    * dedup what they keep, so the dedup shuffles only surviving pairs. */
+  private def lshCandidates(signed: DataFrame, bands: Int,
                             rowsPerBand: Int): DataFrame = {
-    val banded = lshBanded(hashed, bands, rowsPerBand)
+    val banded = lshBanded(signed, bands, rowsPerBand)
     val a = banded.select(col("band"), col("bucket"),
       col("id").as("a_id"), col("sig").as("a_sig"))
     val b = banded.select(col("band"), col("bucket"),
@@ -164,7 +165,6 @@ object Dedup {
     a.join(b, Seq("band", "bucket"))
       .where(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"), col("a_sig"), col("b_sig"))
-      .dropDuplicates("a_id", "b_id")
   }
 
   /** Public candidate generator: distinct LSH candidate id pairs
@@ -179,9 +179,10 @@ object Dedup {
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, bands: Int = 8,
                         rowsPerBand: Int = 2): DataFrame =
-    lshCandidates(hashedShingleDocs(docs, idCol, textCol, shingleN),
+    lshCandidates(
+      signedDocs(docs, idCol, textCol, shingleN, bands * rowsPerBand),
       bands, rowsPerBand)
-      .select(col("a_id"), col("b_id"))
+      .select(col("a_id"), col("b_id")).distinct()
 
   /** Persistable LSH index of a corpus: (id, sig, band, bucket). Write it
     * once (e.g. parquet partitioned/bucketed by `bucket`) and append
@@ -192,7 +193,7 @@ object Dedup {
   def minHashIndex(docs: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, bands: Int = 8,
                    rowsPerBand: Int = 2): DataFrame =
-    lshBanded(hashedShingleDocs(docs, idCol, textCol, shingleN),
+    lshBanded(signedDocs(docs, idCol, textCol, shingleN, bands * rowsPerBand),
       bands, rowsPerBand)
 
   /** Persist a [[minHashIndex]] bucketed (and sorted) by its probe keys
@@ -289,17 +290,29 @@ object Dedup {
     (flags, repBanded)
   }
 
+  /** MinHash + LSH banding: near-duplicate candidate pairs with verified
+    * signature similarity >= simThreshold.
+    *
+    * bands x rowsPerBand = numHashes. Each doc emits one bucket key per band
+    * (md5 of the band's signature slice); docs sharing any bucket become a
+    * candidate pair (deduped), then pairs are verified on full-signature
+    * agreement rate — an unbiased jaccard estimate. The only exchanges
+    * are the bucket self-join's (reused by both sides) and the dedup of
+    * verified (id, id, sig_sim) rows; none carries text or shingles.
+    *
+    * Output: (a_id, b_id, sig_sim). */
   def minHashLSH(docs: DataFrame, idCol: String, textCol: String,
                  shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 2,
                  simThreshold: Double = 0.5): DataFrame = {
     val numHashes = bands * rowsPerBand
     val pairs = lshCandidates(
-      hashedShingleDocs(docs, idCol, textCol, shingleN), bands, rowsPerBand)
+      signedDocs(docs, idCol, textCol, shingleN, numHashes), bands, rowsPerBand)
     pairs.withColumn("sig_sim",
         size(filter(zip_with(col("a_sig"), col("b_sig"), (x, y) => x === y),
           e => e)).cast("double") / numHashes)
       .where(col("sig_sim") >= simThreshold)
       .select(col("a_id"), col("b_id"), col("sig_sim"))
+      .distinct()
   }
 
   /** Extract bit j (Column) of h as 0/1 via div/mod arithmetic — engine-
@@ -349,7 +362,12 @@ object Dedup {
     }
     fp
   }
-  val simHashUdf = udf(simHashKernel _)
+
+  /** SimHash fingerprint of a text in one kernel call —
+    * `simHashKernel(hashedTokensKernel(text))`. */
+  def textSimHashKernel(text: String): Long =
+    simHashKernel(hashedTokensKernel(text))
+  private val textSimHashUdf = udf(textSimHashKernel _)
 
   /** JIT-compiled MinHash slots, identical math to minHashSignature. */
   def minHashSigKernel(baseHashes: Seq[Long], numHashes: Int): Seq[Long] = {
@@ -368,7 +386,16 @@ object Dedup {
     }
     sig.toSeq
   }
-  val minHashSigUdf = udf(minHashSigKernel _)
+  private val minHashSigUdf = udf(minHashSigKernel _)
+
+  /** MinHash signature of a text's distinct hashed word n-gram shingles in
+    * one kernel call — `minHashSigKernel(hashedShinglesKernel(text, n),
+    * numHashes)`, so a plain projection over the text yields the
+    * signature and no shingle array ever becomes a column. */
+  def shingleSigKernel(text: String, n: Int, numHashes: Int): Seq[Long] =
+    minHashSigKernel(hashedShinglesKernel(text, n), numHashes)
+  private val shingleSigUdf =
+    udf(shingleSigKernel _).withName("shingle_minhash_sig")
 
   /** Bit layout for pigeonhole SimHash blocking: `maxHamming + 1` chunks
     * covering the 32 fingerprint bits as evenly as possible. A pair with
@@ -393,16 +420,11 @@ object Dedup {
     * and the blocked join degrades toward quadratic — prefer small budgets
     * on a 32-bit fingerprint. Output (a_id, b_id, hamming). */
   def simHashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame = {
-    // stage 1 materializes the md5 token hashes behind an exchange so the
-    // 32-bit majority vote reads them instead of re-hashing per bit
-    val hashed = docs.select(col(idCol).as("id"),
-        hashedTokensUdf(col(textCol)).as("hs"))
-      .repartition(col("id"))
-    val withFp = hashed.select(col("id"), simHashUdf(col("hs")).as("fp"))
-      .repartition(col("id"))
-    fingerprintHammingPairs(withFp, maxHamming)
-  }
+                   maxHamming: Int = 3): DataFrame =
+    // one kernel call per document in a plain projection; the chunk
+    // explode reads the projected fingerprint, so nothing re-hashes
+    fingerprintHammingPairs(docs.select(col(idCol).as("id"),
+      textSimHashUdf(col(textCol)).as("fp")), maxHamming)
 
   /** Pigeonhole hamming pairs over ANY (id, fp) 32-bit fingerprint frame
     * — the [[simHashPairs]] blocking generalized so image phash / audio
@@ -426,11 +448,14 @@ object Dedup {
     // hamming = popcount of xor — single codegen'd instruction pair per
     // candidate instead of 32 div/mod bit extractions
     val hamming = bit_count(col("a_fp").bitwiseXOR(col("b_fp"))).cast("long")
+    // verify before the pair dedup: a pair meeting in several chunks has
+    // the same hamming in each, so the dedup's exchange carries only the
+    // verified (id, id, hamming) rows, not every candidate
     a.join(b, Seq("chunk_idx", "chunk")).where(col("a_id") < col("b_id"))
-      .dropDuplicates("a_id", "b_id")
       .withColumn("hamming", hamming)
       .where(col("hamming") <= maxHamming)
       .select(col("a_id"), col("b_id"), col("hamming"))
+      .distinct()
   }
 
   /** JIT jaccard over two DISTINCT long arrays: |A∩B| / (|A|+|B|-|A∩B|) —
@@ -457,15 +482,19 @@ object Dedup {
     * (a stopword first token makes one block quadratic) — the exact hazard
     * SURVEY §7.4.5 warns about.
     *
-    * Shingles are md5-hashed to longs behind an exchange before pairing: the
-    * per-pair set math runs as a JIT-compiled kernel and the jaccard value
-    * is identical (distinct shingles -> distinct hashes). */
+    * Shingles are md5-hashed to longs once per document and shuffled once,
+    * keyed by id ([[hashedShingleDocs]]): the arrays have three readers
+    * (the signatures, then both verify sides), which reuse that one
+    * exchange. The per-pair set math runs as a JIT-compiled kernel and the
+    * jaccard value is identical (distinct shingles -> distinct hashes). */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3, threshold: Double = 0.8,
                         bands: Int = 8, rowsPerBand: Int = 2): DataFrame = {
     val sh = hashedShingleDocs(docs, idCol, textCol, shingleN)
-    val cand = lshCandidates(sh, bands, rowsPerBand)
-      .select(col("a_id"), col("b_id"))
+    val signed = sh.select(col("id"),
+      minHashSigUdf(col("h1"), lit(bands * rowsPerBand)).as("sig"))
+    val cand = lshCandidates(signed, bands, rowsPerBand)
+      .select(col("a_id"), col("b_id")).distinct()
     // join the (small) candidate set back to the shingle arrays by id —
     // carrying full arrays through the band explode would multiply them
     cand.join(sh.select(col("id").as("a_id"), col("h1").as("a_sh")), "a_id")
@@ -815,14 +844,15 @@ object Dedup {
     * practice; per-doc shingles are pre-deduped so the per-(doc, probe)
     * count IS the distinct overlap. Hot boilerplate n-grams are the skew
     * risk — raise `shingleN` (real pipelines use 8-13-grams) so shared
-    * grams mean real contamination, not common phrases. */
+    * grams mean real contamination, not common phrases. Each side
+    * explodes the shingle kernel's output straight from the text scan, so
+    * the join's exchanges carry (id, hash) rows only. */
   def ngramContamination(docs: DataFrame, probes: DataFrame, idCol: String,
                          textCol: String, shingleN: Int = 3,
                          minHits: Int = 2): DataFrame = {
-    val d = hashedShingleDocs(docs, idCol, textCol, shingleN)
-    val p = hashedShingleDocs(probes, idCol, textCol, shingleN)
-    d.select(col("id").as("doc_id"), explode(col("h1")).as("g"))
-      .join(p.select(col("id").as("probe_id"), explode(col("h1")).as("g")), "g")
+    def grams(df: DataFrame, id: String) = df.select(col(idCol).as(id),
+      explode(hashedShinglesUdf(col(textCol), lit(shingleN))).as("g"))
+    grams(docs, "doc_id").join(grams(probes, "probe_id"), "g")
       .groupBy("doc_id", "probe_id").agg(count(lit(1)).as("n_hits"))
       .where(col("n_hits") >= minHits)
       .select("doc_id", "probe_id", "n_hits")

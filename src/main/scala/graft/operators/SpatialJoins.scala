@@ -95,24 +95,4 @@ object SpatialJoins {
       .where(col("meters") <= thresholdM)
       .select(col(leftId), col(rightId), col("meters"))
   }
-
-  /** Grid-blocked kNN (k=1): like nearestJoin but blocks on the 3x3 grid
-    * neighborhood instead of a coarse key, so no city-sized shuffle groups.
-    * Complete for thresholds that fit within one cell step at the data's
-    * latitudes. */
-  def gridNearestJoin(left: DataFrame, right: DataFrame,
-                      leftId: String, rightId: String,
-                      thresholdM: Double, cellDeg: Double = 0.01): DataFrame = {
-    val l = left.select(col(leftId), col("lat").as("l_lat"), col("lon").as("l_lon"))
-      .withColumn("cell", explode(neighborCellKeys(col("l_lat"), col("l_lon"), cellDeg)))
-    val r = right.select(col(rightId), col("lat").as("r_lat"), col("lon").as("r_lon"))
-      .withColumn("cell", cellKey(col("r_lat"), col("r_lon"), cellDeg))
-    val joined = l.join(r, "cell")
-      .withColumn("meters",
-        haversineM(col("l_lat"), col("l_lon"), col("r_lat"), col("r_lon")))
-      .where(col("meters") <= thresholdM)
-    val w = Window.partitionBy(leftId).orderBy(col("meters").asc, col(rightId).asc)
-    joined.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-      .drop("rn", "cell")
-  }
 }

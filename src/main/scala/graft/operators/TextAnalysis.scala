@@ -182,15 +182,6 @@ object TextAnalysis {
     * as a struct column (fields _1.._7 per qualityKernel). */
   def qualityStruct(c: Column): Column = qualityUdf(c)
 
-  /** Quality-scoring feature block: length, token count, mean token length,
-    * punctuation ratio, stopword ratio, digit ratio — kernel-backed. */
-  def qualityFeatures(c: Column): Seq[(String, Column)] = {
-    val q = qualityUdf(c)
-    Seq("n_chars" -> q.getField("_1"), "n_tokens" -> q.getField("_2"),
-      "mean_token_len" -> q.getField("_3"), "punct_ratio" -> q.getField("_4"),
-      "stopword_ratio" -> q.getField("_5"), "digit_ratio" -> q.getField("_6"))
-  }
-
   /** Composite quality score in [0,1] — kernel-backed. */
   def qualityScore(c: Column): Column = qualityUdf(c).getField("_7")
 

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.rdd.RDD
+import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
@@ -78,10 +78,20 @@ object CheckpointOps {
     * under [[Track.Off]]). [[release]] frees the blocks. */
   final case class Materialized(df: DataFrame, rdd: RDD[InternalRow],
                                 rows: Long, tracked: Long) {
-    def release(): Unit = rdd.unpersist(false)
+    def release(): Unit = free(rdd)
     /** The same blocks behind a derived frame (a projection of `df`). */
     def map(f: DataFrame => DataFrame): Materialized = copy(df = f(df))
   }
+
+  /** Frees `rdd`'s blocks without blocking. A lineage-truncated RDD goes
+    * straight to the context's unpersist: `RDD.unpersist` does the same
+    * after warning that the lineage cannot be recomputed, which is the
+    * point of freeing superseded round state, and that warning would be
+    * logged once per released round. */
+  def free(rdd: RDD[_]): Unit =
+    if (rdd.checkpointData.exists(_.isInstanceOf[LocalRDDCheckpointData[_]]))
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false)
 
   /** Materialize `df` into persisted blocks (MEMORY_AND_DISK).
     *

@@ -280,6 +280,77 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("Exchange SinglePartition"), p.take(3000))
   }
 
+  test("text dedup shuffles ids: dd_minhash_lsh / dd_decontaminate / " +
+    "pipe_training_corpus pin no exchange by id, no exchange carries text " +
+    "or a shingle array, the signature kernel runs once per document, " +
+    "and the corpus pipelines' drop set enters the anti join by " +
+    "broadcast") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec,
+      SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.{Exchange,
+      REPARTITION_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledJoin}
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    object H extends AdaptiveSparkPlanHelper
+    def executed(q: String): SparkPlan = {
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    def sigUdfs(p: SparkPlan): Seq[ScalaUDF] = p.expressions.flatMap(
+      _.collect { case u: ScalaUDF
+        if u.udfName.contains("shingle_minhash_sig") => u })
+    for (q <- Seq("dd_minhash_lsh", "dd_decontaminate",
+        "pipe_training_corpus")) {
+      val p = executed(q)
+      val shown = p.toString.take(4000)
+      val byCol = H.collect(p) {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e
+      }
+      assert(byCol.isEmpty, s"$q pins an exchange by column:\n$shown")
+      val wide = H.collect(p) { case e: Exchange => e }
+        .filter(_.output.exists(a => Set("text", "h1", "hs")(a.name)))
+      assert(wide.isEmpty, s"$q shuffles text or shingle arrays:\n$shown")
+      // the signature is projected at the scan side: never inside the
+      // band explode or above it, so one evaluation per document per
+      // computed join side
+      H.foreach(p) {
+        case g: GenerateExec => assert(sigUdfs(g).isEmpty,
+          s"$q evaluates the signature per band row:\n$shown")
+        case pr: ProjectExec if sigUdfs(pr).nonEmpty =>
+          assert(H.collect(pr.child) {
+            case x @ (_: GenerateExec | _: ShuffledJoin |
+                      _: BroadcastHashJoinExec) => x
+          }.isEmpty, s"$q signs rows that are not documents:\n$shown")
+        case other => assert(sigUdfs(other).isEmpty,
+          s"$q evaluates the signature outside a projection:\n$shown")
+      }
+    }
+    assert(H.collect(executed("dd_minhash_lsh")) {
+      case pr: ProjectExec if sigUdfs(pr).nonEmpty => pr
+    }.nonEmpty, "dd_minhash_lsh no longer projects the fused signature")
+    // planned so before any stage runs: AQE's initial plan (at run time
+    // an empty drop set may remove the join altogether)
+    for (q <- Seq("pipe_training_corpus", "pipe_clean_corpus",
+        "pipe_html_corpus", "pipe_c4_corpus")) {
+      val p = executed(q) match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+      val anti = p.collect {
+        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+        case j: ShuffledJoin if j.joinType == LeftAnti => j
+      }
+      assert(anti.size == 1 && anti.head.isInstanceOf[BroadcastHashJoinExec],
+        s"$q: the drop-set anti join must be one broadcast hash join:\n" +
+          p.toString.take(4000))
+    }
+  }
+
   test("j12/j13: as-of and range joins plan as single-shuffle window / " +
     "equi-join — no nested loop, no cartesian") {
     val asof = plan("j12_asof_join")

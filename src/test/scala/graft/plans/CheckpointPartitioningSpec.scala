@@ -98,4 +98,42 @@ class CheckpointPartitioningSpec extends SparkTestBase {
     }
     smallM.release()
   }
+
+  test("release() of a lineage-truncated handle frees its blocks without " +
+    "the truncated-lineage warning RDD.unpersist logs") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val sc = spark.sparkContext
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val app = new AbstractAppender("truncated-lineage-spec", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val log = LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+      .asInstanceOf[Logger]
+    log.addAppender(app)
+    def truncated = materialize(spark.range(0, 100).toDF("id"),
+      truncate = true)
+    def lineageWarnings = warned.toArray.count(_.toString
+      .contains("lineage has been truncated"))
+    try {
+      val m = truncated
+      assert(sc.getPersistentRDDs.contains(m.rdd.id))
+      m.release()
+      assert(!sc.getPersistentRDDs.contains(m.rdd.id),
+        "release() left the truncated RDD registered")
+      assert(lineageWarnings == 0, warned.toArray.mkString("\n"))
+      // the capture works: the plain RDD unpersist does warn
+      val plain = truncated
+      plain.rdd.unpersist(false)
+      assert(lineageWarnings == 1, warned.toArray.mkString("\n"))
+    } finally {
+      log.removeAppender(app)
+      app.stop()
+    }
+  }
 }
