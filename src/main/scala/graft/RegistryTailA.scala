@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.er.EntityResolution
 import graft.functions.GeoFunctions
@@ -564,13 +565,16 @@ private[graft] object TailRegistryA {
         val members = CityAssignment.distanceGuard(assigned, cities, maxKm = 2.5)
           .select("place_id", "name", "lat", "lon", "city_slug")
           .localCheckpoint()
-        // ER: grid-blocked candidates, banded acceptance, components, mint
-        val pairs = SpatialJoins.gridSelfJoin(members, "place_id", "lat", "lon",
+        // ER: grid-blocked candidates, banded acceptance, components, mint;
+        // priced at its stored bytes, not the cascade's product estimate,
+        // so the blocking and name joins broadcast
+        val priced = CheckpointOps.withStoredStats(members)
+        val pairs = SpatialJoins.gridSelfJoin(priced, "place_id", "lat", "lon",
           radiusM = 200.0, extraKeys = Seq("city_slug"))
         val links = pairs
-          .join(members.select(col("place_id").as("a_id"),
+          .join(priced.select(col("place_id").as("a_id"),
             col("name").as("a_name")), "a_id")
-          .join(members.select(col("place_id").as("b_id"),
+          .join(priced.select(col("place_id").as("b_id"),
             col("name").as("b_name")), "b_id")
           .withColumn("sim", TextFunctions.levRatioCol(col("a_name"), col("b_name")))
           .where(col("sim") >= 0.9 ||

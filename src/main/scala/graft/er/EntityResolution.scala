@@ -3,6 +3,7 @@ package graft.er
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointOps
 
 import graft.functions.TextFunctions
 import graft.operators.{ConnectedComponents, SpatialJoins}
@@ -18,10 +19,15 @@ import graft.operators.{ConnectedComponents, SpatialJoins}
   *           -> canonical naming + id minting (§A4/G3)
   *
   * Input schema: place_id, source, name, lat, lon, city_slug (+ anything).
-  * Scale notes: every stage shuffles on either the spatial cell key or the
-  * component label — no driver-side state except the CC fixpoint loop;
-  * city_slug rides along as a blocking key so ER never pairs across cities
-  * (mirrors the reference's per-city partition loop `er.py:303-305`).
+  * Scale notes: the blocking self-join and the two name joins are keyed
+  * equi-joins; Spark broadcasts their smaller side when the staged places
+  * fit the broadcast threshold and shuffles on the spatial cell key and
+  * the place id when they do not. A checkpointed input is priced at the
+  * bytes it stores, not at its plan's estimate, so that choice follows
+  * the real size. Components shuffle on the component label — no
+  * driver-side state except the CC fixpoint loop; city_slug rides along
+  * as a blocking key so ER never pairs across cities (mirrors the
+  * reference's per-city partition loop `er.py:303-305`).
   */
 object EntityResolution {
 
@@ -32,10 +38,13 @@ object EntityResolution {
     * city_slug. */
   def candidatePairs(places: DataFrame, radiusM: Double = 250.0,
                      cellDeg: Double = 0.01): DataFrame = {
+    // a staged checkpoint carries its staging joins' product estimate;
+    // its stored bytes let the blocking and name joins broadcast
+    val priced = CheckpointOps.withStoredStats(places)
     val pairs = SpatialJoins.gridSelfJoin(
-      places.select("place_id", "lat", "lon", "city_slug"),
+      priced.select("place_id", "lat", "lon", "city_slug"),
       "place_id", "lat", "lon", radiusM, cellDeg, extraKeys = Seq("city_slug"))
-    val dims = places.select(col("place_id"), col("name"), col("source"))
+    val dims = priced.select(col("place_id"), col("name"), col("source"))
     pairs
       .join(dims.select(col("place_id").as("a_id"), col("name").as("a_name"),
         col("source").as("src_a")), "a_id")

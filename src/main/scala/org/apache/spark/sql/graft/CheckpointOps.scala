@@ -4,15 +4,15 @@ import org.apache.spark.rdd.{LocalRDDCheckpointData, RDD}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap,
-  Expression}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+  Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning,
   PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.storage.{RDDBlockId, StorageLevel}
 import org.apache.spark.util.LongAccumulator
 
 /** Manual materialization for iterative dataflows: one [[materialize]]
@@ -28,7 +28,7 @@ import org.apache.spark.util.LongAccumulator
   *     as a 2-4x inflation of everything benched after the
   *     checkpoint-heavy queries. [[graft.operators.Rounds]] owns the
   *     hand-off and the release for the round loops.
-  *  2. **The row count** the persisting `rdd.count()` takes anyway, so a
+  *  2. **The row count** the persisting pass takes anyway, so a
   *     state-budget guard or a did-anything-change test needs no second
   *     job.
   *  3. **Fused tracking** ([[Track]]): an accumulator counts rows where
@@ -36,14 +36,28 @@ import org.apache.spark.util.LongAccumulator
   *     materialization pass, so an iterative fixpoint (connected
   *     components) needs one Spark job per round, not checkpoint + a
   *     second convergence-probe job. Updates happen inside the persisting
-  *     count action, so Spark applies each task's update exactly once.
+  *     action, so Spark applies each task's update exactly once.
   *
-  * The frame carries MEASURED statistics: `rowCount` is the row count
-  * the persisting `rdd.count()` just took, and `sizeInBytes` is that
-  * count times the schema's per-row width. Spark's own
-  * `autoBroadcastJoinThreshold` then decides, join by join, whether a
-  * checkpointed frame broadcasts — small iterative loop state (a
-  * PageRank rank table, a CC label frame) does, without a hint.
+  * The frame carries MEASURED statistics, both taken by the persisting
+  * pass: `rowCount` is the rows it stored, and `sizeInBytes` is that
+  * count × the schema's default widths — the unit Catalyst prices every
+  * plan a checkpoint meets in — unless the rows' own bytes (their
+  * `UnsafeRow` sizes) exceed `autoBroadcastJoinThreshold`; then those
+  * bytes, so such a frame never broadcasts. Spark's threshold then
+  * decides, join by join, whether a checkpointed frame broadcasts:
+  * small iterative loop state (a PageRank rank table, a CC label frame)
+  * does, without a hint. Default widths count an `array<int>` as one
+  * element and a string as 20 B, so a HyperBall register frame (64
+  * slots) read ~15× below the bytes it holds and broadcast at sizes the
+  * driver should not carry. Below the threshold the width price stays:
+  * which side of a join builds is a comparison with estimated plans,
+  * and pricing wide frames at their bytes flipped such choices — the
+  * register frame stopped being `packedPropagateRound`'s broadcast side
+  * at sf0.1 and the HyperBall rows wrote 26–83 % more shuffle. The block
+  * manager's figure for the same blocks ([[storedBytes]]) also counts
+  * each deserialized row's JVM object, 2–3× the row bytes of a narrow
+  * frame; it prices a caller's own checkpoint, which no pass here
+  * measured ([[withStoredStats]]).
   *
   * Carrying the pre-checkpoint plan's ESTIMATE instead (what Spark 4's
   * `Dataset.localCheckpoint` does with `originStats`) breaks iterative
@@ -55,8 +69,8 @@ import org.apache.spark.util.LongAccumulator
   * round 10, the stat at 28M digits). Capping the carried estimate at
   * Long.MaxValue keeps planning flat, but leaves every join-derived frame
   * "huge", so small loop state never broadcasts. A measured leaf needs no
-  * cap: it is a Long row count times a fixed row width, never a product
-  * of upstream estimates, so each round's stats restart from the truth.
+  * cap: it is a Long summed over the stored rows, never a product of
+  * upstream estimates, so each round's stats restart from the truth.
   */
 object CheckpointOps {
 
@@ -145,9 +159,26 @@ object CheckpointOps {
     }
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
     if (truncate) rdd.localCheckpoint()
-    val n = rdd.count()
+    // the persisting pass counts the rows and the bytes they hold
+    val width = EstimationUtils.getSizePerRow(output).toLong
+    val perPartition = rdd.sparkContext.runJob(rdd,
+      (it: Iterator[InternalRow]) => {
+        var rows, bytes = 0L
+        it.foreach { r =>
+          rows += 1
+          bytes += (r match {
+            case u: UnsafeRow => u.getSizeInBytes
+            case _ => width
+          })
+        }
+        (rows, bytes)
+      })
+    val n = perPartition.map(_._1).sum
+    val bytes = perPartition.map(_._2).sum
     val measured = Statistics(
-      sizeInBytes = EstimationUtils.getOutputSize(output, n),
+      sizeInBytes =
+        if (bytes > spark.sessionState.conf.autoBroadcastJoinThreshold) bytes
+        else EstimationUtils.getOutputSize(output, n),
       rowCount = Some(n))
     val declared = preservedPartitioning(qe.executedPlan, output)
     // the declaration is only truthful because the mapPartitions wrapper
@@ -164,6 +195,46 @@ object CheckpointOps {
       output, rdd, declared, Nil, false, None)(spark, Some(measured), None)
     Materialized(classic.Dataset.ofRows(spark, plan), rdd, n,
       tracked.fold(0L)(_._1.value))
+  }
+
+  /** The bytes `rdd`'s blocks occupy (memory plus disk, one copy per
+    * partition), or None unless every partition has a stored block.
+    * Read from the block manager master, which a task tells of each
+    * block it stores before the task ends: once the action that
+    * persisted `rdd` returns, the figure is whole.
+    * `SparkContext.getRDDStorageInfo` reads the status store instead,
+    * which the listener bus fills asynchronously, so right after that
+    * action it can still be missing blocks. */
+  def storedBytes(rdd: RDD[_]): Option[Long] = {
+    val statuses = rdd.sparkContext.env.blockManager.master.getStorageStatus
+    val sizes = rdd.partitions.indices.map { i =>
+      statuses.iterator.flatMap(_.getBlock(RDDBlockId(rdd.id, i)))
+        .map(s => s.memSize + s.diskSize).nextOption()
+    }
+    Option.when(sizes.forall(_.isDefined))(sizes.flatten.sum)
+  }
+
+  /** `df` with every fully stored `LogicalRDD` leaf priced at its
+    * [[storedBytes]]: output, partitioning, ordering, row count and
+    * constraints stay as they were. For a caller's own
+    * `Dataset.localCheckpoint`, whose leaf carries the pre-checkpoint
+    * plan's estimate — a join's PRODUCT of its inputs' sizes, so a
+    * 160 KB staged frame reads as gigabytes and every join over it
+    * shuffles. A leaf that has not been measured (a lazy checkpoint not
+    * yet run, a partition no longer stored) keeps its estimate, so an
+    * unmeasured frame is never priced as tiny. Runs no job, pins
+    * nothing; a frame with no such leaf comes back as the same object. */
+  def withStoredStats(df: DataFrame): DataFrame = {
+    val cdf = df.asInstanceOf[classic.Dataset[Row]]
+    val plan = cdf.queryExecution.analyzed
+    val priced = plan.transformUp {
+      case l: LogicalRDD => storedBytes(l.rdd).fold(l: LogicalPlan) { b =>
+        l.copy()(cdf.sparkSession,
+          Some(l.stats.copy(sizeInBytes = BigInt(b.max(1L)))),
+          Some(l.constraints))
+      }
+    }
+    if (priced eq plan) df else classic.Dataset.ofRows(cdf.sparkSession, priced)
   }
 
   /** The materialized frame's physical partitioning, carried onto the

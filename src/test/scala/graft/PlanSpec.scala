@@ -709,6 +709,67 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("er: candidatePairs over a staged eager checkpoint shuffles no " +
+    "cell-keyed side, and both name joins broadcast") {
+    import graft.er.{EntityResolution, EntityResolutionSpec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+      BroadcastHashJoinExec}
+    // ten rows whose checkpoint carries a gigabyte product estimate
+    val ck = EntityResolutionSpec.staged(spark).localCheckpoint()
+    val cand = EntityResolution.candidatePairs(ck)
+    cand.collect()
+    val p = cand.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val cellShuffles = aqe.collect(p) {
+      case e: ShuffleExchangeExec
+          if e.output.exists(a => a.name == "a_cell" || a.name == "b_cell") => e
+    }
+    assert(cellShuffles.isEmpty, s"the blocking join shuffled:\n$p")
+    val nameJoins = aqe.collect(p) {
+      case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys)
+          .flatMap(_.references).exists(a => a.name == "a_id" ||
+            a.name == "b_id") => j
+    }
+    assert(nameJoins.size == 2 &&
+      nameJoins.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"expected two broadcast name joins:\n$p")
+  }
+
+  test("hyperball: a register frame storing more than the broadcast " +
+    "threshold does not broadcast into packedPropagateRound") {
+    import graft.operators.HyperBall
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.graft.CheckpointOps
+    // 2,000 register files of 64 slots hold ~600 KB; default widths
+    // price them at ~40 KB
+    val threshold = 200000L
+    withSQLConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> threshold.toString) {
+      val regs = CheckpointOps.materialize(HyperBall.packedInitRegs(
+        spark.range(0, 2000).select(col("id").as("node")), 6),
+        truncate = true)
+      try {
+        assert(CheckpointOps.storedBytes(regs.rdd).get > threshold)
+        assert(EstimationUtils.getOutputSize(
+          regs.df.queryExecution.analyzed.output, regs.rows) < threshold)
+        val edges = spark.range(0, 4000).select(
+          (col("id") % 2000).as("src"), ((col("id") * 7) % 2000).as("dst"))
+        val round = HyperBall.packedPropagateRound(edges, regs.df, 64)
+        val p = round.queryExecution.executedPlan
+        val regBroadcasts = p.collect {
+          case b: BroadcastExchangeExec if b.collect {
+            case s: RDDScanExec if s.rdd eq regs.rdd => s }.nonEmpty => b
+        }
+        assert(regBroadcasts.isEmpty, s"the register frame broadcast:\n$p")
+        assert(round.count() == 2000L)
+      } finally regs.release()
+    }
+  }
+
   test("cc_incremental: the standing-base label probe is scan-only — " +
     "no Exchange of the corpus-sized base, hinted or unhinted") {
     import graft.operators.ConnectedComponents

@@ -99,6 +99,32 @@ class CheckpointPartitioningSpec extends SparkTestBase {
     smallM.release()
   }
 
+  test("a HyperBall register frame storing more than the broadcast " +
+    "threshold is priced within 2x of the bytes its blocks hold") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.operators.HyperBall
+    // 64 int slots per node: count x default widths prices the array as
+    // one element, ~15x below what the frame holds (~600 KB here)
+    val regs = withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "200000") {
+      materialize(HyperBall.packedInitRegs(
+        spark.range(0, 2000).select(col("id").as("node")), 6), truncate = true)
+    }
+    try {
+      val priced = regs.df.queryExecution.optimizedPlan.stats.sizeInBytes
+      // the status store's own figure, filled by the listener bus
+      val stored = eventually(timeout(10.seconds)) {
+        val info = spark.sparkContext.getRDDStorageInfo
+          .find(_.id == regs.rdd.id).get
+        assert(info.numCachedPartitions == regs.rdd.getNumPartitions)
+        info.memSize + info.diskSize
+      }
+      assert(stored > 200000L)
+      assert(priced * 2 >= stored && priced <= BigInt(stored) * 2,
+        s"register frame priced at $priced B, stores $stored B")
+    } finally regs.release()
+  }
+
   test("release() of a lineage-truncated handle frees its blocks without " +
     "the truncated-lineage warning RDD.unpersist logs") {
     import org.apache.logging.log4j.LogManager
