@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,14 +12,20 @@ import graft.operators.{BpeTrainer, CacheScope, Dedup, LanguageModel, Sampling, 
   * registry rows (generalizing the reference's end-to-end dataflow,
   * `/root/reference/etl/pipeline.py`).
   *
+  * Every build gates its documents, pins the gated frame once (a lazy
+  * local checkpoint holding only the columns used downstream), and drops
+  * one id set from it ([[curate]]): the exact copies, the near
+  * duplicates and, for the training corpus, the contaminated documents.
+  * Finding them shuffles ids, MinHash signatures and hashed shingles,
+  * never the text.
+  *
   * Two surfaces per pipeline:
   *  - `build*` returns the composed frame after running ONE small job
-  *    eagerly: the near-duplicate (and, for the training corpus,
-  *    contamination) drop ids, materialised so the final anti join plans
-  *    on their measured size. That job also lands the exact-dedup
-  *    checkpoint; every other stage runs at the caller's first action. The
-  *    CALLER owns the lifetime of all these blocks — the registry rows
-  *    rely on the engine's runners blanket-clearing between queries;
+  *    eagerly: the drop ids, materialised so the final anti join plans
+  *    on their measured size. That job also lands the gated pin; every
+  *    other stage runs at the caller's first action. The CALLER owns the
+  *    lifetime of all these blocks — the registry rows rely on the
+  *    engine's runners blanket-clearing between queries;
   *  - the apply-style entry (`cleanCorpus(docs)(_.write.parquet(out))`)
   *    runs the build under [[CacheScope.materialized]], so a caller
   *    embedding the pipeline in a long-lived session gets the cleanup
@@ -34,14 +40,25 @@ object Pipelines {
     * Output: (doc_id, pred_lang, q). */
   def buildCleanCorpus(docs: DataFrame,
                        minQuality: Double = 0.5,
-                       lang: String = "en"): DataFrame = {
-    val gated = docs
-      .withColumn("q", TextAnalysis.qualityScore(col("text")))
-      .withColumn("pred_lang", TextAnalysis.langId(col("text")))
-      .where(col("q") >= minQuality && col("pred_lang") === lang)
-    dropNearDups(exactDedup(gated))
-      .select(col("doc_id"), col("pred_lang"), col("q"))
-  }
+                       lang: String = "en"): DataFrame =
+    curate(cleanGate(docs, minQuality, lang))
+      .select(col("doc_id"), lit(lang).as("pred_lang"), col("q"))
+
+  /** (doc_id, text, q) of [[qualityGate]]'s documents. */
+  private[graft] def cleanGate(docs: DataFrame, minQuality: Double,
+                               lang: String): DataFrame =
+    qualityGate(docs, minQuality, lang)
+      .select(col("doc_id"), col("text"), col("q"))
+
+  /** `docs` with their quality score `q`, kept where it is at least
+    * `minQuality` and the text is in `lang`. The language is then the
+    * same on every row, so no gate pins a column for it: the builds emit
+    * `lang` as `pred_lang`. */
+  private def qualityGate(docs: DataFrame, minQuality: Double,
+                          lang: String): DataFrame =
+    docs.withColumn("q", TextAnalysis.qualityScore(col("text")))
+      .where(col("q") >= minQuality &&
+        TextAnalysis.langId(col("text")) === lang)
 
   def cleanCorpus[T](docs: DataFrame, minQuality: Double = 0.5,
                      lang: String = "en")(materialize: DataFrame => T): T =
@@ -57,19 +74,28 @@ object Pipelines {
                           mixWeights: Map[String, Double], seed: Int,
                           minQuality: Double = 0.5, lang: String = "en",
                           maxRepetition: Double = 0.2): DataFrame = {
-    val gated = docs
-      .withColumn("q", TextAnalysis.qualityScore(col("text")))
-      .withColumn("pred_lang", TextAnalysis.langId(col("text")))
-      .withColumn("rep", TextAnalysis.dupNgramFrac(col("text"), 3))
-      .where(col("q") >= minQuality && col("pred_lang") === lang &&
-        col("rep") <= maxRepetition)
-    val kept = exactDedup(gated)
-    val clean = dropNearDups(kept, Dedup.ngramContamination(kept, probes,
-        "doc_id", "text", shingleN = 3, minHits = 2).select("doc_id"))
+    val clean = curate(trainingGate(docs, minQuality, lang, maxRepetition),
+      contaminated(_, probes))
     Sampling.mixBySource(clean, "doc_id", "source", mixWeights, seed)
-      .select(col("doc_id"), col("source"), col("pred_lang"), col("q"),
-        md5(TextAnalysis.redactPii(col("text"))).as("redacted_md5"))
+      .select(col("doc_id"), col("source"), lit(lang).as("pred_lang"),
+        col("q"), md5(TextAnalysis.redactPii(col("text"))).as("redacted_md5"))
   }
+
+  /** (doc_id, source, text, q): [[cleanGate]]'s documents whose
+    * duplicated 3-gram fraction is at most `maxRepetition`. */
+  private[graft] def trainingGate(docs: DataFrame, minQuality: Double,
+                                  lang: String,
+                                  maxRepetition: Double): DataFrame =
+    qualityGate(docs, minQuality, lang)
+      .where(TextAnalysis.dupNgramFrac(col("text"), 3) <= maxRepetition)
+      .select(col("doc_id"), col("source"), col("text"), col("q"))
+
+  /** Ids of the `kept` documents sharing >= 2 distinct 3-grams with a
+    * probe document. */
+  private[graft] def contaminated(kept: DataFrame,
+                                  probes: DataFrame): DataFrame =
+    Dedup.ngramContamination(kept, probes, "doc_id", "text", shingleN = 3,
+      minHits = 2).select("doc_id")
 
   def trainingCorpus[T](docs: DataFrame, probes: DataFrame,
                         mixWeights: Map[String, Double], seed: Int)(
@@ -83,16 +109,18 @@ object Pipelines {
     * q). */
   def buildHtmlCorpus(pages: DataFrame, htmlCol: String = "html",
                       minQuality: Double = 0.5,
-                      lang: String = "en"): DataFrame = {
-    val extracted = pages.select(col("doc_id"), col("source"),
-      TextAnalysis.htmlExtract(col(htmlCol)).as("text"))
-    val gated = extracted
-      .withColumn("q", TextAnalysis.qualityScore(col("text")))
-      .withColumn("pred_lang", TextAnalysis.langId(col("text")))
-      .where(col("q") >= minQuality && col("pred_lang") === lang)
-    dropNearDups(exactDedup(gated))
-      .select(col("doc_id"), col("source"), col("pred_lang"), col("q"))
-  }
+                      lang: String = "en"): DataFrame =
+    curate(htmlGate(pages, htmlCol, minQuality, lang))
+      .select(col("doc_id"), col("source"), lit(lang).as("pred_lang"),
+        col("q"))
+
+  /** (doc_id, source, text, q): the pages' extracted text, through
+    * [[qualityGate]]. */
+  private[graft] def htmlGate(pages: DataFrame, htmlCol: String,
+                              minQuality: Double, lang: String): DataFrame =
+    qualityGate(pages.select(col("doc_id"), col("source"),
+        TextAnalysis.htmlExtract(col(htmlCol)).as("text")), minQuality, lang)
+      .select(col("doc_id"), col("source"), col("text"), col("q"))
 
   def htmlCorpus[T](pages: DataFrame, htmlCol: String = "html")(
       materialize: DataFrame => T): T =
@@ -111,20 +139,18 @@ object Pipelines {
     * keep field (spec'd against it, so the two cannot drift).
     * Output: (doc_id, n_lines, n_dropped, n_words, text_md5). */
   def buildC4Corpus(docs: DataFrame, minLineLen: Int = 10,
-                    minWords: Int = 50, minStopHits: Int = 2): DataFrame = {
-    val lined = Dedup.lineDedup(docs, "doc_id", "text", minLen = minLineLen)
-    val gated = gopherGate(lined, minWords, minStopHits)
-    dropNearDups(exactDedup(gated))
+                    minWords: Int = 50, minStopHits: Int = 2): DataFrame =
+    curate(c4Gate(docs, minLineLen, minWords, minStopHits))
       .select(col("doc_id"), col("n_lines"), col("n_dropped"),
         col("n_words"), md5(col("text")).as("text_md5"))
-  }
 
-  /** The Gopher rule gate over a line-deduped frame — ONE copy shared
-    * by [[buildC4Corpus]] and [[buildPretrainCorpus]] so the keep
-    * conjunction cannot drift between the two recipes. */
-  private def gopherGate(lined: DataFrame, minWords: Int,
-                         minStopHits: Int): DataFrame =
-    lined
+  /** Line dedup, then the Gopher rule gate on the rebuilt text — ONE copy
+    * shared by [[buildC4Corpus]] and the pretraining recipes so the keep
+    * conjunction cannot drift between them.
+    * Output: (doc_id, text, n_lines, n_dropped, n_words). */
+  private[graft] def c4Gate(docs: DataFrame, minLineLen: Int, minWords: Int,
+                            minStopHits: Int): DataFrame =
+    Dedup.lineDedup(docs, "doc_id", "text", minLen = minLineLen)
       .withColumn("g", TextAnalysis.gopherRules(col("text")))
       .where(col("g._1") >= minWords && col("g._1") <= 100000 &&
         col("g._2") >= 3.0 && col("g._2") <= 10.0 &&
@@ -148,9 +174,7 @@ object Pipelines {
   def buildPretrainCorpus(docs: DataFrame, minLineLen: Int = 10,
                           minWords: Int = 50,
                           minStopHits: Int = 2): DataFrame = {
-    val lined = Dedup.lineDedup(docs, "doc_id", "text", minLen = minLineLen)
-    val gated = gopherGate(lined, minWords, minStopHits)
-    val survivors = dropNearDups(exactDedup(gated))
+    val survivors = curate(c4Gate(docs, minLineLen, minWords, minStopHits))
       .select(col("doc_id"), col("text"), col("n_words"))
       .localCheckpoint(eager = false) // feeds the LM train AND score legs
     val scored = LanguageModel.knLogPerplexity(survivors, "doc_id", "text",
@@ -186,9 +210,7 @@ object Pipelines {
   def buildPretrainCorpusTokenized(docs: DataFrame, sources: DataFrame,
       minLineLen: Int = 10, minWords: Int = 50, minStopHits: Int = 2,
       nMerges: Int = 6, seqLen: Int = 512): DataFrame = {
-    val lined = Dedup.lineDedup(docs, "doc_id", "text", minLen = minLineLen)
-    val gated = gopherGate(lined, minWords, minStopHits)
-    val survivors = dropNearDups(exactDedup(gated))
+    val survivors = curate(c4Gate(docs, minLineLen, minWords, minStopHits))
       .select(col("doc_id"), col("text"), col("n_words"))
       .localCheckpoint(eager = false) // feeds the LM train AND score legs
     val scored = LanguageModel.knLogPerplexity(survivors, "doc_id", "text",
@@ -219,36 +241,47 @@ object Pipelines {
     CacheScope.materialized(docs.sparkSession)(
       buildC4Corpus(docs, minLineLen, minWords, minStopHits))(materialize)
 
-  /** Exact dedup keeping the smallest doc_id per text digest. The kept
-    * frame feeds BOTH the drop-set job and the final anti join, so it
-    * checkpoints (lazily: the drop-set job in [[dropNearDups]] lands it)
-    * instead of recomputing the gate expressions per branch. The pinned
-    * blocks live until released: the apply-style entries' enclosing
-    * [[CacheScope.materialized]] does that per call, the engine's own
-    * runners blanket-clear between queries; any other caller of a bare
-    * build* owns the lifetime. */
-  private def exactDedup(gated: DataFrame): DataFrame = {
-    val wd = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    gated.withColumn("rn", row_number().over(wd))
-      .where(col("rn") === 1).drop("rn")
-      .localCheckpoint(eager = false)
+  /** `gated` minus its exact copies, its near duplicates and the ids
+    * `moreDrops` finds in it. `gated` is pinned once, as a lazy local
+    * checkpoint that [[dropIds]] and the final anti join both read, so
+    * the gate expressions run once per document. The drop ids form one
+    * frame that [[CheckpointOps.materialize]] runs eagerly — a small
+    * id-only job, which also lands the pin — so the anti join plans on
+    * its MEASURED size: Spark's own `autoBroadcastJoinThreshold`
+    * broadcasts a small drop set before any stage of the join runs and
+    * the pinned text is never shuffled for it, while a drop set too big
+    * to broadcast still plans a shuffled join (no hint: the set is
+    * unbounded at scale). The pinned blocks live until released: the
+    * apply-style entries' enclosing [[CacheScope.materialized]] does that
+    * per call, the engine's own runners blanket-clear between queries;
+    * any other caller of a bare build* owns the lifetime. */
+  private def curate(gated: DataFrame,
+                     moreDrops: (DataFrame => DataFrame)*): DataFrame = {
+    val pinned = gated.localCheckpoint(eager = false)
+    val drops = dropIds(pinned, moreDrops.map(_(pinned)): _*)
+    pinned.join(CheckpointOps.materialize(drops).df, Seq("doc_id"),
+      "left_anti")
   }
 
-  /** `kept` minus its near duplicates (the higher doc_id of every
-    * verified MinHash-LSH pair) and minus the `doc_id`s of `moreDrops`.
-    * The drop ids form one frame that [[CheckpointOps.materialize]] runs
-    * eagerly — a small id-only job, which also lands `kept`'s lazy
-    * checkpoint — so the anti join plans on its MEASURED size: Spark's own
-    * `autoBroadcastJoinThreshold` broadcasts a small drop set before any
-    * stage of the join runs and `kept` is never shuffled for it, while a
-    * drop set too big to broadcast still plans a shuffled join (no hint:
-    * the set is unbounded at scale). The drop set's blocks belong to the
-    * caller, like `kept`'s. */
-  private def dropNearDups(kept: DataFrame, moreDrops: DataFrame*): DataFrame = {
-    val near = Dedup.minHashLSH(kept, "doc_id", "text",
+  /** The distinct ids to drop from `docs` (doc_id, text, ...): the
+    * higher doc_id of every verified MinHash-LSH pair, and the `doc_id`s
+    * of `moreDrops`.
+    *
+    * That set holds every exact copy — each id but the smallest per text
+    * — with no digest pass of its own: identical texts have identical
+    * signatures, so a copy shares all its band buckets with the
+    * smallest-id document of its text, and their pair verifies at
+    * `sig_sim` 1.
+    *
+    * Finding the near duplicates and `moreDrops` over `docs` rather than
+    * over `docs` minus its copies drops the same set: a pair (copy, x)
+    * has the signatures of (original, x), and the original's id is the
+    * smaller; a per-document predicate such as contamination flags an
+    * original exactly when it flags its copies. */
+  private[graft] def dropIds(docs: DataFrame, moreDrops: DataFrame*): DataFrame = {
+    val near = Dedup.minHashLSH(docs, "doc_id", "text",
         shingleN = 3, bands = 8, rowsPerBand = 2, simThreshold = 0.5)
       .select(col("b_id").as("doc_id"))
-    val drops = (near +: moreDrops).reduce(_ union _).distinct()
-    kept.join(CheckpointOps.materialize(drops).df, Seq("doc_id"), "left_anti")
+    (near +: moreDrops).reduce(_ union _).distinct()
   }
 }

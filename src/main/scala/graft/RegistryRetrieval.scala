@@ -18,9 +18,11 @@ import graft.RegistryCore._
 private[graft] object RetrievalRegistry {
   val rows: Seq[Q] = Seq(
     // BM25 top-k: Lucene-form idf ln(1+(N-df+.5)/(df+.5)), k1=1.2 b=0.75,
-    // query-term postings selected by broadcast prefilter, per-query
-    // ranking via the bounded-heap TopKPairs aggregation. Scores quantize
-    // to 1e-6 BEFORE ranking so rank order is engine-portable.
+    // df counted over the query terms by broadcast prefilter, each
+    // document scored in its own row against the broadcast query batch,
+    // per-query ranking via the bounded-heap TopKPairs aggregation.
+    // Scores quantize to 1e-6 BEFORE ranking so rank order is
+    // engine-portable.
     Q("ir_bm25_topk",
       (s, dir) => Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id",
         "text", bm25FixtureQueries(s, dir), k = 10),
@@ -28,10 +30,11 @@ private[graft] object RetrievalRegistry {
 
     // BM25 against the STANDING index: postings partitioned by term-hash
     // bucket at rest, the query batch prunes the scan to its terms'
-    // partitions, scoring is the same shared stage — identical answers
-    // (same oracle SQL), amortized index cost. The row rebuilds the
-    // index per run (fixture discipline: at sf0.01 the build is cheap;
-    // production builds once and queries forever).
+    // partitions, each document's pruned postings are scored by the same
+    // shared stage — identical answers (same oracle SQL), amortized
+    // index cost. The row rebuilds the index per run (fixture
+    // discipline: at sf0.01 the build is cheap; production builds once
+    // and queries forever).
     Q("ir_bm25_indexed",
       (s, dir) => {
         val tag = new java.io.File(dir).getName.replaceAll("[^A-Za-z0-9]", "_")

@@ -10,13 +10,14 @@ import org.apache.spark.sql.functions._
   * queries against it).
   *
   * Scale shape (the part that matters at 100 TB): the corpus-sized frames
-  * are only ever touched by (a) one tokenize+explode scan and (b) keyed
-  * partial aggregations. The query side is always tiny relative to the
-  * corpus, so every join that decides *which* postings participate is a
-  * broadcast hash join — the full index is never shuffled, only the
-  * postings of terms that appear in some query. Per-query ranking is the
-  * bounded-heap [[TopKPairs]] aggregation (k-bounded buffers across the
-  * shuffle), never a per-query window sort over candidate rows.
+  * are only ever touched by (a) tokenize scans and (b) keyed partial
+  * aggregations. The query side is always tiny relative to the corpus,
+  * so every join that decides *which* postings participate is a
+  * broadcast — the full index is never shuffled. BM25 scores each
+  * document in its own row against the broadcast query batch, and
+  * per-query ranking is the bounded-heap [[TopKPairs]] aggregation, so
+  * the scored rows cross the shuffle only as k-bounded buffers — no
+  * candidate rows, no per-query window sort.
   *
   * Reference behavior: the reference's query surface stops at index build
   * + per-document tf-idf (see SURVEY.md §2.8); BM25 (Robertson/Sparck
@@ -30,30 +31,29 @@ object Retrieval {
 
   /** BM25 top-k retrieval.
     *
-    * Plan: explode the tokenize scan and BROADCAST-join query terms right
-    * on it, so non-query tokens die map-side before any aggregation — the
-    * (term, doc, tf) stats are only ever built for terms some query
-    * mentions (df per query term still counts ALL docs containing it:
-    * the prefilter keeps every occurrence of those terms); corpus size /
-    * average doc length are a single 1-row aggregate broadcast
-    * everywhere. Scores sum per (query, doc) in one keyed partial-agg
-    * shuffle of candidate rows, then [[Similarity.topKPerQuery]] ranks
-    * with k-bounded heap buffers.
+    * Plan: each document is scored in its own row. The query batch — per
+    * (query, term) the term's position among the query's distinct terms
+    * and its idf — is one broadcast row, and [[graft.plans.Bm25Score]]
+    * scores a document's tokens against it, emitting `(q_id, score)` only
+    * for queries that share a term with the document. Those rows feed
+    * [[Similarity.topKPerQuery]] in the same stage, so the only shuffle
+    * of scored rows moves its k-bounded heap buffers. Document frequency
+    * comes from each document's distinct tokens, broadcast-joined to the
+    * query terms so that non-query tokens die map-side, then counted per
+    * term; corpus size and average length are one 1-row aggregate. No
+    * (term, doc) postings or (query, doc) candidates are shuffled, and
+    * nothing is pinned.
     *
-    * Scores are quantized to 1e-6 BEFORE ranking (floor(x*1e6 + 0.5)/1e6,
-    * the engine-portable midpoint rule used across the registry) so the
-    * rank order is a property of the quantized score and ties break by
-    * doc id ascending identically on any engine.
+    * Each term's part is `idf * (tf*(k1+1)) / (tf + k1*((1-b) +
+    * b*dl/avgdl))`; a query's parts sum in the order of its distinct
+    * terms. Scores are quantized to 1e-6 BEFORE ranking
+    * (floor(x*1e6 + 0.5)/1e6, the engine-portable midpoint rule used
+    * across the registry) so the rank order is a property of the
+    * quantized score and ties break by doc id ascending identically on
+    * any engine. Doc ids are unique.
     *
     * Query-term multiplicity is ignored (each distinct (q_id, term) once),
     * the standard short-query simplification of the qtf saturation term.
-    *
-    * NOTE (pin lifecycle): the returned frame is LAZY and this
-    * operator pins multi-consumer intermediates until the caller
-    * materializes it — Bench/Verify blanket-clear between
-    * queries; a long-lived library session should wrap the call
-    * in [[CacheScope.materialized]] (the prefixJaccardPairs
-    * contract).
     *
     * @param queries DataFrame(q_id: long, q_terms: array<string>) — terms
     *                need not be distinct; duplicates are collapsed here
@@ -64,68 +64,48 @@ object Retrieval {
                queries: DataFrame, k: Int,
                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-
-    // tiny: one row per distinct (query, term)
-    val qt = queries.select(col("q_id"),
-        explode(array_distinct(col("q_terms"))).as("term"))
-      .distinct()
-
-    // corpus stats: single row, broadcast into every score expression
-    val stats = docs
-      .select(Dedup.tokens(col(textCol)).as("tk"))
-      .agg(count(lit(1)).cast("double").as("n_docs"),
-        avg(size(col("tk"))).as("avgdl"))
-
-    // broadcast prefilter BEFORE the tf aggregation: non-query tokens die
-    // on the map side of the explode scan, so only query-term occurrences
-    // are ever aggregated or shuffled (A/B in SCALE.md: filtering after
-    // building the full (term, doc) index aggregates the whole corpus
-    // vocabulary for nothing)
-    val cand = docs
-      .select(col(idCol).as("id"), Dedup.tokens(col(textCol)).as("tk"))
-      .select(col("id"), size(col("tk")).cast("long").as("dl"),
-        explode(col("tk")).as("term"))
+    val qt = queryTerms(queries)
+    // distinct tokens per document, so a term's count is its df
+    val dfreq = docs
+      .select(explode(array_distinct(Dedup.tokens(col(textCol)))).as("term"))
       .join(broadcast(qt.select("term").distinct()), "term")
-      .groupBy("term", "id", "dl")
-      .agg(count(lit(1)).as("tf"))
-
-    scoreAndRank(cand, qt, stats, k, k1, b)
+      .groupBy("term").agg(count(lit(1)).as("df"))
+    scoreAndRank(docs.select(col(idCol).as("id"), col(textCol).as("doc")),
+      qt, dfreq, indexStats(docs, textCol), k, k1, b)
   }
 
-  /** Shared BM25 scoring + ranking stage — one code path for the inline
-    * ([[bm25TopK]]) and standing-index ([[bm25TopKIndexed]]) variants so
-    * the scoring semantics cannot drift between them.
+  /** (q_id, term, pos): each query's distinct terms with their position,
+    * one row per (q_id, term) even when a q_id repeats. */
+  private def queryTerms(queries: DataFrame): DataFrame =
+    queries.select(col("q_id"), posexplode(array_distinct(col("q_terms"))))
+      .groupBy(col("q_id"), col("col").as("term"))
+      .agg(min("pos").as("pos"))
+
+  /** The scoring and ranking both BM25 variants share, so the formula
+    * cannot drift between them.
     *
-    * @param cand  (term, id, dl, tf) — postings restricted to query terms
-    * @param qt    (q_id, term) tiny, broadcast
-    * @param stats (n_docs, avgdl) single row, broadcast */
-  private def scoreAndRank(cand0: DataFrame, qt: DataFrame, stats: DataFrame,
-                           k: Int, k1: Double, b: Double): DataFrame = {
-    // cand feeds TWO consumers — the df aggregate (broadcast back) and
-    // the scoring join — so un-pinned, the whole candidate pipeline
-    // (inline: a corpus tokenize+explode scan; indexed: the bucketed
-    // postings probe) executes twice. Pin it (postings restricted to
-    // query terms — query-batch-bounded); the Bench/Verify isolation
-    // clears pins between queries (the blockingQuality multi-consumer
-    // discipline).
-    val cand = graft.operators.CacheScope.pin(cand0)
-    // df per query term — small output (≤ #query terms), broadcast back
-    val dfreq = cand.groupBy("term").agg(count(lit(1)).as("df"))
-    val scored = cand
-      .join(broadcast(dfreq), "term")
-      .join(broadcast(qt), "term") // fans out per query containing term
-      .crossJoin(broadcast(stats))
-      .select(col("q_id"), col("id"),
-        (log(lit(1.0) +
-            (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
-          (col("tf") * lit(k1 + 1.0)) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
-          .as("part"))
-      .groupBy("q_id", "id")
-      .agg(sum("part").as("raw"))
-      .select(col("q_id"), col("id").as("c_id"),
-        (floor(col("raw") * lit(1e6) + lit(0.5)) / lit(1e6)).as("score"))
+    * @param docs  (id, doc) — doc is the text or the postings struct
+    *              [[graft.plans.Bm25Score]] reads
+    * @param qt    (q_id, term, pos) from [[queryTerms]]
+    * @param dfreq (term, df) over the query terms
+    * @param stats (n_docs, avgdl) single row */
+  private def scoreAndRank(docs: DataFrame, qt: DataFrame, dfreq: DataFrame,
+                           stats: DataFrame, k: Int, k1: Double,
+                           b: Double): DataFrame = {
+    val idf = log(lit(1.0) +
+      (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+    // the query batch as ONE row: terms absent from the corpus drop out
+    val batch = qt.join(dfreq, "term").crossJoin(broadcast(stats))
+      .groupBy().agg(
+        collect_list(struct(col("term"), col("q_id"), col("pos"),
+          idf.as("idf"))).as("entries"),
+        first("avgdl").as("avgdl"))
+      .withColumn("fp", xxhash64(col("entries")))
+    val scored = docs.crossJoin(broadcast(batch))
+      .select(col("id"), explode(graft.plans.Bm25Expressions.bm25Score(
+        col("doc"), col("entries"), col("fp"), col("avgdl"), k1, b)).as("s"))
+      .select(col("s.q_id").as("q_id"), col("id").as("c_id"),
+        col("s.score").as("score"))
     Similarity.topKPerQuery(scored, "score", k)
       .select(col("q_id"), col("c_id").as("doc_id"), col("score"),
         col("rank"))
@@ -270,22 +250,15 @@ object Retrieval {
     * batch's terms hash to their partition buckets (computed on the tiny
     * query frame, collected driver-side — query-batch-sized, the
     * model-only driver-traffic discipline) and the postings scan prunes
-    * to exactly those partitions; everything after is the shared
-    * NOTE (pin lifecycle): the returned frame is LAZY and this
-    * operator pins multi-consumer intermediates until the caller
-    * materializes it — Bench/Verify blanket-clear between
-    * queries; a long-lived library session should wrap the call
-    * in [[CacheScope.materialized]] (the prefixJaccardPairs
-    * contract).
-    *
-    * [[scoreAndRank]] stage. `nBuckets` must match the written index. */
+    * to exactly those partitions. The pruned postings of each document
+    * are grouped into one row and scored by the same
+    * [[scoreAndRank]] stage as [[bm25TopK]]. `nBuckets` must match the
+    * written index. */
   def bm25TopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
                       queries: DataFrame, k: Int, k1: Double = 1.2,
                       b: Double = 0.75, nBuckets: Int = 64): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val qt = queries.select(col("q_id"),
-        explode(array_distinct(col("q_terms"))).as("term"))
-      .distinct()
+    val qt = queryTerms(queries)
     val buckets = qt
       .select(pmod(Dedup.md5Hash32(col("term"), lit(3)),
         lit(nBuckets.toLong)).as("tb"))
@@ -293,8 +266,11 @@ object Retrieval {
     val cand = spark.read.parquet(s"$path/postings")
       .where(col("tb").isin(buckets: _*))
       .join(broadcast(qt.select("term").distinct()), "term")
-      .select("term", "id", "dl", "tf")
-    scoreAndRank(cand, qt, spark.read.parquet(s"$path/stats"), k, k1, b)
+    val docs = cand.groupBy("id", "dl")
+      .agg(collect_list(struct(col("term"), col("tf"))).as("tt"))
+      .select(col("id"), struct(col("tt"), col("dl")).as("doc"))
+    scoreAndRank(docs, qt, cand.groupBy("term").agg(count(lit(1)).as("df")),
+      spark.read.parquet(s"$path/stats"), k, k1, b)
   }
 
   /** Positional exact-phrase match: for each (query phrase, doc), the

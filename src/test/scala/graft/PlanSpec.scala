@@ -351,6 +351,91 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("corpus half shuffles ids and top-k buffers: ir_bm25_topk pins " +
+    "nothing and shuffles no (query, doc) candidate or (term, doc) " +
+    "posting; the corpus pipelines and their drop sets shuffle no text " +
+    "and partition no window by a text digest") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Md5}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    object H extends AdaptiveSparkPlanHelper
+    def executed(df: DataFrame): SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    def row(q: String): SparkPlan = executed(SparkEntry.queries(q)(spark, dir))
+    def names(p: SparkPlan): Set[String] = p.output.map(_.name).toSet
+
+    val bm = row("ir_bm25_topk")
+    val shown = bm.toString.take(4000)
+    assert(H.collect(bm) { case s: InMemoryTableScanExec => s }.isEmpty,
+      s"ir_bm25_topk pins a frame:\n$shown")
+    val docSide = Set("id", "c_id", "doc_id")
+    val perPair = H.collect(bm) { case e: ShuffleExchangeExec => e }
+      .filter { e =>
+        val n = names(e)
+        (n("q_id") || n("term")) && (n & docSide).nonEmpty
+      }
+    assert(perPair.isEmpty, s"ir_bm25_topk shuffles candidates or " +
+      s"postings:\n$shown")
+
+    def textExchanges(p: SparkPlan): Seq[SparkPlan] =
+      H.collect(p) { case e: ShuffleExchangeExec if names(e)("text") => e }
+    // a window keyed by a digest of the text, or fed the text itself.
+    // Catalyst projects a window's partition expression below it, so the
+    // key reads as an attribute aliased to the md5 further down
+    def digestWindows(p: SparkPlan): Seq[SparkPlan] = {
+      def isMd5(e: Expression) = e.find(_.isInstanceOf[Md5]).isDefined
+      val digests = H.collect(p) { case n => n.expressions }.flatten
+        .flatMap(_.collect { case a: Alias if isMd5(a.child) => a.exprId })
+        .toSet
+      H.collect(p) {
+        case w: WindowExec if w.partitionSpec.exists(k => isMd5(k) ||
+            k.references.exists(a => digests(a.exprId))) ||
+            names(w.child)("text") => w
+      }
+    }
+    // the drop sets as the builds materialise them, over the same input
+    // (the pretraining builds share C4's); a build pins its gated frame
+    // first, which only hides the gate's plan below a checkpoint, so here
+    // the gate stays in view
+    val docs = RegistryCore.t(spark, dir, "documents")
+    val pages = docs.select(col("doc_id"), col("source"),
+      concat(lit("<p>"), col("text"), lit("</p>")).as("html"))
+    val training = Pipelines.trainingGate(docs, 0.5, "en", 0.2)
+    val lined = Pipelines.c4Gate(RegistryCore.linedDocs(spark, dir), 10, 50, 1)
+    val dropSets = Seq(
+      "pipe_clean_corpus" -> Pipelines.dropIds(
+        Pipelines.cleanGate(docs, 0.5, "en")),
+      "pipe_training_corpus" -> Pipelines.dropIds(training,
+        Pipelines.contaminated(training, docs.where(col("doc_id") < 10))),
+      "pipe_html_corpus" -> Pipelines.dropIds(
+        Pipelines.htmlGate(pages, "html", 0.5, "en")),
+      "pipe_c4_corpus" -> Pipelines.dropIds(lined))
+    for ((q, drops) <- dropSets) {
+      val p = executed(drops)
+      assert(textExchanges(p).isEmpty && digestWindows(p).isEmpty,
+        s"$q's drop set shuffles text or windows by its digest:\n" +
+          p.toString.take(4000))
+    }
+    for (q <- Seq("pipe_clean_corpus", "pipe_training_corpus",
+        "pipe_html_corpus")) {
+      val p = row(q)
+      assert(textExchanges(p).isEmpty,
+        s"$q shuffles text:\n${p.toString.take(4000)}")
+    }
+    for (q <- Seq("pipe_c4_corpus", "pipe_pretrain_corpus",
+        "pipe_pretrain_tokenized")) {
+      val p = row(q)
+      assert(digestWindows(p).isEmpty,
+        s"$q windows by a text digest:\n${p.toString.take(4000)}")
+    }
+  }
+
   test("j12/j13: as-of and range joins plan as single-shuffle window / " +
     "equi-join — no nested loop, no cartesian") {
     val asof = plan("j12_asof_join")

@@ -112,6 +112,61 @@ class RetrievalSpec extends SparkTestBase {
     assert(indexed.nonEmpty)
   }
 
+  test("bm25TopK and bm25TopKIndexed equal the definitional BM25 on " +
+    "random corpora: repeated and absent query terms, docs sharing no " +
+    "query term, identical docs, k above the candidate count, empty " +
+    "texts") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.rng.Seed
+    val word = Gen.oneOf("alpha", "Beta", "gamma", "delta", "eps", "zeta",
+      "eta", "x1", "a.b", "THETA!")
+    val text = Gen.frequency(
+      1 -> Gen.oneOf("", " ", "--"),
+      2 -> Gen.choose(1, 3).flatMap(Gen.listOfN(_, word)).map(_.mkString(" ")),
+      4 -> Gen.choose(4, 25).flatMap(Gen.listOfN(_, word)).map(_.mkString(" ")))
+    // query terms: corpus tokens, repeated at random, and terms no
+    // document holds
+    val term = Gen.frequency(5 -> Gen.oneOf("alpha", "beta", "gamma",
+      "delta", "eps", "zeta", "eta", "x1", "a", "b", "theta"),
+      1 -> Gen.oneOf("absent", "nowhere"))
+    val caseGen = for {
+      n <- Gen.choose(1, 12)
+      texts <- Gen.listOfN(n, text)
+      // some documents are exact copies of an earlier one
+      copies <- Gen.listOfN(n, Gen.choose(0, 3))
+      ids <- Gen.pick(n, 0L until 100L)
+      nq <- Gen.choose(1, 4)
+      qs <- Gen.listOfN(nq, Gen.choose(0, 5).flatMap(Gen.listOfN(_, term)))
+      k <- Gen.oneOf(1, 3, 50)
+    } yield {
+      val ts = texts.zip(copies).zipWithIndex.map { case ((t, c), i) =>
+        if (c == 0 && i > 0) texts(i - 1) else t }
+      (ids.toSeq.zip(ts), qs.zipWithIndex.map { case (q, i) => (i + 1L, q) },
+        k)
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft_bm25_prop")
+    var run = 0
+    val prop = Prop.forAllNoShrink(caseGen) { case (corpus, queries, k) =>
+      run += 1
+      val docs = docsDf(corpus: _*)
+      val q = queries.toDF("q_id", "q_terms")
+      val want = bm25Expected(corpus, queries, k).sortBy(r => (r._1, r._4))
+      val inline = Retrieval.bm25TopK(docs, "doc_id", "text", q, k)
+        .as[(Long, Long, Double, Int)].collect().toSeq
+        .sortBy(r => (r._1, r._4))
+      val path = s"$root/idx$run"
+      Retrieval.writeSearchIndex(docs, "doc_id", "text", path, nBuckets = 4)
+      val indexed = Retrieval.bm25TopKIndexed(spark, path, q, k,
+          nBuckets = 4)
+        .as[(Long, Long, Double, Int)].collect().toSeq
+        .sortBy(r => (r._1, r._4))
+      inline == want && indexed == want
+    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(10).withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   // ----------------------------------------------------------------- rrf
 
   test("rrfFuse: both-leg docs outrank equal single-leg ranks, ties " +

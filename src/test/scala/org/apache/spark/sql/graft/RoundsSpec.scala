@@ -1,9 +1,5 @@
 package org.apache.spark.sql.graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,9 +27,6 @@ class RoundsSpec extends SparkTestBase {
   private def labels0 = (1L to 6L).map(n => (n, n)).toDF("node", "label")
   // directed: one SCC {4, 5, 6} once 6 -> 4 closes the triangle
   private def directed = (und :+ ((6L, 4L))).toDF("src", "dst")
-
-  /** Spark jobs, shuffle-write records and shuffle-write bytes. */
-  private case class Work(jobs: Long, records: Long, bytes: Long)
 
   /** Per operator (build + collect) on the inputs above: the median of
     * three runs at the commit before the round driver landed. The driver
@@ -117,29 +110,6 @@ class RoundsSpec extends SparkTestBase {
       .map(e => System.identityHashCode(e)).toSet
   }
 
-  /** (jobs, shuffle-write records, shuffle-write bytes) of `body`, the
-    * listener bus drained on both sides so every event of `body` and
-    * none other is counted. */
-  private def work(body: => Unit): (Long, Long, Long) = {
-    val jobs = new AtomicLong
-    val records = new AtomicLong
-    val bytes = new AtomicLong
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) {
-          records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
-          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-    }
-    sc.listenerBus.waitUntilEmpty()
-    sc.addSparkListener(l)
-    try { body; sc.listenerBus.waitUntilEmpty() }
-    finally sc.removeSparkListener(l)
-    (jobs.get, records.get, bytes.get)
-  }
-
   for ((name, build) <- cases)
     test(s"$name: releases every block it pins and runs the recorded " +
       "jobs and shuffle bytes") {
@@ -147,7 +117,7 @@ class RoundsSpec extends SparkTestBase {
       spark.catalog.clearCache()
       val rdds0 = sc.getPersistentRDDs.keySet
       val cache0 = cacheEntries
-      val (jobs, records, bytes) = work {
+      val got = WorkCounter.work(sc) {
         CacheScope.materialized(spark)(build())(_.collect())
       }
       assert((sc.getPersistentRDDs.keySet -- rdds0).isEmpty,
@@ -157,9 +127,8 @@ class RoundsSpec extends SparkTestBase {
       val want = recorded(name)
       def near(got: Long, rec: Long): Boolean =
         if (varying(name)) math.abs(got - rec) <= rec / 20 else got == rec
-      assert(jobs == want.jobs && near(records, want.records) &&
-        near(bytes, want.bytes),
-        s"$name ran ${Work(jobs, records, bytes)}, recorded $want")
+      assert(got.jobs == want.jobs && near(got.records, want.records) &&
+        near(got.bytes, want.bytes), s"$name ran $got, recorded $want")
     }
 
   test("the round-state error paths free every pinned frame before " +
