@@ -263,15 +263,15 @@ object Pipelines {
       "left_anti")
   }
 
-  /** The distinct ids to drop from `docs` (doc_id, text, ...): the
-    * higher doc_id of every verified MinHash-LSH pair, and the `doc_id`s
-    * of `moreDrops`.
+  /** The distinct ids to drop from `docs` (doc_id, text, ...): the exact
+    * copies, the near duplicates and the `doc_id`s of `moreDrops`.
     *
-    * That set holds every exact copy — each id but the smallest per text
-    * — with no digest pass of its own: identical texts have identical
-    * signatures, so a copy shares all its band buckets with the
-    * smallest-id document of its text, and their pair verifies at
-    * `sig_sim` 1.
+    * [[Dedup.minHashDupIds]] finds the first two from one exchange of
+    * (doc_id, MinHash signature): every id but the smallest per
+    * signature — which holds each id but the smallest per text — and the
+    * higher id of every verified MinHash-LSH pair among the smallest ids.
+    * Only ids and signatures cross it, and a large cluster of copies is
+    * not paired with itself.
     *
     * Finding the near duplicates and `moreDrops` over `docs` rather than
     * over `docs` minus its copies drops the same set: a pair (copy, x)
@@ -279,9 +279,9 @@ object Pipelines {
     * smaller; a per-document predicate such as contamination flags an
     * original exactly when it flags its copies. */
   private[graft] def dropIds(docs: DataFrame, moreDrops: DataFrame*): DataFrame = {
-    val near = Dedup.minHashLSH(docs, "doc_id", "text",
+    val dups = Dedup.minHashDupIds(docs, "doc_id", "text",
         shingleN = 3, bands = 8, rowsPerBand = 2, simThreshold = 0.5)
-      .select(col("b_id").as("doc_id"))
-    (near +: moreDrops).reduce(_ union _).distinct()
+      .select(col("id").as("doc_id"))
+    (dups +: moreDrops).reduce(_ union _).distinct()
   }
 }

@@ -305,14 +305,52 @@ object Dedup {
                  shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 2,
                  simThreshold: Double = 0.5): DataFrame = {
     val numHashes = bands * rowsPerBand
-    val pairs = lshCandidates(
-      signedDocs(docs, idCol, textCol, shingleN, numHashes), bands, rowsPerBand)
+    verified(lshCandidates(
+        signedDocs(docs, idCol, textCol, shingleN, numHashes), bands,
+        rowsPerBand), numHashes, simThreshold)
+      .select(col("a_id"), col("b_id"), col("sig_sim"))
+      .distinct()
+  }
+
+  /** [[lshCandidates]] rows with their `sig_sim`, kept where it is at
+    * least `simThreshold`. */
+  private def verified(pairs: DataFrame, numHashes: Int,
+                       simThreshold: Double): DataFrame =
     pairs.withColumn("sig_sim",
         size(filter(zip_with(col("a_sig"), col("b_sig"), (x, y) => x === y),
           e => e)).cast("double") / numHashes)
       .where(col("sig_sim") >= simThreshold)
-      .select(col("a_id"), col("b_id"), col("sig_sim"))
-      .distinct()
+
+  /** The ids [[minHashLSH]] drops — the `b_id` of every verified pair —
+    * without pairing exact copies. Documents with one signature (the
+    * copies of a text, or texts with one shingle set) pair with each
+    * other at `sig_sim` 1, so every id but the smallest per signature is
+    * dropped outright, and only those smallest ids are banded. A text
+    * with m copies costs m rows of one (id, sig) exchange instead of
+    * m(m-1)/2 candidate pairs per band.
+    *
+    * The set is the same: a pair (y, x) shares its buckets and `sig_sim`
+    * with (y', x), y' the smallest id of y's signature, so x is dropped
+    * over the smallest ids exactly when it is over all of `docs`.
+    *
+    * Output: (id), once per (verified pair, band) it loses — callers
+    * take the distinct ids together with whatever else they drop. */
+  def minHashDupIds(docs: DataFrame, idCol: String, textCol: String,
+                    shingleN: Int = 3, bands: Int = 8, rowsPerBand: Int = 2,
+                    simThreshold: Double = 0.5): DataFrame = {
+    // above 1, identical signatures would not verify
+    require(simThreshold <= 1.0,
+      s"simThreshold must be at most 1, got $simThreshold")
+    val numHashes = bands * rowsPerBand
+    // one exchange, read by both branches below
+    val signed = signedDocs(docs, idCol, textCol, shingleN, numHashes)
+      .withColumn("rep", min(col("id")).over(Window.partitionBy(col("sig"))))
+    val copies = signed.where(col("id") =!= col("rep")).select(col("id"))
+    val reps = signed.where(col("id") === col("rep"))
+      .select(col("id"), col("sig"))
+    copies.union(
+      verified(lshCandidates(reps, bands, rowsPerBand), numHashes,
+        simThreshold).select(col("b_id").as("id")))
   }
 
   /** Extract bit j (Column) of h as 0/1 via div/mod arithmetic — engine-

@@ -74,10 +74,13 @@ object Retrieval {
       qt, dfreq, indexStats(docs, textCol), k, k1, b)
   }
 
-  /** (q_id, term, pos): each query's distinct terms with their position,
-    * one row per (q_id, term) even when a q_id repeats. */
+  /** (q_id: long, term, pos): each query's distinct terms with their
+    * position, one row per (q_id, term) even when a q_id repeats. Any
+    * integral q_id is widened to the long [[graft.plans.Bm25Score]]
+    * reads. */
   private def queryTerms(queries: DataFrame): DataFrame =
-    queries.select(col("q_id"), posexplode(array_distinct(col("q_terms"))))
+    queries.select(col("q_id").cast("long").as("q_id"),
+        posexplode(array_distinct(col("q_terms"))))
       .groupBy(col("q_id"), col("col").as("term"))
       .agg(min("pos").as("pos"))
 
@@ -100,10 +103,9 @@ object Retrieval {
         collect_list(struct(col("term"), col("q_id"), col("pos"),
           idf.as("idf"))).as("entries"),
         first("avgdl").as("avgdl"))
-      .withColumn("fp", xxhash64(col("entries")))
     val scored = docs.crossJoin(broadcast(batch))
       .select(col("id"), explode(graft.plans.Bm25Expressions.bm25Score(
-        col("doc"), col("entries"), col("fp"), col("avgdl"), k1, b)).as("s"))
+        col("doc"), col("entries"), col("avgdl"), k1, b)).as("s"))
       .select(col("s.q_id").as("q_id"), col("id").as("c_id"),
         col("s.score").as("score"))
     Similarity.topKPerQuery(scored, "score", k)

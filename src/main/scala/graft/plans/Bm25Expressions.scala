@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression,
-  QuaternaryExpression}
+  TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** A BM25 query batch indexed by term: per query term, the queries that
   * hold it, its position in each query's distinct terms, and its idf.
-  * Built from the batch's `entries` array once per [[Bm25Cache]] miss,
-  * never per document. */
-final class Bm25Batch(val fp: Long, entries: ArrayData) {
+  * Built from the batch's `entries` array once per [[Bm25Cache]], never
+  * per document. */
+final class Bm25Batch(entries: ArrayData) {
   private final class Entry(val q: Long, val pos: Int, val idf: Double)
 
   private val byTerm: Map[String, Array[Entry]] =
@@ -58,21 +58,22 @@ final class Bm25Batch(val fp: Long, entries: ArrayData) {
   }
 }
 
-/** One task's batch: rebuilt only when the batch's fingerprint changes.
-  * The batch is one broadcast row, so a task builds it once. */
+/** One task's batch, indexed on the first document and reused. The
+  * batch is one broadcast row, the same for every document a task
+  * scores, and a cache lives in one task's expression or generated code. */
 final class Bm25Cache {
   private var batch: Bm25Batch = _
 
-  def get(entries: ArrayData, fp: Long): Bm25Batch = {
-    if (batch == null || batch.fp != fp) batch = new Bm25Batch(fp, entries)
+  def get(entries: ArrayData): Bm25Batch = {
+    if (batch == null) batch = new Bm25Batch(entries)
     batch
   }
 
   /** A document given as text: tokenised by `Dedup.tokensKernel`, the
     * tokens `Dedup.tokens` yields. Only query terms are counted. */
-  def scoreText(text: UTF8String, entries: ArrayData, fp: Long,
-                avgdl: Double, k1: Double, b: Double): ArrayData = {
-    val qb = get(entries, fp)
+  def scoreText(text: UTF8String, entries: ArrayData, avgdl: Double,
+                k1: Double, b: Double): ArrayData = {
+    val qb = get(entries)
     val toks = graft.operators.Dedup.tokensKernel(text.toString)
     val tfs = mutable.HashMap.empty[String, Long]
     toks.foreach(t => if (qb.contains(t)) tfs(t) = tfs.getOrElse(t, 0L) + 1L)
@@ -81,8 +82,8 @@ final class Bm25Cache {
 
   /** A document given as its postings: `struct(tt array<struct<term,
     * tf>>, dl)` with (term, doc) unique. */
-  def scorePostings(doc: InternalRow, entries: ArrayData, fp: Long,
-                    avgdl: Double, k1: Double, b: Double): ArrayData = {
+  def scorePostings(doc: InternalRow, entries: ArrayData, avgdl: Double,
+                    k1: Double, b: Double): ArrayData = {
     val tt = doc.getArray(0)
     val tfs = mutable.HashMap.empty[String, Long]
     var i = 0
@@ -91,26 +92,25 @@ final class Bm25Cache {
       tfs(p.getUTF8String(0).toString) = p.getLong(1)
       i += 1
     }
-    get(entries, fp).score(tfs, doc.getLong(1), avgdl, k1, b)
+    get(entries).score(tfs, doc.getLong(1), avgdl, k1, b)
   }
 }
 
 /** BM25 of one document against a whole query batch, in the document's
   * own row: `array<struct<q_id: long, score: double>>`, one element per
   * query that shares a term with the document. `entries` is the batch
-  * (`array<struct<term: string, q_id: long, pos: int, idf: double>>`),
-  * `fp` its fingerprint and `avgdl` the corpus's mean length, all read
-  * from one broadcast row; `doc` is the text or the postings struct
+  * (`array<struct<term: string, q_id: long, pos: int, idf: double>>`)
+  * and `avgdl` the corpus's mean length, both read from one broadcast
+  * row; `doc` is the text or the postings struct
   * ([[Bm25Cache.scorePostings]]). Generated code keeps one
   * [[Bm25Cache]] per task, so the batch is indexed once per task and a
   * document costs O(tokens + matched entries), never O(batch). */
-case class Bm25Score(doc: Expression, entries: Expression, fp: Expression,
-                     avgdl: Expression, k1: Double, b: Double)
-    extends QuaternaryExpression {
+case class Bm25Score(doc: Expression, entries: Expression, avgdl: Expression,
+                     k1: Double, b: Double)
+    extends TernaryExpression {
   override def first: Expression = doc
   override def second: Expression = entries
-  override def third: Expression = fp
-  override def fourth: Expression = avgdl
+  override def third: Expression = avgdl
 
   override def dataType: DataType = ArrayType(new StructType()
     .add("q_id", LongType, nullable = false)
@@ -125,11 +125,10 @@ case class Bm25Score(doc: Expression, entries: Expression, fp: Expression,
 
   @transient private lazy val cache = new Bm25Cache
 
-  override def nullSafeEval(d: Any, e: Any, f: Any, a: Any): Any = {
-    val (es, fp, avg) = (e.asInstanceOf[ArrayData], f.asInstanceOf[Long],
-      a.asInstanceOf[Double])
-    if (fromText) cache.scoreText(d.asInstanceOf[UTF8String], es, fp, avg, k1, b)
-    else cache.scorePostings(d.asInstanceOf[InternalRow], es, fp, avg, k1, b)
+  override def nullSafeEval(d: Any, e: Any, a: Any): Any = {
+    val (es, avg) = (e.asInstanceOf[ArrayData], a.asInstanceOf[Double])
+    if (fromText) cache.scoreText(d.asInstanceOf[UTF8String], es, avg, k1, b)
+    else cache.scorePostings(d.asInstanceOf[InternalRow], es, avg, k1, b)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -140,19 +139,19 @@ case class Bm25Score(doc: Expression, entries: Expression, fp: Expression,
     // the constants' exact bits, so no double is re-parsed from text
     def bits(x: Double) =
       s"java.lang.Double.longBitsToDouble(${java.lang.Double.doubleToRawLongBits(x)}L)"
-    nullSafeCodeGen(ctx, ev, (d, e, f, a) =>
-      s"${ev.value} = $c.$call($d, $e, $f, $a, ${bits(k1)}, ${bits(b)});")
+    nullSafeCodeGen(ctx, ev, (d, e, a) =>
+      s"${ev.value} = $c.$call($d, $e, $a, ${bits(k1)}, ${bits(b)});")
   }
 
   override protected def withNewChildrenInternal(d: Expression, e: Expression,
-      f: Expression, a: Expression): Bm25Score =
-    copy(doc = d, entries = e, fp = f, avgdl = a)
+      a: Expression): Bm25Score =
+    copy(doc = d, entries = e, avgdl = a)
 }
 
 object Bm25Expressions {
-  def bm25Score(doc: Column, entries: Column, fp: Column, avgdl: Column,
-                k1: Double, b: Double): Column =
+  def bm25Score(doc: Column, entries: Column, avgdl: Column, k1: Double,
+                b: Double): Column =
     GraftColumnBridge.column(Bm25Score(GraftColumnBridge.expression(doc),
-      GraftColumnBridge.expression(entries), GraftColumnBridge.expression(fp),
+      GraftColumnBridge.expression(entries),
       GraftColumnBridge.expression(avgdl), k1, b))
 }

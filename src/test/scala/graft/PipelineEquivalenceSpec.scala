@@ -97,6 +97,17 @@ class PipelineEquivalenceSpec extends SparkTestBase {
       assert(got.nonEmpty)
       assert(got == want, s"\n got: $got\nwant: $want")
     }
+
+  test("a large copy cluster and many tokenless texts: every document " +
+    "passes the gate, and the build gives the reference's rows") {
+    val big = copyClusterDocs.toDF("doc_id", "source", "text")
+    assert(Pipelines.cleanGate(big, 0.0, "und").count() ==
+      copyClusterDocs.size)
+    val got = rows(Pipelines.buildCleanCorpus(big, 0.0, "und"))
+    assert(got == rows(Reference.clean(big, 0.0, "und")))
+    // the cluster's smallest id, the first tokenless text and the others
+    assert(got.size == 2 + copyClusterDistinct, got.size)
+  }
 }
 
 object PipelineEquivalenceSpec {
@@ -176,6 +187,25 @@ object PipelineEquivalenceSpec {
     (0 until 20).map(i => (100L + i, s"s${i % 4}", base(i))) ++ Seq(
       (90L, "s1", base(1)), (121L, "s2", base(1)), (122L, "s0", base(5)),
       (91L, "s3", nudged(2)), (123L, "s1", nudged(2)))
+  }
+
+  /** Distinct texts in [[copyClusterDocs]] besides the cluster and the
+    * tokenless ones. */
+  val copyClusterDistinct = 200
+
+  /** (doc_id, source, text), every text in no gated language: 1000
+    * copies of one text, 100 distinct tokenless texts (one shingle set,
+    * so one MinHash signature) and [[copyClusterDistinct]] distinct texts.
+    * Ids are shuffled, so the cluster's smallest id is not its first. */
+  val copyClusterDocs: Seq[(Long, String, String)] = {
+    // "q" keeps every word off the stopword markers ("w" + "ith" is one)
+    def text(i: Int) = (0 until 40).map(j => "q" + word(i * 100 + j))
+      .mkString(" ")
+    val texts = Seq.fill(1000)(text(0)) ++
+      (1 to 100).map(i => "!" * i) ++
+      (1 to copyClusterDistinct).map(text)
+    val ids = new scala.util.Random(20261019L).shuffle(texts.indices.toList)
+    texts.zip(ids).map { case (t, id) => (id.toLong, s"s${id % 4}", t) }
   }
 
   /** The builds as they were before exact copies joined the drop set. */

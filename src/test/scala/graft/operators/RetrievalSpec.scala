@@ -83,6 +83,43 @@ class RetrievalSpec extends SparkTestBase {
     assert(got.map(_._4) == Seq(1, 2))
   }
 
+  test("bm25TopK and bm25TopKIndexed take int q_ids, negative ones " +
+    "included, in generated and interpreted code") {
+    val corpus = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "the quick brown cat naps on the warm mat",
+      3L -> "a fox a fox a fox repeated thrice for term frequency")
+    val queries = Seq(-7L -> Seq("fox", "dog"), 11L -> Seq("quick"),
+      -2147483648L -> Seq("mat", "fox"))
+    val q = queries.map { case (i, t) => (i.toInt, t) }.toDF("q_id", "q_terms")
+    val docs = docsDf(corpus: _*)
+    val path = java.nio.file.Files
+      .createTempDirectory("graft_search_idx_int").toString
+    Retrieval.writeSearchIndex(docs, "doc_id", "text", path, nBuckets = 4)
+    val want = bm25Expected(corpus, queries, 2).sortBy(r => (r._1, r._4))
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      val keys = Seq("spark.sql.codegen.factoryMode",
+        "spark.sql.codegen.wholeStage")
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      spark.conf.set(keys(0), mode)
+      spark.conf.set(keys(1), mode == "CODEGEN_ONLY")
+      try {
+        val inline = Retrieval.bm25TopK(docs, "doc_id", "text", q, k = 2)
+          .as[(Long, Long, Double, Int)].collect().toSeq
+          .sortBy(r => (r._1, r._4))
+        val indexed = Retrieval.bm25TopKIndexed(spark, path, q, k = 2,
+            nBuckets = 4)
+          .as[(Long, Long, Double, Int)].collect().toSeq
+          .sortBy(r => (r._1, r._4))
+        assert(inline == want, mode)
+        assert(indexed == want, mode)
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("bm25TopK: k bounds the per-query result") {
     val corpus = (1L to 20L).map(i => i -> s"shared token plus t$i")
     val q = Seq((1L, Seq("shared"))).toDF("q_id", "q_terms")
