@@ -193,9 +193,9 @@ private[graft] object RegistryCore {
 
   /** The SPARSIFIED part co-order graph (parts co-occurring in >= 2
     * orders, both directions by construction, w = co-occurrence count)
-    * shared by gr_louvain_weighted / gr_kcore_full / gr_coreness and
-    * tools.KcoreProbe — ONE copy so the rows and the probe cannot
-    * diverge. */
+    * shared by gr_louvain_weighted / gr_kcore_full / gr_coreness (the
+    * peel's sf0.1 -> sf1 cost: SCALE.md, "Round 12: degeneracy
+    * family"). */
   def partCoorderEdges(s: SparkSession,
                                       dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
@@ -765,8 +765,8 @@ private[graft] object RegistryCore {
           .as("text"))
   }
 
-  /** The image-corpus render behind `pipe_image_dedup` (and the scale
-    * probe tool `graft.tools.ProbeImagePairs`): one tiny image per doc in
+  /** The image-corpus render behind `pipe_image_dedup` (its pair counts
+    * at sf1 and sf3: SCALE.md, "Round-6 probe"): one tiny image per doc in
     * three real container formats, where ids 2g/2g+1 form a near-dup pair
     * (a single +1 on the corner pixel). */
   def imageCorpus(s: SparkSession, dir: String)

@@ -926,9 +926,10 @@ private[graft] object PipelineRegistryA {
     // arrives: batch nodes take bucket-mate candidates + one bounded
     // descent round, then ONE reverse pass re-ranks only the touched
     // corpus neighborhoods. Output is the delta (new + updated rows);
-    // per-batch compute ∝ batch, never corpus (tools/KnnIncProbe
-    // measures the growth curve; SCALE.md r14). Oracle unrolls the
-    // standing build (shared CTE chain) plus the incremental step.
+    // per-batch compute ∝ batch, never corpus (its growth curve:
+    // SCALE.md, "Round 14", incremental ANN cost shape). Oracle
+    // unrolls the standing build (shared CTE chain) plus the
+    // incremental step.
     Q("ann_knn_incremental",
       (s, dir) => {
         val emb = structuredEmb(s, dir)

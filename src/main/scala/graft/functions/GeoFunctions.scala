@@ -42,9 +42,6 @@ object GeoFunctions {
     sqrt(dx * dx + dy * dy)
   }
 
-  /** Kilometres to degrees of latitude. */
-  def kmToDegLat(km: Column): Column = km / (MetersPerDegLat / 1000.0)
-
   /** Kilometres to degrees of longitude at a given latitude, with the
     * reference's cos(lat) clamp (`etl/utils.py:237-267`: denominator floored
     * at 0.01 to avoid pole blowups). */

@@ -454,17 +454,6 @@ object TextFunctions {
 
   // ------------------------------------------------- column-expression forms
 
-  /** Simple whitespace tokenizer as a column expr (codegen'd). */
-  def tokensCol(c: Column): Column =
-    split(trim(regexp_replace(lower(c), "[^a-z0-9]+", " ")), " ")
-
-  /** Jaccard similarity of two array columns (reference `etl/utils.py:95-100`). */
-  def jaccardCol(a: Column, b: Column): Column = {
-    val inter = size(array_intersect(a, b)).cast("double")
-    val uni = size(array_union(a, b)).cast("double")
-    when(uni === 0, 0.0).otherwise(inter / uni)
-  }
-
   /** A cheap name-similarity proxy for oracle-checkable fuzzy joins:
     * 1 - levenshtein/maxlen, computed by the bit-parallel kernel through a
     * codegen'd expression (same value as the built-in levenshtein —

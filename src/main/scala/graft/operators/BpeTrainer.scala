@@ -126,13 +126,7 @@ object BpeTrainer {
     * @param maxBatch merges per round upper bound; 1 = the classic
     *                 one-merge-per-round loop */
   def bpeTrain(docs: DataFrame, textCol: String,
-               nMerges: Int, maxBatch: Int = 64): DataFrame =
-    bpeTrainRounds(docs, textCol, nMerges, maxBatch)._1
-
-  /** [[bpeTrain]] plus the number of driver round-trips it took — the
-    * batching's measurable effect (probe + SCALE.md A/B). */
-  def bpeTrainRounds(docs: DataFrame, textCol: String,
-                     nMerges: Int, maxBatch: Int = 64): (DataFrame, Int) = {
+               nMerges: Int, maxBatch: Int = 64): DataFrame = {
     require(maxBatch >= 1, "maxBatch must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -142,8 +136,8 @@ object BpeTrainer {
     // state), NOT persist(): a persist chain nests each round's
     // InMemoryRelation inside the next, and by round ~60 merely
     // RENDERING the cached plan's tree string (CachedRDDBuilder does it
-    // on every persist call) takes minutes — jstack-verified on the
-    // 64-merge A/B probe.
+    // on every persist call) takes minutes — jstack-verified in the
+    // 64-merge A/B (SCALE.md, "Round 12: batched BPE training rounds").
     val start = materialize(
       docs
         .select(explode(Dedup.tokens(col(textCol))).as("w"))
@@ -154,14 +148,12 @@ object BpeTrainer {
 
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var r = 1
-    var rounds = 0
     // every round merges at least one pair, so nMerges bounds the rounds;
     // the loop ends once the merge budget is spent, or at a round with no
     // pair left (which returns its state unchanged)
     val last = Rounds.iterate(start, nMerges, (_, _) => r > nMerges) {
         (state, _) =>
       val cur = state.df
-      rounds += 1
       val want = math.min(nMerges - r + 1, maxBatch)
       val lim = want * 2 + 8
       val top = cur
@@ -230,9 +222,9 @@ object BpeTrainer {
       }
     }
     last.release()
-    (merges.toSeq.toDF("rank", "lhs", "rhs", "pair_count")
+    merges.toSeq.toDF("rank", "lhs", "rhs", "pair_count")
       .select(col("rank").cast("int").as("rank"), col("lhs"), col("rhs"),
-        col("pair_count")), rounds)
+        col("pair_count"))
   }
 
   /** Greedy application of an ORDERED merge list to one word —

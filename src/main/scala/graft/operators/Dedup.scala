@@ -1284,16 +1284,16 @@ object Dedup {
 
   /** SRP-bucket index rows for an embedding frame — the EMBEDDING analog
     * of [[minHashIndex]]: (id, v, table, bucket), one row per hash table.
-    * Persist/bucket it at rest and [[incrementalEmbedLsh]] probes it per
-    * batch without rebucketing history. */
+    * Persist/bucket it at rest and [[incrementalEmbedLshBuckets]] probes
+    * it per batch without rebucketing history. */
   def embedLshIndex(emb: DataFrame, idCol: String, vecCol: String,
                     numPlanes: Int = 8, tables: Int = 4): DataFrame =
     Similarity.srpBucketed(emb, idCol, vecCol, numPlanes, tables)
 
   /** Persist an [[embedLshIndex]] bucketed (and sorted) by its probe keys
     * (table, bucket) — the [[writeMinHashIndex]] layout for the embedding
-    * index: the standing side of every [[incrementalEmbedLsh]] probe
-    * plans with NO exchange. */
+    * index: the standing side of every [[incrementalEmbedLshBuckets]]
+    * probe plans with NO exchange. */
   def writeEmbedIndex(index: DataFrame, table: String, path: String,
                       numBuckets: Int = 8): Unit =
     index.write.mode("overwrite").format("parquet")
@@ -1302,22 +1302,14 @@ object Dedup {
       .saveAsTable(table)
 
   /** Incremental embedding near-dup detection against a STANDING SRP
-    * index — [[incrementalMinHash]] for vectors: the new batch buckets
-    * once, probes the index (kind `vs_index`) and itself (kind
-    * `within_batch`) via (table, bucket) equi-joins, and exact cosine
-    * verifies every candidate. Per-batch cost is O(batch + matching
-    * buckets), independent of history size — the index IS the state.
+    * index — [[incrementalMinHash]] for vectors: the new batch, already
+    * bucketed by [[embedLshIndex]] (so a micro-batch buckets exactly
+    * once: probe + index append share the frame), probes the index
+    * (kind `vs_index`) and itself (kind `within_batch`) via (table,
+    * bucket) equi-joins, and exact cosine verifies every candidate.
+    * Per-batch cost is O(batch + matching buckets), independent of
+    * history size — the index IS the state.
     * Output (a_id, b_id, kind, cosine >= threshold). */
-  def incrementalEmbedLsh(index: DataFrame, newEmb: DataFrame,
-                          idCol: String, vecCol: String,
-                          threshold: Double = 0.9, numPlanes: Int = 8,
-                          tables: Int = 4): DataFrame =
-    incrementalEmbedLshBuckets(index,
-      embedLshIndex(newEmb, idCol, vecCol, numPlanes, tables), threshold)
-
-  /** [[incrementalEmbedLsh]]'s probe over an ALREADY-bucketed batch —
-    * the form the streaming skeleton uses so a micro-batch buckets
-    * exactly once (probe + index append share the frame). */
   def incrementalEmbedLshBuckets(index: DataFrame, newBuckets: DataFrame,
                                  threshold: Double): DataFrame = {
     def side(df: DataFrame, p: String) = df.select(col("table"),
@@ -1344,8 +1336,9 @@ object Dedup {
     * collapse applied per batch), so an exact-duplicate mega-group
     * costs one rep row plus n-1 collapse flags instead of the n²/2
     * pairs pair-emission genuinely owes on it (3.2B pairs at n = 80k —
-    * SkewProbe). Pair emission ([[incrementalEmbedLshBuckets]]) stays
-    * the explicit opt-in for when the pairs ARE the product.
+    * SCALE.md, "Round 12: FLAG-mode streaming embedding dedup"). Pair
+    * emission ([[incrementalEmbedLshBuckets]]) stays the explicit opt-in
+    * for when the pairs ARE the product.
     *
     * Verdicts (min-id keep, the semanticDedup discipline): a non-rep
     * (identical vector, larger id) drops against its rep; a rep drops
@@ -1405,7 +1398,7 @@ object Dedup {
     * [[ngramContamination]] (an eval item rewritten in different words
     * shares no n-grams but lands next to the original in embedding
     * space; modern pretraining decontamination runs BOTH). Candidates
-    * come from the SRP bucket equi-join ([[incrementalEmbedLsh]]'s
+    * come from the SRP bucket equi-join ([[incrementalEmbedLshBuckets]]'s
     * probe shape with the probe set as the standing side), exact cosine
     * verifies, and the output keeps per-doc evidence: nearest probe +
     * max cosine + hit count.

@@ -592,7 +592,7 @@ private[graft] object HyperBallState {
     * code. The edge frame is materialized because each round and the
     * node init consume it, and an un-materialized edge plan re-executes
     * per consumer (the registry rows pass a spatial self-join worth
-    * ~1 s per execution at sf0.1, GraphBuildProbe r17); it is a
+    * ~1 s per execution at sf0.1, OPTIMIZATION_r17.md §1); it is a
     * transient, freed by [[HbRegStore.close]] — the estimates read only
     * the register frames.
     *

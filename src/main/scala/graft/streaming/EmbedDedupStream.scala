@@ -12,7 +12,7 @@ import graft.operators.Dedup
   * dups, and appends its own bucket rows so LATER batches dedup against
   * it. The index is the only state — no watermarked stream state grows
   * with history, and the per-batch cost is O(batch + matching buckets)
-  * (the [[Dedup.incrementalEmbedLsh]] contract).
+  * (the [[Dedup.incrementalEmbedLshBuckets]] contract).
   *
   * Both paths instantiate [[IncrementalIngest]] — the one copy of the
   * fold / probe-then-append / replay-idempotence skeleton (see its doc

@@ -1,12 +1,18 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.graft.WorkCounter
 
 /** Pins the BPE training contract: the greedy merge kernel's
   * overlapping-run behavior, the classic low/lower/lowest hand example
-  * with deterministic tie-breaks, early stop, and layout invariance. */
+  * with deterministic tie-breaks, early stop, layout invariance, and
+  * batched rounds: the sequential table in fewer Spark jobs. */
 class BpeTrainerSpec extends SparkTestBase {
   import spark.implicits._
+
+  // the committed fixture corpus
+  private def fixture = Seq((1L, "low low low"), (2L, "lower lowest"),
+    (3L, "slow slower")).toDF("doc_id", "text")
 
   test("greedy kernel: left-to-right, skip after merge") {
     assert(BpeTrainer.mergeKernel(Seq("a", "a", "a"), "a", "a") ==
@@ -64,19 +70,14 @@ class BpeTrainerSpec extends SparkTestBase {
   }
 
   test("merge table is partitioning-invariant") {
-    val docs = Seq((1L, "low low low"), (2L, "lower lowest"),
-      (3L, "slow slower")).toDF("doc_id", "text")
-    val a = BpeTrainer.bpeTrain(docs, "text", 5).collect().toSeq
-    val b = BpeTrainer.bpeTrain(docs.repartition(7), "text", 5)
+    val a = BpeTrainer.bpeTrain(fixture, "text", 5).collect().toSeq
+    val b = BpeTrainer.bpeTrain(fixture.repartition(7), "text", 5)
       .collect().toSeq
     assert(a == b)
   }
 
   test("batched rounds produce the IDENTICAL merge table as the " +
     "one-merge-per-round loop, including tie-heavy and spawner corpora") {
-    // the committed fixture corpus
-    val fixture = Seq((1L, "low low low"), (2L, "lower lowest"),
-      (3L, "slow slower")).toDF("doc_id", "text")
     // all-frequency-1 corpus: every pair count ties, exercising the
     // tie-cutoff and equal-count spawner guards hard
     val ties = Seq("cab", "dog", "dig", "bad", "cad", "god", "gag",
@@ -95,6 +96,15 @@ class BpeTrainerSpec extends SparkTestBase {
       assert(batTable == seqTable,
         s"n=$n:\nbatched   $batTable\nsequential $seqTable")
     }
+  }
+
+  test("batched rounds run fewer Spark jobs than one merge per round") {
+    def jobs(maxBatch: Int) = WorkCounter.work(spark.sparkContext) {
+      BpeTrainer.bpeTrain(fixture, "text", 8, maxBatch).collect()
+    }.jobs
+    val (sequential, batched) = (jobs(1), jobs(64))
+    info(s"batched $batched jobs, sequential $sequential")
+    assert(batched < sequential, s"batched $batched jobs, sequential $sequential")
   }
 
   test("batched == sequential on symbol-string-collision-prone corpora") {

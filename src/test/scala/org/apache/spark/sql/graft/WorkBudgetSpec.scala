@@ -24,7 +24,11 @@ class WorkBudgetSpec extends SparkTestBase {
     "pipe_html_corpus" -> (7L, 46_500L),
     "pipe_c4_corpus" -> (10L, 370_300L),
     "pipe_pretrain_corpus" -> (29L, 456_700L),
-    "pipe_pretrain_tokenized" -> (52L, 477_000L))
+    "pipe_pretrain_tokenized" -> (52L, 477_000L),
+    "gr_hyperball_nf_incremental" -> (102L, 1_310_900L),
+    "gr_hyperball_nf_incremental_adaptive" -> (134L, 2_539_200L),
+    "st_hyperball_atrest" -> (96L, 531_200L),
+    "gr_hyperball_nf_adaptive" -> (20L, 1_266_200L))
 
   for ((row, (jobs, bytes)) <- budget)
     test(s"$row stays within $jobs jobs and $bytes shuffle-write bytes") {
